@@ -24,6 +24,14 @@ _BASE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce the final shuffle of a CACHED plan too. Spark
+    # keeps a cached plan's output partitioning fixed by default, so
+    # every .cache()d shuffle (the ingest chain sort, the upsert's
+    # dropDuplicates prep) ran at the full spark.sql.shuffle.partitions
+    # width: a 6.5 MB catch-up sort as 32 Python tasks instead of ~one
+    # per core. Nothing in the engine relies on a cached frame keeping
+    # a particular partition count.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # JVM->python Arrow batches bounded by BYTES, not just the 10k-row
     # default: with binary media columns a row-count bound lets a few

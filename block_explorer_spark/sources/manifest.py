@@ -340,16 +340,26 @@ def _stage_df_driver(
     return out
 
 
-def stage_df(df, base: str, data_name: str, partition_by: str | None = None) -> list[str]:
+def stage_df(
+    df,
+    base: str,
+    data_name: str,
+    partition_by: str | None = None,
+    n_rows: int | None = None,
+) -> list[str]:
     """Write a DataFrame to a staging dir, move its files (uniquely
     renamed, partition subdirs preserved) into base/data_name, return
     their manifest relpaths. Invisible until a commit lists them.
-    KB-scale frames stage driver-side (see STAGE_DRIVER_ROWS)."""
+    KB-scale frames stage driver-side (see STAGE_DRIVER_ROWS); a caller
+    that already knows the frame's row count passes `n_rows`, and a
+    count over the gate skips the driver probe (a LIMIT collect that
+    could only come back too big) and writes through Spark directly."""
     import shutil
 
-    rels = _stage_df_driver(df, base, data_name, partition_by)
-    if rels is not None:
-        return rels
+    if n_rows is None or n_rows <= STAGE_DRIVER_ROWS:
+        rels = _stage_df_driver(df, base, data_name, partition_by)
+        if rels is not None:
+            return rels
     staging = os.path.join(base, f".staging-{uuid.uuid4().hex}")
     try:
         w = df.write.mode("overwrite")

@@ -126,16 +126,24 @@ def _layout(name: str, df: DataFrame, buckets_hint: int = 1) -> DataFrame:
     (pulse_bucket, obj_key) and sort within files — so each staged
     file covers a narrow obj_key slice of its bucket and the parquet
     footers (→ manifest zone maps) stay tight. Other tables stage
-    unchanged."""
+    unchanged.
+
+    One bucket means one file: the frame is coalesced into a single
+    partition instead, as the sidecar delta is — range partitioning
+    into ONE partition still pays a bounds-sampling job and an extra
+    exchange for the identical file and sort order. Coalescing is
+    narrow, so it also collapses the upstream stage into one task;
+    a caller whose upstream is a wide scan or join (the merge-rewrite)
+    hands in a `repartition(1)` frame to keep that stage parallel."""
     if name != "records":
         return df
-    nf = max(1, buckets_hint)
-    return (
-        df.withColumn(OBJ_KEY, obj_key_expr())
-        .repartitionByRange(nf, "pulse_bucket", OBJ_KEY)
-        .sortWithinPartitions(
-            "pulse_bucket", OBJ_KEY, "pulse_number", F.col("order")
-        )
+    df = df.withColumn(OBJ_KEY, obj_key_expr())
+    if buckets_hint <= 1:
+        df = df.coalesce(1)
+    else:
+        df = df.repartitionByRange(buckets_hint, "pulse_bucket", OBJ_KEY)
+    return df.sortWithinPartitions(
+        "pulse_bucket", OBJ_KEY, "pulse_number", F.col("order")
     )
 
 
@@ -899,9 +907,11 @@ class BatchStats:
 
     pulses: the batch's exact pulse_number set (determines the bucket
     list and the [lo, hi] pulse bounds). n_rows: the batch's row count
-    — an UPPER bound is acceptable (it only gates the records-table
-    sidecar skip-or-batch floor, where over-counting merely indexes
-    inline when a defer would have been allowed)."""
+    before the PK dedup. It only decides placement — the records
+    sidecar's skip-or-batch floor and whether staging probes for the
+    driver write — so a miscount never changes a result: an over-count
+    indexes inline or stages through Spark where the driver would
+    have done."""
 
     __slots__ = ("pulses", "n_rows")
 
@@ -929,16 +939,24 @@ def _validate_batch_stats(
     declared bucket, and — on the append fast path, where staged files
     hold batch rows only — its pulse range must lie within the
     declared bounds. Raises ValueError on violation BEFORE the commit,
-    so a bad hint can never publish. Pinned by
-    test_driver_stage::test_understated_batch_stats_refused."""
+    so a bad hint can never publish, and discards the staged files
+    first, so a refused batch leaves no orphans in the table directory.
+    Pinned by test_driver_stage::test_understated_batch_stats_refused."""
     allowed = set(buckets)
+
+    def refuse(why: str):
+        Mf.discard(base, new_rels)
+        raise ValueError(
+            f"{name}: {why} — the declared pulse set must be exact "
+            "(see BatchStats)"
+        )
+
     for r in new_rels:
         b = _rel_bucket(r)
         if b is not None and b not in allowed:
-            raise ValueError(
-                f"{name}: staged file {r} lands in bucket {b}, outside the "
-                f"declared BatchStats buckets {sorted(allowed)} — the "
-                "declared pulse set must be exact (see BatchStats)"
+            refuse(
+                f"staged file {r} lands in bucket {b}, outside the "
+                f"declared BatchStats buckets {sorted(allowed)}"
             )
     if pulse_bounds is None:
         return
@@ -946,10 +964,9 @@ def _validate_batch_stats(
     for r, cols in Mf.file_stats(base, new_rels, ["pulse_number"]).items():
         zone = cols.get("pulse_number")
         if zone and (zone[0] < lo or zone[1] > hi):
-            raise ValueError(
-                f"{name}: staged file {r} holds pulses {zone}, outside the "
-                f"declared BatchStats bounds [{lo}, {hi}] — the declared "
-                "pulse set must be exact (see BatchStats)"
+            refuse(
+                f"staged file {r} holds pulses {zone}, outside the "
+                f"declared BatchStats bounds [{lo}, {hi}]"
             )
 
 
@@ -1069,10 +1086,14 @@ def _plan_and_stage(
             .limit(1)
             .count()
         )
+    # the staged frame holds the batch's rows (a merge adds the kept
+    # ones), so a batch count over the staging gate skips stage_df's
+    # driver probe
+    stage_rows = n_rows or None
     if collisions == 0:
         new_rels = Mf.stage_df(
             _layout(name, prep, len(buckets)), base, name,
-            partition_by="pulse_bucket",
+            partition_by="pulse_bucket", n_rows=stage_rows,
         )
         if pulse_bounds is not None:
             _validate_batch_stats(base, name, new_rels, buckets, pulse_bounds)
@@ -1080,9 +1101,13 @@ def _plan_and_stage(
 
     kept = existing.join(F.broadcast(batch_keys), on=keys, how="left_anti")
     merged = kept.select(*prep.columns).unionByName(prep)
+    if name == "records" and len(buckets) == 1:
+        # keep the bucket scan + anti-join parallel under _layout's
+        # one-file coalesce: one plain exchange, no range sampling
+        merged = merged.repartition(1)
     new_rels = Mf.stage_df(
         _layout(name, merged, len(buckets)), base, name,
-        partition_by="pulse_bucket",
+        partition_by="pulse_bucket", n_rows=stage_rows,
     )
     if pulse_bounds is not None:
         # merged files carry old bucket rows too — their pulses span
@@ -1264,7 +1289,18 @@ def upsert_many(
                 items = list(batches.items())
                 if len(items) > 1:
                     with ThreadPoolExecutor(max_workers=len(items)) as ex:
-                        results = list(ex.map(one, items))
+                        futures = [ex.submit(one, item) for item in items]
+                    errors = [f.exception() for f in futures if f.exception()]
+                    if errors:
+                        # one table refused: discard what the others
+                        # staged for this commit, then re-raise
+                        for f in futures:
+                            if f.exception() is None:
+                                _name, r = f.result()
+                                if r is not None:
+                                    Mf.discard(base, r[0])
+                        raise errors[0]
+                    results = [f.result() for f in futures]
                 else:
                     results = [one(items[0])]
                 changed = False

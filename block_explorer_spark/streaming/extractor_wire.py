@@ -284,7 +284,7 @@ _RAW_FIELDS = (
     (12, "position", "int"),
     # FullPulse chain links ride each record (the gRPC source delivers
     # pulse metadata alongside records — platform_pulse.go:43-57);
-    # absent = unknown, and pulses_from_raw falls back to cadence
+    # absent = unknown, and pipeline._pulses_table falls back to cadence
     (13, "prev_pulse_number", "int?"),
     (14, "next_pulse_number", "int?"),
 )

@@ -34,45 +34,6 @@ from block_explorer_spark.sources import manifest as Mf
 from block_explorer_spark.sources import parquet as pq
 
 
-def pulses_from_raw(raw: DataFrame) -> DataFrame:
-    """Derive pulse rows for a raw batch.
-
-    The gRPC source delivers pulse metadata alongside records — a
-    FullPulse with REAL prev/next chain links
-    (etl/extractor/platform_pulse.go:43-57) — and those links are what
-    the reference stores (SavePulse). The raw schema carries them as
-    nullable columns; when a stand-in source omits them, fall back to
-    the nominal step-10 cadence. Irregular cadences (skipped
-    consensus rounds) therefore ingest with correct links instead of
-    mislabeled nominal ones; chain repair (W2/J2) still covers
-    neighbors that never arrive.
-
-    New pulses start incomplete/non-sequential; the control plane
-    flips the flags (reference does the same on SavePulse).
-    """
-    step = 10
-    return (
-        raw.groupBy("pulse_number")
-        .agg(
-            F.max("timestamp").alias("timestamp"),
-            F.max("prev_pulse_number").alias("__real_prev"),
-            F.max("next_pulse_number").alias("__real_next"),
-        )
-        .withColumn(
-            "prev_pulse_number", F.coalesce(F.col("__real_prev"), F.col("pulse_number") - step)
-        )
-        .withColumn(
-            "next_pulse_number", F.coalesce(F.col("__real_next"), F.col("pulse_number") + step)
-        )
-        .drop("__real_prev", "__real_next")
-        .withColumn("is_complete", F.lit(False))
-        .withColumn("is_sequential", F.lit(False))
-        .withColumn("jet_drop_amount", F.lit(0).cast("long"))
-        .withColumn("record_amount", F.lit(0).cast("long"))
-        .select(*[f.name for f in schemas.PULSES.fields])
-    )
-
-
 def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
     """One micro-batch: transform + persist (idempotent, replay-safe).
 
@@ -100,11 +61,19 @@ def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
     # through the same code the cluster path uses (the chain sort is
     # literally the same function object; decode equivalence is
     # test-pinned), and the commit costs ONE Spark job total. Above
-    # the gate (backfills, compactions) nothing changes.
+    # the gate (backfills, compactions) the cluster body runs.
     probe = _probe_arrow(raw)
     if probe is not None:
         _ingest_batch_driver(spark, base, probe)
-        return
+    else:
+        _ingest_batch_cluster(spark, base, raw)
+
+
+def _ingest_batch_cluster(spark: SparkSession, base: str, raw: DataFrame) -> None:
+    """ingest_batch's cluster body, for batches above the driver gate.
+    Callers that already know the batch is over the gate (flush_pending
+    counts its spool from the parquet footers) call it directly and
+    skip the probe."""
     raw = raw.cache()
     records = None
     try:
@@ -137,15 +106,15 @@ def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
         # carries the raw side's pulse metadata (max timestamp + real
         # prev/next chain links), so the 1-row-per-pulse PULSES batch
         # is built driver-side from the collected rows instead of
-        # running pulses_from_raw as a second aggregation query over
-        # raw at staging time (one whole exchange + its AQE jobs gone;
-        # the batch is bounded by the micro-batch's pulse count, a few
-        # rows, so the local relation is free).
+        # running a second aggregation query over raw at staging time.
+        # The records side adds its distinct jets per pulse, which make
+        # the jet_drops row count exact.
         nul = F.lit(None).cast("long")
         per_pulse = (
             raw.select(
                 "pulse_number", F.lit(0).alias("__is_rec"), "timestamp",
                 "prev_pulse_number", "next_pulse_number",
+                F.lit(None).cast("string").alias("__rec_jet"),
             )
             .unionByName(
                 records.select(
@@ -153,6 +122,7 @@ def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
                     nul.alias("timestamp"),
                     nul.alias("prev_pulse_number"),
                     nul.alias("next_pulse_number"),
+                    F.col("jet_id").alias("__rec_jet"),
                 )
             )
             .groupBy("pulse_number")
@@ -162,40 +132,18 @@ def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
                 F.max("timestamp").alias("ts"),
                 F.max("prev_pulse_number").alias("prev"),
                 F.max("next_pulse_number").alias("next"),
+                F.size(F.collect_set("__rec_jet")).alias("n_jets"),
             )
             .collect()
         )
-        raw_pulses = [
-            r["pulse_number"] for r in per_pulse if r["n_all"] > r["n_rec"]
-        ]
+        raw_rows = [r for r in per_pulse if r["n_all"] > r["n_rec"]]
+        pulses_tbl = _pulses_table(
+            (r["pulse_number"], r["ts"], r["prev"], r["next"]) for r in raw_rows
+        )
+        raw_pulses = [r["pulse_number"] for r in raw_rows]
         touched = [r["pulse_number"] for r in per_pulse if r["n_rec"]]
         n_records = sum(r["n_rec"] for r in per_pulse)
-        # same derivation as pulses_from_raw (step-10 fallback for
-        # sources that lack real chain links), driver-side
-        step = 10
-        pulses = spark.createDataFrame(
-            [
-                {
-                    "pulse_number": r["pulse_number"],
-                    "prev_pulse_number": (
-                        r["prev"] if r["prev"] is not None
-                        else r["pulse_number"] - step
-                    ),
-                    "next_pulse_number": (
-                        r["next"] if r["next"] is not None
-                        else r["pulse_number"] + step
-                    ),
-                    "is_complete": False,
-                    "is_sequential": False,
-                    "timestamp": r["ts"],
-                    "jet_drop_amount": 0,
-                    "record_amount": 0,
-                }
-                for r in per_pulse
-                if r["n_all"] > r["n_rec"]
-            ],
-            schemas.PULSES,
-        )
+        pulses = spark.createDataFrame(pulses_tbl, schemas.PULSES)
         drops = Tr.jet_drops_from_records(records, pulses)
         # Counter-correctness probe BEFORE the merges: if any touched
         # (pulse, jet) drop already exists — a pulse whose records
@@ -213,18 +161,19 @@ def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
         # records and (steady state) jet_drops publish atomically,
         # matching the reference's single load txn (storage.go:28-82).
         # upsert_many stages the per-table writes in parallel threads
-        # internally, so this keeps the previous concurrency.
-        batches = {"pulses": pulses, "records": records}
+        # internally, so this keeps the previous concurrency. The
+        # pulses batch is already on the driver, so it stages through
+        # upsert_many's pyarrow path with no Spark job.
+        batches = {"pulses": pulses_tbl, "records": records}
         stats = {
             "pulses": pq.BatchStats(raw_pulses, len(raw_pulses)),
             "records": pq.BatchStats(touched, n_records),
         }
         if not prior:
             batches["jet_drops"] = drops
-            # one row per (pulse, jet): bounded above by the record
-            # count — the bound is only consumed by the records-table
-            # sidecar gate, so an upper bound is safe for jet_drops
-            stats["jet_drops"] = pq.BatchStats(touched, n_records)
+            stats["jet_drops"] = pq.BatchStats(
+                touched, sum(r["n_jets"] for r in per_pulse)
+            )
         pq.upsert_many(spark, base, batches, batch_stats=stats)
         if prior:
             # Split-pulse path only: recompute counts from the merged
@@ -240,6 +189,43 @@ def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
         raw.unpersist()
         if records is not None:
             records.unpersist()
+
+
+def _pulses_table(facts):
+    """The pulses batch as a pyarrow.Table, from per-pulse
+    (pulse_number, max timestamp, prev link, next link) facts; both
+    placements build it here.
+
+    The gRPC source delivers pulse metadata alongside records — a
+    FullPulse with REAL prev/next chain links
+    (etl/extractor/platform_pulse.go:43-57) — and those links are what
+    the reference stores (SavePulse). The raw schema carries them as
+    nullable columns; when a stand-in source omits them, fall back to
+    the nominal step-10 cadence. Irregular cadences (skipped consensus
+    rounds) therefore ingest with correct links instead of mislabeled
+    nominal ones; chain repair (W2/J2) still covers neighbors that
+    never arrive. New pulses start incomplete/non-sequential with zero
+    counters; the control plane flips the flags (the reference does
+    the same on SavePulse)."""
+    import pyarrow as pa
+
+    step = 10
+    return pa.Table.from_pylist(
+        [
+            {
+                "pulse_number": pn,
+                "prev_pulse_number": prev if prev is not None else pn - step,
+                "next_pulse_number": nxt if nxt is not None else pn + step,
+                "is_complete": False,
+                "is_sequential": False,
+                "timestamp": ts,
+                "jet_drop_amount": 0,
+                "record_amount": 0,
+            }
+            for pn, ts, prev, nxt in facts
+        ],
+        schema=pq._arrow_schema("pulses"),
+    )
 
 
 def _probe_arrow(raw: DataFrame):
@@ -268,31 +254,35 @@ def _prior_jet_drops(spark: SparkSession, base: str, touched: list[int]) -> int:
     jobs); surviving candidates under DRIVER_MERGE_BYTES are probed
     driver-side through pyarrow (stats-less files are conservatively
     kept by prune_by_stats, so they get read, never skipped); only a
-    big overlap pays the Spark read the old path always paid."""
+    big overlap pays the Spark read the old path always paid, and so
+    does a legacy store the manifest does not cover yet."""
     if not touched or not os.path.exists(pq.table_path(base, "jet_drops")):
         return 0
     lo, hi = min(touched), max(touched)
     try:
         snap = Mf.read(base)
-        rels = snap["families"].get("jet_drops", [])
-        cand = Mf.prune_by_stats(
-            snap, "jet_drops", "pulse_number", lo=lo, hi=hi, rels=rels
-        )
-        if not cand:
-            return 0
-        if pq._rels_bytes(base, cand) <= pq.DRIVER_MERGE_BYTES:
-            import pyarrow.parquet as papq
+        # version 0 is a legacy directory store not yet adopted: its
+        # empty manifest proves nothing, so the directory read decides
+        if snap["version"]:
+            rels = snap["families"].get("jet_drops", [])
+            cand = Mf.prune_by_stats(
+                snap, "jet_drops", "pulse_number", lo=lo, hi=hi, rels=rels
+            )
+            if not cand:
+                return 0
+            if pq._rels_bytes(base, cand) <= pq.DRIVER_MERGE_BYTES:
+                import pyarrow.parquet as papq
 
-            tset = set(touched)
-            for rel in cand:
-                col = papq.read_table(
-                    os.path.join(base, rel), columns=["pulse_number"]
-                ).column("pulse_number")
-                if any(p in tset for p in col.to_pylist()):
-                    return 1
-            return 0
-    except Exception:
-        pass  # unreadable manifest (legacy/adopted layout): ask Spark
+                tset = set(touched)
+                for rel in cand:
+                    col = papq.read_table(
+                        os.path.join(base, rel), columns=["pulse_number"]
+                    ).column("pulse_number")
+                    if any(p in tset for p in col.to_pylist()):
+                        return 1
+                return 0
+    except (OSError, ValueError):
+        pass  # unreadable manifest or data file: ask Spark
     try:
         return (
             pq.read_table(
@@ -318,8 +308,6 @@ def _ingest_batch_driver(spark: SparkSession, base: str, raw_tbl) -> None:
     BatchStats are exact by construction, and staging goes through
     upsert_many's pyarrow path — ONE Spark job (the caller's probe
     collect) per micro-batch commit in the steady state."""
-    import pyarrow as pa
-
     raw_pdf = raw_tbl.to_pandas()
     records_pdf = Tr.transform_pulse_data_pdf(raw_pdf, dedupe=True)
 
@@ -332,29 +320,15 @@ def _ingest_batch_driver(spark: SparkSession, base: str, raw_tbl) -> None:
             ("next_pulse_number", "max"),
         ]
     )
-    # same derivation as pulses_from_raw (step-10 fallback for sources
-    # that lack real chain links) — mirrors the cluster path above
-    step = 10
-    pulse_rows = [
-        {
-            "pulse_number": pn,
-            "prev_pulse_number": prev if prev is not None else pn - step,
-            "next_pulse_number": nxt if nxt is not None else pn + step,
-            "is_complete": False,
-            "is_sequential": False,
-            "timestamp": ts,
-            "jet_drop_amount": 0,
-            "record_amount": 0,
-        }
-        for pn, ts, prev, nxt in zip(
+    pulses_tbl = _pulses_table(
+        zip(
             gb.column("pulse_number").to_pylist(),
             gb.column("timestamp_max").to_pylist(),
             gb.column("prev_pulse_number_max").to_pylist(),
             gb.column("next_pulse_number_max").to_pylist(),
         )
-    ]
-    raw_pulses = [r["pulse_number"] for r in pulse_rows]
-    pulses_tbl = pa.Table.from_pylist(pulse_rows, schema=pq._arrow_schema("pulses"))
+    )
+    raw_pulses = pulses_tbl.column("pulse_number").to_pylist()
 
     n_records = len(records_pdf)
     touched = (
@@ -374,7 +348,9 @@ def _ingest_batch_driver(spark: SparkSession, base: str, raw_tbl) -> None:
     if not prior and n_records:
         # driver twin of jet_drops_from_records: one row per
         # (pulse, jet) with the batch pulse's timestamp
-        ts_by_pulse = {r["pulse_number"]: r["timestamp"] for r in pulse_rows}
+        ts_by_pulse = dict(
+            zip(raw_pulses, pulses_tbl.column("timestamp").to_pylist())
+        )
         counts = (
             records_pdf.groupby(["pulse_number", "jet_id"], sort=False)
             .size()
@@ -386,7 +362,7 @@ def _ingest_batch_driver(spark: SparkSession, base: str, raw_tbl) -> None:
             ts_by_pulse.get(int(p)) for p in counts["pulse_number"]
         ]
         batches["jet_drops"] = pq._pdf_to_arrow(counts, "jet_drops")
-        stats["jet_drops"] = pq.BatchStats(touched, n_records)
+        stats["jet_drops"] = pq.BatchStats(touched, len(counts))
     pq.upsert_many(spark, base, batches, batch_stats=stats)
     if prior:
         # Split-pulse path only (rare): recompute counts from the
@@ -544,31 +520,50 @@ def _spool_dir(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "group_spool")
 
 
+def _spool_rows(spool: str) -> int:
+    """Exact row count of the spool's data files from their parquet
+    footers: no data page read, no Spark job. Hidden and underscore
+    files (_SUCCESS, .crc) are skipped, as Spark's file listing skips
+    them; 0 means the spool holds no data files."""
+    import pyarrow.parquet as papq
+
+    n = 0
+    for root, dirs, files in os.walk(spool):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for fn in files:
+            if not fn.startswith(("_", ".")):
+                n += papq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
+    return n
+
+
 def flush_pending(spark: SparkSession, base: str, checkpoint_dir: str) -> int:
     """Ingest whatever the group-commit spool holds (one MERGE + ONE
     manifest swap for the whole group) and clear it. Returns raw rows
     flushed. Idempotent and crash-safe at every point: a crash before
     the clear leaves the spool intact and the next flush re-runs the
-    idempotent MERGE; a crash mid-ingest self-heals the same way."""
+    idempotent MERGE; a crash mid-ingest self-heals the same way.
+
+    Placement is decided once, from the exact row count the spool's
+    parquet footers give for free: over the driver gate the cluster
+    body runs straight away (a catch-up after a gap pays no probe);
+    at or under it the bounded Arrow probe collects the batch for the
+    driver path, still subject to its byte backstop. The spool is
+    cleared only after a successful ingest, or when it holds no data
+    files at all; any read or ingest error propagates and leaves every
+    spooled row in place for the next flush."""
     import shutil
 
     spool = _spool_dir(checkpoint_dir)
     if not os.path.isdir(spool):
         return 0
-    # r12: ONE bounded read decides the path and yields the count —
-    # the standalone count() job re-read the same spool the ingest
-    # probe collects right after (guide §1.2: one pass, not two).
-    try:
-        raw = spark.read.schema(schemas.RAW_RECORDS).parquet(spool)
-        probe = _probe_arrow(raw)
-        n = probe.num_rows if probe is not None else raw.count()
-    except Exception:
-        probe, n = None, 0  # spool dir exists but holds no readable parquet
+    n = _spool_rows(spool)
     if n:
+        raw = spark.read.schema(schemas.RAW_RECORDS).parquet(spool)
+        probe = _probe_arrow(raw) if n <= pq.DRIVER_STAGE_ROWS else None
         if probe is not None:
             _ingest_batch_driver(spark, base, probe)
         else:
-            ingest_batch(spark, base, raw)
+            _ingest_batch_cluster(spark, base, raw)
         run_control_pass(spark, base)
     shutil.rmtree(spool, ignore_errors=True)
     return n

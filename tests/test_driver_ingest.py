@@ -200,3 +200,29 @@ def test_split_pulse_recounts_after_merge(spark, tmp_path, monkeypatch, force_cl
     drops = pq.read_table(spark, base, "jet_drops").collect()
     assert len(drops) == 1
     assert drops[0].record_amount == 5
+
+
+@pytest.mark.parametrize("force_cluster", [False, True])
+def test_split_pulse_into_unadopted_store_recounts(spark, tmp_path, monkeypatch, force_cluster):
+    """The same split pulse against a store in the directory layout
+    written before the manifest log (version 0, not yet adopted): the
+    empty manifest proves nothing, so the prior-drops probe must read
+    the directory, and the counts must still cover both deliveries."""
+    import os
+    import shutil
+
+    from block_explorer_spark.sources import manifest as Mf
+
+    if force_cluster:
+        monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)
+    base = str(tmp_path / ("c" if force_cluster else "d"))
+    p = 4_100_010
+    b1 = [_rr(30 + i, "activate", p, "0", i + 1, obj=bytes([i]) * 8, prev=None) for i in range(3)]
+    b2 = [_rr(40 + i, "activate", p, "0", i + 1, obj=bytes([64 + i]) * 8, prev=None) for i in range(2)]
+    P.ingest_batch(spark, base, spark.createDataFrame(b1, schemas.RAW_RECORDS))
+    shutil.rmtree(os.path.join(base, "_manifest"))
+    assert Mf.current_version(base) == 0
+    P.ingest_batch(spark, base, spark.createDataFrame(b2, schemas.RAW_RECORDS))
+    drops = pq.read_table(spark, base, "jet_drops").collect()
+    assert len(drops) == 1
+    assert drops[0].record_amount == 5

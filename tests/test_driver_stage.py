@@ -123,13 +123,20 @@ def test_understated_batch_stats_refused_before_commit(spark, tmp_path, monkeypa
     batch = spark.createDataFrame(
         _records_rows(1500, 5) + _records_rows(2600, 5), schemas.RECORDS
     )
+    pulses = spark.createDataFrame([_pulse_row(1500)], schemas.PULSES)
     with pytest.raises(ValueError, match="BatchStats|declared"):
         pq.upsert_many(
-            spark, base, {"records": batch},
-            batch_stats={"records": pq.BatchStats([1500], 10)},  # missing 2600
+            spark, base, {"pulses": pulses, "records": batch},
+            batch_stats={
+                "pulses": pq.BatchStats([1500], 1),
+                "records": pq.BatchStats([1500], 10),  # missing 2600
+            },
         )
-    # nothing published
-    assert Mf.read(base)["families"].get("records", []) == []
+    # nothing published, and nothing staged for the refused commit
+    # stays behind: neither the refused table's files nor the files the
+    # other table staged alongside it
+    assert Mf.read(base)["families"] == {}
+    assert Mf.unmanifested_files(base, ["pulses", "records", pq.OBJIDX]) == {}
 
 
 def test_understated_batch_stats_harmless_on_driver_path(spark, tmp_path):
