@@ -11,7 +11,9 @@ Spark shape: groupBy(pulse_number, jet_id).applyInPandas — groups are
 one jet drop (≤ a few thousand rows), so a per-group hash-map walk in
 Python is both exact and cheap, while the grouping itself (the actual
 scale problem: billions of records → millions of drops) stays a single
-Spark shuffle. Arrow moves each group as a columnar batch.
+Spark shuffle. Arrow moves each group as a columnar batch. The group
+step starts with the D2 decode, so the kind mapping is written once
+(`decode`) and both placements run the same function.
 """
 
 from __future__ import annotations
@@ -19,10 +21,6 @@ from __future__ import annotations
 from typing import Iterable
 
 import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from block_explorer_spark import schemas
 
@@ -91,18 +89,88 @@ def order_group(records: list[dict]) -> list[dict]:
     return out
 
 
+#: D2 (etl/transformer/transformer.go:231-277): each supported platform
+#: kind → (model type, the clearable columns it keeps). Any other kind
+#: is skipped, as the reference skips it.
+#:   - prototype_reference only for Activate/Amend (the object's image);
+#:   - prev_record_reference only for Amend/Deactivate (PrevState);
+#:     cleared for Activate (chain head) and non-state kinds;
+#:   - payload only for Activate/Amend (the object Memory) and Result
+#:     (the result Payload); deactivate and requests persist an empty
+#:     payload in the reference.
+KINDS = {
+    "activate": ("state", {"prototype_reference", "payload"}),
+    "amend": ("state", {"prototype_reference", "prev_record_reference", "payload"}),
+    "deactivate": ("state", {"prev_record_reference"}),
+    "result": ("result", {"payload"}),
+    "incoming_request": ("request", set()),
+    "outgoing_request": ("request", set()),
+}
+_CLEARABLE = ("prototype_reference", "prev_record_reference", "payload")
+
+#: The chain walk's input columns: schemas.RECORDS minus the `order`
+#: it assigns, plus the extractor `position` it orders by.
+_WALK_COLS = [f.name for f in schemas.RECORDS.fields if f.name != "order"] + ["position"]
+_OUT_COLS = [f.name for f in schemas.RECORDS.fields] + ["chain_error"]
+
+
+def decode(rows: list[dict]) -> list[dict]:
+    """D2: normalize raw platform records (schemas.RAW_RECORDS columns)
+    into the 3 model types (KINDS), projected to the chain walk's
+    columns. Row by row in plain Python: a jet drop is small, and a
+    per-group pandas pass would cost more than the rows themselves."""
+    out = []
+    for r in rows:
+        rule = KINDS.get(r["kind"])
+        if rule is None:
+            continue
+        typ, kept = rule
+        d = {c: r[c] for c in _WALK_COLS if c != "type"}
+        d["type"] = typ
+        for c in _CLEARABLE:
+            if c not in kept:
+                d[c] = None
+        out.append(d)
+    return out
+
+
+def _unique(rows: list[dict]) -> list[dict]:
+    """Identical rows collapsed to their first occurrence (nulls equal,
+    as pandas' drop_duplicates has them)."""
+    seen: set = set()
+    out = []
+    for r in rows:
+        key = tuple(v if v == v else None for v in r.values())
+        if key not in seen:
+            seen.add(key)
+            out.append(r)
+    return out
+
+
 def make_sort_group(dedupe: bool):
-    """The per-(pulse, jet) group transform, as one pandas→pandas
-    function. Module-level so BOTH execution paths — the cluster
-    `applyInPandas` below and the driver-side micro-batch transform
-    (plans/transformer.transform_pulse_data_pdf) — run the identical
-    code object; path equivalence is by construction, not by parallel
-    implementation."""
+    """The whole per-(pulse, jet) transform step as one pandas→pandas
+    function: decode → exact-duplicate collapse → chain walk. Both
+    placements run it: the cluster as the grouped map of
+    transformer.transform_pulse_data, the driver over a pandas groupby
+    in transformer.transform_pulse_data_pdf.
+
+    Input: one group's raw records. Output: schemas.RECORDS plus
+    `chain_error` (None, or why the drop's chains are broken/forked;
+    such a drop keeps positional order). A group holding only
+    unsupported kinds yields an empty frame with the output columns.
+
+    dedupe=True collapses identical rows AFTER decode: an at-least-once
+    source's exact replays share every column incl. (pulse, jet), so
+    they always land in one group, and replays that differ only in a
+    column decode clears collapse too. Rows differing in any kept
+    column (a genuine in-batch fork) still reach fork validation."""
 
     def sort_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = decode(pdf.to_dict("records"))
         if dedupe:
-            pdf = pdf.drop_duplicates()
-        rows = pdf.to_dict("records")
+            rows = _unique(rows)
+        if not rows:
+            return pd.DataFrame(columns=_OUT_COLS)
         try:
             ordered = order_group(rows)
             err = None
@@ -114,45 +182,7 @@ def make_sort_group(dedupe: bool):
                 ordered.append(r)
             err = str(e)
         res = pd.DataFrame(ordered)
-        res = res.drop(columns=["position"])
         res["chain_error"] = err
-        return res
+        return res[_OUT_COLS]
 
     return sort_group
-
-
-def chain_sort_drops(
-    decoded: DataFrame, drop_invalid: bool = True, dedupe: bool = False
-) -> DataFrame:
-    """Assign `order` per (pulse_number, jet_id) via the J6 chain sort.
-
-    Input: decoded records (schemas.RECORDS minus `order`, plus
-    `position`). Output: schemas.RECORDS. Invalid drops (broken/forked
-    chains) are dropped when drop_invalid=True — matching the
-    reference's fail-the-whole-drop semantics; the controller's reload
-    loop (D6) re-requests them later.
-
-    dedupe=True collapses byte-identical rows INSIDE each group before
-    the chain walk (r11): an at-least-once source's exact replays share
-    every column incl. (pulse, jet), so they always land in the same
-    group, and the in-group pandas dedup rides the grouping shuffle the
-    sort already pays — the caller saves the standalone
-    `dropDuplicates()` exchange over the full batch (guide §2.4). Rows
-    differing in ANY column (a genuine in-batch fork) still reach fork
-    validation exactly as before.
-    """
-    out_schema = T.StructType(
-        [f for f in schemas.RECORDS.fields] + [T.StructField("chain_error", T.StringType(), True)]
-    )
-    in_cols = [f.name for f in schemas.RECORDS.fields if f.name != "order"] + ["position"]
-
-    sort_group = make_sort_group(dedupe)
-
-    sorted_df = (
-        decoded.select(*in_cols, F.lit(0).alias("order"))
-        .groupBy("pulse_number", "jet_id")
-        .applyInPandas(sort_group, schema=out_schema)
-    )
-    if drop_invalid:
-        sorted_df = sorted_df.filter(F.col("chain_error").isNull())
-    return sorted_df.drop("chain_error")

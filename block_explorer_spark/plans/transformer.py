@@ -6,156 +6,73 @@ reference: etl/transformer/transformer.go:22-84 (Transform),
 The reference transforms one pulse at a time through a channel; here
 the same logic is one declarative batch transform over any number of
 pulses at once — grouping per (pulse, jet) replaces the per-pulse loop
-and scales by partitioning instead of queue depth.
+and scales by partitioning instead of queue depth. The per-group step
+(decode → exact-duplicate collapse → chain walk) is one function,
+chain_sort.make_sort_group; the two entry points below differ only in
+where the batch lives.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from block_explorer_spark import schemas
-from block_explorer_spark.operators.chain_sort import chain_sort_drops
+from block_explorer_spark.operators import chain_sort as CS
 
-#: D2 kind → type mapping (etl/transformer/transformer.go:231-277):
-#: Activate/Amend/Deactivate → state; Result → result;
-#: Incoming/OutgoingRequest → request; anything else is skipped.
-_STATE_KINDS = list(schemas.RAW_KINDS_STATE)
-_REQUEST_KINDS = ["incoming_request", "outgoing_request"]
-
-
-def decode_records(raw: DataFrame) -> DataFrame:
-    """D2: normalize the 6 platform record kinds into the 3 model types.
-
-    - unsupported kinds are dropped (reference skips them);
-    - prototype_reference is only meaningful for Activate/Amend (the
-      object's image); cleared elsewhere;
-    - prev_record_reference only for Amend/Deactivate (PrevState);
-      cleared for Activate (chain head) and non-state kinds;
-    - payload stored only for Activate/Amend (the object Memory) and
-      Result (the result Payload); deactivate and incoming/outgoing
-      requests persist an empty payload in the reference
-      (etl/transformer/transformer.go:231-277 sets Payload only in
-      those three branches).
-    All F.when chains — no UDF, full codegen.
-    """
-    kind = F.col("kind")
-    typ = (
-        F.when(kind.isin(_STATE_KINDS), F.lit("state"))
-        .when(kind == "result", F.lit("result"))
-        .when(kind.isin(_REQUEST_KINDS), F.lit("request"))
-        .otherwise(F.lit(None))
-    )
-    proto = F.when(kind.isin(["activate", "amend"]), F.col("prototype_reference")).otherwise(
-        F.lit(None)
-    )
-    prev = F.when(
-        kind.isin(["amend", "deactivate"]), F.col("prev_record_reference")
-    ).otherwise(F.lit(None))
-    payload = F.when(
-        kind.isin(["activate", "amend", "result"]), F.col("payload")
-    ).otherwise(F.lit(None))
-    return (
-        raw.withColumn("type", typ)
-        .filter(F.col("type").isNotNull())
-        .withColumn("prototype_reference", proto)
-        .withColumn("prev_record_reference", prev)
-        .withColumn("payload", payload)
-        .drop("kind")
-    )
-
-
-def _decode_pandas(pdf):
-    """Driver-side twin of decode_records over a collected raw batch
-    (pandas in, pandas out). Same kind→type mapping, same column
-    clearing, same unsupported-kind drop. `kind` is non-nullable by
-    schema, so plain membership tests match Spark's isin semantics.
-    Equivalence with the Spark version is pinned by
-    test_driver_ingest::test_decode_pandas_matches_spark."""
-    kind = pdf["kind"]
-    is_state = kind.isin(_STATE_KINDS)
-    is_result = kind == "result"
-    is_request = kind.isin(_REQUEST_KINDS)
-    out = pdf[is_state | is_result | is_request].copy()
-    k = out["kind"]
-    out["type"] = "state"
-    out.loc[k == "result", "type"] = "result"
-    out.loc[k.isin(_REQUEST_KINDS), "type"] = "request"
-    proto_keep = k.isin(["activate", "amend"])
-    out.loc[~proto_keep, "prototype_reference"] = None
-    prev_keep = k.isin(["amend", "deactivate"])
-    out.loc[~prev_keep, "prev_record_reference"] = None
-    payload_keep = k.isin(["activate", "amend", "result"])
-    out.loc[~payload_keep, "payload"] = None
-    return out.drop(columns=["kind"])
-
-
-def transform_pulse_data_pdf(raw_pdf, drop_invalid: bool = True, dedupe: bool = False):
-    """Driver-side twin of transform_pulse_data for an already
-    collected micro-batch (pandas in, pandas out). Runs the SAME
-    per-group function as the cluster applyInPandas
-    (chain_sort.make_sort_group), so the chain walk, the dedupe
-    collapse and the broken/forked-drop semantics are shared code, not
-    a parallel implementation. Used by the KB-scale ingest fast path
-    (streaming/pipeline.ingest_batch) to skip the Spark boundary
-    entirely for batches the driver holds anyway."""
-    import pandas as pd
-
-    from block_explorer_spark.operators import chain_sort as CS
-
-    out_cols = [f.name for f in schemas.RECORDS.fields]
-    in_cols = [f.name for f in schemas.RECORDS.fields if f.name != "order"] + ["position"]
-    decoded = _decode_pandas(raw_pdf)
-    if decoded.empty:
-        return pd.DataFrame(columns=out_cols)
-    decoded = decoded[in_cols].copy()
-    decoded["order"] = 0
-    sort_group = CS.make_sort_group(dedupe)
-    parts = [
-        sort_group(g)
-        for _, g in decoded.groupby(["pulse_number", "jet_id"], sort=False)
-    ]
-    res = pd.concat(parts, ignore_index=True)
-    if drop_invalid:
-        res = res[res["chain_error"].isna()]
-    return res.drop(columns=["chain_error"])[out_cols]
+#: The raw columns the group step reads (the pulse-chain links are
+#: per-pulse facts, not record columns, so they stay behind).
+_RAW_COLS = [
+    f.name
+    for f in schemas.RAW_RECORDS.fields
+    if f.name not in ("prev_pulse_number", "next_pulse_number")
+]
+_RECORD_COLS = [f.name for f in schemas.RECORDS.fields]
 
 
 def transform_pulse_data(
     raw: DataFrame, drop_invalid: bool = True, dedupe: bool = False
 ) -> DataFrame:
-    """D1: full transform — decode then per-drop chain sort + order.
+    """D1 on the cluster: the group step per (pulse_number, jet_id) as
+    a grouped map (applyInPandas), one Spark shuffle for the batch.
 
     Input: schemas.RAW_RECORDS. Output: schemas.RECORDS with `order`
     assigned 1..N within each (pulse_number, jet_id), state chains
     ordered by prev-links; drops with broken/forked chains removed
-    (reloaded later by the controller, D6). dedupe=True additionally
-    collapses byte-identical raw replays inside the chain-sort groups
-    (see chain_sort_drops — saves the caller a full-batch exchange).
-    """
-    decoded = decode_records(raw)
-    return chain_sort_drops(decoded, drop_invalid=drop_invalid, dedupe=dedupe)
+    when drop_invalid (the reference fails the whole drop; the
+    controller's reload loop, D6, re-requests it). dedupe=True
+    collapses exact replays inside the groups, riding the shuffle the
+    sort pays anyway instead of a standalone full-batch exchange."""
+    out_schema = T.StructType(
+        list(schemas.RECORDS.fields)
+        + [T.StructField("chain_error", T.StringType(), True)]
+    )
+    out = (
+        raw.select(*_RAW_COLS)
+        .groupBy("pulse_number", "jet_id")
+        .applyInPandas(CS.make_sort_group(dedupe), schema=out_schema)
+    )
+    if drop_invalid:
+        out = out.filter(F.col("chain_error").isNull())
+    return out.drop("chain_error")
 
 
-def jet_drops_from_records(
-    sorted_records: DataFrame, pulses: DataFrame
-) -> DataFrame:
-    """Derive the jet_drops rows for a transformed batch (A3 counts +
-    pulse metadata copy — the reference builds these in the processor,
-    etl/processor/processor.go:131-167). Hash/prev-hash columns come
-    from the raw platform drop when available; this derivation covers
-    sources that provide records only."""
-    counts = sorted_records.groupBy("pulse_number", "jet_id").agg(
-        F.count(F.lit(1)).cast("int").alias("record_amount")
-    )
-    p = pulses.select("pulse_number", F.col("timestamp").alias("__p_ts"))
-    return (
-        counts.join(F.broadcast(p), "pulse_number", "left_outer")
-        .withColumn("first_prev_hash", F.lit(None).cast("binary"))
-        .withColumn("second_prev_hash", F.lit(None).cast("binary"))
-        .withColumn("hash", F.lit(None).cast("binary"))
-        .withColumn("raw_data", F.lit(None).cast("binary"))
-        .withColumn("timestamp", F.col("__p_ts"))
-        .drop("__p_ts")
-        .select(*[f.name for f in schemas.JET_DROPS.fields])
-    )
+def transform_pulse_data_pdf(raw_pdf, drop_invalid: bool = True, dedupe: bool = False):
+    """D1 on the driver, for a micro-batch it already holds (pandas in,
+    pandas out): the same group step over a pandas groupby, with the
+    same output as transform_pulse_data."""
+    import pandas as pd
+
+    step = CS.make_sort_group(dedupe)
+    parts = [
+        part
+        for _, g in raw_pdf.groupby(["pulse_number", "jet_id"], sort=False)
+        if len(part := step(g))
+    ]
+    if not parts:
+        return pd.DataFrame(columns=_RECORD_COLS)
+    res = pd.concat(parts, ignore_index=True)
+    if drop_invalid:
+        res = res[res["chain_error"].isna()]
+    return res[_RECORD_COLS]

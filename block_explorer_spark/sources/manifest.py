@@ -52,6 +52,8 @@ import json
 import os
 import uuid
 
+from block_explorer_spark import placement
+
 
 class CommitConflict(Exception):
     """Another writer committed the version this writer expected to
@@ -260,34 +262,23 @@ def stage_move(staging_dir: str, data_dir: str) -> list[str]:
     return out
 
 
-#: Driver-side staging gate (r12): a store's micro-commit delta is
-#: KB-scale, but a Spark parquet write job costs a fixed ~0.3-0.9 s
-#: (task launch + committer + staging move) regardless of size. A
-#: frame at or below this row count (probed with a bounded LIMIT
-#: collect — one cheap job) is written by the DRIVER through pyarrow:
-#: same directory layout, same invisibility-until-commit, same zone
-#: maps; row order follows the collected partition order, so
-#: sortWithinPartitions/repartitionByRange shaping survives. Larger
-#: frames (or non-integer partition values, which need Hive path
-#: escaping) keep the cluster write path unchanged.
-STAGE_DRIVER_ROWS = int(os.environ.get("SPARK_GRAFT_STAGE_DRIVER_ROWS", "65536"))
-#: Byte backstop for the probe (guards wide binary/vector rows).
-STAGE_DRIVER_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STAGE_DRIVER_BYTES", str(128 * 1024 * 1024))
-)
-
-
 def _stage_df_driver(
     df, base: str, data_name: str, partition_by: str | None
 ) -> list[str] | None:
-    """Bounded-probe driver-side staging; None → caller takes the
-    Spark write path (too big, or a shape pyarrow should not guess
-    at). Writes one file per (upstream Spark partition, partition_by
-    value) — the SAME file granularity as the cluster write — so
-    range-clustered multi-file layouts (postings/zorder/obj_key
-    slicing) keep their per-file disjoint zones and the read-side
-    skipping they exist for. spark_partition_id() rides the collected
-    rows to recover the boundaries."""
+    """Driver-side staging of a frame the bounded probe collects
+    (placement.collect_bounded): a store's micro-commit delta is
+    KB-scale, but a Spark parquet write job costs a fixed ~0.3-0.9 s
+    whatever the size. Same directory layout, same invisibility until
+    commit, same zone maps. None → the caller takes the Spark write
+    path (too big, a type Arrow cannot carry, or non-integer partition
+    values, which need Hive path escaping). Writes one file per
+    (upstream Spark partition, partition_by value) — the SAME file
+    granularity as the cluster write — so range-clustered multi-file
+    layouts (postings/zorder/obj_key slicing) keep their per-file
+    disjoint zones and the read-side skipping they exist for.
+    spark_partition_id() rides the collected rows to recover the
+    boundaries."""
+    from pyspark.errors import PySparkTypeError
     from pyspark.sql import functions as F
 
     import pyarrow.compute as pc
@@ -295,14 +286,10 @@ def _stage_df_driver(
 
     pid = "__stage_pid"
     try:
-        tbl = (
-            df.withColumn(pid, F.spark_partition_id())
-            .limit(STAGE_DRIVER_ROWS + 1)
-            .toArrow()
-        )
-    except Exception:
-        return None  # non-Arrow-convertible type: cluster path
-    if tbl.num_rows > STAGE_DRIVER_ROWS or tbl.nbytes > STAGE_DRIVER_BYTES:
+        tbl = placement.collect_bounded(df.withColumn(pid, F.spark_partition_id()))
+    except PySparkTypeError:
+        return None  # a type with no Arrow conversion: cluster path
+    if tbl is None:
         return None
     if tbl.num_rows == 0 and partition_by:
         return []  # partitioned Spark write of an empty frame: no files
@@ -350,13 +337,13 @@ def stage_df(
     """Write a DataFrame to a staging dir, move its files (uniquely
     renamed, partition subdirs preserved) into base/data_name, return
     their manifest relpaths. Invisible until a commit lists them.
-    KB-scale frames stage driver-side (see STAGE_DRIVER_ROWS); a caller
+    KB-scale frames stage driver-side (see _stage_df_driver); a caller
     that already knows the frame's row count passes `n_rows`, and a
     count over the gate skips the driver probe (a LIMIT collect that
     could only come back too big) and writes through Spark directly."""
     import shutil
 
-    if n_rows is None or n_rows <= STAGE_DRIVER_ROWS:
+    if placement.admits(n_rows):
         rels = _stage_df_driver(df, base, data_name, partition_by)
         if rels is not None:
             return rels

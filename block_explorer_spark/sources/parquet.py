@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors.exceptions.captured import AnalysisException
 
-from block_explorer_spark import schemas
+from block_explorer_spark import placement, schemas
 from block_explorer_spark.sources import manifest as Mf
 
 PULSE_BUCKET_SIZE = 1000
@@ -564,36 +564,6 @@ def _objidx_pending(snap_or_m: dict) -> list[str]:
     )
 
 
-#: Driver-side staging gate (r12, guide §1.2/§6): a micro-batch commit
-#: is FIXED-COST bound, not compute bound — each tiny staging write
-#: pays a full Spark job (task launch + parquet committer + staging
-#: move), ~0.3-0.9 s for KB of data, and the r11 profile showed the
-#: 3-table commit spending most of its wall in exactly those jobs. A
-#: batch at or below this row count is therefore collected ONCE to an
-#: Arrow table (one lightweight collect job — and none at all for
-#: driver-local relations) and staged by the DRIVER through pyarrow:
-#: same files, same layout (bucket partition dirs, records obj_key
-#: clustering + in-file sort, sidecar delta), same zone-map stats,
-#: same CAS commit — minus every per-table Spark write job. Batches
-#: above the gate keep the cluster write path unchanged, so the gate
-#: is scale-adaptive: a 100 TB deployment's KB-scale trickle commits
-#: take the driver path while backfills use the cluster. Collision
-#: checks/merges only stay driver-side while the touched file bytes
-#: are under DRIVER_MERGE_BYTES; otherwise the table falls back to
-#: the Spark path mid-flight (the Arrow batch converts back losslessly).
-DRIVER_STAGE_ROWS = int(os.environ.get("SPARK_GRAFT_DRIVER_STAGE_ROWS", "65536"))
-#: Byte backstop for the bounded probe-collect of stats-less batches:
-#: a probe whose Arrow payload exceeds 8x this falls back to the
-#: cluster path even under the row cap (guards wide binary rows).
-DRIVER_STAGE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_STAGE_BYTES", str(16 * 1024 * 1024))
-)
-#: On-disk byte cap for driver-side collision checks / bucket merges.
-DRIVER_MERGE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_MERGE_BYTES", str(32 * 1024 * 1024))
-)
-
-
 def _bucket_of(pn: int) -> int:
     """Driver-side twin of with_bucket's (pulse/N) cast-to-long —
     truncation toward zero, exactly like Spark's double→long cast."""
@@ -636,32 +606,24 @@ def _arrow_schema(name: str):
     )
 
 
-#: Sentinel: the bounded collect found more rows than the cap — the
-#: batch is not driver-stageable; take the cluster path.
+#: Sentinel: the bounded collect refused the batch — it is not
+#: driver-stageable; take the cluster path.
 _TOO_BIG = object()
 
 
-def _collect_arrow(batch: DataFrame, name: str, cap: int | None = None):
+def _collect_arrow(batch: DataFrame, name: str, bounded: bool):
     """Collect one table's batch to an Arrow table in the pinned
-    column order/types, dedup by PK (keep-first — upsert's in-batch
-    winner is unspecified), and append the pulse_bucket column.
-    Returns the prepped table, None for an empty batch, or _TOO_BIG
-    when `cap` is given and the batch exceeds it (the LIMIT bounds
-    what the driver ever holds, so probing an unknown-size batch is
-    safe — and the probe job replaces the planning job the cluster
-    path would have paid anyway)."""
-    import pyarrow as pa
-
-    cols = [f.name for f in TABLE_SCHEMAS[name].fields]
-    src = batch.select(*cols)
-    if cap is not None:
-        src = src.limit(cap + 1)
-    tbl = src.toArrow().cast(_arrow_schema(name))
-    if cap is not None and (
-        tbl.num_rows > cap or tbl.nbytes > 8 * DRIVER_STAGE_BYTES
-    ):
+    column order/types, prepped by _prep_arrow_table. Returns the
+    prepped table, None for an empty batch, or _TOO_BIG when `bounded`
+    and the one bounded probe (placement.collect_bounded) refuses it —
+    the LIMIT bounds what the driver ever holds, so probing an
+    unknown-size batch is safe, and the probe job replaces the
+    planning job the cluster path would have paid anyway."""
+    src = batch.select(*[f.name for f in TABLE_SCHEMAS[name].fields])
+    tbl = placement.collect_bounded(src) if bounded else src.toArrow()
+    if tbl is None:
         return _TOO_BIG
-    return _prep_arrow_table(tbl, name)
+    return _prep_arrow_table(tbl.cast(_arrow_schema(name)), name)
 
 
 def _prep_arrow_table(tbl, name: str):
@@ -811,7 +773,7 @@ def _plan_and_stage_arrow(
 ) -> tuple[list[str], dict[str, list[str]], list[str]] | None:
     """Driver-side twin of _plan_and_stage for an Arrow-collected
     batch under key→bucket affinity. Returns None when the touched
-    file bytes exceed DRIVER_MERGE_BYTES — the caller then reruns the
+    file bytes exceed placement.MERGE_BYTES — the caller then reruns the
     table through the Spark path (lossless: the Arrow batch converts
     back). Identical decision structure: zone-pruned collision check,
     append-only fast path, bucket merge-rewrite, sidecar delta or
@@ -830,14 +792,14 @@ def _plan_and_stage_arrow(
     batch_keys = _arrow_keys(tbl, keys) if cand else None
     collide = False
     if cand:
-        if _rels_bytes(base, cand) > DRIVER_MERGE_BYTES:
+        if _rels_bytes(base, cand) > placement.MERGE_BYTES:
             return None
         collide = bool(_file_keys(base, cand, keys) & batch_keys)
     if not collide:
         new_rels = _stage_arrow(tbl, base, name)
         fams = {name: rels + new_rels}
     else:
-        if _rels_bytes(base, touched) > DRIVER_MERGE_BYTES:
+        if _rels_bytes(base, touched) > placement.MERGE_BYTES:
             return None
         existing = _read_rels_arrow(base, name, touched)
         kcols = [existing.column(k).to_pylist() for k in keys]
@@ -1206,10 +1168,14 @@ def upsert_many(
                     # instead of paying a prep barrier; retries after
                     # a CAS conflict reuse the cached prep.
                     name, batch = item
-                    if not isinstance(batch, DataFrame) and not key_bucket_affinity:
+                    if not isinstance(batch, DataFrame) and not (
+                        key_bucket_affinity and placement.admits()
+                    ):
                         # pyarrow input without bucket affinity needs
                         # the widened collision check only the Spark
-                        # path implements — convert once (lossless)
+                        # path implements, and with the driver gate off
+                        # it stages through Spark — convert once
+                        # (lossless)
                         batch = spark.createDataFrame(
                             batch, TABLE_SCHEMAS[name]
                         )
@@ -1236,13 +1202,12 @@ def upsert_many(
                                 batch.select(cols).cast(_arrow_schema(name)),
                                 name,
                             )
-                        elif key_bucket_affinity and (
-                            st is None or (st.pulses and st.n_rows <= DRIVER_STAGE_ROWS)
+                        elif (
+                            key_bucket_affinity
+                            and (st is None or st.pulses)
+                            and placement.admits(None if st is None else st.n_rows)
                         ):
-                            tbl = _collect_arrow(
-                                batch, name,
-                                cap=None if st is not None else DRIVER_STAGE_ROWS,
-                            )
+                            tbl = _collect_arrow(batch, name, bounded=st is None)
                         if st is not None and not st.pulses:
                             prepped[name] = None
                         elif tbl is None:

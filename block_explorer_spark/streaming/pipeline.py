@@ -23,11 +23,12 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from block_explorer_spark import schemas
+from block_explorer_spark import placement, schemas
 from block_explorer_spark.plans import controller as C
 from block_explorer_spark.plans import transformer as Tr
 from block_explorer_spark.sources import manifest as Mf
@@ -43,158 +44,152 @@ def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
     a byte-identical duplicate entering the chain sort would read as a
     fork and wrongly fail the whole drop. Upsert's PK merge only covers
     cross-batch replays; in-batch dedup has to happen pre-sort. Dedup
-    is over ALL columns, not just the reference: two rows sharing a
-    reference but differing in payload are a genuine in-batch fork and
-    must reach fork validation, not be collapsed to an arbitrary winner
-    (the reference's C5498 replay is byte-identical only). r11: the
-    dedup rides the chain sort's own (pulse, jet) grouping shuffle
-    (dedupe=True) instead of paying a standalone full-batch exchange —
-    exact duplicates share every column, so they always share a group.
+    is over ALL decoded columns, not just the reference: two rows
+    sharing a reference but differing in payload are a genuine
+    in-batch fork and must reach fork validation, not be collapsed to
+    an arbitrary winner (the reference's C5498 replay is byte-identical
+    only). The dedup rides the chain sort's own (pulse, jet) grouping
+    (dedupe=True) — exact duplicates share every column, so they
+    always share a group.
+
+    Placement (see block_explorer_spark.placement): a batch the bounded
+    probe can collect runs on the driver, anything bigger on the
+    cluster. Both run the same group step, reduce the batch to the same
+    facts and commit through the same `_commit`.
     """
-    # r12 driver fast path (guide §1.2/§6): a KB-scale micro-batch's
-    # commit is fixed-cost bound — every Spark job it runs (transform
-    # materialization, per-table collects, probes) is task-launch and
-    # planning overhead over data the driver could hold outright. One
-    # bounded probe collect (LIMIT cap+1, byte backstop) decides the
-    # path: at or under the gate the WHOLE batch — decode, chain sort,
-    # per-pulse facts, jet-drop derivation, staging — runs driver-side
-    # through the same code the cluster path uses (the chain sort is
-    # literally the same function object; decode equivalence is
-    # test-pinned), and the commit costs ONE Spark job total. Above
-    # the gate (backfills, compactions) the cluster body runs.
-    probe = _probe_arrow(raw)
-    if probe is not None:
-        _ingest_batch_driver(spark, base, probe)
+    tbl = placement.collect_bounded(raw)
+    if tbl is not None:
+        _ingest_batch_driver(spark, base, tbl)
     else:
         _ingest_batch_cluster(spark, base, raw)
 
 
+#: The per-pulse raw facts: the latest timestamp and the real chain
+#: links (max ignores the nulls a stand-in source leaves).
+_PULSE_FACTS = ("timestamp", "prev_pulse_number", "next_pulse_number")
+#: The pulses columns the control plane owns; a replay keeps them.
+_PULSE_STATE = ["is_complete", "is_sequential", "jet_drop_amount", "record_amount"]
+
+
+def _ingest_batch_driver(spark: SparkSession, base: str, raw_tbl) -> None:
+    """ingest_batch on the driver, over one collected Arrow batch: the
+    group step over a pandas groupby, the facts through Arrow
+    group_by (int64-exact: no nullable-int→float promotion on the
+    chain links), then `_commit`. One Spark job per commit in the
+    steady state: the caller's probe collect."""
+    records = pq._pdf_to_arrow(
+        Tr.transform_pulse_data_pdf(raw_tbl.to_pandas(), dedupe=True), "records"
+    )
+    pulse_facts = raw_tbl.group_by("pulse_number").aggregate(
+        [(c, "max") for c in _PULSE_FACTS]
+    )
+    drop_counts = records.group_by(["pulse_number", "jet_id"]).aggregate(
+        [([], "count_all")]
+    )
+    _commit(spark, base, pulse_facts, drop_counts, records)
+
+
 def _ingest_batch_cluster(spark: SparkSession, base: str, raw: DataFrame) -> None:
-    """ingest_batch's cluster body, for batches above the driver gate.
+    """ingest_batch on the cluster, for batches over the driver gate.
     Callers that already know the batch is over the gate (flush_pending
     counts its spool from the parquet footers) call it directly and
-    skip the probe."""
+    skip the probe.
+
+    ONE aggregation job materializes both caches and yields the facts:
+    raw rows (jet_id null) give the per-pulse facts, transformed
+    records give the per-(pulse, jet) counts. The two sides run
+    through one union, not a join: a join of two aggregates runs ~8
+    AQE stage-jobs on a micro-batch, the union is a single query. The
+    facts carry Arrow group_by's column names, as on the driver."""
+    import pyarrow.compute as pc
+
     raw = raw.cache()
     records = None
     try:
         records = Tr.transform_pulse_data(raw, dedupe=True).cache()
-        # Materialize the transform once, then run the pulse + record
-        # MERGEs as concurrent Spark jobs (the scheduler interleaves
-        # them; the reference loads through a 200-worker pool,
-        # configuration/configuration.go:126). Safe because each write
-        # targets a different table and each MERGE is idempotent —
-        # partial failure self-heals on replay exactly as in the
-        # sequential order.
-        # ONE job materializes both caches AND yields per-pulse row
-        # counts for raw and transformed records (each union branch
-        # must scan every cached row, so this populates both caches
-        # exactly as count() would, without extra jobs). The counts feed
-        # upsert_many's batch_stats: the per-table bucket lists + row
-        # counts it would otherwise spend one planning job PER TABLE
-        # rediscovering (r11 ingest profile: 3 of the ~12 fixed jobs
-        # per micro-batch), and the pulse bounds that let the merge
-        # zone-prune its collision checks to zero file reads in the
-        # steady all-new-pulses state.
-        #   raw pulses ⊇ records pulses (chain validation drops whole
-        # jet drops): the PULSES batch derives from raw, so its hint
-        # uses the raw-side set; records/jet_drops derive from the
-        # transformed records, so theirs use the records-side set.
-        #   The two sides aggregate through ONE union (not a join):
-        # a join of two aggregates runs ~8 AQE stage-jobs on a
-        # micro-batch (measured: ~0.8 s of a 2.0 s commit); the union
-        # form is a single aggregation query. The same aggregate also
-        # carries the raw side's pulse metadata (max timestamp + real
-        # prev/next chain links), so the 1-row-per-pulse PULSES batch
-        # is built driver-side from the collected rows instead of
-        # running a second aggregation query over raw at staging time.
-        # The records side adds its distinct jets per pulse, which make
-        # the jet_drops row count exact.
         nul = F.lit(None).cast("long")
-        per_pulse = (
+        facts = (
             raw.select(
-                "pulse_number", F.lit(0).alias("__is_rec"), "timestamp",
-                "prev_pulse_number", "next_pulse_number",
-                F.lit(None).cast("string").alias("__rec_jet"),
+                "pulse_number", F.lit(None).cast("string").alias("jet_id"),
+                *_PULSE_FACTS,
             )
             .unionByName(
                 records.select(
-                    "pulse_number", F.lit(1).alias("__is_rec"),
-                    nul.alias("timestamp"),
-                    nul.alias("prev_pulse_number"),
-                    nul.alias("next_pulse_number"),
-                    F.col("jet_id").alias("__rec_jet"),
+                    "pulse_number", "jet_id", *[nul.alias(c) for c in _PULSE_FACTS]
                 )
             )
-            .groupBy("pulse_number")
+            .groupBy("pulse_number", "jet_id")
             .agg(
-                F.count(F.lit(1)).alias("n_all"),
-                F.sum("__is_rec").alias("n_rec"),
-                F.max("timestamp").alias("ts"),
-                F.max("prev_pulse_number").alias("prev"),
-                F.max("next_pulse_number").alias("next"),
-                F.size(F.collect_set("__rec_jet")).alias("n_jets"),
+                *[F.max(c).alias(f"{c}_max") for c in _PULSE_FACTS],
+                F.count(F.lit(1)).alias("count_all"),
             )
-            .collect()
+            .toArrow()
         )
-        raw_rows = [r for r in per_pulse if r["n_all"] > r["n_rec"]]
-        pulses_tbl = _pulses_table(
-            (r["pulse_number"], r["ts"], r["prev"], r["next"]) for r in raw_rows
+        is_pulse = pc.is_null(facts.column("jet_id"))
+        _commit(
+            spark, base, facts.filter(is_pulse),
+            facts.filter(pc.invert(is_pulse)), records,
         )
-        raw_pulses = [r["pulse_number"] for r in raw_rows]
-        touched = [r["pulse_number"] for r in per_pulse if r["n_rec"]]
-        n_records = sum(r["n_rec"] for r in per_pulse)
-        pulses = spark.createDataFrame(pulses_tbl, schemas.PULSES)
-        drops = Tr.jet_drops_from_records(records, pulses)
-        # Counter-correctness probe BEFORE the merges: if any touched
-        # (pulse, jet) drop already exists — a pulse whose records
-        # arrive split across micro-batches — batch-local counts would
-        # overwrite the true totals (upsert is replace-on-key). The
-        # reference increments counters inside its load txn
-        # (storage.go:56-60); the idempotent analog recomputes counts
-        # from the post-merge fact table. The probe reads only the
-        # PRE-EXISTING jet_drops table, so it does not depend on this
-        # batch's merges — and in steady state (all-new pulses, probe
-        # empty) the jet_drops merge keeps its batch-local counts and
-        # runs CONCURRENTLY with the other two, as before.
-        prior = _prior_jet_drops(spark, base, touched)
-        # Round 6: ONE manifest commit for the whole load — pulses,
-        # records and (steady state) jet_drops publish atomically,
-        # matching the reference's single load txn (storage.go:28-82).
-        # upsert_many stages the per-table writes in parallel threads
-        # internally, so this keeps the previous concurrency. The
-        # pulses batch is already on the driver, so it stages through
-        # upsert_many's pyarrow path with no Spark job.
-        batches = {"pulses": pulses_tbl, "records": records}
-        stats = {
-            "pulses": pq.BatchStats(raw_pulses, len(raw_pulses)),
-            "records": pq.BatchStats(touched, n_records),
-        }
-        if not prior:
-            batches["jet_drops"] = drops
-            stats["jet_drops"] = pq.BatchStats(
-                touched, sum(r["n_jets"] for r in per_pulse)
-            )
-        pq.upsert_many(spark, base, batches, batch_stats=stats)
-        if prior:
-            # Split-pulse path only: recompute counts from the merged
-            # fact table (bucket-pruned to the touched pulses), then
-            # merge jet_drops after the records merge has landed.
-            post = pq.read_table(
-                spark, base, "records",
-                pulse_gte=min(touched), pulse_lte=max(touched),
-            ).filter(F.col("pulse_number").isin(touched))
-            drops = Tr.jet_drops_from_records(post, pulses)
-            pq.upsert(spark, base, "jet_drops", drops)
     finally:
         raw.unpersist()
         if records is not None:
             records.unpersist()
 
 
-def _pulses_table(facts):
-    """The pulses batch as a pyarrow.Table, from per-pulse
-    (pulse_number, max timestamp, prev link, next link) facts; both
-    placements build it here.
+def _commit(spark: SparkSession, base: str, pulse_facts, drop_counts, records) -> None:
+    """The load transaction both placements end in (the reference's
+    storage.go:28-82): pulses, records and jet drops in ONE manifest
+    commit, with exact BatchStats from the facts.
+
+    pulse_facts: per raw pulse, `<fact>_max` of _PULSE_FACTS.
+    drop_counts: per (pulse, jet) of the transformed records,
+    `count_all`. records: the transformed batch (a pyarrow.Table or
+    the cached DataFrame).
+
+    A pulse that already exists keeps its flags and counters: a replay
+    updates only timestamp and links, like the reference's SavePulse
+    (ON CONFLICT DO UPDATE SET prev, next, timestamp). A touched
+    (pulse, jet) drop that already exists — a pulse whose records
+    arrive split across micro-batches — would have its count
+    overwritten by the batch-local one (upsert is replace-on-key), so
+    its jet drops are recounted from the merged records table after
+    the commit instead. Both lookups are zone-pruned: in the steady
+    all-new-pulses state they read no file."""
+    raw_pulses = pulse_facts.column("pulse_number").to_pylist()
+    touched = sorted(set(drop_counts.column("pulse_number").to_pylist()))
+    prior = _existing_rows(spark, base, "pulses", raw_pulses, _PULSE_STATE)
+    pulses = _pulses_table(pulse_facts, prior)
+    ts_by_pulse = dict(zip(raw_pulses, pulses.column("timestamp").to_pylist()))
+    split = _existing_rows(spark, base, "jet_drops", touched, []).num_rows > 0
+
+    batches = {"pulses": pulses, "records": records}
+    stats = {
+        "pulses": pq.BatchStats(raw_pulses, len(raw_pulses)),
+        "records": pq.BatchStats(
+            touched, sum(drop_counts.column("count_all").to_pylist())
+        ),
+    }
+    if not split:
+        batches["jet_drops"] = _jet_drops_table(drop_counts, ts_by_pulse)
+        stats["jet_drops"] = pq.BatchStats(touched, drop_counts.num_rows)
+    pq.upsert_many(spark, base, batches, batch_stats=stats)
+    if split:
+        merged = (
+            pq.read_table(
+                spark, base, "records",
+                pulse_gte=min(touched), pulse_lte=max(touched),
+            )
+            .filter(F.col("pulse_number").isin(touched))
+            .groupBy("pulse_number", "jet_id")
+            .agg(F.count(F.lit(1)).alias("count_all"))
+            .toArrow()
+        )
+        pq.upsert(spark, base, "jet_drops", _jet_drops_table(merged, ts_by_pulse))
+
+
+def _pulses_table(pulse_facts, prior):
+    """The pulses batch as a pyarrow.Table, from the per-pulse facts
+    and the `prior` rows of pulses already in the table.
 
     The gRPC source delivers pulse metadata alongside records — a
     FullPulse with REAL prev/next chain links
@@ -206,174 +201,100 @@ def _pulses_table(facts):
     nominal ones; chain repair (W2/J2) still covers neighbors that
     never arrive. New pulses start incomplete/non-sequential with zero
     counters; the control plane flips the flags (the reference does
-    the same on SavePulse)."""
+    the same on SavePulse). Pulses in `prior` keep its state columns."""
     import pyarrow as pa
 
     step = 10
-    return pa.Table.from_pylist(
-        [
-            {
-                "pulse_number": pn,
-                "prev_pulse_number": prev if prev is not None else pn - step,
-                "next_pulse_number": nxt if nxt is not None else pn + step,
-                "is_complete": False,
-                "is_sequential": False,
-                "timestamp": ts,
-                "jet_drop_amount": 0,
-                "record_amount": 0,
-            }
-            for pn, ts, prev, nxt in facts
-        ],
-        schema=pq._arrow_schema("pulses"),
+    kept = {r["pulse_number"]: r for r in prior.to_pylist()}
+    new = dict(zip(_PULSE_STATE, (False, False, 0, 0)))
+    f = pulse_facts.to_pydict()
+    rows = []
+    for pn, ts, prev, nxt in zip(
+        f["pulse_number"], f["timestamp_max"],
+        f["prev_pulse_number_max"], f["next_pulse_number_max"],
+    ):
+        state = kept.get(pn, new)
+        rows.append({
+            "pulse_number": pn,
+            "prev_pulse_number": prev if prev is not None else pn - step,
+            "next_pulse_number": nxt if nxt is not None else pn + step,
+            "timestamp": ts,
+            **{c: state[c] for c in _PULSE_STATE},
+        })
+    return pa.Table.from_pylist(rows, schema=pq._arrow_schema("pulses"))
+
+
+def _jet_drops_table(drop_counts, ts_by_pulse: dict):
+    """The jet_drops batch as a pyarrow.Table: one row per (pulse, jet)
+    `count_all`, stamped with its pulse's timestamp (A3 counts + the
+    pulse metadata copy the reference makes in the processor,
+    etl/processor/processor.go:131-167). The hash columns stay null:
+    a records-only source has no platform drop to copy them from."""
+    import pyarrow as pa
+
+    schema = pq._arrow_schema("jet_drops")
+    pns = drop_counts.column("pulse_number").to_pylist()
+    cols = {
+        "pulse_number": pa.array(pns, pa.int64()),
+        "jet_id": drop_counts.column("jet_id"),
+        "timestamp": pa.array([ts_by_pulse.get(p) for p in pns], pa.int64()),
+        "record_amount": drop_counts.column("count_all").cast(pa.int32()),
+    }
+    return pa.Table.from_arrays(
+        [cols.get(f.name, pa.nulls(len(pns), f.type)) for f in schema],
+        schema=schema,
     )
 
 
-def _probe_arrow(raw: DataFrame):
-    """The bounded driver-path probe: collect at most gate+1 rows
-    (LIMIT bounds what the driver ever holds); None when the batch is
-    over the row/byte gate — or the gate is disabled — and the
-    cluster path must run."""
-    if pq.DRIVER_STAGE_ROWS <= 0:
-        return None
-    tbl = raw.limit(pq.DRIVER_STAGE_ROWS + 1).toArrow()
-    if (
-        tbl.num_rows > pq.DRIVER_STAGE_ROWS
-        or tbl.nbytes > 8 * pq.DRIVER_STAGE_BYTES
-    ):
-        return None
-    return tbl
+def _existing_rows(
+    spark: SparkSession, base: str, name: str, pulses: list[int], cols: list[str]
+):
+    """The rows of table `name` whose pulse_number is in `pulses`, as a
+    pyarrow.Table of pulse_number + `cols`. The manifest's per-file
+    pulse_number zone maps prune first, so pulses the table has never
+    seen cost no file read and no Spark job. Surviving files under
+    placement.MERGE_BYTES are read through pyarrow (stats-less files
+    are kept by prune_by_stats, so they get read, never skipped); a
+    bigger overlap, a store in the directory layout written before the
+    manifest log (version 0: its empty manifest proves nothing), or an
+    unreadable manifest or file is read through Spark."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
 
-
-def _prior_jet_drops(spark: SparkSession, base: str, touched: list[int]) -> int:
-    """1 if any touched pulse already has jet_drops rows (a pulse whose
-    records arrive split across micro-batches), else 0 — the counter-
-    correctness probe ingest_batch runs BEFORE its merges. r12 (guide
-    §6 data skipping): zone-prune with the manifest's per-file
-    pulse_number stats first — the steady all-new-pulses state proves
-    no overlap from the manifest alone (ZERO file reads, ZERO Spark
-    jobs); surviving candidates under DRIVER_MERGE_BYTES are probed
-    driver-side through pyarrow (stats-less files are conservatively
-    kept by prune_by_stats, so they get read, never skipped); only a
-    big overlap pays the Spark read the old path always paid, and so
-    does a legacy store the manifest does not cover yet."""
-    if not touched or not os.path.exists(pq.table_path(base, "jet_drops")):
-        return 0
-    lo, hi = min(touched), max(touched)
+    cols = ["pulse_number"] + cols
+    schema = pa.schema([pq._arrow_schema(name).field(c) for c in cols])
+    if not pulses or not os.path.exists(pq.table_path(base, name)):
+        return schema.empty_table()
+    lo, hi = min(pulses), max(pulses)
     try:
         snap = Mf.read(base)
-        # version 0 is a legacy directory store not yet adopted: its
-        # empty manifest proves nothing, so the directory read decides
         if snap["version"]:
-            rels = snap["families"].get("jet_drops", [])
             cand = Mf.prune_by_stats(
-                snap, "jet_drops", "pulse_number", lo=lo, hi=hi, rels=rels
+                snap, name, "pulse_number", lo=lo, hi=hi,
+                rels=snap["families"].get(name, []),
             )
             if not cand:
-                return 0
-            if pq._rels_bytes(base, cand) <= pq.DRIVER_MERGE_BYTES:
-                import pyarrow.parquet as papq
-
-                tset = set(touched)
-                for rel in cand:
-                    col = papq.read_table(
-                        os.path.join(base, rel), columns=["pulse_number"]
-                    ).column("pulse_number")
-                    if any(p in tset for p in col.to_pylist()):
-                        return 1
-                return 0
-    except (OSError, ValueError):
-        pass  # unreadable manifest or data file: ask Spark
+                return schema.empty_table()
+            if placement.admits() and pq._rels_bytes(base, cand) <= placement.MERGE_BYTES:
+                tbl = pa.concat_tables(
+                    papq.read_table(os.path.join(base, r), columns=cols).cast(schema)
+                    for r in cand
+                )
+                want = pa.array(pulses, pa.int64())
+                return tbl.filter(pc.is_in(tbl.column("pulse_number"), want))
+    except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
+        pass  # unreadable manifest or data file: Spark reads it
     try:
         return (
-            pq.read_table(
-                spark, base, "jet_drops", pulse_gte=lo, pulse_lte=hi
-            )
-            .filter(F.col("pulse_number").isin(touched))
-            .limit(1)
-            .count()
+            pq.read_table(spark, base, name, pulse_gte=lo, pulse_lte=hi)
+            .filter(F.col("pulse_number").isin(pulses))
+            .select(*cols)
+            .toArrow()
+            .cast(schema)
         )
-    except Exception:
-        return 0  # unreadable/empty dir: first batch ever
-
-
-def _ingest_batch_driver(spark: SparkSession, base: str, raw_tbl) -> None:
-    """ingest_batch's driver fast path over one collected Arrow batch:
-    the same decode → dedupe → chain-sort → per-pulse facts →
-    jet-drop derivation → atomic 3-table upsert, with every step that
-    the cluster path runs as a Spark job executed driver-side instead.
-    The chain sort runs the IDENTICAL function object the cluster
-    applyInPandas wraps (chain_sort.make_sort_group); decode
-    equivalence is pinned by test_driver_ingest. Planning facts
-    (pulse sets, row counts) come from the collected rows, so the
-    BatchStats are exact by construction, and staging goes through
-    upsert_many's pyarrow path — ONE Spark job (the caller's probe
-    collect) per micro-batch commit in the steady state."""
-    raw_pdf = raw_tbl.to_pandas()
-    records_pdf = Tr.transform_pulse_data_pdf(raw_pdf, dedupe=True)
-
-    # per-pulse raw facts through Arrow group_by (int64-exact — no
-    # pandas nullable-int→float promotion on the chain-link columns)
-    gb = raw_tbl.group_by("pulse_number").aggregate(
-        [
-            ("timestamp", "max"),
-            ("prev_pulse_number", "max"),
-            ("next_pulse_number", "max"),
-        ]
-    )
-    pulses_tbl = _pulses_table(
-        zip(
-            gb.column("pulse_number").to_pylist(),
-            gb.column("timestamp_max").to_pylist(),
-            gb.column("prev_pulse_number_max").to_pylist(),
-            gb.column("next_pulse_number_max").to_pylist(),
-        )
-    )
-    raw_pulses = pulses_tbl.column("pulse_number").to_pylist()
-
-    n_records = len(records_pdf)
-    touched = (
-        sorted(int(p) for p in records_pdf["pulse_number"].unique())
-        if n_records
-        else []
-    )
-    records_tbl = pq._pdf_to_arrow(records_pdf, "records")
-
-    prior = _prior_jet_drops(spark, base, touched)
-
-    batches: dict = {"pulses": pulses_tbl, "records": records_tbl}
-    stats = {
-        "pulses": pq.BatchStats(raw_pulses, len(raw_pulses)),
-        "records": pq.BatchStats(touched, n_records),
-    }
-    if not prior and n_records:
-        # driver twin of jet_drops_from_records: one row per
-        # (pulse, jet) with the batch pulse's timestamp
-        ts_by_pulse = dict(
-            zip(raw_pulses, pulses_tbl.column("timestamp").to_pylist())
-        )
-        counts = (
-            records_pdf.groupby(["pulse_number", "jet_id"], sort=False)
-            .size()
-            .reset_index(name="record_amount")
-        )
-        for c in ("first_prev_hash", "second_prev_hash", "hash", "raw_data"):
-            counts[c] = None
-        counts["timestamp"] = [
-            ts_by_pulse.get(int(p)) for p in counts["pulse_number"]
-        ]
-        batches["jet_drops"] = pq._pdf_to_arrow(counts, "jet_drops")
-        stats["jet_drops"] = pq.BatchStats(touched, len(counts))
-    pq.upsert_many(spark, base, batches, batch_stats=stats)
-    if prior:
-        # Split-pulse path only (rare): recompute counts from the
-        # merged fact table, exactly like the cluster path.
-        post = pq.read_table(
-            spark, base, "records",
-            pulse_gte=min(touched), pulse_lte=max(touched),
-        ).filter(F.col("pulse_number").isin(touched))
-        pulses_df = spark.createDataFrame(pulses_tbl, schemas.PULSES)
-        drops = Tr.jet_drops_from_records(post, pulses_df)
-        pq.upsert(spark, base, "jet_drops", drops)
+    except AnalysisException:
+        return schema.empty_table()  # a table directory with no files
 
 
 def run_control_pass(spark: SparkSession, base: str) -> dict:
@@ -392,7 +313,7 @@ def run_control_pass(spark: SparkSession, base: str) -> dict:
     intermediate state, which is strictly safer)."""
     from block_explorer_spark.operators.aggregates import pulse_counters
 
-    fast = _control_pass_driver(spark, base)
+    fast = _control_pass_driver(spark, base) if placement.admits() else None
     if fast is not None:
         return fast
     pulses = pq.read_table(spark, base, "pulses")
@@ -429,15 +350,16 @@ def run_control_pass(spark: SparkSession, base: str) -> dict:
 
 def _control_pass_driver(spark: SparkSession, base: str) -> dict | None:
     """run_control_pass's driver fast path: when BOTH control tables'
-    committed bytes fit under DRIVER_MERGE_BYTES, read them through
+    committed bytes fit under placement.MERGE_BYTES, read them through
     pyarrow and run the sweep driver-side — the completeness check is
     the same pure `trie_covered`, the D5 advance the same
     `_sequential_walk`, the gap scan `_gaps_walk` (pinned equivalent
     to the window formulation), and the fused pulse upsert goes
     through upsert_many's pyarrow path. Zero Spark jobs for the
     KB-scale steady state the streaming loop lives in; None (→ the
-    unchanged Spark path) for big stores, legacy layouts, or any
-    manifest/file surprise."""
+    Spark path) for big stores, legacy layouts, or an unreadable
+    manifest or file. run_control_pass calls it only while
+    placement.admits() a driver placement at all."""
     from block_explorer_spark.functions.jets import trie_covered
 
     try:
@@ -446,7 +368,7 @@ def _control_pass_driver(spark: SparkSession, base: str) -> dict | None:
             return None  # legacy or empty-under-protocol: Spark decides
         prels = snap["families"].get("pulses", [])
         drels = snap["families"].get("jet_drops", [])
-        if pq._rels_bytes(base, prels + drels) > pq.DRIVER_MERGE_BYTES:
+        if pq._rels_bytes(base, prels + drels) > placement.MERGE_BYTES:
             return None
 
         def rd(name, rels):
@@ -456,7 +378,7 @@ def _control_pass_driver(spark: SparkSession, base: str) -> dict | None:
 
         pulses = rd("pulses", prels)
         drops = rd("jet_drops", drels)
-    except Exception:
+    except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
         return None  # unreadable manifest/files: the Spark path decides
     if pulses is None or pulses.empty:
         return {"completed": [], "sequential": [], "gaps": []}
@@ -559,9 +481,9 @@ def flush_pending(spark: SparkSession, base: str, checkpoint_dir: str) -> int:
     n = _spool_rows(spool)
     if n:
         raw = spark.read.schema(schemas.RAW_RECORDS).parquet(spool)
-        probe = _probe_arrow(raw) if n <= pq.DRIVER_STAGE_ROWS else None
-        if probe is not None:
-            _ingest_batch_driver(spark, base, probe)
+        tbl = placement.collect_bounded(raw) if placement.admits(n) else None
+        if tbl is not None:
+            _ingest_batch_driver(spark, base, tbl)
         else:
             _ingest_batch_cluster(spark, base, raw)
         run_control_pass(spark, base)

@@ -1,8 +1,8 @@
 """Catch-up placement for the group-commit spool (streaming/pipeline.py
 flush_pending): the spool's parquet footers give its exact row count,
-so a spool over the driver gate goes straight to the cluster body with
-no probe collect, and records over the staging gate skip stage_df's
-driver probe. These tests pin:
+so a spool over the driver gate (placement.ROWS) goes straight to the
+cluster body with no probe collect, and records over it skip
+stage_df's driver probe. These tests pin:
 
 (a) above the gate, neither the spool probe nor the records staging
     probe runs, and the store matches the driver path's on the same
@@ -21,7 +21,7 @@ import random
 import pyarrow.parquet as papq
 import pytest
 
-from block_explorer_spark import schemas
+from block_explorer_spark import placement, schemas
 from block_explorer_spark.plans import transformer as Tr
 from block_explorer_spark.sources import manifest as Mf
 from block_explorer_spark.sources import parquet as pq
@@ -102,14 +102,16 @@ def test_above_gate_flush_skips_probes_and_matches_driver_path(
         staged_driver.append(data_name)
         return stage_driver(df, base, data_name, partition_by)
 
-    def no_probe(raw):
-        raise AssertionError("a spool over the gate must not be probed")
+    probe = placement.collect_bounded
+
+    def no_spool_probe(df):
+        assert "kind" not in df.columns, "a spool over the gate must not be probed"
+        return probe(df)
 
     gate = len(rows) // 3  # spool and records over it; pulses/jet drops under
-    monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", gate)
-    monkeypatch.setattr(Mf, "STAGE_DRIVER_ROWS", gate)
+    monkeypatch.setattr(placement, "ROWS", gate)
     monkeypatch.setattr(Mf, "_stage_df_driver", spy_stage)
-    monkeypatch.setattr(P, "_probe_arrow", no_probe)
+    monkeypatch.setattr(placement, "collect_bounded", no_spool_probe)
     spool = _spool(spark, str(tmp_path / "ck_clu"), rows)
     assert P.flush_pending(spark, clu, str(tmp_path / "ck_clu")) == len(rows)
     monkeypatch.undo()
@@ -134,9 +136,9 @@ def test_above_gate_flush_skips_probes_and_matches_driver_path(
         assert m_clu["stats"][rel] == m_drv["stats"][rel_drv]
 
 
-@pytest.mark.parametrize("placement", ["driver", "cluster"])
+@pytest.mark.parametrize("where", ["driver", "cluster"])
 def test_failed_flush_keeps_spool_and_next_flush_ingests_once(
-    spark, tmp_path, monkeypatch, placement
+    spark, tmp_path, monkeypatch, where
 ):
     rows = [r for pn in ONE_BUCKET for r in _chain_rows(pn)]
     base, ckpt = str(tmp_path / "wh"), str(tmp_path / "ck")
@@ -147,10 +149,10 @@ def test_failed_flush_keeps_spool_and_next_flush_ingests_once(
         raise OSError("spool read failed")
 
     with monkeypatch.context() as m:
-        if placement == "driver":
-            m.setattr(P, "_probe_arrow", failing_read)
+        if where == "driver":
+            m.setattr(placement, "collect_bounded", failing_read)
         else:
-            m.setattr(pq, "DRIVER_STAGE_ROWS", 1)
+            m.setattr(placement, "ROWS", 1)
             m.setattr(Tr, "transform_pulse_data", failing_read)
         with pytest.raises(OSError, match="spool read failed"):
             P.flush_pending(spark, base, ckpt)

@@ -4,11 +4,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from block_explorer_spark import schemas
 from block_explorer_spark.operators.chain_sort import (
     BrokenChainError,
-    chain_sort_drops,
     order_group,
 )
+from block_explorer_spark.plans.transformer import transform_pulse_data
 
 
 def _rec(ref, typ="state", obj=b"obj", prev=None, pos=0):
@@ -90,11 +91,16 @@ def test_chain_sort_drops_dataframe(spark):
         dict(_rec(b"x", prev=None, pos=0), jet_id="1"),
         dict(_rec(b"z", prev=b"gone", pos=1, obj=b"obj"), jet_id="1"),
     ]
-    df = spark.createDataFrame(good + bad)
-    out = chain_sort_drops(df)
+    # as raw amends, which decode passes through unchanged
+    raw = [
+        {**{k: v for k, v in r.items() if k != "type"}, "kind": "amend"}
+        for r in good + bad
+    ]
+    df = spark.createDataFrame(raw, schemas.RAW_RECORDS)
+    out = transform_pulse_data(df)
     rows = out.orderBy("order").collect()
     assert [bytes(r.reference) for r in rows] == [b"a", b"b", b"c"]
     assert [r.order for r in rows] == [1, 2, 3]
-    kept = chain_sort_drops(df, drop_invalid=False)
+    kept = transform_pulse_data(df, drop_invalid=False)
     assert kept.count() == 5
     assert kept.filter(F.col("jet_id") == "1").count() == 2

@@ -1,28 +1,36 @@
-"""r12 driver-side micro-batch ingest (streaming/pipeline.py): a raw
-batch at or under pq.DRIVER_STAGE_ROWS runs decode + chain sort +
-per-pulse planning + staging entirely on the driver (ONE Spark job —
-the probe collect), through the SAME chain-sort function object the
-cluster applyInPandas wraps. These tests pin:
+"""Ingest placement (streaming/pipeline.py): a raw batch the bounded
+probe can collect (block_explorer_spark.placement) runs on the driver,
+anything bigger on the cluster; both run the ONE group step
+(chain_sort.make_sort_group: decode → dedupe → chain walk) and the ONE
+commit tail (pipeline._commit). These tests pin:
 
-(a) decode equivalence: _decode_pandas == decode_records row-for-row;
-(b) whole-path equivalence: driver vs cluster ingest of a batch mixing
-    clean chains, a forked drop, byte-identical replays, unsupported
-    kinds and multiple pulses/jets lands identical tables;
-(c) the split-pulse (prior>0) path recomputes jet-drop counts from the
-    merged fact table on the driver path too;
-(d) replay idempotency on the driver path;
-(e) the zone-pruned prior probe: no overlap → jet_drops ride the main
-    commit; overlap → recount (covered by (c)).
+(a) the one decode on the mixed batch's cases;
+(b) each placement lands the same, fully spelled-out tables for a
+    batch mixing clean chains, a forked drop, byte-identical replays,
+    replays differing only in a decode-cleared column, unsupported
+    kinds (also a whole drop of them) and multiple pulses/jets;
+(c) the split-pulse path recomputes jet-drop counts from the merged
+    fact table on both placements;
+(d) replay idempotency, and a replayed pulse keeps its flags and
+    counters (the reference's SavePulse updates only links and
+    timestamp);
+(e) placement.ROWS = 0 keeps every step on the cluster;
+(f) the narrowed fallbacks let unexpected errors through.
 """
 
 from __future__ import annotations
 
+import pyarrow.parquet as papq
 import pytest
 
-from block_explorer_spark import schemas
+from block_explorer_spark import placement, schemas
+from block_explorer_spark.operators import chain_sort as CS
 from block_explorer_spark.plans import transformer as Tr
+from block_explorer_spark.sources import manifest as Mf
 from block_explorer_spark.sources import parquet as pq
 from block_explorer_spark.streaming import pipeline as P
+
+TABLES = ("pulses", "records", "jet_drops")
 
 
 def _rr(ref: int, kind: str, pulse: int, jet: str, pos: int, **kw):
@@ -46,10 +54,11 @@ def _rr(ref: int, kind: str, pulse: int, jet: str, pos: int, **kw):
 
 
 def _mixed_batch() -> list[dict]:
-    """Two pulses, two jets: a clean chain, non-state kinds carrying
-    clearable columns, an exact replay pair, a forked drop, and an
-    unsupported kind."""
-    p1, p2 = 4_100_010, 4_100_020
+    """Two pulses, three jets: a clean chain, non-state kinds carrying
+    clearable columns, an exact replay pair, a replay pair differing
+    only in a decode-cleared column, a forked drop, an unsupported
+    kind, and a (pulse, jet) group of only unsupported kinds."""
+    p1, p2 = P1, P2
     rows = [
         # clean chain on obj A in (p1, "0"): activate -> amend -> amend
         _rr(1, "activate", p1, "0", 3, obj=b"A" * 8, prev=None),
@@ -64,6 +73,14 @@ def _mixed_batch() -> list[dict]:
         _rr(7, "deactivate", p1, "1", 2, obj=b"B" * 8, prev=None),
         # unsupported kind — dropped by decode
         _rr(8, "genesis", p1, "1", 3),
+        # replay pair differing only in the payload decode clears for
+        # requests — collapses to one
+        _rr(11, "incoming_request", p1, "1", 4, payload=b"a"),
+        _rr(11, "incoming_request", p1, "1", 4, payload=b"b"),
+        # a (pulse, jet) group of only unsupported kinds: no records,
+        # no jet drop
+        _rr(12, "genesis", p1, "01", 1),
+        _rr(13, "code", p1, "01", 2),
         # forked drop (p2, "0"): two amends share one prev — whole
         # drop is invalid and must vanish from records
         _rr(20, "activate", p2, "0", 1, obj=b"C" * 8, prev=None),
@@ -75,6 +92,51 @@ def _mixed_batch() -> list[dict]:
     return rows
 
 
+P1, P2 = 4_100_010, 4_100_020
+
+#: What the mixed batch must land as records: reference → (order,
+#: kept columns among prototype/prev/payload). Everything else is
+#: copied from the raw row.
+_MIXED_RECORDS = {
+    1: (1, {"prototype_reference", "payload"}),
+    2: (2, {"prototype_reference", "prev_record_reference", "payload"}),
+    3: (3, {"prototype_reference", "prev_record_reference", "payload"}),
+    4: (4, {"payload"}),
+    5: (5, set()),
+    6: (1, set()),
+    7: (2, {"prev_record_reference"}),
+    11: (3, set()),
+    23: (1, {"prototype_reference", "payload"}),
+}
+_TYPE = {"activate": "state", "amend": "state", "deactivate": "state",
+         "result": "result", "incoming_request": "request", "outgoing_request": "request"}
+
+
+def _expected_mixed():
+    cleared = ("prototype_reference", "prev_record_reference", "payload")
+    raw = {int.from_bytes(r["reference"], "big"): r for r in reversed(_mixed_batch())}
+    records = []
+    for ref, (order, kept) in _MIXED_RECORDS.items():
+        r = dict(raw[ref], type=_TYPE[raw[ref]["kind"]], order=order)
+        r.update({c: None for c in cleared if c not in kept})
+        records.append(tuple(r[f.name] for f in schemas.RECORDS.fields))
+    ts = {p: 1_700_000_000 + p for p in (P1, P2)}
+    drops = [(P1, "0", 5), (P1, "1", 3), (P2, "1", 1)]
+    return {
+        "records": sorted(records, key=repr),
+        "jet_drops": sorted(
+            ((p, j, None, None, None, None, ts[p], n) for p, j, n in drops), key=repr
+        ),
+        "pulses": sorted(
+            [
+                (P1, P1 - 10, P1 + 10, False, False, ts[P1], 0, 0),
+                (P2, P1, P2 + 10, False, False, ts[P2], 0, 0),
+            ],
+            key=repr,
+        ),
+    }
+
+
 def _table_rows(spark, base, name):
     return sorted(
         (tuple(r) for r in pq.read_table(spark, base, name).collect()),
@@ -82,59 +144,84 @@ def _table_rows(spark, base, name):
     )
 
 
-def test_decode_pandas_matches_spark(spark):
-    raw = spark.createDataFrame(_mixed_batch(), schemas.RAW_RECORDS)
-    want = raw.toPandas()
-    got = Tr._decode_pandas(want)
-    spark_out = Tr.decode_records(raw).toPandas()
-    cols = sorted(spark_out.columns)
-    a = sorted(
-        map(repr, got[cols].itertuples(index=False, name=None))
+def _tables(spark, base):
+    return {n: _table_rows(spark, base, n) for n in TABLES}
+
+
+def _on(monkeypatch, where: str) -> None:
+    """Force `where`: the default gate takes the driver path for these
+    small batches, ROWS = 0 turns every driver placement off."""
+    if where == "cluster":
+        monkeypatch.setattr(placement, "ROWS", 0)
+    else:
+        assert placement.ROWS >= len(_mixed_batch())
+
+
+def test_decode_mixed_batch():
+    """The one decode over the mixed batch: exactly the unsupported
+    kinds are dropped, each kind gets its type and keeps only its
+    columns among prototype/prev/payload."""
+    out = CS.decode(_mixed_batch())
+    assert all(
+        sorted(r) == sorted(
+            [f.name for f in schemas.RECORDS.fields if f.name != "order"] + ["position"]
+        )
+        for r in out
     )
-    b = sorted(
-        map(repr, spark_out[cols].itertuples(index=False, name=None))
+    all3 = ("prototype_reference", "prev_record_reference", "payload")
+    want = {  # reference → (type, columns left non-null)
+        1: ("state", {"prototype_reference", "payload"}),
+        2: ("state", set(all3)),
+        3: ("state", set(all3)),
+        4: ("result", {"payload"}),
+        5: ("request", set()),
+        6: ("request", set()),
+        7: ("state", set()),
+        11: ("request", set()),
+        20: ("state", {"prototype_reference", "payload"}),
+        21: ("state", set(all3)),
+        22: ("state", set(all3)),
+        23: ("state", {"prototype_reference", "payload"}),
+    }
+    got = [
+        (
+            int.from_bytes(r["reference"], "big"),
+            (r["type"], {c for c in all3 if r[c] is not None}),
+        )
+        for r in out
+    ]
+    # replays are still both there: decode does not dedupe
+    assert sorted(ref for ref, _ in got) == sorted(
+        list(want) + [7, 11]
     )
-    assert a == b
-    # decode dropped exactly the unsupported kind
-    assert len(got) == len(_mixed_batch()) - 1
+    assert dict(got) == want
 
 
-def test_driver_and_cluster_ingest_identical(spark, tmp_path, monkeypatch):
-    rows = _mixed_batch()
-    d_drv = str(tmp_path / "drv")
-    d_clu = str(tmp_path / "clu")
-
-    assert pq.DRIVER_STAGE_ROWS >= len(rows)  # default gate takes the driver path
-    P.ingest_batch(spark, d_drv, spark.createDataFrame(rows, schemas.RAW_RECORDS))
-
-    monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)  # force the cluster path
-    P.ingest_batch(spark, d_clu, spark.createDataFrame(rows, schemas.RAW_RECORDS))
-    monkeypatch.undo()
-
-    for name in ("pulses", "records", "jet_drops"):
-        assert _table_rows(spark, d_drv, name) == _table_rows(
-            spark, d_clu, name
-        ), name
-
-    # spot invariants: forked drop vanished, replay collapsed,
-    # non-state columns cleared
-    recs = pq.read_table(spark, d_drv, "records").collect()
-    assert not [r for r in recs if r.pulse_number == 4_100_020 and r.jet_id == "0"]
-    assert len([r for r in recs if r.reference == (7).to_bytes(8, "big")]) == 1
-    res = [r for r in recs if r.type == "result"][0]
-    assert res.prototype_reference is None and res.prev_record_reference is None
-    assert res.payload == b"pay"
-    req = [r for r in recs if r.type == "request"]
-    assert all(r.payload is None for r in req)
+@pytest.mark.parametrize("where", ["driver", "cluster"])
+def test_driver_and_cluster_ingest_identical(spark, tmp_path, monkeypatch, where):
+    """Each placement lands the same fully spelled-out tables, so the
+    two are identical: forked drop gone, replays collapsed (also the
+    pair differing only in a cleared column), the all-unsupported
+    drop absent, non-state columns cleared, counts per drop."""
+    _on(monkeypatch, where)
+    took: list[str] = []
+    driver = P._ingest_batch_driver
+    monkeypatch.setattr(
+        P, "_ingest_batch_driver", lambda *a: (took.append("driver"), driver(*a))
+    )
+    base = str(tmp_path / where)
+    P.ingest_batch(spark, base, spark.createDataFrame(_mixed_batch(), schemas.RAW_RECORDS))
+    assert took == (["driver"] if where == "driver" else [])
+    assert _tables(spark, base) == _expected_mixed()
 
 
 def test_driver_ingest_replay_idempotent(spark, tmp_path):
     base = str(tmp_path / "s")
     raw = spark.createDataFrame(_mixed_batch(), schemas.RAW_RECORDS)
     P.ingest_batch(spark, base, raw)
-    before = {n: _table_rows(spark, base, n) for n in ("pulses", "records", "jet_drops")}
+    before = _tables(spark, base)
     P.ingest_batch(spark, base, raw)  # replay: byte-identical batch
-    after = {n: _table_rows(spark, base, n) for n in ("pulses", "records", "jet_drops")}
+    after = _tables(spark, base)
     assert before == after
 
 
@@ -166,8 +253,7 @@ def test_control_pass_driver_matches_spark(spark, tmp_path, monkeypatch):
         return out1, out2, _table_rows(spark, base, "pulses")
 
     drv = build(tmp_path / "drv")
-    monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)   # cluster ingest
-    monkeypatch.setattr(pq, "DRIVER_MERGE_BYTES", 0)  # cluster control pass
+    monkeypatch.setattr(placement, "ROWS", 0)  # cluster ingest and control pass
     clu = build(tmp_path / "clu")
     monkeypatch.undo()
 
@@ -190,7 +276,7 @@ def test_split_pulse_recounts_after_merge(spark, tmp_path, monkeypatch, force_cl
     with jet-drop counts covering the MERGED fact table (prior>0
     path), identically on both paths."""
     if force_cluster:
-        monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)
+        monkeypatch.setattr(placement, "ROWS", 0)
     base = str(tmp_path / ("c" if force_cluster else "d"))
     p = 4_100_010
     b1 = [_rr(30 + i, "activate", p, "0", i + 1, obj=bytes([i]) * 8, prev=None) for i in range(3)]
@@ -214,7 +300,7 @@ def test_split_pulse_into_unadopted_store_recounts(spark, tmp_path, monkeypatch,
     from block_explorer_spark.sources import manifest as Mf
 
     if force_cluster:
-        monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)
+        monkeypatch.setattr(placement, "ROWS", 0)
     base = str(tmp_path / ("c" if force_cluster else "d"))
     p = 4_100_010
     b1 = [_rr(30 + i, "activate", p, "0", i + 1, obj=bytes([i]) * 8, prev=None) for i in range(3)]
@@ -226,3 +312,134 @@ def test_split_pulse_into_unadopted_store_recounts(spark, tmp_path, monkeypatch,
     drops = pq.read_table(spark, base, "jet_drops").collect()
     assert len(drops) == 1
     assert drops[0].record_amount == 5
+
+
+@pytest.mark.parametrize("where", ["driver", "cluster"])
+def test_replayed_pulse_keeps_flags_and_counters(spark, tmp_path, monkeypatch, where):
+    """Three pulses ingested and swept one by one are complete and
+    sequential; re-ingesting the middle one must leave the pulses
+    table as it was, right after the commit and after the next control
+    pass (a replay used to reset the flags, and the sequential one
+    never came back: the frontier had already passed it)."""
+    _on(monkeypatch, where)
+    base = str(tmp_path / where)
+
+    def delivery(pn):
+        rows = [
+            _rr(pn * 10 + i, "activate", pn, "", i + 1, obj=bytes([i]) * 8, prev=None)
+            for i in range(2)
+        ]
+        return spark.createDataFrame(rows, schemas.RAW_RECORDS)
+
+    for pn in (1000, 1010, 1020):
+        P.ingest_batch(spark, base, delivery(pn))
+        P.run_control_pass(spark, base)
+    before = _table_rows(spark, base, "pulses")
+    assert [(r[0], r[3], r[4], r[7]) for r in before] == [
+        (pn, True, True, 2) for pn in (1000, 1010, 1020)
+    ]
+    P.ingest_batch(spark, base, delivery(1010))
+    assert _table_rows(spark, base, "pulses") == before
+    P.run_control_pass(spark, base)
+    assert _table_rows(spark, base, "pulses") == before
+
+
+def test_rows_zero_keeps_every_step_on_the_cluster(spark, tmp_path, monkeypatch):
+    """placement.ROWS = 0 is the one switch: ingest (also a split
+    pulse's recount), upsert_many, stage_df and the control pass call
+    no driver-side function, and the tables equal a default-gate run."""
+    split = [_rr(30, "activate", P2, "1", 2, obj=b"E" * 8, prev=None)]
+
+    def run(base):
+        P.ingest_batch(spark, base, spark.createDataFrame(_mixed_batch(), schemas.RAW_RECORDS))
+        P.ingest_batch(spark, base, spark.createDataFrame(split, schemas.RAW_RECORDS))
+        P.run_control_pass(spark, base)
+        return _tables(spark, base)
+
+    want = run(str(tmp_path / "default"))
+
+    def forbidden(name):
+        def call(*_a, **_kw):
+            raise AssertionError(f"driver-side {name} called with ROWS = 0")
+
+        return call
+
+    monkeypatch.setattr(placement, "ROWS", 0)
+    for mod, name in (
+        (P, "_ingest_batch_driver"),
+        (P, "_control_pass_driver"),
+        (Tr, "transform_pulse_data_pdf"),
+        (pq, "_plan_and_stage_arrow"),
+        (pq, "_stage_arrow"),
+        (pq, "_read_rels_arrow"),
+        (pq, "_file_keys"),
+        (Mf, "_stage_df_driver"),
+        (papq, "read_table"),
+    ):
+        monkeypatch.setattr(mod, name, forbidden(name))
+    got = run(str(tmp_path / "cluster"))
+    assert Mf.stage_df(spark.range(3), str(tmp_path / "misc"), "ids")
+    assert got == want
+    jd = {(r[0], r[1]): r[7] for r in got["jet_drops"]}
+    assert jd[(P2, "1")] == 2  # the split pulse was recounted
+
+
+def test_unexpected_errors_propagate_from_the_fallbacks(spark, tmp_path, monkeypatch):
+    """The fallbacks on the placement path catch only what their case
+    can raise; anything else (here a RuntimeError) propagates instead
+    of silently choosing a path or answering "nothing there"."""
+    import os
+    import shutil
+
+    def boom(*_a, **_kw):
+        raise RuntimeError("boom")
+
+    base = str(tmp_path / "s")
+    P.ingest_batch(spark, base, spark.createDataFrame(_mixed_batch(), schemas.RAW_RECORDS))
+
+    # the existing-rows lookup's Spark read (forced by the version-0
+    # layout): an error is not "no prior rows"
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(base, legacy)
+    shutil.rmtree(os.path.join(legacy, "_manifest"))
+    with monkeypatch.context() as m:
+        m.setattr(pq, "read_table", boom)
+        with pytest.raises(RuntimeError, match="boom"):
+            P._existing_rows(spark, legacy, "jet_drops", [P1], [])
+
+    # the driver control pass: an error is not "take the Spark path"
+    with monkeypatch.context() as m:
+        m.setattr(pq, "_read_rels_arrow", boom)
+        with pytest.raises(RuntimeError, match="boom"):
+            P.run_control_pass(spark, base)
+
+    # the staging probe: an error is not "stage through Spark"
+    with monkeypatch.context() as m:
+        m.setattr(placement, "collect_bounded", boom)
+        with pytest.raises(RuntimeError, match="boom"):
+            Mf.stage_df(spark.range(3), str(tmp_path / "misc"), "ids")
+
+
+def test_new_pulse_commit_reads_no_committed_file(spark, tmp_path, monkeypatch):
+    """The steady all-new-pulses state: both existing-rows lookups
+    (pulses, jet drops) and the collision checks are answered by the
+    manifest's zone maps alone, so a driver commit of a new pulse
+    opens no committed data file and runs no Spark read."""
+    base = str(tmp_path / "s")
+
+    def delivery(pn):
+        rows = [_rr(pn * 10 + i, "activate", pn, "", i + 1, obj=bytes([i]) * 8) for i in range(2)]
+        return spark.createDataFrame(rows, schemas.RAW_RECORDS)
+
+    P.ingest_batch(spark, base, delivery(1000))
+    P.run_control_pass(spark, base)
+
+    def no_read(*_a, **_kw):
+        raise AssertionError("a new pulse's commit read a committed file")
+
+    nxt = delivery(1010)
+    monkeypatch.setattr(papq, "read_table", no_read)
+    monkeypatch.setattr(pq, "read_table", no_read)
+    P.ingest_batch(spark, base, nxt)
+    monkeypatch.undo()
+    assert [r[0] for r in _table_rows(spark, base, "pulses")] == [1000, 1010]

@@ -1,5 +1,5 @@
 """r12 driver-side staging path (sources/parquet.py): a micro-batch at
-or below DRIVER_STAGE_ROWS stages through pyarrow on the driver (no
+or below placement.ROWS stages through pyarrow on the driver (no
 per-table Spark write job) — same files, same layout, same manifest
 protocol. These tests pin (a) path equivalence driver vs cluster,
 (b) the BatchStats exactness contract (now ENFORCED, not just
@@ -13,7 +13,7 @@ import os
 
 import pytest
 
-from block_explorer_spark import schemas
+from block_explorer_spark import placement, schemas
 from block_explorer_spark.sources import manifest as Mf
 from block_explorer_spark.sources import parquet as pq
 
@@ -72,9 +72,9 @@ def test_driver_and_cluster_paths_produce_identical_tables(spark, tmp_path, monk
     the driver path and through the forced Spark path must read back
     identically — table rows, lifeline reads, and zone-map pruning."""
     bases = {}
-    for mode, gate in (("driver", 1 << 20), ("cluster", 0)):
-        monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", gate)
-        monkeypatch.setattr(pq, "DRIVER_STAGE_BYTES", gate * 1024)
+    for mode in ("driver", "cluster"):
+        if mode == "cluster":
+            monkeypatch.setattr(placement, "ROWS", 0)
         base = str(tmp_path / mode)
         _upsert_all(spark, base, 1500, 40)
         _upsert_all(spark, base, 2600, 25)
@@ -118,7 +118,7 @@ def test_understated_batch_stats_refused_before_commit(spark, tmp_path, monkeypa
     """BatchStats' pulse set is load-bearing (bucket list = rewrite
     set; bounds = collision zone-prune). An under-approximated set on
     the cluster path must be refused BEFORE the commit publishes."""
-    monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)  # force cluster path
+    monkeypatch.setattr(placement, "ROWS", 0)  # force cluster path
     base = str(tmp_path / "w")
     batch = spark.createDataFrame(
         _records_rows(1500, 5) + _records_rows(2600, 5), schemas.RECORDS
@@ -209,7 +209,7 @@ def _raw_row(pulse, ref, kind="activate", prev=None, payload=b"p"):
 
 
 def test_dedupe_collapses_decode_equal_replays_but_keeps_forks(spark):
-    """chain_sort_drops(dedupe=True) semantics on the ingest edge
+    """transform_pulse_data(dedupe=True) semantics on the ingest edge
     (r11 behavior change, pinned here): raw replays that differ only
     in a DECODE-CLEARED field collapse (the drop survives), while rows
     sharing a reference but differing in a decoded field are a genuine

@@ -5,9 +5,12 @@ import random
 from pyspark.sql import functions as F
 
 from block_explorer_spark import schemas
+from block_explorer_spark.operators import chain_sort as CS
 from block_explorer_spark.plans import controller as C
 from block_explorer_spark.plans import transformer as Tr
 from block_explorer_spark.sources import generators as gen
+from block_explorer_spark.sources import parquet as pq
+from block_explorer_spark.streaming import pipeline as P
 
 
 def _raw(ref, kind, obj=b"obj", prev=None, proto=b"proto", pos=0, jet="0", pn=100):
@@ -27,7 +30,14 @@ def _raw(ref, kind, obj=b"obj", prev=None, proto=b"proto", pos=0, jet="0", pn=10
     }
 
 
-def test_decode_kind_mapping(spark):
+def _decoded(rows):
+    """The one decode (chain_sort.decode), keyed by reference."""
+    from types import SimpleNamespace
+
+    return {bytes(r["reference"]): SimpleNamespace(**r) for r in CS.decode(rows)}
+
+
+def test_decode_kind_mapping():
     rows = [
         _raw(b"a", "activate", pos=0),
         _raw(b"b", "amend", prev=b"a", pos=1),
@@ -37,8 +47,7 @@ def test_decode_kind_mapping(spark):
         _raw(b"f", "outgoing_request", pos=5),
         _raw(b"g", "unsupported_kind", pos=6),
     ]
-    df = spark.createDataFrame(rows, schemas.RAW_RECORDS)
-    out = {bytes(r.reference): r for r in Tr.decode_records(df).collect()}
+    out = _decoded(rows)
     assert len(out) == 6  # unsupported skipped
     assert out[b"a"].type == "state" and out[b"a"].prev_record_reference is None
     assert out[b"b"].type == "state" and bytes(out[b"b"].prev_record_reference) == b"a"
@@ -79,9 +88,17 @@ def test_jet_drops_from_records(spark):
         _raw(b"c", "activate", obj=b"o2", jet="1", pn=100, pos=0),
     ]
     recs = Tr.transform_pulse_data(spark.createDataFrame(rows, schemas.RAW_RECORDS))
-    pulses = spark.createDataFrame(gen.make_pulses(start=100, count=1), schemas.PULSES)
-    drops = Tr.jet_drops_from_records(recs, pulses)
-    got = {r.jet_id: r.record_amount for r in drops.collect()}
+    # the per-(pulse, jet) counts both placements hand the one builder
+    counts = (
+        recs.groupBy("pulse_number", "jet_id")
+        .agg(F.count(F.lit(1)).alias("count_all"))
+        .toArrow()
+    )
+    ts = gen.make_pulses(start=100, count=1)[0]["timestamp"]
+    drops = P._jet_drops_table(counts, {100: ts})
+    assert drops.schema == pq._arrow_schema("jet_drops")
+    assert set(drops.column("timestamp").to_pylist()) == {ts}
+    got = dict(zip(drops.column("jet_id").to_pylist(), drops.column("record_amount").to_pylist()))
     assert got == {"0": 2, "1": 1}
 
 
@@ -126,7 +143,7 @@ def test_find_gaps_and_reload_pool(spark):
     assert pool.should_reload((1010, 1040), now=150.0)
 
 
-def test_decode_payload_only_for_memory_and_result(spark):
+def test_decode_payload_only_for_memory_and_result():
     """transferToCanonicalRecord stores payload only for activate/amend
     (Memory) and result (Payload); deactivate and request kinds persist
     no payload — etl/transformer/transformer.go:231-277."""
@@ -138,8 +155,7 @@ def test_decode_payload_only_for_memory_and_result(spark):
         _raw(b"e", "incoming_request", pos=4),
         _raw(b"f", "outgoing_request", pos=5),
     ]
-    df = spark.createDataFrame(rows, schemas.RAW_RECORDS)
-    out = {bytes(r.reference): r for r in Tr.decode_records(df).collect()}
+    out = _decoded(rows)
     assert bytes(out[b"a"].payload) == b"p"
     assert bytes(out[b"b"].payload) == b"p"
     assert out[b"c"].payload is None
