@@ -162,38 +162,29 @@ def _read_docs_files(
     )
 
 
+#: family -> data directory of every family `migrate` adopts.
+_DATA_DIRS = {"docs": "corpus", "bands": "bands", "whashes": "whashes"}
+
+
 def read_corpus(
     spark: SparkSession, base: str, snapshot: dict | None = None
 ) -> DataFrame:
     """Schema-pinned read of the curated corpus at the latest (or a
     pinned) manifest snapshot; absent store = empty."""
     m = snapshot if snapshot is not None else Mf.read(base)
-    if m["version"] == 0 and os.path.isdir(_docs_path(base)):
-        _raise_unmigrated(base)
+    Mf.require_migrated(
+        base, sorted(_DATA_DIRS.values()), "corpus_store.migrate", m["version"]
+    )
     df = _read_docs_files(spark, base, m["families"].get("docs", []))
     return df.select(*[f.name for f in CORPUS_SCHEMA.fields])
-
-
-def _raise_unmigrated(base: str) -> None:
-    if Mf._oldest_inflight_start(base) is not None:
-        return  # a registered writer is mid-first-commit, not legacy data
-    orphans = Mf.unmanifested_files(base, ["corpus", "bands", "whashes"])
-    if orphans:
-        raise RuntimeError(
-            f"corpus store at {base} has data files but no committed "
-            f"manifest (written by a pre-manifest version?). Run "
-            f"corpus_store.migrate(base) once to adopt "
-            f"{sum(len(v) for v in orphans.values())} files, or move "
-            f"them aside. Reading would silently return an empty store."
-        )
 
 
 def migrate(base: str) -> int:
     """One-shot adoption of a store written before the manifest log
     existed (round <= 4 writers): commits every unlisted parquet file
-    under corpus/ and bands/ into the next manifest version so the
-    snapshot readers see it. Idempotent; returns files adopted."""
-    return Mf.adopt(base, {"docs": "corpus", "bands": "bands", "whashes": "whashes"})
+    under corpus/, bands/ and whashes/ into the next manifest version
+    so the snapshot readers see it. Idempotent; returns files adopted."""
+    return Mf.adopt(base, _DATA_DIRS)
 
 
 def _bands_path(base: str) -> str:

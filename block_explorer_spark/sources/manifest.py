@@ -1,5 +1,6 @@
-"""Mini transaction log for parquet-backed stores (corpus_store /
-vector_store): optimistic-concurrency manifest commits.
+"""Mini transaction log for parquet-backed stores (parquet's
+relational tables, corpus_store, vector_store): optimistic-concurrency
+manifest commits.
 
 The reference gets transactional writes from Postgres
 (`etl/storage/storage.go:28-82`); plain parquet directories have no
@@ -374,7 +375,7 @@ def file_stats(
     for rel in rels:
         try:
             md = pq.ParquetFile(os.path.join(base, rel)).metadata
-        except Exception:
+        except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
             continue  # unreadable footer: no stats, file stays unprunable
         idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
         per: dict[str, list] = {}
@@ -554,6 +555,38 @@ def adopt(base: str, families_by_dir: dict[str, str]) -> int:
     commit(base, families, expect_version=snap["version"],
            meta={"adopted": n})
     return n
+
+
+def require_migrated(
+    base: str, data_dir_names: list[str], migrate: str, version: int | None = None
+) -> None:
+    """The one pre-manifest rule every store follows: the manifest is
+    a store's only file listing, so a store at version 0 is empty.
+    Parquet files under its data directories that no manifest lists
+    predate the log (or were written out of band): a read would answer
+    "empty" and a first commit would hide them for good, so this raises
+    RuntimeError naming the store's `migrate` call, which adopts them
+    once (`adopt`). `version` is the caller's snapshot version (default:
+    the latest); at any other version this returns at once.
+
+    Reads call it with their snapshot's version; writers call it before
+    they register their write intent. While a registered writer is in
+    flight the directories hold its staged files, and the store is
+    empty under the protocol, not pre-manifest."""
+    if version is None:
+        version = current_version(base)
+    if version != 0 or _oldest_inflight_start(base) is not None:
+        return
+    orphans = unmanifested_files(base, data_dir_names)
+    # re-check the version: a writer that committed and ended its
+    # intent during the scan leaves listed files, not pre-manifest ones
+    if orphans and current_version(base) == 0:
+        raise RuntimeError(
+            f"store at {base} has "
+            f"{sum(len(v) for v in orphans.values())} data files but no "
+            f"committed manifest (written before the manifest log?). Run "
+            f"{migrate}(base) once to adopt them, or move them aside."
+        )
 
 
 def discard(base: str, relpaths: list[str]) -> None:

@@ -34,10 +34,11 @@ tables in round 6):
 At cluster scale each bucket rewrite is one task-parallel job over
 the incoming batch's buckets; unrelated partitions are untouched, and
 the manifest IS the file listing — a read never LISTs the object
-store. Warehouses written before the log existed (or fixtures written
-straight to the directory, e.g. scripts/scale_relational.py) read via
-the legacy directory path and are adopted into an initial manifest on
-their first transactional write (`manifest.adopt`).
+store. There is one layout: a store at manifest version 0 is empty.
+Files written before the log existed (or straight to the directory,
+e.g. the scripts/scale_relational.py fixtures) are not part of the
+store: every read and write refuses such a warehouse
+(`manifest.require_migrated`) until `migrate(base)` adopts them once.
 """
 
 from __future__ import annotations
@@ -48,7 +49,6 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors.exceptions.captured import AnalysisException
 
 from block_explorer_spark import placement, schemas
 from block_explorer_spark.sources import manifest as Mf
@@ -198,19 +198,47 @@ def _read_rels(
     return reader.parquet(*sorted(os.path.join(base, r) for r in rels))
 
 
-def _adopt_if_legacy(base: str) -> None:
-    """First transactional write against a warehouse written before
-    the manifest log (or populated by direct .parquet() writes, e.g.
-    the scale fixtures): commit the pre-existing files as version 1 so
-    the CAS protocol governs everything after. Idempotent; a racing
-    adopter losing the CAS just proceeds against the winner's commit
-    (files staged by in-flight protocol writers are never adoptable —
-    manifest.unmanifested_files excludes them by write-intent age)."""
-    if Mf.current_version(base) == 0:
-        try:
-            Mf.adopt(base, {name: name for name in TABLE_SCHEMAS})
-        except Mf.CommitConflict:
-            pass  # another writer adopted first; its v1 governs now
+def migrate(base: str) -> int:
+    """One-shot adoption of a warehouse written before the manifest
+    log (or populated by direct .parquet() writes, e.g. the scale
+    fixtures): commits every unlisted parquet file under the table
+    directories into the next manifest version. Idempotent; returns
+    files adopted. A migrated warehouse's lifeline reads use
+    conservative pruning until build_object_index runs once."""
+    return Mf.adopt(base, {name: name for name in TABLE_SCHEMAS})
+
+
+def _require_migrated(base: str, version: int | None = None) -> None:
+    Mf.require_migrated(base, list(TABLE_SCHEMAS), "parquet.migrate", version)
+
+
+def _pulse_rels(
+    base: str, name: str, pulse_gte, pulse_lte, snapshot: dict | None
+) -> tuple[dict, list[str]]:
+    """The snapshot (the latest one unless pinned) and the table's
+    relpaths in it that can hold pulses in [pulse_gte, pulse_lte]:
+    buckets pruned Python-side over the relpaths, then, inside a
+    surviving bucket, files whose footer [min, max] for pulse_number
+    cannot hold the range (zone maps: the steady-state fast path
+    leaves one file per micro-batch per bucket, and a point read
+    should open ONE of them, not the day's 8k — pinned by
+    test_write_path::test_zone_maps_prune_files_within_bucket)."""
+    m = snapshot if snapshot is not None else Mf.read(base)
+    _require_migrated(base, m["version"])
+    rels = m["families"].get(name, [])
+    if pulse_gte is None and pulse_lte is None:
+        return m, rels
+    lo_b = pulse_gte // PULSE_BUCKET_SIZE if pulse_gte is not None else None
+    hi_b = pulse_lte // PULSE_BUCKET_SIZE if pulse_lte is not None else None
+    rels = [
+        r
+        for r in rels
+        if (b := _rel_bucket(r)) is None
+        or ((lo_b is None or b >= lo_b) and (hi_b is None or b <= hi_b))
+    ]
+    return m, Mf.prune_by_stats(
+        m, name, "pulse_number", lo=pulse_gte, hi=pulse_lte, rels=rels
+    )
 
 
 def read_table(
@@ -224,16 +252,14 @@ def read_table(
 ) -> DataFrame:
     """Schema-pinned read; drops the physical bucket column.
 
-    Manifested warehouses read the snapshot's file list (pass
-    `snapshot` to pin one across several reads — reader isolation
-    under concurrent upserts/deletes). Pulse bounds prune buckets
-    Python-side over the manifest relpaths AND as partition filters,
+    Reads the snapshot's file list (pass `snapshot` to pin one across
+    several reads — reader isolation under concurrent
+    upserts/deletes); a store at version 0 is empty, and one holding
+    unlisted files raises until `migrate` (see _pulse_rels). Pulse
+    bounds prune buckets and zone maps Python-side over the manifest
+    relpaths AND apply as partition filters (`PartitionFilters`,
+    pinned by test_plan_quality::test_pulse_bounds_prune_partitions),
     so a pulse range touches one bucket's bytes, not the table's.
-    Warehouses with no manifest (pre-round-6, or fixtures written
-    straight to the directory) fall back to the legacy directory
-    read, where the bucket predicate drives Spark's own partition
-    pruning (`PartitionFilters`, pinned by
-    test_plan_quality::test_pulse_bounds_prune_partitions).
 
     The read passes the pinned schema EXPLICITLY rather than letting
     Spark sample footers: under schema evolution (a newer engine adds
@@ -247,65 +273,23 @@ def read_table(
     (the operational sweep mode after partial hardware loss); the
     default surfaces corruption loudly.
     """
-    cols = [f.name for f in TABLE_SCHEMAS[name].fields]
-    lo_b = pulse_gte // PULSE_BUCKET_SIZE if pulse_gte is not None else None
-    hi_b = pulse_lte // PULSE_BUCKET_SIZE if pulse_lte is not None else None
-
-    if (
-        snapshot is None
-        and Mf.current_version(base) == 0
-        and Mf._oldest_inflight_start(base) is None
-    ):
-        # legacy directory layout. The in-flight check closes the
-        # bootstrap read race: on a version-0 store with ACTIVE
-        # protocol writers, the directory holds their staged-but-
-        # uncommitted files — the legacy listing would read rows no
-        # commit published (and crash when a CAS loser discards
-        # them). Such a store is empty-under-the-protocol, served by
-        # the manifest branch below.
-        path = table_path(base, name)
-        try:
-            reader = spark.read.schema(_full_schema(name))
-            if ignore_corrupt:
-                reader = reader.option("ignoreCorruptFiles", "true")
-            df = reader.parquet(path)  # absent path raises eagerly
-        except AnalysisException:
-            # Absent table IS an empty table — schemas are pinned, so
-            # serve the typed empty relation (the reference gets this
-            # from CREATE TABLE migrations).
-            return spark.createDataFrame([], TABLE_SCHEMAS[name])
-    else:
-        m = snapshot if snapshot is not None else Mf.read(base)
-        rels = m["families"].get(name, [])
-        if lo_b is not None or hi_b is not None:
-            rels = [
-                r
-                for r in rels
-                if (b := _rel_bucket(r)) is None
-                or ((lo_b is None or b >= lo_b) and (hi_b is None or b <= hi_b))
-            ]
-            # zone maps (round 6): inside a surviving bucket, drop the
-            # files whose footer [min,max] for pulse_number cannot hold
-            # the range — the steady-state fast path leaves one file
-            # per micro-batch per bucket, and a point read should open
-            # ONE of them, not the day's 8k (pinned by
-            # test_write_path::test_zone_maps_prune_files_within_bucket)
-            rels = Mf.prune_by_stats(
-                m, name, "pulse_number", lo=pulse_gte, hi=pulse_lte, rels=rels
-            )
-        if not rels:
-            return spark.createDataFrame([], TABLE_SCHEMAS[name])
-        df = _read_rels(spark, base, name, rels, ignore_corrupt)
-
+    _m, rels = _pulse_rels(base, name, pulse_gte, pulse_lte, snapshot)
+    if not rels:
+        # an empty table: schemas are pinned, so serve the typed empty
+        # relation (the reference gets this from CREATE TABLE migrations)
+        return spark.createDataFrame([], TABLE_SCHEMAS[name])
+    df = _read_rels(spark, base, name, rels, ignore_corrupt)
     if pulse_gte is not None:
         df = df.filter(
-            (F.col("pulse_bucket") >= lo_b) & (F.col("pulse_number") >= pulse_gte)
+            (F.col("pulse_bucket") >= pulse_gte // PULSE_BUCKET_SIZE)
+            & (F.col("pulse_number") >= pulse_gte)
         )
     if pulse_lte is not None:
         df = df.filter(
-            (F.col("pulse_bucket") <= hi_b) & (F.col("pulse_number") <= pulse_lte)
+            (F.col("pulse_bucket") <= pulse_lte // PULSE_BUCKET_SIZE)
+            & (F.col("pulse_number") <= pulse_lte)
         )
-    return df.select(*cols)
+    return df.select(*[f.name for f in TABLE_SCHEMAS[name].fields])
 
 
 def read_record_by_reference(
@@ -340,13 +324,13 @@ def read_record_by_reference(
 
 def build_object_index(spark: SparkSession, base: str) -> int:
     """Full (re)build of the records object-index sidecar — the one
-    scan that makes an ADOPTED legacy warehouse lifeline-indexed (a
-    fresh store's first upsert marks the incrementally-built sidecar
+    scan that makes a MIGRATED warehouse lifeline-indexed (a fresh
+    store's first upsert marks the incrementally-built sidecar
     trustworthy by itself). Scans the records family's
     (object_reference, pulse_bucket) pairs once, commits the sorted
     sidecar + the meta flag in one CAS swap. Returns the number of
     index pairs."""
-    _adopt_if_legacy(base)
+    _require_migrated(base)
     with Mf.write_intent(base):
         while True:
             snap = Mf.read(base)
@@ -484,28 +468,10 @@ def read_records_for_object(
     test_write_path::test_lifeline_read_opens_few_files).
 
     Pruning is manifest-side (no filesystem LISTs) and always
-    conservative: files without obj_key stats (legacy layout) are
+    conservative: files without obj_key stats (migrated ones) are
     kept, and the object_reference equality filter is re-applied
-    row-level, so correctness never depends on the layout. Falls back
-    to the plain read for unmanifested warehouses."""
-    if snapshot is None and Mf.current_version(base) == 0:
-        df = read_table(spark, base, "records", pulse_gte, pulse_lte)
-        return df.filter(F.col("object_reference") == object_reference)
-    m = snapshot if snapshot is not None else Mf.read(base)
-    cols = [f.name for f in TABLE_SCHEMAS["records"].fields]
-    rels = m["families"].get("records", [])
-    lo_b = pulse_gte // PULSE_BUCKET_SIZE if pulse_gte is not None else None
-    hi_b = pulse_lte // PULSE_BUCKET_SIZE if pulse_lte is not None else None
-    if lo_b is not None or hi_b is not None:
-        rels = [
-            r
-            for r in rels
-            if (b := _rel_bucket(r)) is None
-            or ((lo_b is None or b >= lo_b) and (hi_b is None or b <= hi_b))
-        ]
-        rels = Mf.prune_by_stats(
-            m, "records", "pulse_number", lo=pulse_gte, hi=pulse_lte, rels=rels
-        )
+    row-level, so correctness never depends on the layout."""
+    m, rels = _pulse_rels(base, "records", pulse_gte, pulse_lte, snapshot)
     k = obj_key_py(object_reference)
     obj_buckets = _object_buckets(spark, base, m, k)
     if obj_buckets is not None:
@@ -530,18 +496,7 @@ def read_records_for_object(
         df = df.filter(F.col("pulse_number") >= pulse_gte)
     if pulse_lte is not None:
         df = df.filter(F.col("pulse_number") <= pulse_lte)
-    return df.select(*cols)
-
-
-def init_table(spark: SparkSession, base: str, name: str) -> None:
-    """Create an empty partitioned table directory if absent (an
-    absent table already reads as empty; this exists for layout
-    tooling that expects the directory)."""
-    path = table_path(base, name)
-    if os.path.exists(path):
-        return
-    empty = spark.createDataFrame([], TABLE_SCHEMAS[name])
-    with_bucket(empty).write.partitionBy("pulse_bucket").mode("append").parquet(path)
+    return df.select(*[f.name for f in TABLE_SCHEMAS["records"].fields])
 
 
 #: Sidecar skip-or-batch (round-9 brief item 5): a records batch below
@@ -1119,7 +1074,7 @@ def upsert_many(
     (the bucket list decides which existing buckets join the rewrite
     set — an under-approximation would silently duplicate replayed
     keys); n_rows may be an upper bound."""
-    _adopt_if_legacy(base)
+    _require_migrated(base)
     prepped: dict[str, tuple] = {}
 
     try:
@@ -1127,7 +1082,6 @@ def upsert_many(
             while True:
                 snap = Mf.read(base)
                 families = dict(snap["families"])
-                staged: list[str] = []
 
                 def spark_prep(name, batch, st):
                     keys = TABLE_KEYS[name]
@@ -1268,45 +1222,45 @@ def upsert_many(
                     results = [f.result() for f in futures]
                 else:
                     results = [one(items[0])]
-                changed = False
-                records_pending: list[str] | None = None
-                for name, r in results:
-                    if r is None:
-                        continue
-                    new_rels, fam_updates, pending = r
-                    staged.extend(new_rels)
-                    families.update(fam_updates)
-                    if name == "records":
-                        records_pending = pending
-                    changed = True
-                if not changed:
+                results = [(name, r) for name, r in results if r is not None]
+                if not results:
                     return
-                meta: dict = {"kind": "upsert"}
-                layout = dict(snap.get("meta", {}).get("layout", {}))
-                if (
-                    "records" in batches
-                    and not snap["families"].get("records")
-                ):
-                    # A fresh store's first records commit: the delta
-                    # IS full coverage, so the object index is
-                    # trustworthy from birth. Adopted legacy
-                    # warehouses must run build_object_index once.
-                    layout["objidx"] = "full"
-                    meta["layout"] = layout
-                if records_pending is not None:
-                    # complete replacement of the pending set (already
-                    # carries survivors + this commit's deferrals)
-                    layout["objidx_pending"] = sorted(records_pending)
-                    if not records_pending:
-                        layout.pop("objidx_pending", None)
-                    meta["layout"] = layout
+                staged = [rel for _name, r in results for rel in r[0]]
+                try:
+                    meta: dict = {"kind": "upsert"}
+                    layout = dict(snap.get("meta", {}).get("layout", {}))
+                    for name, (_new_rels, fam_updates, pending) in results:
+                        families.update(fam_updates)
+                        if name == "records" and pending is not None:
+                            # complete replacement of the pending set
+                            # (already carries survivors + this
+                            # commit's deferrals)
+                            layout["objidx_pending"] = sorted(pending)
+                            if not pending:
+                                layout.pop("objidx_pending", None)
+                            meta["layout"] = layout
+                    if (
+                        "records" in batches
+                        and not snap["families"].get("records")
+                    ):
+                        # A fresh store's first records commit: the
+                        # delta IS full coverage, so the object index
+                        # is trustworthy from birth. Migrated
+                        # warehouses must run build_object_index once.
+                        layout["objidx"] = "full"
+                        meta["layout"] = layout
+                    stats = Mf.file_stats(base, staged, ["pulse_number", OBJ_KEY])
+                except BaseException:
+                    # an error before the CAS: no manifest can list
+                    # this attempt's files, so they go now (an error
+                    # inside Mf.commit leaves them to vacuum: the link
+                    # may already have published them)
+                    Mf.discard(base, staged)
+                    raise
                 try:
                     Mf.commit(
                         base, families, expect_version=snap["version"],
-                        meta=meta,
-                        stats=Mf.file_stats(
-                            base, staged, ["pulse_number", OBJ_KEY]
-                        ),
+                        meta=meta, stats=stats,
                     )
                     return
                 except Mf.CommitConflict:
@@ -1408,7 +1362,7 @@ def delete_where(spark: SparkSession, base: str, name: str, predicate) -> int:
     whose every row matched simply stops being listed. Rows where the
     predicate evaluates to NULL are KEPT (three-valued logic: delete
     removes exactly the rows `filter(predicate)` matches)."""
-    _adopt_if_legacy(base)
+    _require_migrated(base)
     with Mf.write_intent(base):
         while True:
             snap = Mf.read(base)
@@ -1499,7 +1453,7 @@ def compact_table(
     snapshot; old files wait for vacuum). Returns
     {buckets_compacted, files_before, files_after}.
     """
-    _adopt_if_legacy(base)
+    _require_migrated(base)
     with Mf.write_intent(base):
         while True:
             snap = Mf.read(base)

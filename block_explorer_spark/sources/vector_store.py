@@ -99,15 +99,7 @@ def read_vectors(
     spark: SparkSession, base: str, snapshot: dict | None = None
 ) -> DataFrame:
     m = snapshot if snapshot is not None else Mf.read(base)
-    if m["version"] == 0 and os.path.isdir(_data_path(base)):
-        orphans = Mf.unmanifested_files(base, ["vectors"])
-        if orphans:
-            raise RuntimeError(
-                f"vector store at {base} has data files but no "
-                f"committed manifest (pre-manifest writer?). Run "
-                f"vector_store.migrate(base) once to adopt them; "
-                f"reading would silently return an empty store."
-            )
+    _require_migrated(base, m["version"])
     return _read_files(spark, base, m["families"].get("vectors", []))
 
 
@@ -116,6 +108,10 @@ def migrate(base: str) -> int:
     (round <= 4 writers): commits unlisted parquet files under
     vectors/ into the next manifest version. Idempotent."""
     return Mf.adopt(base, {"vectors": "vectors"})
+
+
+def _require_migrated(base: str, version: int | None = None) -> None:
+    Mf.require_migrated(base, ["vectors"], "vector_store.migrate", version)
 
 
 def create(
@@ -159,6 +155,7 @@ def add_batch(
     version forces this writer to discard its staged files and
     re-validate against the winner's snapshot — two concurrent adds
     can never both land the same vec_id."""
+    _require_migrated(base)
     cents = load_centroids(base)
     assigned = _assign(batch.select(*[f.name for f in VECTORS_SCHEMA.fields]), cents)
     assigned = assigned.cache()

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -252,49 +251,41 @@ def _existing_rows(
     """The rows of table `name` whose pulse_number is in `pulses`, as a
     pyarrow.Table of pulse_number + `cols`. The manifest's per-file
     pulse_number zone maps prune first, so pulses the table has never
-    seen cost no file read and no Spark job. Surviving files under
-    placement.MERGE_BYTES are read through pyarrow (stats-less files
-    are kept by prune_by_stats, so they get read, never skipped); a
-    bigger overlap, a store in the directory layout written before the
-    manifest log (version 0: its empty manifest proves nothing), or an
-    unreadable manifest or file is read through Spark."""
+    seen cost no file read and no Spark job; the manifest is the
+    table's only file listing, so a store at version 0 holds no rows.
+    Surviving files under placement.MERGE_BYTES are read through
+    pyarrow (stats-less files are kept by prune_by_stats, so they get
+    read, never skipped); a bigger overlap or an unreadable manifest or
+    file is read through Spark."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as papq
 
     cols = ["pulse_number"] + cols
     schema = pa.schema([pq._arrow_schema(name).field(c) for c in cols])
-    if not pulses or not os.path.exists(pq.table_path(base, name)):
+    if not pulses:
         return schema.empty_table()
     lo, hi = min(pulses), max(pulses)
     try:
-        snap = Mf.read(base)
-        if snap["version"]:
-            cand = Mf.prune_by_stats(
-                snap, name, "pulse_number", lo=lo, hi=hi,
-                rels=snap["families"].get(name, []),
+        cand = Mf.prune_by_stats(Mf.read(base), name, "pulse_number", lo=lo, hi=hi)
+        if not cand:
+            return schema.empty_table()
+        if placement.admits() and pq._rels_bytes(base, cand) <= placement.MERGE_BYTES:
+            tbl = pa.concat_tables(
+                papq.read_table(os.path.join(base, r), columns=cols).cast(schema)
+                for r in cand
             )
-            if not cand:
-                return schema.empty_table()
-            if placement.admits() and pq._rels_bytes(base, cand) <= placement.MERGE_BYTES:
-                tbl = pa.concat_tables(
-                    papq.read_table(os.path.join(base, r), columns=cols).cast(schema)
-                    for r in cand
-                )
-                want = pa.array(pulses, pa.int64())
-                return tbl.filter(pc.is_in(tbl.column("pulse_number"), want))
+            want = pa.array(pulses, pa.int64())
+            return tbl.filter(pc.is_in(tbl.column("pulse_number"), want))
     except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
         pass  # unreadable manifest or data file: Spark reads it
-    try:
-        return (
-            pq.read_table(spark, base, name, pulse_gte=lo, pulse_lte=hi)
-            .filter(F.col("pulse_number").isin(pulses))
-            .select(*cols)
-            .toArrow()
-            .cast(schema)
-        )
-    except AnalysisException:
-        return schema.empty_table()  # a table directory with no files
+    return (
+        pq.read_table(spark, base, name, pulse_gte=lo, pulse_lte=hi)
+        .filter(F.col("pulse_number").isin(pulses))
+        .select(*cols)
+        .toArrow()
+        .cast(schema)
+    )
 
 
 def run_control_pass(spark: SparkSession, base: str) -> dict:
@@ -357,15 +348,16 @@ def _control_pass_driver(spark: SparkSession, base: str) -> dict | None:
     to the window formulation), and the fused pulse upsert goes
     through upsert_many's pyarrow path. Zero Spark jobs for the
     KB-scale steady state the streaming loop lives in; None (→ the
-    Spark path) for big stores, legacy layouts, or an unreadable
-    manifest or file. run_control_pass calls it only while
+    Spark path) for big stores or an unreadable manifest or file. A
+    store at version 0 is empty (the manifest is its only file
+    listing) and, like every relational read, raises until `migrate`
+    when it holds unlisted files. run_control_pass calls it only while
     placement.admits() a driver placement at all."""
     from block_explorer_spark.functions.jets import trie_covered
 
     try:
         snap = Mf.read(base)
-        if snap["version"] == 0:
-            return None  # legacy or empty-under-protocol: Spark decides
+        pq._require_migrated(base, snap["version"])
         prels = snap["families"].get("pulses", [])
         drels = snap["families"].get("jet_drops", [])
         if pq._rels_bytes(base, prels + drels) > placement.MERGE_BYTES:

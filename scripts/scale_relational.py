@@ -192,11 +192,12 @@ def measure(spark, base: str, scale: int, collector=None) -> dict:
         df = Fl.apply_filters(df, Fl.equality(jet_id=JETS[3]))
         return Pg.paginate(df, [("order", True)], limit=50).collect()
 
-    # round 6: adopt the direct-written fixture into a manifest first —
-    # the production read path. The manifest IS the file listing, so
+    # the fixture is written straight to the directory: adopt it into a
+    # manifest first (once; a cached fixture adopts nothing) — stores
+    # read only what a manifest lists. The manifest IS the file listing, so
     # the page read prunes relpaths python-side instead of listing 20k
     # bucket directories (the x100 page_ms cost in the r4 artifact).
-    P._adopt_if_legacy(base)
+    P.migrate(base)
 
     page()  # warm the scan plan once; then measure steady-state
     before = collector.totals() if collector else None

@@ -10,7 +10,8 @@ commit tail (pipeline._commit). These tests pin:
     replays differing only in a decode-cleared column, unsupported
     kinds (also a whole drop of them) and multiple pulses/jets;
 (c) the split-pulse path recomputes jet-drop counts from the merged
-    fact table on both placements;
+    fact table on both placements, and refuses a store whose files no
+    manifest lists until `parquet.migrate` adopts them;
 (d) replay idempotency, and a replayed pulse keeps its flags and
     counters (the reference's SavePulse updates only links and
     timestamp);
@@ -288,26 +289,39 @@ def test_split_pulse_recounts_after_merge(spark, tmp_path, monkeypatch, force_cl
     assert drops[0].record_amount == 5
 
 
-@pytest.mark.parametrize("force_cluster", [False, True])
-def test_split_pulse_into_unadopted_store_recounts(spark, tmp_path, monkeypatch, force_cluster):
-    """The same split pulse against a store in the directory layout
-    written before the manifest log (version 0, not yet adopted): the
-    empty manifest proves nothing, so the prior-drops probe must read
-    the directory, and the counts must still cover both deliveries."""
+@pytest.mark.parametrize("where", ["driver", "cluster"])
+def test_split_pulse_into_unadopted_store_recounts(spark, tmp_path, monkeypatch, where):
+    """The same split pulse against a store whose data files no
+    manifest lists (version 0, as a warehouse written before the
+    manifest log looks): its empty manifest proves nothing, so the
+    second delivery and a control pass refuse, naming `migrate`, and
+    change no file (a commit would overwrite the split drop's count).
+    After `parquet.migrate` the counts cover both deliveries."""
     import os
     import shutil
 
-    from block_explorer_spark.sources import manifest as Mf
+    def files():
+        return {
+            os.path.join(root, fn): os.stat(os.path.join(root, fn)).st_mtime_ns
+            for root, _dirs, fns in os.walk(base)
+            for fn in fns
+        }
 
-    if force_cluster:
-        monkeypatch.setattr(placement, "ROWS", 0)
-    base = str(tmp_path / ("c" if force_cluster else "d"))
+    _on(monkeypatch, where)
+    base = str(tmp_path / where)
     p = 4_100_010
     b1 = [_rr(30 + i, "activate", p, "0", i + 1, obj=bytes([i]) * 8, prev=None) for i in range(3)]
     b2 = [_rr(40 + i, "activate", p, "0", i + 1, obj=bytes([64 + i]) * 8, prev=None) for i in range(2)]
     P.ingest_batch(spark, base, spark.createDataFrame(b1, schemas.RAW_RECORDS))
     shutil.rmtree(os.path.join(base, "_manifest"))
     assert Mf.current_version(base) == 0
+    before = files()
+    with pytest.raises(RuntimeError, match="migrate"):
+        P.ingest_batch(spark, base, spark.createDataFrame(b2, schemas.RAW_RECORDS))
+    with pytest.raises(RuntimeError, match="migrate"):
+        P.run_control_pass(spark, base)
+    assert files() == before
+    assert pq.migrate(base) > 0
     P.ingest_batch(spark, base, spark.createDataFrame(b2, schemas.RAW_RECORDS))
     drops = pq.read_table(spark, base, "jet_drops").collect()
     assert len(drops) == 1
@@ -388,8 +402,6 @@ def test_unexpected_errors_propagate_from_the_fallbacks(spark, tmp_path, monkeyp
     """The fallbacks on the placement path catch only what their case
     can raise; anything else (here a RuntimeError) propagates instead
     of silently choosing a path or answering "nothing there"."""
-    import os
-    import shutil
 
     def boom(*_a, **_kw):
         raise RuntimeError("boom")
@@ -397,15 +409,13 @@ def test_unexpected_errors_propagate_from_the_fallbacks(spark, tmp_path, monkeyp
     base = str(tmp_path / "s")
     P.ingest_batch(spark, base, spark.createDataFrame(_mixed_batch(), schemas.RAW_RECORDS))
 
-    # the existing-rows lookup's Spark read (forced by the version-0
-    # layout): an error is not "no prior rows"
-    legacy = str(tmp_path / "legacy")
-    shutil.copytree(base, legacy)
-    shutil.rmtree(os.path.join(legacy, "_manifest"))
+    # the existing-rows lookup's Spark read (forced by a zero merge
+    # gate): an error is not "no prior rows"
     with monkeypatch.context() as m:
+        m.setattr(placement, "MERGE_BYTES", 0)
         m.setattr(pq, "read_table", boom)
         with pytest.raises(RuntimeError, match="boom"):
-            P._existing_rows(spark, legacy, "jet_drops", [P1], [])
+            P._existing_rows(spark, base, "jet_drops", [P1], [])
 
     # the driver control pass: an error is not "take the Spark path"
     with monkeypatch.context() as m:

@@ -242,6 +242,42 @@ def test_adopt_migrates_pre_manifest_files(base):
     assert d in Mf.read(base)["families"]["docs"]
 
 
+def test_require_migrated_is_the_one_pre_manifest_guard(base):
+    """A version-0 store is empty; unlisted data files under it raise,
+    naming the store's migrate call — except while a registered
+    writer is in flight (its staged files are not pre-manifest data).
+    Past version 0, or after adopt, the guard is silent."""
+    Mf.require_migrated(base, ["corpus"], "corpus_store.migrate")  # empty
+    _touch(base, "corpus/fp_bucket=1/a.parquet")
+    with pytest.raises(RuntimeError, match=r"corpus_store\.migrate\(base\)"):
+        Mf.require_migrated(base, ["corpus"], "corpus_store.migrate")
+    Mf.require_migrated(base, ["bands"], "corpus_store.migrate")  # other dir
+    Mf.require_migrated(base, ["corpus"], "corpus_store.migrate", version=3)
+    with Mf.write_intent(base):
+        Mf.require_migrated(base, ["corpus"], "corpus_store.migrate")
+    assert Mf.adopt(base, {"docs": "corpus"}) == 1
+    Mf.require_migrated(base, ["corpus"], "corpus_store.migrate")
+
+
+def test_file_stats_skips_unreadable_and_propagates_unexpected(base, monkeypatch):
+    """An unreadable footer (OSError / ArrowInvalid) gets no stats
+    entry, so pruning keeps the file; any other error propagates."""
+    import pyarrow.parquet as papq
+
+    good = _parquet(base, "data/good.parquet", [1, 2])
+    with open(os.path.join(base, "data/trunc.parquet"), "wb") as f:
+        f.write(b"PAR1\x00\x01")
+    stats = Mf.file_stats(base, [good, "data/trunc.parquet"], ["doc_id"])
+    assert stats == {good: {"doc_id": [1, 2]}}
+
+    def boom(*_a, **_kw):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(papq, "ParquetFile", boom)
+    with pytest.raises(RuntimeError, match="boom"):
+        Mf.file_stats(base, [good], ["doc_id"])
+
+
 def _parquet(base, rel, ids):
     """Write a tiny real parquet file (footer stats included)."""
     import pyarrow as pa

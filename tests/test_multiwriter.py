@@ -65,7 +65,6 @@ def test_multiwriter_quick_contention(spark, tmp_path):
 def _contention_scenario(spark, tmp_path, n_writers: int, commits_per_writer: int):
     N_WRITERS, COMMITS_PER_WRITER = n_writers, commits_per_writer
     base = str(tmp_path / "wh")
-    pq.init_table(spark, base, "records")
 
     conflicts: list[int] = []
     orig_commit = Mf.commit
@@ -141,8 +140,7 @@ def _contention_scenario(spark, tmp_path, n_writers: int, commits_per_writer: in
     vs = Mf.versions(base)
     assert vs == list(range(vs[0], vs[0] + len(vs)))
     assert Mf.current_version(base) == vs[-1]
-    # every successful upsert took exactly one slot (the zero-row
-    # init_table leaves nothing to adopt, so no bootstrap commit)
+    # every successful upsert took exactly one slot
     assert vs[-1] == N_WRITERS * COMMITS_PER_WRITER
     # reader saw only consistent snapshots, monotone non-decreasing
     assert read_counts, "control pass never ran"

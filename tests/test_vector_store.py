@@ -255,7 +255,8 @@ def test_concurrent_adds_never_duplicate(spark, base):
 
 def test_pre_manifest_vector_store_raises_until_migrated(spark, base):
     """round-5 ADVICE twin of the corpus-store case: data files without
-    a manifest raise loudly; migrate() adopts them once."""
+    a manifest raise loudly on read and on add; migrate() adopts them
+    once."""
     import shutil
 
     rng = random.Random(7)
@@ -265,6 +266,9 @@ def test_pre_manifest_vector_store_raises_until_migrated(spark, base):
     shutil.rmtree(os.path.join(base, "_manifest"))
     with pytest.raises(RuntimeError, match="migrate"):
         vs.read_vectors(spark, base).count()
+    extra = _vecs(rng, 3, CENTERS[0], start_id=900)
+    with pytest.raises(RuntimeError, match="migrate"):
+        vs.add_batch(spark, base, spark.createDataFrame(extra, vs.VECTORS_SCHEMA))
     assert vs.migrate(base) >= 1
     got = {r.vec_id for r in vs.read_vectors(spark, base).collect()}
     assert got == want

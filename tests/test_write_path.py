@@ -524,11 +524,14 @@ def test_save_jet_drop_data_single_atomic_commit(spark, base):
     assert pq.read_table(spark, base, "records").count() == 6
 
 
-def test_legacy_directory_warehouse_adopts_on_first_write(spark, base):
-    """A warehouse populated by direct .parquet() writes (pre-round-6
-    layout, also the scale fixtures) reads via the legacy fallback and
-    is adopted into a manifest on its first transactional write —
-    after which snapshot reads see old and new rows together."""
+def test_pre_manifest_warehouse_raises_until_migrated(spark, base):
+    """The relational twin of the corpus store's pre-manifest case: a
+    warehouse populated by direct .parquet() writes (written before the
+    manifest log, like the scale fixtures) holds files no manifest
+    lists. Reads and upserts raise, naming `migrate`, instead of
+    answering "empty" or hiding the files behind a first commit;
+    migrate() adopts them exactly once, after which snapshot reads see
+    old and new rows together and a delete touches the adopted files."""
     import os
 
     from block_explorer_spark.sources import manifest as Mf
@@ -541,12 +544,21 @@ def test_legacy_directory_warehouse_adopts_on_first_write(spark, base):
         os.path.join(base, "records")
     )
     assert Mf.current_version(base) == 0
-    assert pq.read_table(spark, base, "records").count() == 4  # legacy read
-
     more = [_rec_row(1500, "1", 0)]
     more[0]["reference"] = bytes([0x99])
-    pq.upsert(spark, base, "records", spark.createDataFrame(more, schemas.RECORDS))
-    assert Mf.current_version(base) >= 1  # adopted + committed
+    more_df = spark.createDataFrame(more, schemas.RECORDS)
+    with pytest.raises(RuntimeError, match="migrate"):
+        pq.read_table(spark, base, "records")
+    with pytest.raises(RuntimeError, match="migrate"):
+        pq.read_records_for_object(spark, base, rows[0]["object_reference"])
+    with pytest.raises(RuntimeError, match="migrate"):
+        pq.upsert(spark, base, "records", more_df)
+    assert Mf.current_version(base) == 0
+
+    assert pq.migrate(base) >= 1
+    assert pq.migrate(base) == 0  # idempotent
+    assert pq.read_table(spark, base, "records").count() == 4
+    pq.upsert(spark, base, "records", more_df)
     out = pq.read_table(spark, base, "records")
     assert out.count() == 5
     # the adopted files are listed, so a delete touches them correctly
@@ -756,6 +768,7 @@ def test_object_index_makes_lifeline_flat_and_safe(spark, base):
         os.path.join(legacy, "records")
     )
     other = gen.make_lifeline(seed=900, pulses=[4_100_000], records_per_pulse=3)
+    pq.migrate(legacy)
     pq.upsert(spark, legacy, "records",
               spark.createDataFrame(other.records, schemas.RECORDS))
     m2 = Mf.read(legacy)
