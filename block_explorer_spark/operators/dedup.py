@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from block_explorer_spark import placement
 from block_explorer_spark.functions import text as Tx
 
 
@@ -70,19 +71,21 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Below this Catalyst size estimate of the SOURCE corpus, the pair
-#: pipelines drop their large-corpus physical pins (the shared
-#: per-doc-set exchange and the merge-join hints) and let AQE manage
-#: join strategy. Rationale: the pins exist to stop AQE from
-#: broadcast-promoting data-sized sides (measured 8 GB-heap OOM at the
-#: x100 ≈ 150 MB-parquet corpus) and to share one tokenize pass across
-#: 2-3 consumers at corpus scale — but at fixture/small scale the same
-#: exchanges+sorts cost 2.8x wall (q25 1.66->4.57 s at sf0.1, round-9
-#: regression). 32 MB source bytes is ~5x under the smallest corpus
-#: where promotion was ever observed to hurt, and any side derived
-#: from a <32 MB scan is safely broadcastable on the smallest heap we
-#: run (8 GB).
-SMALL_CORPUS_BYTES = 32 << 20
+# The pair pipelines' size gate is placement.small_plan over the
+# SOURCE corpus: under its 32 MB estimate they drop their large-corpus
+# physical pins (the shared per-doc-set exchange and the merge-join
+# hints) and let AQE manage join strategy. Rationale: the pins exist
+# to stop AQE from broadcast-promoting data-sized sides (measured 8
+# GB-heap OOM at the x100 ≈ 150 MB-parquet corpus) and to share one
+# tokenize pass across 2-3 consumers at corpus scale — but at
+# fixture/small scale the same exchanges+sorts cost 2.8x wall (q25
+# 1.66->4.57 s at sf0.1, round-9 regression). 32 MB source bytes is
+# ~5x under the smallest corpus where promotion was ever observed to
+# hurt, and any side derived from a <32 MB scan is safely
+# broadcastable on the smallest heap we run (8 GB). In-memory or
+# post-join corpora keep the pins even when tiny (the estimate errs
+# large, ADVICE r10); callers who know better can pre-write the
+# corpus to parquet.
 
 #: Shard size for expanding exact-duplicate families into pairs
 #: (hamming_pairs distance-0 path). A family of m identical hashes
@@ -103,27 +106,6 @@ _EQUAL_FAMILY_CHUNK = 4096
 #: band collision) must degrade to slow-but-bounded, never to one
 #: unsplittable quadratic row — the r9 sf1 OOM bug class.
 _PAIR_EXPAND_MAX = 1024
-
-
-def _small_corpus(df: DataFrame) -> bool:
-    """Plan-only (no job) size test: Catalyst's optimized-plan stats —
-    file bytes for parquet scans, width-scaled through projections.
-    Errs large (keeps the scale-safe pins) when the estimate is
-    unavailable.
-
-    Expectation (ADVICE r10): without CBO the estimate ignores filter
-    selectivity and defaults LARGE for non-file sources, so the fast
-    small-corpus path effectively triggers only for inputs derived
-    from direct file scans — in-memory or post-join corpora keep the
-    pinned large-corpus plan even when they are tiny. That is the
-    safe direction (the pins are correct at any size, just ~2.8x
-    slower at fixture scale); callers who know better can pre-write
-    the corpus to parquet, which also restores the estimate."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return False
-    return size < SMALL_CORPUS_BYTES
 
 
 def _pin_merge(df: DataFrame, pin: bool) -> DataFrame:
@@ -444,7 +426,7 @@ def _prefix_postings(
     # OOM'd the 8 GB heap in the round-9 x100 rerun. The posting side
     # reshuffles by __id for the prefix window right after, so the
     # broadcast would only have saved the __sh exchange — not worth
-    # the scale hazard. pin=False (_small_corpus) lets AQE broadcast.
+    # the scale hazard. pin=False (placement.small_plan) lets AQE broadcast.
     return (
         _pin_merge(posting, pin).join(dfreq, "__sh")
         .withColumn("__rn", F.row_number().over(w))
@@ -472,7 +454,7 @@ def _verify_pairs(
     memory and spills gracefully (per-partition sort volume is tiny —
     the wide set rows hash-partition by doc id). The explicit hint
     keeps AQE from re-promoting either side to broadcast. pin=False
-    (_small_corpus inputs) drops the hints and lets AQE pick —
+    (placement.small_plan inputs) drops the hints and lets AQE pick —
     broadcast is both safe and faster when the source scan is known
     to be tiny."""
     a_sets = per_doc.select(
@@ -513,7 +495,7 @@ def jaccard_pairs_prefix(
     """
     if threshold <= 0:
         raise ValueError("prefix filtering needs threshold > 0")
-    big = not _small_corpus(df)
+    big = not placement.small_plan(df)
     # hashed shingles (r11): exact under any total order — see
     # _hash_shingles. Changes the prefix tie-break (hash order, not
     # string order), hence possibly the candidate set, never the
@@ -554,7 +536,7 @@ def containment_pairs_prefix(
     """
     if threshold <= 0:
         raise ValueError("prefix filtering needs threshold > 0")
-    big = not _small_corpus(df)
+    big = not placement.small_plan(df)
     # hashed shingles (r11): see _hash_shingles / jaccard_pairs_prefix
     per_doc = _per_doc_sets(df, id_col, _hash_shingles(shingles), shared=big)
     prefix = _prefix_postings(per_doc, threshold, pin=big).select(
@@ -668,7 +650,7 @@ def _banded_signatures(
     # Signatures are bit-identical either way (MIN is order/duplicate-
     # insensitive); pinned by
     # test_banded_signature_formulations_identical.
-    if _small_corpus(df):
+    if placement.small_plan(df):
         idx = _shingle_index(df, id_col, shingles, distinct=False)
         hashed = idx.select(F.col("__id"), F.xxhash64("__sh").alias("__h"))
         grouped = hashed.groupBy("__id").agg(F.collect_list("__h").alias("__hs"))
@@ -771,7 +753,7 @@ def minhash_lsh_pairs(
     # Catalyst reuses the per-doc aggregate's exchange across the
     # a/b sides. Same exact integer (inter, sizes) → identical
     # jaccard doubles.
-    big = not _small_corpus(df)
+    big = not placement.small_plan(df)
     # shared=False at EVERY scale: the verify consumes per_doc twice
     # (a/b sides), and the map-only recompute beat both sharing
     # mechanisms in the x1000 A/Bs (575.1 s vs 721.3 s aggregation

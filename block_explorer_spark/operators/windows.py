@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from block_explorer_spark import placement
+
 #: API sentinel for "neighbor unknown/missing" (api/mappers.go:68-73).
 MISSING = -1
 
@@ -23,26 +25,6 @@ MISSING = -1
 #: window in the boundary exchange orders bucket AGGREGATES, never
 #: data rows.
 CHAIN_BUCKET_WIDTH = 100_000
-
-#: Below this Catalyst size estimate, the full-table repair uses ONE
-#: global ordered window instead of the bucketed two-level adjacency:
-#: a <32 MB sort in a single task is cheap, while the bucketed path
-#: pays two extra exchanges + a bucket-neighbor join that measured
-#: 2.1x wall at gate scale (round-10 bench, q03 0.87s vs 0.38s). Same
-#: plan-stats gating pattern, threshold, and caveat as
-#: dedup._small_corpus: the estimate is file bytes for parquet scans
-#: and defaults LARGE when unavailable (in-memory/post-join inputs),
-#: so unknown inputs keep the scale-safe bucketed plan.
-SMALL_CHAIN_BYTES = 32 << 20
-
-
-def _small_input(df: DataFrame) -> bool:
-    """Plan-only (no job) Catalyst size test; errs large (bucketed)."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return False
-    return size < SMALL_CHAIN_BYTES
 
 
 def chain_repair(
@@ -69,10 +51,11 @@ def chain_repair(
 
     Callers repairing a bounded page pass `window` (the page-local
     sort); with window=None the FULL-TABLE path runs. ADAPTIVE
-    (round 11): inputs whose Catalyst size estimate is under
-    SMALL_CHAIN_BYTES take one global ordered window — a sub-32 MB
-    single-task sort costs less than the bucketed plan's two extra
-    exchanges + join (measured 2.1x at gate scale). Larger (or
+    (round 11): inputs that pass placement.small_plan (a Catalyst
+    size estimate under 32 MB) take one global ordered window — a
+    sub-32 MB single-task sort costs less than the bucketed plan's two
+    extra exchanges + join (measured 2.1x wall at gate scale, q03
+    0.87 s vs 0.38 s). Larger (or
     unknown-size) inputs — and any call passing an EXPLICIT
     `bucket_width` — keep the round-9 bucketed two-level adjacency,
     which replaced the data-sized single-partition WindowExec — the
@@ -99,7 +82,7 @@ def chain_repair(
     """
     # adaptive gate: only when the caller didn't EXPLICITLY pick a
     # bucket width (tests/callers pinning the bucketed plan pass one)
-    if window is None and bucket_width is None and _small_input(df):
+    if window is None and bucket_width is None and placement.small_plan(df):
         window = Window.orderBy(key)  # bounded by the size gate
     if bucket_width is None:
         bucket_width = CHAIN_BUCKET_WIDTH
@@ -168,18 +151,4 @@ def _apply_sentinels(df, key, prev_link, next_link, lag_key, lead_key, lead_prev
                 lead_prev.isNotNull() & (lead_prev == F.col(key)), lead_key
             ).otherwise(F.lit(MISSING)),
         }
-    )
-
-
-def gap_flags(df: DataFrame, key: str, step: int, window: WindowSpec | None = None) -> DataFrame:
-    """Mark rows whose predecessor in key order is not exactly `step` behind.
-
-    Generalization of the reference's sequentiality check (D5): a row is
-    sequential iff every earlier key is present with a fixed stride.
-    Adds `has_gap` (bool) and `prev_key` columns.
-    """
-    w = window if window is not None else Window.orderBy(key)
-    prev_key = F.lag(key).over(w)
-    return df.withColumn("prev_key", prev_key).withColumn(
-        "has_gap", prev_key.isNotNull() & (prev_key != F.col(key) - step)
     )

@@ -1,4 +1,5 @@
-"""Driver-vs-cluster placement: one policy for every write-path step.
+"""Driver-vs-cluster placement: one policy for every write-path step,
+and the one plan-size gate the operators choose plan shapes by.
 
 A micro-batch commit is fixed-cost bound, not compute bound: every
 Spark job it runs (task launch, planning, the parquet committer) costs
@@ -11,11 +12,14 @@ The decision is made from exact counts when the caller has them, and
 otherwise by one bounded probe: `collect_bounded` collects at most
 ROWS + 1 rows (the LIMIT bounds what the driver ever holds) and
 refuses batches over ROWS rows or BYTES Arrow bytes. Driver-side reads
-of already-committed files (collision checks, bucket merges, the
-control pass) are capped by their on-disk size, MERGE_BYTES.
+of already-committed files (collision checks, bucket merges) are
+capped by their on-disk size, MERGE_BYTES.
 
-ROWS = 0 turns every driver placement off. Tests monkeypatch these
-constants; nothing reads them from the environment.
+ROWS = 0 turns every driver placement of ingest and upsert off. The
+control pass (streaming/pipeline.run_control_pass) has no cluster
+form: it always sweeps on the driver, one pulse bucket at a time, so
+no table size needs a second path. Tests monkeypatch these constants;
+nothing reads them from the environment.
 """
 
 from __future__ import annotations
@@ -26,6 +30,8 @@ ROWS = 65_536
 BYTES = 128 * 1024 * 1024
 #: On-disk byte cap for driver-side reads of committed table files.
 MERGE_BYTES = 32 * 1024 * 1024
+#: Catalyst size estimate under which `small_plan` holds.
+PLAN_BYTES = 32 * 1024 * 1024
 
 
 def admits(n_rows: int | None = None) -> bool:
@@ -44,3 +50,22 @@ def collect_bounded(df):
     if tbl.num_rows > ROWS or tbl.nbytes > BYTES:
         return None
     return tbl
+
+
+def small_plan(df) -> bool:
+    """Plan-only (no job) size test: whether `df`'s Catalyst
+    optimized-plan estimate is under PLAN_BYTES. The estimate is file
+    bytes for parquet scans, width-scaled through projections; without
+    CBO it ignores filter selectivity and defaults LARGE for in-memory
+    and post-join inputs. So it errs large — toward the scale-safe
+    plan — as it does when the frame has no JVM plan to ask (no
+    `_jdf`) or the JVM call fails. Callers: the full-table chain
+    repair (operators/windows.chain_repair) and the dedup pair
+    pipelines (operators/dedup)."""
+    from py4j.protocol import Py4JError
+
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (Py4JError, AttributeError):
+        return False
+    return size < PLAN_BYTES

@@ -1,108 +1,35 @@
-"""Control plane: completeness (D4), sequential advancer (D5),
-missed-data reload pool (D6).
+"""Control plane decisions: the sequential advancer (D5) and the gap
+scan (D6) as pure functions, plus the missed-data reload pool (D6).
 
 The reference keeps an in-memory jet-drop register guarded by a mutex
 plus two polling goroutines (etl/controller/controller.go:100-132).
-Here every decision is a batch pass derived purely from the tables —
-the same property the reference relies on at startup when it rebuilds
-state from the DB (etl/controller/controller.go:55-78) — so restarts
-and replays need no recovery logic at all.
+Here the register is the tables: streaming/pipeline.run_control_pass
+sweeps them bucket by bucket on the driver, checks completeness (D4)
+with functions.jets.trie_covered and feeds these walks — the same
+property the reference relies on at startup when it rebuilds state
+from the DB (etl/controller/controller.go:55-78), so restarts and
+replays need no recovery logic at all.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from block_explorer_spark.functions.jets import trie_covered
-from block_explorer_spark.operators.windows import gap_flags
-
-@F.pandas_udf(T.BooleanType())
-def _trie_covered_udf(jet_sets):
-    """Arrow-batched trie check: one Python invocation per BATCH of
-    pulses instead of one per pulse (the repo's last row-at-a-time
-    UDF, vectorized in round 9). The per-pulse check is the same pure
-    function; Arrow moves the grouped jet lists in columnar batches,
-    which is what matters when completeness sweeps millions of pulses
-    at once."""
-    import pandas as pd  # noqa: F401 (signature contract)
-
-    return jet_sets.map(lambda js: trie_covered(list(js)))
-
-
-def check_completeness(pulses: DataFrame, jet_drops: DataFrame) -> DataFrame:
-    """D4: pulses whose jet set covers the whole binary trie.
-
-    groupBy(pulse).collect_set(jet_id) — one shuffle, tiny groups —
-    then the pure-Python trie check as a UDF per pulse (a few hundred
-    strings each; the scale problem is the grouping, not the check).
-    Returns (pulse_number, is_covered) for pulses not yet complete.
-
-    reference: etl/controller/pulsemaintainer.go:145-212
-    """
-    pending = pulses.filter(~F.col("is_complete")).select("pulse_number")
-    jets = jet_drops.groupBy("pulse_number").agg(
-        F.collect_set("jet_id").alias("jet_ids")
-    )
-    return (
-        pending.join(jets, "pulse_number", "left_outer")
-        .withColumn(
-            "is_covered",
-            F.when(F.col("jet_ids").isNull(), F.lit(False)).otherwise(
-                _trie_covered_udf(F.col("jet_ids"))
-            ),
-        )
-        .select("pulse_number", "is_covered")
-    )
-
-
-def newly_complete_pulses(pulses: DataFrame, jet_drops: DataFrame) -> list[int]:
-    """Pulse numbers to flag complete (S6 CompletePulse inputs)."""
-    out = check_completeness(pulses, jet_drops).filter(F.col("is_covered"))
-    return [r.pulse_number for r in out.collect()]
-
-
-def advance_sequential(pulses: DataFrame, pulse_step: int | None = None) -> list[int]:
-    """D5: pulses to flag is_sequential.
-
-    A pulse is sequential iff it is complete and every complete pulse
-    chain link from the current sequential frontier reaches it. Batch
-    formulation: order complete pulses, walk the prev-link chain from
-    the latest already-sequential pulse (or the genesis-most pulse),
-    stop at the first break (gap or incomplete). The scan is over the
-    *complete, not-yet-sequential* slice — a page, not the table.
-
-    reference: etl/controller/pulsemaintainer.go:86-143
-    """
-    frontier_row = (
-        pulses.filter(F.col("is_sequential"))
-        .agg(F.max("pulse_number").alias("v"))
-        .collect()[0]
-    )
-    frontier = frontier_row["v"]
-    cand = pulses.filter(F.col("is_complete") & ~F.col("is_sequential"))
-    if frontier is not None:
-        cand = cand.filter(F.col("pulse_number") > frontier)
-    rows = (
-        cand.select("pulse_number", "prev_pulse_number")
-        .orderBy("pulse_number")
-        .collect()
-    )
-    return _sequential_walk(
-        frontier, [(r.pulse_number, r.prev_pulse_number) for r in rows]
-    )
-
 
 def _sequential_walk(
     frontier: int | None, rows: list[tuple[int, int | None]]
 ) -> list[int]:
-    """The D5 chain walk over (pulse_number, prev_pulse_number) pairs
-    already ordered by pulse_number. Module-level so the driver-side
-    control pass (streaming/pipeline._control_pass_driver) runs the
-    identical decision code as the Spark path above."""
+    """D5: the pulses to flag is_sequential, from the complete,
+    not-yet-sequential (pulse_number, prev_pulse_number) pairs above
+    the sequential `frontier` (None: no pulse is sequential yet),
+    already ordered by pulse_number. Walks the prev-link chain from
+    the frontier (or from the first candidate as the new root) and
+    stops at the first break, a gap or an incomplete pulse. A walk
+    resumed with its last accepted pulse as `frontier` continues
+    exactly where it stopped, so a caller may feed it bucket by bucket.
+
+    reference: etl/controller/pulsemaintainer.go:86-143
+    """
     out: list[int] = []
     prev = frontier
     for pn, prev_pn in rows:
@@ -118,23 +45,11 @@ def _sequential_walk(
     return out
 
 
-def find_gaps(pulses: DataFrame, step: int = 10) -> list[tuple[int, int]]:
-    """D6 input: (from, to) exclusive pulse ranges missing from storage.
-
-    gap_flags (lag over pulse order) finds holes; each hole becomes a
-    reload range request, matching the reference's re-extraction of
-    `(from, to)` (etl/controller/pulsemaintainer.go:214-227).
-    """
-    flagged = gap_flags(pulses.select("pulse_number"), "pulse_number", step)
-    rows = flagged.filter(F.col("has_gap")).select("prev_key", "pulse_number").collect()
-    return [(r.prev_key, r.pulse_number) for r in rows]
-
-
 def _gaps_walk(keys: list[int], step: int = 10) -> list[tuple[int, int]]:
-    """Driver-side twin of find_gaps over an already-collected pulse
-    set: consecutive keys in sorted order whose stride is not `step`.
-    Equivalence with the window formulation is pinned by
-    test_driver_ingest::test_control_pass_driver_matches_spark."""
+    """D6 input: (from, to) exclusive pulse ranges missing from storage,
+    as consecutive keys in sorted order whose stride is not `step`;
+    each becomes a reload range request, matching the reference's
+    re-extraction of `(from, to)` (etl/controller/pulsemaintainer.go:214-227)."""
     ks = sorted(keys)
     return [(a, b) for a, b in zip(ks, ks[1:]) if b != a + step]
 

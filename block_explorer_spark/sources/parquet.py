@@ -697,18 +697,22 @@ def _stage_arrow(tbl, base: str, name: str) -> list[str]:
     return out
 
 
-def _read_rels_arrow(base: str, name: str, rels: list[str]):
-    """Driver-side twin of _read_rels: the pinned columns + the
-    pulse_bucket partition column derived from each file's path."""
+def _read_rels_arrow(base: str, name: str, rels: list[str], cols=None):
+    """Driver-side twin of _read_rels: the pinned columns (or just
+    `cols`) + the pulse_bucket partition column derived from each
+    file's path."""
     import pyarrow as pa
 
     import pyarrow.parquet as papq
 
-    cols = [f.name for f in TABLE_SCHEMAS[name].fields]
+    full = _arrow_schema(name)
+    cols = cols or full.names
+    schema = pa.schema([full.field(c) for c in cols])
     parts = []
-    schema = _arrow_schema(name)
     for rel in rels:
-        t = papq.read_table(os.path.join(base, rel), columns=cols).cast(schema)
+        # ParquetFile: a third of read_table's per-file cost (no dataset set-up)
+        with papq.ParquetFile(os.path.join(base, rel)) as f:
+            t = f.read(columns=cols).cast(schema)
         b = _rel_bucket(rel)
         parts.append(
             t.append_column(
@@ -1332,24 +1336,6 @@ def set_pulse_flags(
         spark, base, {"pulses": current},
         batch_stats={"pulses": BatchStats(pulse_numbers, len(pulse_numbers))},
     )
-
-
-def refresh_pulse_counters(spark: SparkSession, base: str) -> None:
-    """A2 materialization: recompute per-pulse counters from jet_drops
-    and merge into pulses (keeps read-side latency low without mutable
-    increments; always consistent with the fact table)."""
-    from block_explorer_spark.operators.aggregates import pulse_counters
-
-    drops = read_table(spark, base, "jet_drops")
-    pulses = read_table(spark, base, "pulses")
-    counters = pulse_counters(drops)
-    updated = (
-        pulses.drop("jet_drop_amount", "record_amount")
-        .join(counters, "pulse_number", "left_outer")
-        .fillna(0, subset=["jet_drop_amount", "record_amount"])
-        .select(*[f.name for f in schemas.PULSES.fields])
-    )
-    upsert(spark, base, "pulses", updated)
 
 
 def delete_where(spark: SparkSession, base: str, name: str, predicate) -> int:

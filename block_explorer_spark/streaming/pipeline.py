@@ -5,7 +5,7 @@ Maps the reference's channel pipeline (gRPC source → transformer →
 
   raw-records file source (stand-in for the gRPC exporter stream)
     → foreachBatch: D2 decode + J6 chain sort + S4/S5 MERGE
-    → control pass: D4 completeness, D5 sequential, counters
+    → control pass: D4 completeness, D5 sequential, D6 gaps, counters
 
 foreachBatch is the right sink shape because each micro-batch needs
 the multi-table idempotent MERGE protocol (sources/parquet.py), which
@@ -288,146 +288,153 @@ def _existing_rows(
     )
 
 
+#: The jet_drops columns the control pass reads.
+_DROP_COLS = ["pulse_number", "jet_id", "record_amount"]
+
+
 def run_control_pass(spark: SparkSession, base: str) -> dict:
-    """D4 + D5 + counter refresh as one idempotent batch sweep.
+    """D4 + D5 + D6 + the counter refresh as one idempotent sweep.
 
     Returns what changed: {"completed": [...], "sequential": [...],
     "gaps": [...]} — gaps feed the reload loop (D6).
 
-    r11: the three pulse-table updates (complete flags, sequential
-    flags, counters) fuse into ONE upsert commit. The decisions are
-    unchanged — the sequential advancer sees the complete flips
-    through an in-memory overlay of the same rows the old
-    flip-commit-reread produced — and the final table state is
-    byte-identical, but the pass pays one manifest commit + staging
-    cycle instead of three (and readers never see a partially swept
-    intermediate state, which is strictly safer)."""
-    from block_explorer_spark.operators.aggregates import pulse_counters
+    The reference runs this loop over its in-memory jet-drop register
+    (etl/controller/controller.go:100-132, pulsemaintainer.go:86-227);
+    here the register is the tables, read on the driver through
+    pyarrow one pulse_bucket at a time, with both file lists taken
+    from one manifest snapshot. A jet drop lives in its pulse's
+    bucket, so completeness (`trie_covered`) and the counters are
+    per-bucket facts. The D5 frontier comes first: the
+    (pulse_number, is_sequential) columns of the newest bucket, then
+    the next older one, down to the first bucket holding a sequential
+    pulse. The ascending sweep then carries only the D5 walk's last
+    accepted pulse and the gap scan's last key from one bucket to the
+    next, so driver memory is one bucket plus the rows the pass
+    changes, whatever the table size.
 
-    fast = _control_pass_driver(spark, base) if placement.admits() else None
-    if fast is not None:
-        return fast
-    pulses = pq.read_table(spark, base, "pulses")
-    drops = pq.read_table(spark, base, "jet_drops")
-    completed = C.newly_complete_pulses(pulses, drops)
-    if completed:
-        pulses = pulses.withColumn(
-            "is_complete",
-            F.when(
-                F.col("pulse_number").isin(completed), F.lit(True)
-            ).otherwise(F.col("is_complete")),
-        )
-    sequential = C.advance_sequential(pulses)
-    if sequential:
-        pulses = pulses.withColumn(
-            "is_sequential",
-            F.when(
-                F.col("pulse_number").isin(sequential), F.lit(True)
-            ).otherwise(F.col("is_sequential")),
-        )
-    # counter refresh over the same frame (refresh_pulse_counters'
-    # derivation, fused into the single commit)
-    counters = pulse_counters(drops)
-    updated = (
-        pulses.drop("jet_drop_amount", "record_amount")
-        .join(counters, "pulse_number", "left_outer")
-        .fillna(0, subset=["jet_drop_amount", "record_amount"])
-        .select(*[f.name for f in schemas.PULSES.fields])
-    )
-    pq.upsert(spark, base, "pulses", updated)
-    gaps = C.find_gaps(pq.read_table(spark, base, "pulses"))
-    return {"completed": completed, "sequential": sequential, "gaps": gaps}
+    Only the pulse rows whose flags or counters changed go into the
+    pass's one upsert_many (its pyarrow path: no Spark job), and a pass
+    that changes nothing commits nothing. An unreadable listed file
+    propagates. A store at version 0 is empty (the manifest is its
+    only file listing) and, like every relational read, raises until
+    `parquet.migrate` when it holds unlisted files."""
+    import pyarrow as pa
 
-
-def _control_pass_driver(spark: SparkSession, base: str) -> dict | None:
-    """run_control_pass's driver fast path: when BOTH control tables'
-    committed bytes fit under placement.MERGE_BYTES, read them through
-    pyarrow and run the sweep driver-side — the completeness check is
-    the same pure `trie_covered`, the D5 advance the same
-    `_sequential_walk`, the gap scan `_gaps_walk` (pinned equivalent
-    to the window formulation), and the fused pulse upsert goes
-    through upsert_many's pyarrow path. Zero Spark jobs for the
-    KB-scale steady state the streaming loop lives in; None (→ the
-    Spark path) for big stores or an unreadable manifest or file. A
-    store at version 0 is empty (the manifest is its only file
-    listing) and, like every relational read, raises until `migrate`
-    when it holds unlisted files. run_control_pass calls it only while
-    placement.admits() a driver placement at all."""
     from block_explorer_spark.functions.jets import trie_covered
 
-    try:
-        snap = Mf.read(base)
-        pq._require_migrated(base, snap["version"])
-        prels = snap["families"].get("pulses", [])
-        drels = snap["families"].get("jet_drops", [])
-        if pq._rels_bytes(base, prels + drels) > placement.MERGE_BYTES:
-            return None
-
-        def rd(name, rels):
-            if not rels:
-                return None
-            return pq._read_rels_arrow(base, name, rels).to_pandas()
-
-        pulses = rd("pulses", prels)
-        drops = rd("jet_drops", drels)
-    except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
-        return None  # unreadable manifest/files: the Spark path decides
-    if pulses is None or pulses.empty:
-        return {"completed": [], "sequential": [], "gaps": []}
-
-    jets_by_pulse: dict[int, set] = {}
-    if drops is not None:
-        for pn, jid in zip(drops["pulse_number"], drops["jet_id"]):
-            jets_by_pulse.setdefault(int(pn), set()).add(jid)
-    completed = sorted(
-        int(pn)
-        for pn, done in zip(pulses["pulse_number"], pulses["is_complete"])
-        if not done
-        and int(pn) in jets_by_pulse
-        and trie_covered(list(jets_by_pulse[int(pn)]))
-    )
-    is_complete = pulses["is_complete"] | pulses["pulse_number"].isin(completed)
-
-    seq_mask = pulses["is_sequential"]
-    frontier = (
-        int(pulses.loc[seq_mask, "pulse_number"].max()) if seq_mask.any() else None
-    )
-    cand = pulses[is_complete & ~seq_mask]
-    if frontier is not None:
-        cand = cand[cand["pulse_number"] > frontier]
-    cand = cand.sort_values("pulse_number")
-    sequential = C._sequential_walk(
-        frontier,
-        [
-            (int(pn), None if prev != prev or prev is None else int(prev))
-            for pn, prev in zip(
-                cand["pulse_number"], cand["prev_pulse_number"]
+    snap = Mf.read(base)
+    pq._require_migrated(base, snap["version"])
+    prels = _rels_by_bucket(snap, "pulses")
+    drels = _rels_by_bucket(snap, "jet_drops")
+    frontier = _sequential_frontier(base, prels)
+    completed, sequential, gaps, changed = [], [], [], []
+    walk, walking, last = frontier, True, None
+    for b in sorted(prels):
+        old = pq._read_rels_arrow(base, "pulses", prels[b]).sort_by("pulse_number")
+        pns = old.column("pulse_number").to_pylist()
+        was = {c: old.column(c).to_pylist() for c in _PULSE_STATE}
+        pending = [pn for pn, d in zip(pns, was["is_complete"]) if not d]
+        jets, n_drops, n_recs = _drop_facts(base, drels.get(b, []), pending)
+        done = list(was["is_complete"])
+        for i, pn in enumerate(pns):
+            if not done[i] and pn in jets and trie_covered(jets[pn]):
+                done[i] = True
+                completed.append(pn)
+        seq = list(was["is_sequential"])
+        cand = [
+            (pn, prev)
+            for pn, prev, d, s in zip(
+                pns, old.column("prev_pulse_number").to_pylist(), done, seq
             )
-        ],
+            if d and not s and (frontier is None or pn > frontier)
+        ]
+        if walking and cand:
+            got = C._sequential_walk(walk, cand)
+            walking = len(got) == len(cand)
+            walk = got[-1] if got else walk
+            sequential += got
+            flip = set(got)
+            seq = [s or pn in flip for s, pn in zip(seq, pns)]
+        now = {
+            "is_complete": done,
+            "is_sequential": seq,
+            "jet_drop_amount": [n_drops.get(pn, 0) for pn in pns],
+            "record_amount": [n_recs.get(pn, 0) for pn in pns],
+        }
+        idx = [
+            i for i in range(len(pns))
+            if any(now[c][i] != was[c][i] for c in _PULSE_STATE)
+        ]
+        if idx:
+            t = old.take(idx)
+            for c in _PULSE_STATE:
+                t = t.set_column(
+                    t.schema.get_field_index(c), t.schema.field(c),
+                    pa.array([now[c][i] for i in idx], t.schema.field(c).type),
+                )
+            changed.append(t)
+        gaps += C._gaps_walk(([] if last is None else [last]) + pns)
+        last = pns[-1] if pns else last
+    if changed:
+        batch = pa.concat_tables(changed).drop_columns(["pulse_bucket"])
+        pns = batch.column("pulse_number").to_pylist()
+        pq.upsert_many(
+            spark, base, {"pulses": batch},
+            batch_stats={"pulses": pq.BatchStats(pns, len(pns))},
+        )
+    return {"completed": completed, "sequential": sequential, "gaps": gaps}
+
+
+def _drop_facts(base: str, rels: list[str], pending: list[int]):
+    """One bucket's jet_drops files, per pulse: the jet sets of the
+    `pending` (not yet complete) pulses, and every pulse's jet-drop
+    count and record_amount sum (nulls count 0)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not rels:
+        return {}, {}, {}
+    d = pq._read_rels_arrow(base, "jet_drops", rels, _DROP_COLS)
+    g = d.group_by("pulse_number").aggregate([([], "count_all"), ("record_amount", "sum")])
+    pns = g.column("pulse_number").to_pylist()
+    jets: dict[int, set] = {}
+    if pending:
+        d = d.filter(pc.is_in(d.column("pulse_number"), pa.array(pending, pa.int64())))
+        for pn, jet in zip(d.column("pulse_number").to_pylist(), d.column("jet_id").to_pylist()):
+            jets.setdefault(pn, set()).add(jet)
+    return (
+        {pn: list(js) for pn, js in jets.items()},
+        dict(zip(pns, g.column("count_all").to_pylist())),
+        dict(zip(pns, (n or 0 for n in g.column("record_amount_sum").to_pylist()))),
     )
 
-    # counter refresh (pulse_counters' derivation) + the fused commit
-    out = pulses.copy()
-    out["is_complete"] = is_complete
-    out["is_sequential"] = seq_mask | out["pulse_number"].isin(sequential)
-    jd_amt: dict[int, int] = {}
-    rec_amt: dict[int, int] = {}
-    if drops is not None:
-        for pn, ra in zip(drops["pulse_number"], drops["record_amount"]):
-            pn = int(pn)
-            jd_amt[pn] = jd_amt.get(pn, 0) + 1
-            if ra == ra and ra is not None:  # null-safe sum, like F.sum
-                rec_amt[pn] = rec_amt.get(pn, 0) + int(ra)
-    out["jet_drop_amount"] = [jd_amt.get(int(p), 0) for p in out["pulse_number"]]
-    out["record_amount"] = [rec_amt.get(int(p), 0) for p in out["pulse_number"]]
-    upd = pq._pdf_to_arrow(out, "pulses")
-    pns = sorted(int(p) for p in out["pulse_number"])
-    pq.upsert_many(
-        spark, base, {"pulses": upd},
-        batch_stats={"pulses": pq.BatchStats(pns, len(pns))},
-    )
-    gaps = C._gaps_walk(pns)
-    return {"completed": completed, "sequential": sequential, "gaps": gaps}
+
+def _rels_by_bucket(snap: dict, name: str) -> dict[int, list[str]]:
+    """Table `name`'s files in `snap`, grouped by their pulse_bucket
+    directory (every relational writer stages under one)."""
+    out: dict[int, list[str]] = {}
+    for r in snap["families"].get(name, []):
+        b = pq._rel_bucket(r)
+        if b is None:
+            raise ValueError(f"{name} file {r} is not under a pulse_bucket directory")
+        out.setdefault(b, []).append(r)
+    return out
+
+
+def _sequential_frontier(base: str, prels: dict[int, list[str]]) -> int | None:
+    """The highest sequential pulse (None: no pulse is sequential yet),
+    read newest bucket first and stopping at the first bucket that
+    holds one: in the steady state, one bucket's two columns."""
+    import pyarrow.compute as pc
+
+    for b in sorted(prels, reverse=True):
+        t = pq._read_rels_arrow(
+            base, "pulses", prels[b], ["pulse_number", "is_sequential"]
+        )
+        top = pc.max(t.filter(t.column("is_sequential")).column("pulse_number"))
+        if top.is_valid:
+            return top.as_py()
+    return None
 
 
 def _spool_dir(checkpoint_dir: str) -> str:
@@ -496,7 +503,7 @@ def start_ingest_stream(
 
     Source offsets are checkpointed; a replayed micro-batch re-MERGEs
     the same keys (no duplicates). The control pass runs inline every
-    N batches — cheap because it reads only incomplete pulses.
+    N batches — a driver sweep that runs no Spark job.
 
     `group_commit=K` (round 7): amortize the manifest CAS cost (~0.3 s
     per commit, flat in batch size) across K micro-batches. Each batch

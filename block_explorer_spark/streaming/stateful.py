@@ -105,7 +105,8 @@ def completeness_tracker(drops: DataFrame, timeout_ms: int | None = 1_200_000) -
     processing-time timeout armed, the engine keeps scheduling empty
     micro-batches to evaluate expirations, so `processAllAvailable()`
     never drains — bounded/test harnesses should pass None and handle
-    stale pulses with a batch `find_gaps` pass instead.
+    stale pulses with the gap scan of a batch control pass
+    (streaming/pipeline.run_control_pass) instead.
 
     State is per-pulse — small (a few hundred jet strings) and keyed
     exactly like a shuffle partition, so a 1000-executor cluster

@@ -56,8 +56,8 @@ def main() -> None:
     # Row-at-a-time UDF census: F.udf keeps Python in the per-ROW hot
     # path (no Arrow batching); the package target is zero — grouped
     # logic goes through pandas_udf / mapInPandas /
-    # applyInPandasWithState instead. Round 9 vectorized the last one
-    # (plans/controller.py trie check).
+    # applyInPandasWithState instead, and the control pass's trie
+    # check runs on the driver (streaming/pipeline.run_control_pass).
     import subprocess
 
     pkg = os.path.join(

@@ -27,6 +27,20 @@ data; nothing data-sized touches the driver.
 
 Usage: python scripts/scale_relational.py [--scales 1,10,100]
        [--out SCALE_RELATIONAL.json] [--root /root/repo/.scale_rel]
+
+Control cells (--control): one control pass (streaming/pipeline.
+run_control_pass) over pulses + jet_drops stores of 2k, 20k and 200k
+pulses with 8 jet drops each, in two states: `tip` (every pulse but
+the newest already swept, so the pass completes one pulse) and
+`first` (nothing swept yet). Each cell runs in a fresh process, 5
+passes each on a fresh copy of the store, and records the median
+wall time, Spark jobs per pass and the driver's peak RSS (plus the
+JVM's). `--parent-repo DIR` measures the same stores with another
+checkout's package too (A/B); the result becomes the `control`
+section of --out, leaving the other sections as they are:
+
+  python scripts/scale_relational.py --control [--parent-repo DIR]
+       [--control-pulses 2000,20000,200000] [--root DIR]
 """
 
 from __future__ import annotations
@@ -38,7 +52,10 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# --repo DIR: import the package from another checkout (a control
+# cell's A/B side); it must be on sys.path before the imports below
+sys.path.insert(0, sys.argv[sys.argv.index("--repo") + 1] if "--repo" in sys.argv else REPO)
 
 import pandas as pd
 
@@ -47,6 +64,7 @@ from block_explorer_spark import get_spark, schemas
 from block_explorer_spark.metrics import StageMetrics
 from block_explorer_spark.operators import filters as Fl
 from block_explorer_spark.operators import pagination as Pg
+from block_explorer_spark.sources import manifest as Mf
 from block_explorer_spark.sources import parquet as P
 
 P0 = 4_000_000
@@ -310,12 +328,188 @@ def measure(spark, base: str, scale: int, collector=None) -> dict:
     }
 
 
+#: Jet drops per pulse in the control cells: the 8 depth-3 jets cover
+#: the trie, so every pulse can complete.
+CONTROL_JETS = JETS
+CONTROL_RECS_PER_DROP = 64
+
+
+def build_control_store(base: str, n_pulses: int, swept: bool) -> str:
+    """A pulses + jet_drops store of n_pulses chained pulses with 8 jet
+    drops each, committed through upsert_many's pyarrow path (no Spark
+    job). swept: every pulse but the newest is already complete,
+    sequential and counted (a tip pass's store); otherwise none is.
+    Each drop carries a 32-byte random hash, as a platform-fed store
+    does, so the 200k-pulse store's pulses + jet_drops bytes exceed
+    placement.MERGE_BYTES."""
+    import numpy as np
+    import pyarrow as pa
+
+    if os.path.exists(os.path.join(base, "_DONE")):
+        return base
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base)
+    pns = P0 + PULSE_STEP * np.arange(n_pulses, dtype=np.int64)
+    done = np.arange(n_pulses) < (n_pulses - 1 if swept else 0)
+    k = len(CONTROL_JETS)
+    cols = {
+        "pulse_number": pns,
+        "prev_pulse_number": pns - PULSE_STEP,
+        "next_pulse_number": pns + PULSE_STEP,
+        "is_complete": done,
+        "is_sequential": done,
+        "timestamp": pns,
+        "jet_drop_amount": np.where(done, k, 0),
+        "record_amount": np.where(done, k * CONTROL_RECS_PER_DROP, 0),
+    }
+    schema = P._arrow_schema("pulses")
+    pulses = pa.Table.from_arrays(
+        [pa.array(cols[f.name], f.type) for f in schema], schema=schema
+    )
+    n = n_pulses * k
+    hashes = np.random.default_rng(n_pulses).bytes(32 * n)
+    cols = {
+        "pulse_number": pa.array(np.repeat(pns, k)),
+        "jet_id": pa.array(CONTROL_JETS * n_pulses),
+        "hash": pa.FixedSizeBinaryArray.from_buffers(
+            pa.binary(32), n, [None, pa.py_buffer(hashes)]
+        ).cast(pa.binary()),
+        "timestamp": pa.array(np.repeat(pns, k)),
+        "record_amount": pa.array(np.full(n, CONTROL_RECS_PER_DROP), pa.int32()),
+    }
+    schema = P._arrow_schema("jet_drops")
+    drops = pa.Table.from_arrays(
+        [cols.get(f.name, pa.nulls(n, f.type)) for f in schema], schema=schema
+    )
+    P.upsert_many(None, base, {"pulses": pulses, "jet_drops": drops})
+    open(os.path.join(base, "_DONE"), "w").close()
+    return base
+
+
+def _proc_kb(pid: int, field: str) -> int | None:
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith(field + ":"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
+def control_cell(store: str, reps: int = 5) -> dict:
+    """`reps` control passes in this process, each on a fresh copy of
+    `store`, with the package this process imported (see --repo)."""
+    import statistics
+    import tempfile
+
+    from block_explorer_spark.streaming import pipeline as pl
+
+    spark = get_spark("control-cell")
+    sc = spark.sparkContext
+    jvm_pid = sc._gateway.proc.pid
+    rss0 = _proc_kb(os.getpid(), "VmRSS")
+    walls, jobs, outs = [], [], []
+    for i in range(reps):
+        with tempfile.TemporaryDirectory(dir=os.path.dirname(store)) as d:
+            base = shutil.copytree(store, os.path.join(d, "s"))
+            sc.setLocalProperty("spark.jobGroup.id", f"control-{i}")
+            t0 = time.perf_counter()
+            out = pl.run_control_pass(spark, base)
+            walls.append(time.perf_counter() - t0)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"control-{i}")))
+            outs.append({k: len(v) for k, v in out.items()})
+    # VmHWM, not ru_maxrss: a child inherits its parent's ru_maxrss
+    # across fork + exec, and the parent built the store
+    peak = _proc_kb(os.getpid(), "VmHWM")
+    jvm_peak = _proc_kb(jvm_pid, "VmHWM")
+    return {
+        "wall_s_median": round(statistics.median(walls), 3),
+        "walls_s": [round(w, 3) for w in walls],
+        "spark_jobs_per_pass": jobs,
+        "driver_peak_rss_mb": round(peak / 1024, 1) if peak else None,
+        "driver_rss_before_mb": round(rss0 / 1024, 1) if rss0 else None,
+        "jvm_peak_rss_mb": round(jvm_peak / 1024, 1) if jvm_peak else None,
+        "changed": outs[0],
+    }
+
+
+def measure_control(root: str, sizes: list[int], parent_repo: str | None) -> dict:
+    """Every control cell, each side in its own fresh process; the side
+    that runs first alternates from cell to cell."""
+    import subprocess
+
+    from block_explorer_spark import placement
+
+    sides = [("change", REPO)] + ([("parent", parent_repo)] if parent_repo else [])
+    cells = {}
+    for n in sizes:
+        for state in ("tip", "first"):
+            store = build_control_store(
+                os.path.join(root, f"control_{state}_{n}"), n, swept=state == "tip"
+            )
+            snap = Mf.read(store)
+            nbytes = P._rels_bytes(
+                store, snap["families"]["pulses"] + snap["families"]["jet_drops"]
+            )
+            cell = {
+                "pulses": n,
+                "jet_drops": n * len(CONTROL_JETS),
+                "store_mb": round(nbytes / 2**20, 1),
+                "over_merge_bytes": nbytes > placement.MERGE_BYTES,
+            }
+            for name, repo in sides if len(cells) % 2 == 0 else sides[::-1]:
+                r = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--control-cell",
+                     store, "--repo", repo],
+                    capture_output=True, text=True, check=True,
+                )
+                cell[name] = json.loads(r.stdout.strip().splitlines()[-1])
+            cells[f"{state}_{n}"] = cell
+            print(f"# control {state}_{n}: {cell}", file=sys.stderr)
+    return cells
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scales", default="1,10,100")
     ap.add_argument("--out", default="SCALE_RELATIONAL.json")
     ap.add_argument("--root", default="/root/repo/.scale_rel")
+    ap.add_argument("--control", action="store_true",
+                    help="measure the control-pass cells only")
+    ap.add_argument("--control-pulses", default="2000,20000,200000")
+    ap.add_argument("--parent-repo", default=None,
+                    help="another checkout to measure the control cells with")
+    ap.add_argument("--control-cell", default=None, help=argparse.SUPPRESS)
+    ap.add_argument("--repo", default=None,
+                    help="checkout to import the package from")
     args = ap.parse_args()
+
+    if args.control_cell:
+        print(json.dumps(control_cell(args.control_cell)))
+        return
+    if args.control:
+        os.makedirs(args.root, exist_ok=True)
+        cells = measure_control(
+            args.root, [int(n) for n in args.control_pulses.split(",")],
+            args.parent_repo,
+        )
+        payload = {}
+        if os.path.exists(args.out):
+            with open(args.out) as f:
+                payload = json.load(f)
+        payload["control"] = {
+            "what": "one run_control_pass per cell, median of 5 passes, "
+                    "each on a fresh copy of the store, fresh process per "
+                    "side and cell",
+            "jets_per_pulse": len(CONTROL_JETS),
+            "cells": cells,
+        }
+        with open(args.out, "w") as f:
+            json.dump(payload, f, indent=1, sort_keys=True)
+        print(json.dumps({"metric": "control_scale", "out": args.out}))
+        return
 
     spark = get_spark("scale-relational", **{"spark.ui.enabled": "true"})
     try:

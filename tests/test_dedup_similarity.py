@@ -14,6 +14,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from block_explorer_spark import placement
 from block_explorer_spark.functions import text as Tx
 from block_explorer_spark.operators import dedup as D
 from block_explorer_spark.operators import multimodal as M
@@ -530,18 +531,18 @@ def test_banded_signature_formulations_identical(spark, tmp_path):
     # _banded_signatures: small path (explode+collect_list) vs large
     # path (map-only transform, empties dropped inside the UDF) —
     # identical band rows for the same docs
-    assert D._small_corpus(pq)
+    assert placement.small_plan(pq)
     small_banded = sorted(
         (r["__id"], r["band"], r["bhash"])
         for r in D._banded_signatures(pq, "doc_id", sh, 64, 16).collect()
     )
-    orig = D._small_corpus
-    D._small_corpus = lambda df: False
+    orig = placement.small_plan
+    placement.small_plan = lambda df: False
     try:
         large_banded = sorted(
             (r["__id"], r["band"], r["bhash"])
             for r in D._banded_signatures(pq, "doc_id", sh, 64, 16).collect()
         )
     finally:
-        D._small_corpus = orig
+        placement.small_plan = orig
     assert small_banded == large_banded

@@ -226,49 +226,40 @@ def test_driver_ingest_replay_idempotent(spark, tmp_path):
     assert before == after
 
 
-def test_control_pass_driver_matches_spark(spark, tmp_path, monkeypatch):
-    """run_control_pass's driver fast path must make the identical
-    decisions and leave the identical pulses table as the Spark path:
-    trie coverage (root jet, sibling pair, half-covered), the D5
-    frontier walk across step-10 chain links, the gap scan, counter
-    refresh, and sweep-to-sweep stability."""
-
-    def build(base_dir):
-        base = str(base_dir)
-        p = 4_000_010
-        rows = []
-        # p: root jet, covered, 2 records
-        rows += [_rr(100 + i, "activate", p, "", i + 1, obj=bytes([i]) * 8, prev=None) for i in range(2)]
-        # p+10: jets "0"+"1" → covered
-        rows += [_rr(110, "activate", p + 10, "0", 1, obj=b"E" * 8, prev=None)]
-        rows += [_rr(111, "activate", p + 10, "1", 1, obj=b"F" * 8, prev=None)]
-        # p+20: jet "0" only → NOT covered
-        rows += [_rr(120, "activate", p + 20, "0", 1, obj=b"G" * 8, prev=None)]
-        # p+40: gap from p+20; covered
-        rows += [_rr(140, "activate", p + 40, "", 1, obj=b"H" * 8, prev=None)]
-        from block_explorer_spark import schemas as S
-
-        P.ingest_batch(spark, base, spark.createDataFrame(rows, S.RAW_RECORDS))
-        out1 = P.run_control_pass(spark, base)
-        out2 = P.run_control_pass(spark, base)  # stability
-        return out1, out2, _table_rows(spark, base, "pulses")
-
-    drv = build(tmp_path / "drv")
-    monkeypatch.setattr(placement, "ROWS", 0)  # cluster ingest and control pass
-    clu = build(tmp_path / "clu")
-    monkeypatch.undo()
-
-    for got, want in zip(drv[:2], clu[:2]):
-        assert sorted(got["completed"]) == sorted(want["completed"])
-        assert sorted(got["sequential"]) == sorted(want["sequential"])
-        assert sorted(got["gaps"]) == sorted(want["gaps"])
-    assert drv[2] == clu[2]
-    # spot invariants
-    out1 = drv[0]
+def test_control_pass_decisions_and_stability(spark, tmp_path):
+    """run_control_pass over one ingested batch: trie coverage (root
+    jet, sibling pair, half-covered), the D5 frontier walk across
+    step-10 chain links, the gap scan and the counter refresh; a
+    second pass decides nothing new and leaves the table as it was."""
+    base = str(tmp_path / "s")
     p = 4_000_010
-    assert sorted(out1["completed"]) == [p, p + 10, p + 40]
-    assert sorted(out1["sequential"]) == [p, p + 10]  # stops at the incomplete p+20
+    rows = []
+    # p: root jet, covered, 2 records
+    rows += [_rr(100 + i, "activate", p, "", i + 1, obj=bytes([i]) * 8, prev=None) for i in range(2)]
+    # p+10: jets "0"+"1" → covered
+    rows += [_rr(110, "activate", p + 10, "0", 1, obj=b"E" * 8, prev=None)]
+    rows += [_rr(111, "activate", p + 10, "1", 1, obj=b"F" * 8, prev=None)]
+    # p+20: jet "0" only → NOT covered
+    rows += [_rr(120, "activate", p + 20, "0", 1, obj=b"G" * 8, prev=None)]
+    # p+40: gap from p+20; covered
+    rows += [_rr(140, "activate", p + 40, "", 1, obj=b"H" * 8, prev=None)]
+    P.ingest_batch(spark, base, spark.createDataFrame(rows, schemas.RAW_RECORDS))
+    out1 = P.run_control_pass(spark, base)
+    swept = _table_rows(spark, base, "pulses")
+    out2 = P.run_control_pass(spark, base)  # stability
+
+    assert out1["completed"] == [p, p + 10, p + 40]
+    assert out1["sequential"] == [p, p + 10]  # stops at the incomplete p+20
     assert out1["gaps"] == [(p + 20, p + 40)]
+    assert out2 == {"completed": [], "sequential": [], "gaps": [(p + 20, p + 40)]}
+    assert _table_rows(spark, base, "pulses") == swept
+    # (pulse, is_complete, is_sequential, jet_drop_amount, record_amount)
+    assert [(r[0], r[3], r[4], r[6], r[7]) for r in swept] == [
+        (p, True, True, 1, 2),
+        (p + 10, True, True, 2, 2),
+        (p + 20, False, False, 1, 1),
+        (p + 40, True, False, 1, 1),
+    ]
 
 
 @pytest.mark.parametrize("force_cluster", [False, True])
@@ -360,14 +351,15 @@ def test_replayed_pulse_keeps_flags_and_counters(spark, tmp_path, monkeypatch, w
 
 def test_rows_zero_keeps_every_step_on_the_cluster(spark, tmp_path, monkeypatch):
     """placement.ROWS = 0 is the one switch: ingest (also a split
-    pulse's recount), upsert_many, stage_df and the control pass call
-    no driver-side function, and the tables equal a default-gate run."""
+    pulse's recount), upsert_many and stage_df call no driver-side
+    function, and the tables equal a default-gate run. The control
+    pass has no cluster form; run after the switch is back, it lands
+    the same tables on both stores."""
     split = [_rr(30, "activate", P2, "1", 2, obj=b"E" * 8, prev=None)]
 
     def run(base):
         P.ingest_batch(spark, base, spark.createDataFrame(_mixed_batch(), schemas.RAW_RECORDS))
         P.ingest_batch(spark, base, spark.createDataFrame(split, schemas.RAW_RECORDS))
-        P.run_control_pass(spark, base)
         return _tables(spark, base)
 
     want = run(str(tmp_path / "default"))
@@ -381,7 +373,6 @@ def test_rows_zero_keeps_every_step_on_the_cluster(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(placement, "ROWS", 0)
     for mod, name in (
         (P, "_ingest_batch_driver"),
-        (P, "_control_pass_driver"),
         (Tr, "transform_pulse_data_pdf"),
         (pq, "_plan_and_stage_arrow"),
         (pq, "_stage_arrow"),
@@ -393,7 +384,12 @@ def test_rows_zero_keeps_every_step_on_the_cluster(spark, tmp_path, monkeypatch)
         monkeypatch.setattr(mod, name, forbidden(name))
     got = run(str(tmp_path / "cluster"))
     assert Mf.stage_df(spark.range(3), str(tmp_path / "misc"), "ids")
+    monkeypatch.undo()
     assert got == want
+    # the control pass has no cluster form: it sweeps on the driver
+    for name in ("default", "cluster"):
+        P.run_control_pass(spark, str(tmp_path / name))
+    assert _tables(spark, str(tmp_path / "cluster")) == _tables(spark, str(tmp_path / "default"))
     jd = {(r[0], r[1]): r[7] for r in got["jet_drops"]}
     assert jd[(P2, "1")] == 2  # the split pulse was recounted
 
@@ -417,7 +413,7 @@ def test_unexpected_errors_propagate_from_the_fallbacks(spark, tmp_path, monkeyp
         with pytest.raises(RuntimeError, match="boom"):
             P._existing_rows(spark, base, "jet_drops", [P1], [])
 
-    # the driver control pass: an error is not "take the Spark path"
+    # the control pass has one path: a failed read propagates
     with monkeypatch.context() as m:
         m.setattr(pq, "_read_rels_arrow", boom)
         with pytest.raises(RuntimeError, match="boom"):

@@ -257,7 +257,6 @@ def test_duplicate_records_in_batch_saved_once(spark, tmp_path):
     P.ingest_batch(spark, base, raw)
     assert pq.read_table(spark, base, "records").count() == 3
     P.run_control_pass(spark, base)
-    pq.refresh_pulse_counters(spark, base)
     row = pq.read_table(spark, base, "pulses").filter(F.col("pulse_number") == PN1).collect()[0]
     assert (row.jet_drop_amount, row.record_amount) == (1, 3)
 
@@ -290,7 +289,7 @@ def test_reload_updates_pulse_links_and_drop_hashes(spark, tmp_path):
     pulses = pq.read_table(spark, base, "pulses").collect()
     assert len(pulses) == 1
     assert pulses[0].prev_pulse_number == 100_000_000  # updated, not duplicated
-    pq.refresh_pulse_counters(spark, base)
+    P.run_control_pass(spark, base)
     row = pq.read_table(spark, base, "pulses").collect()[0]
     assert (row.jet_drop_amount, row.record_amount) == (1, 2)
     assert pq.read_table(spark, base, "records").count() == 2

@@ -67,12 +67,6 @@ def test_chain_repair_sentinels(spark):
     assert got[40].next_pulse_number == -1  # last row
 
 
-def test_gap_flags(spark):
-    df = spark.createDataFrame([(10,), (20,), (40,), (50,)], ["pulse_number"])
-    got = {r.pulse_number: r.has_gap for r in W.gap_flags(df, "pulse_number", 10).collect()}
-    assert got == {10: False, 20: False, 40: True, 50: False}
-
-
 def test_chain_repair_adaptive_gate(spark, tmp_path):
     """Full-table repair is adaptive: a small file-backed input takes
     the single global-window plan (no join, one Window); a large

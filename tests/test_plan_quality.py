@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
+from block_explorer_spark import placement
 from block_explorer_spark.sources import parquet as pq
 
 SF = "/root/testdata/sf0.001"
@@ -370,7 +371,7 @@ def test_q110_estimate_never_underestimates(spark):
 def test_dedup_corpus_size_gate(spark, tmp_path):
     """Round-10 (revised after the clean x1000 A/B): the pair
     pipelines pick their physical shape by the Catalyst size estimate
-    of the SOURCE corpus (dedup._small_corpus).
+    of the SOURCE corpus (placement.small_plan).
 
     - minhash_lsh_pairs: per-doc verify sets are MAP-ONLY at every
       scale (shared=False — the x1000 A/B measured 575.1 s vs 825.7 s
@@ -395,11 +396,11 @@ def test_dedup_corpus_size_gate(spark, tmp_path):
         [(i, f"tok{i} tok{i + 1} tok{i + 2} tok{i + 3}") for i in range(20)],
         "doc_id long, text string",
     )
-    assert not D._small_corpus(mem)  # unknown stats -> keep the pins
+    assert not placement.small_plan(mem)  # unknown stats -> keep the pins
     # a parquet scan has exact file-size stats: the gate's real input
     mem.write.parquet(str(tmp_path / "docs.parquet"))
     small = spark.read.parquet(str(tmp_path / "docs.parquet"))
-    assert D._small_corpus(small)
+    assert placement.small_plan(small)
     # spark.range stats are exact (8 bytes/row); 10M rows with a text
     # projection estimates far past the 32 MB gate — plan-only, the
     # query is never executed
@@ -409,7 +410,7 @@ def test_dedup_corpus_size_gate(spark, tmp_path):
             " ", F.lit("tok"), F.col("id").cast("string"), F.lit("x")
         ).alias("text"),
     )
-    assert not D._small_corpus(big)
+    assert not placement.small_plan(big)
 
     # minhash, large: SMJ pinned; per-doc sets map-only — no explicit
     # shared exchange (REPARTITION_BY_COL) anywhere in the plan
@@ -446,3 +447,26 @@ def test_dedup_corpus_size_gate(spark, tmp_path):
     assert "SortMergeJoin" not in small_pj_plan
     assert "collect_set" not in small_pj_plan
     assert "REPARTITION_BY_COL" not in small_pj_plan
+
+
+def test_plan_size_gate_errs_large_and_propagates_unexpected_errors(spark):
+    """placement.small_plan (the one plan-size gate of the chain repair
+    and the dedup pipelines) answers "large" only for what asking the
+    JVM plan can raise: a frame with no JVM plan (AttributeError) or a
+    py4j error. Anything else propagates instead of silently picking
+    the scale-safe plan."""
+    from types import SimpleNamespace
+
+    from py4j.protocol import Py4JError
+
+    def raising(exc):
+        def call():
+            raise exc
+
+        return SimpleNamespace(_jdf=SimpleNamespace(queryExecution=call))
+
+    assert placement.small_plan(spark.range(10).select("id"))
+    assert not placement.small_plan(object())  # no _jdf
+    assert not placement.small_plan(raising(Py4JError("jvm")))
+    with pytest.raises(RuntimeError, match="boom"):
+        placement.small_plan(raising(RuntimeError("boom")))

@@ -102,40 +102,51 @@ def test_jet_drops_from_records(spark):
     assert got == {"0": 2, "1": 1}
 
 
-def test_check_completeness_trie(spark):
+def _swept(spark, base, pulses, drops=()):
+    """Write pulses (and jet drops) to a store at `base` as Arrow
+    batches, then run one control pass over it."""
+    import pyarrow as pa
+
+    batches = {"pulses": pa.Table.from_pylist(pulses, schema=pq._arrow_schema("pulses"))}
+    if drops:
+        batches["jet_drops"] = pa.Table.from_pylist(drops, schema=pq._arrow_schema("jet_drops"))
+    pq.upsert_many(spark, base, batches)
+    return P.run_control_pass(spark, base)
+
+
+def test_check_completeness_trie(spark, tmp_path):
     pulses = gen.make_pulses(start=1000, count=2, complete=False)
-    pdf = spark.createDataFrame(pulses, schemas.PULSES)
     rng = random.Random(1)
     drops = [
         gen.make_jet_drop(rng, 1000, "0"),
         gen.make_jet_drop(rng, 1000, "1"),  # full cover
         gen.make_jet_drop(rng, 1010, "0"),  # half cover
     ]
-    ddf = spark.createDataFrame(drops, schemas.JET_DROPS)
-    got = {r.pulse_number: r.is_covered for r in C.check_completeness(pdf, ddf).collect()}
+    base = str(tmp_path / "s")
+    out = _swept(spark, base, pulses, drops)
+    got = {r.pulse_number: r.is_complete for r in pq.read_table(spark, base, "pulses").collect()}
     assert got == {1000: True, 1010: False}
-    assert C.newly_complete_pulses(pdf, ddf) == [1000]
+    assert out["completed"] == [1000]
 
 
-def test_advance_sequential_stops_at_gap(spark):
+def test_advance_sequential_stops_at_gap(spark, tmp_path):
     pulses = gen.make_pulses(start=1000, count=6, gaps=(3,), complete=True, sequential=False)
     pulses[0]["is_sequential"] = True  # frontier at 1000
-    pdf = spark.createDataFrame(pulses, schemas.PULSES)
-    assert C.advance_sequential(pdf) == [1010, 1020]  # halts: 1030 missing
+    out = _swept(spark, str(tmp_path / "s"), pulses)
+    assert out["sequential"] == [1010, 1020]  # halts: 1030 missing
 
 
-def test_advance_sequential_stops_at_incomplete(spark):
+def test_advance_sequential_stops_at_incomplete(spark, tmp_path):
     pulses = gen.make_pulses(start=1000, count=4, complete=True, sequential=False)
     pulses[0]["is_sequential"] = True
     pulses[2]["is_complete"] = False  # 1020 incomplete
-    pdf = spark.createDataFrame(pulses, schemas.PULSES)
-    assert C.advance_sequential(pdf) == [1010]
+    out = _swept(spark, str(tmp_path / "s"), pulses)
+    assert out["sequential"] == [1010]
 
 
-def test_find_gaps_and_reload_pool(spark):
+def test_find_gaps_and_reload_pool(spark, tmp_path):
     pulses = gen.make_pulses(start=1000, count=6, gaps=(2, 3))
-    pdf = spark.createDataFrame(pulses, schemas.PULSES)
-    gaps = C.find_gaps(pdf)
+    gaps = _swept(spark, str(tmp_path / "s"), pulses)["gaps"]
     assert gaps == [(1010, 1040)]
     pool = C.ReloadPool(ttl_seconds=100)
     assert pool.should_reload((1010, 1040), now=0.0)

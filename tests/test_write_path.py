@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from block_explorer_spark import schemas
 from block_explorer_spark.sources import generators as gen
 from block_explorer_spark.sources import parquet as pq
+from block_explorer_spark.streaming import pipeline as P
 
 
 @pytest.fixture()
@@ -76,7 +77,7 @@ def test_flags_and_counters(spark, base):
     out = pq.read_table(spark, base, "pulses")
     assert out.filter(F.col("is_complete")).count() == 2
 
-    pq.refresh_pulse_counters(spark, base)
+    P.run_control_pass(spark, base)
     got = {
         r.pulse_number: (r.jet_drop_amount, r.record_amount)
         for r in pq.read_table(spark, base, "pulses").collect()
@@ -168,7 +169,7 @@ def test_interleaved_same_pulse_saves_and_counters(spark, base):
             spark.createDataFrame(drops, schemas.JET_DROPS),
             spark.createDataFrame(recs, schemas.RECORDS),
         )
-    pq.refresh_pulse_counters(spark, base)
+    P.run_control_pass(spark, base)
     row = pq.read_table(spark, base, "pulses").collect()[0]
     assert (row.jet_drop_amount, row.record_amount) == (3, 4)
     assert pq.read_table(spark, base, "jet_drops").count() == 3
