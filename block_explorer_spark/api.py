@@ -4,9 +4,14 @@ The reference serves its query surface behind echo handlers that do
 all validation before touching storage (api/handlers.go); the error
 taxonomy — (property, failure_reason) pairs accumulated across params
 — is pinned by api/handlers_test.go. This module reproduces that
-contract as plain Python: validation raises/collects failures
-driver-side, and the row→JSON mappers (api/mappers.go:19-94) become
-column projections so rendering stays JVM-side and distributed.
+contract as plain Python: validation raises/collects failures on the
+driver, and the row→JSON mappers (api/mappers.go:19-94) map the
+driver rows of one page (<= MAX_LIMIT) that plans/queries.py's Arrow
+serving functions return.
+
+The Spark mappers (records_to_api, pulses_to_api, jet_drops_to_api)
+and serving_tables remain because perfbench/engine.py and
+perfbench/spans.py name them; the REST edge does not call them.
 
 Nothing here shuffles or scans: it parameterizes plans/queries.py.
 """
@@ -154,7 +159,7 @@ def check_jet_id(value: str) -> tuple[str, list[ValidationFailure]]:
         failures.append(ValidationFailure(prop, "empty value of path parameter"))
     try:
         jet_id = unquote(v, errors="strict")
-    except Exception:
+    except UnicodeDecodeError:
         failures.append(ValidationFailure(prop, "cannot unescape path parameter jet-id"))
         return "", failures
     if not JET_ID_PATH_RE.match(jet_id):
@@ -197,7 +202,7 @@ def check_reference(value: str) -> bytes:
         raise ValidationError([ValidationFailure("reference", "empty reference")])
     try:
         value = unquote(value, errors="strict")
-    except Exception:
+    except UnicodeDecodeError:
         raise ValidationError([ValidationFailure("reference", "error unescaping")]) from None
     try:
         return parse_reference(value)
@@ -241,8 +246,43 @@ def search_dispatch(value: str) -> tuple[str, object]:
 
 
 # ---------------------------------------------------------------------------
-# Response mappers (api/mappers.go) — column projections, JVM-side
+# Response mappers (api/mappers.go): row mappers for the serving edge,
+# column projections for DataFrame callers
 # ---------------------------------------------------------------------------
+
+
+def _b64(v):
+    import base64
+
+    return base64.b64encode(bytes(v)).decode("ascii") if v is not None else None
+
+
+def _null_if_empty(v):
+    """X10 on one value: empty or all-zero bytes read as None."""
+    return None if v is None or not any(v) else v
+
+
+def record_row_to_api(row: dict) -> dict:
+    """RecordToAPI on one record row (the projection records_to_api
+    makes, field for field); base58 refs are rendered afterwards by
+    render_refs. reference: api/mappers.go:19-55"""
+    display = jets.ROOT_DISPLAY if row["jet_id"] == "" else row["jet_id"]
+    pn, order = row["pulse_number"], row["order"]
+    return {
+        "hash": _b64(row["hash"]),
+        "jet_drop_id": f"{display}:{pn}",
+        "jet_id": display,
+        # concat_ws skips a null order
+        "index": f"{pn}:{order}" if order is not None else f"{pn}",
+        "payload": _b64(row["payload"]),
+        "pulse_number": pn,
+        "timestamp": row["timestamp"],
+        "type": row["type"],
+        "object_reference": _null_if_empty(row["object_reference"]),
+        "prev_record_reference": _null_if_empty(row["prev_record_reference"]),
+        "prototype_reference": _null_if_empty(row["prototype_reference"]),
+        "reference": row["reference"],
+    }
 
 
 def records_to_api(records: DataFrame) -> DataFrame:
@@ -314,9 +354,8 @@ def pulses_to_api(pulses: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
 
 
 def pulse_row_to_api(row: dict) -> dict:
-    """Driver-side twin of pulses_to_api for the serving fast path
-    (a collected row dict instead of a DataFrame) — identical
-    mapping: the 7 API fields, -1 prev/next sentinels become None.
+    """PulseToAPI on one pulse row (the mapping pulses_to_api
+    projects): the 7 API fields, -1 prev/next sentinels become None.
     reference: api/mappers.go:57-75"""
     return {
         "pulse_number": row["pulse_number"],
@@ -334,16 +373,12 @@ def pulse_row_to_api(row: dict) -> dict:
 
 
 def jet_drop_row_to_api(row: dict) -> dict:
-    """Driver-side twin of jet_drops_to_api for the serving fast path
-    — identical mapping: base64 hash, composite id, display jet id.
+    """JetDropToAPI on one jet-drop row (the mapping jet_drops_to_api
+    projects): base64 hash, composite id, display jet id.
     reference: api/mappers.go:77-95"""
-    import base64
-
     display = jets.ROOT_DISPLAY if row["jet_id"] == "" else row["jet_id"]
     return {
-        "hash": base64.b64encode(bytes(row["hash"])).decode("ascii")
-        if row["hash"] is not None
-        else None,
+        "hash": _b64(row["hash"]),
         "jet_drop_id": f"{display}:{row['pulse_number']}",
         "jet_id": display,
         "pulse_number": row["pulse_number"],
@@ -371,22 +406,17 @@ def jet_drops_to_api(drops: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame
 
 def serving_tables(*tables: DataFrame, target_partitions: int = 2):
     """Prepare dimension tables for point-serving: coalesce to a few
-    partitions and pin in memory.
+    partitions and pin in memory. The REST edge no longer needs this
+    (BlockExplorerApi reads the store itself or collects its frames
+    once); perfbench/engine.py and scripts/loadtest.py's in-process
+    mode still call it.
 
-    The REST surface runs many SMALL jobs per request (filtered page,
-    total count, chain-edge probes); with a dimension cached across 32
-    partitions every one of those jobs schedules 32 tasks to touch a
-    few hundred rows, and task-launch overhead — not I/O — dominates
-    the measured p50 (~600 ms on the loadtest shape). Serving tables
-    the size of the pulse/jet-drop dims (one row per ~10 s pulse; tens
-    of drops per pulse) belong in 1-4 partitions.
-
-    Scale note: this is for the BOUNDED dims a point-serving API
-    fronts. The record table at 100 TB is not a serving-cache
-    candidate — the reference serves it from an indexed Postgres, and
-    the equivalent here is the key-bucketed parquet layout
-    (sources/parquet.py) with partition-pruned point reads; pass only
-    the dims you want pinned."""
+    Many small Spark queries over a dimension cached across 32
+    partitions each schedule 32 tasks to touch a few hundred rows, and
+    task-launch overhead — not I/O — dominates. Dims the size of the
+    pulse/jet-drop tables belong in 1-4 partitions; the records table
+    is not a cache candidate (read it through the store's pruned
+    reads), so pass only the dims you want pinned."""
     out = []
     for df in tables:
         cached = df.coalesce(target_partitions).cache()

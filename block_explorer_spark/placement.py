@@ -12,8 +12,8 @@ The decision is made from exact counts when the caller has them, and
 otherwise by one bounded probe: `collect_bounded` collects at most
 ROWS + 1 rows (the LIMIT bounds what the driver ever holds) and
 refuses batches over ROWS rows or BYTES Arrow bytes. Driver-side reads
-of already-committed files (collision checks, bucket merges) are
-capped by their on-disk size, MERGE_BYTES.
+of already-committed files (collision checks, bucket merges, the REST
+edge's pruned reads) are capped by their on-disk size, MERGE_BYTES.
 
 ROWS = 0 turns every driver placement of ingest and upsert off. The
 control pass (streaming/pipeline.run_control_pass) has no cluster

@@ -6,8 +6,16 @@ codes, the CodeValidationError body with its per-endpoint quirks, the
 response envelopes — is pinned by api/handlers_test.go. This module
 reproduces that wire contract with the stdlib ThreadingHTTPServer:
 routing + JSON rendering only. All validation lives in api.py and all
-query semantics in plans/queries.py; a request collects at most one
-page (<= MAX_LIMIT rows), so serving is driver-edge work by design.
+query semantics in plans/queries.py's Arrow serving functions.
+
+A request is answered on the driver. Against a store
+(`BlockExplorerApi(warehouse_base=...)`) it reads one manifest
+snapshot, prunes to the files its pulse bounds or object reference
+can touch, and scans only those with pyarrow, so a pulse committed
+after the server started is served at once and a page costs a few
+file opens, not a Spark job. Inputs over placement.MERGE_BYTES (or a
+frame too big to collect) run the same scan through mapInArrow and
+merge the partial answers on the driver.
 
 Endpoint -> handler parity map (reference api/handlers.go):
   GET /api/v1/pulses                         Pulses            :311
@@ -35,14 +43,16 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from block_explorer_spark import api
+from block_explorer_spark import api, placement
 from block_explorer_spark.functions import jets
 from block_explorer_spark.functions.refs import base58_encode
 from block_explorer_spark.metrics import MetricsRegistry
 from block_explorer_spark.plans import queries as Q
+from block_explorer_spark.sources import manifest as Mf
+from block_explorer_spark.sources import parquet as pq
 
 INVALID_PARAMS_MESSAGE = "Invalid query or path parameters"  # handlers.go:28
 
@@ -91,36 +101,91 @@ def _strip_none(d: dict) -> dict:
     return {k: v for k, v in d.items() if v is not None}
 
 
+class _StoreTables:
+    """The `tables` source (plans/queries.py) of one request against a
+    store: one manifest snapshot, files pruned through the pulse zone
+    maps or the object index, and only the serving columns read. The
+    pruned files' on-disk bytes place the scan: at or under
+    placement.MERGE_BYTES it runs on the driver, above it through
+    mapInArrow."""
+
+    def __init__(self, spark, base: str):
+        self.spark = spark
+        self.base = base
+        self.snap = Mf.read(base)
+
+    def read(self, name, where=None, sort=(), n=None, cols=None, lo=None, hi=None, obj=None):
+        cols = cols or Q.SERVING_COLS[name]
+        if obj is not None:
+            rels = pq._object_rels(self.base, self.snap, obj, lo, hi)
+        else:
+            _m, rels = pq._pulse_rels(self.base, name, lo, hi, self.snap)
+        if pq._rels_bytes(self.base, rels) <= placement.MERGE_BYTES:
+            tbl = pq._read_rels_arrow(self.base, name, rels, cols).select(cols)
+            parts = Q.scan(tbl, where, sort, n)
+        else:
+            df = pq._read_rels(self.spark, self.base, name, rels).select(*cols)
+            parts = Q.scan_frame(df, where, sort, n)
+        return Q.merge(parts, sort, n)
+
+    def spans(self, name, pn, below):
+        """The snapshot's pulse buckets on one side of `pn`, nearest
+        first, as inclusive pulse ranges."""
+        size = pq.PULSE_BUCKET_SIZE
+        buckets = {pq._rel_bucket(r) for r in self.snap["families"].get(name, [])}
+        own = pn // size
+        if below:
+            return [
+                (b * size, min(b * size + size - 1, pn - 1))
+                for b in sorted((b for b in buckets if b is not None and b <= own), reverse=True)
+            ]
+        return [
+            (max(b * size, pn + 1), b * size + size - 1)
+            for b in sorted(b for b in buckets if b is not None and b >= own)
+        ]
+
+
+def _collected(df: DataFrame, name: str):
+    """A frame as a pyarrow.Table of its serving columns when
+    placement.collect_bounded admits it, else the frame itself."""
+    src = df.select(*Q.SERVING_COLS[name])
+    tbl = placement.collect_bounded(src)
+    if tbl is None:
+        return src
+    return tbl.cast(pa.schema([pq._arrow_schema(name).field(c) for c in Q.SERVING_COLS[name]]))
+
+
 class BlockExplorerApi:
     """Transport-free endpoint logic: dict params in, (status, body) out.
 
-    Holds the three core DataFrames (normally cached); every public
-    method mirrors one reference handler including its failure-
-    accumulation order.
+    Every public method mirrors one reference handler, including its
+    failure-accumulation order, and answers through one Arrow function
+    of plans/queries.py. With `warehouse_base`, each request reads a
+    fresh manifest snapshot of that store (_StoreTables), so a pulse
+    committed after the server started is served; the frames are then
+    not touched. Without it, the three frames are collected once here
+    (placement.collect_bounded) and scanned on the driver; a frame too
+    big to collect is scanned through mapInArrow per request. `spark`
+    (default: the frames' session) runs the scans placed on Spark.
     """
 
     def __init__(
         self,
-        pulses: DataFrame,
-        jet_drops: DataFrame,
-        records: DataFrame,
+        pulses: DataFrame | None = None,
+        jet_drops: DataFrame | None = None,
+        records: DataFrame | None = None,
         warehouse_base: str | None = None,
         spark=None,
     ):
-        self.pulses = pulses
-        self.jet_drops = jet_drops
-        self.records = records
-        # WAREHOUSE MODE (round 8): at test scale the three cached
-        # DataFrames are the fastest serving store, but at 100 TB the
-        # records table cannot be cached — pass `warehouse_base` (+
-        # its SparkSession) and the lifeline endpoint reads through
-        # sources/parquet.read_records_for_object instead: manifest
-        # snapshot + object-index sidecar + obj_key zone pruning, the
-        # flat-latency path SCALE_RELATIONAL measures. Results are
-        # byte-identical to the cached mode (pinned by
-        # test_rest_golden::test_lifeline_warehouse_mode_identical).
         self.warehouse_base = warehouse_base
-        self.spark = spark
+        self.spark = spark if spark is not None else getattr(pulses, "sparkSession", None)
+        self._frames = None
+        if warehouse_base is None:
+            self._frames = Q.ArrowTables(
+                pulses=_collected(pulses, "pulses"),
+                jet_drops=_collected(jet_drops, "jet_drops"),
+                records=_collected(records, "records"),
+            )
         # SEARCH MODE (round-8 continuation): pass a committed
         # postings-index base (retrieval.write_postings_index — with
         # positions=True for the phrase/context endpoints) and the
@@ -136,15 +201,18 @@ class BlockExplorerApi:
         # not only under bench). Served at /metrics (+ /metrics.json).
         self.metrics = MetricsRegistry()
 
+    def _tables(self):
+        """This request's `tables` source."""
+        if self.warehouse_base is not None:
+            return _StoreTables(self.spark, self.warehouse_base)
+        return self._frames
+
     # -- rendering -----------------------------------------------------
 
-    def _render_records(self, page: DataFrame, total: int) -> dict:
-        rows = api.render_refs([r.asDict() for r in api.records_to_api(page).collect()])
-        return {"total": total, "result": [_strip_none(r) for r in rows]}
-
-    def _render_pulses(self, page: DataFrame, total: int) -> dict:
-        rows = [r.asDict() for r in api.pulses_to_api(page).collect()]
-        return {"total": total, "result": [_strip_none(r) for r in rows]}
+    @staticmethod
+    def _render_records(rows: list[dict], total: int) -> dict:
+        rendered = api.render_refs([api.record_row_to_api(r) for r in rows])
+        return {"total": total, "result": [_strip_none(r) for r in rendered]}
 
     @staticmethod
     def _prev_next_entry(row) -> dict:
@@ -156,7 +224,7 @@ class BlockExplorerApi:
         }
 
     def _render_drop(self, row: dict, prev: list[dict], nxt: list[dict]) -> dict:
-        rendered = _strip_none(row)
+        rendered = _strip_none(api.jet_drop_row_to_api(row))
         rendered["prev_jet_drop_id"] = prev
         rendered["next_jet_drop_id"] = nxt
         return rendered
@@ -164,31 +232,25 @@ class BlockExplorerApi:
     # -- warmup --------------------------------------------------------
 
     def warmup(self) -> int:
-        """One dry request per endpoint (round-6 item 5): builds and
-        executes every endpoint's plan once so real traffic never pays
-        Catalyst construction + codegen JIT on its first hit. Params
-        come from a sample row of each table when one exists (the dry
-        run then walks the same join/window shapes as a hit); on an
-        empty store the miss path still warms the scan plans. Failures
-        are swallowed — warmup must never block serving. Returns the
-        number of endpoints warmed."""
-        from block_explorer_spark.functions import jets as _jets
-        from block_explorer_spark.functions.refs import base58_encode
-
-        prow = self.pulses.limit(1).collect()
-        drow = self.jet_drops.limit(1).collect()
-        rrow = self.records.limit(1).collect()
-        pn = str(prow[0]["pulse_number"]) if prow else "65537"
-        if drow:
-            jet_disp = _jets.storage_to_display(drow[0]["jet_id"])
-            drop_pn = drow[0]["pulse_number"]
+        """One dry request per endpoint before traffic, so the first
+        real requests skip the Arrow path's first-call costs. Params
+        come from the newest pulse, a jet drop and a record when the
+        tables hold them; on an empty store the miss paths run. A 4xx
+        answer counts as warmed; any other error propagates. Returns
+        the number of endpoints warmed."""
+        t = self._tables()
+        _, p = t.read("pulses", sort=[("pulse_number", False)], n=1, cols=["pulse_number"])
+        _, d = t.read("jet_drops", n=1, cols=["jet_id", "pulse_number"])
+        _, r = t.read("records", n=1, cols=["object_reference"])
+        pn = str(p.column("pulse_number")[0]) if p.num_rows else "65537"
+        if d.num_rows:
+            jet_disp = jets.storage_to_display(d.column("jet_id")[0].as_py())
+            drop_pn = d.column("pulse_number")[0].as_py()
         else:
             jet_disp, drop_pn = "*", 65537
         drop_id = f"{jet_disp}:{drop_pn}"
-        ref = base58_encode(
-            bytes(rrow[0]["object_reference"]) if rrow and rrow[0]["object_reference"]
-            else b"\x01" * 32
-        )
+        obj = r.column("object_reference")[0].as_py() if r.num_rows else None
+        ref = base58_encode(obj or b"\x01" * 32)
         # params are parse_qs-shaped: every value is a list
         calls = [
             lambda: self.pulses_list({"limit": ["20"]}),
@@ -206,16 +268,12 @@ class BlockExplorerApi:
                 lambda: self.search_phrase({"phrase": ["warm up"]}),
                 lambda: self.search_context({"term": ["warm"]}),
             ]
-        warmed = 0
         for call in calls:
             try:
                 call()
-                warmed += 1
             except HttpError:
-                warmed += 1  # 4xx/miss path: the plans still executed
-            except Exception:  # noqa: BLE001 - warmup is best-effort
-                pass
-        return warmed
+                pass  # 4xx/miss path: the endpoint still ran
+        return len(calls)
 
     # -- endpoints -----------------------------------------------------
 
@@ -250,33 +308,19 @@ class BlockExplorerApi:
             failures += api.check_pulse_number(pulse_lt, "pulse_number_lt")
         if failures:
             raise _validation_error(failures)
-        ts_gte = _int_param(params, "timestamp_gte", [])
-        ts_lte = _int_param(params, "timestamp_lte", [])
-        source = self.records
-        if self.warehouse_base is not None:
-            from block_explorer_spark.sources import parquet as _pq
-
-            # exclusive API bounds -> inclusive file-pruning bounds
-            source = _pq.read_records_for_object(
-                self.spark,
-                self.warehouse_base,
-                ref,
-                pulse_gte=pulse_gt + 1 if pulse_gt is not None else None,
-                pulse_lte=pulse_lt - 1 if pulse_lt is not None else None,
-            )
-        page, total = Q.get_lifeline(
-            source,
+        rows, total = Q.get_lifeline_rows(
+            self._tables(),
             ref,
             cursor=cursor,
             pulse_gt=pulse_gt,
             pulse_lt=pulse_lt,
-            ts_gte=ts_gte,
-            ts_lte=ts_lte,
+            ts_gte=_int_param(params, "timestamp_gte", []),
+            ts_lte=_int_param(params, "timestamp_lte", []),
             ascending=ascending,
             limit=limit,
             offset=offset,
         )
-        return 200, self._render_records(page, total)
+        return 200, self._render_records(rows, total)
 
     def jet_drop_records(self, jet_drop_id: str, params: dict) -> tuple[int, dict]:
         """reference: api/handlers.go:83-148"""
@@ -301,8 +345,8 @@ class BlockExplorerApi:
         failures += type_failures
         if failures:
             raise _validation_error(failures)
-        page, total = Q.get_records_by_jet_drop(
-            self.records,
+        rows, total = Q.get_records_by_jet_drop_rows(
+            self._tables(),
             jet_id,
             pulse_number,
             record_type=record_type,
@@ -310,7 +354,7 @@ class BlockExplorerApi:
             limit=limit,
             offset=offset,
         )
-        return 200, self._render_records(page, total)
+        return 200, self._render_records(rows, total)
 
     def jet_drops_by_jet_id(self, jet_id_path: str, params: dict) -> tuple[int, dict]:
         """reference: api/handlers.go:150-242 (default limit 1000 per
@@ -334,8 +378,8 @@ class BlockExplorerApi:
             bounds[name] = v
         if failures:
             raise _validation_error(failures)
-        page, total = Q.get_jet_drops_by_jet_id(
-            self.jet_drops,
+        raw_rows, total, adj_rows = Q.get_jet_drops_by_jet_id_rows(
+            self._tables(),
             jet_id,
             pulse_gt=bounds["pulse_number_gt"],
             pulse_gte=bounds["pulse_number_gte"],
@@ -343,34 +387,10 @@ class BlockExplorerApi:
             pulse_lte=bounds["pulse_number_lte"],
             pulse_ascending=ascending,
             limit=limit,
-            lazy_total=True,
         )
-        raw_rows = [r.asDict() for r in page.collect()]
-        if not raw_rows:
-            return 200, {"total": 0, "result": []}
-        total = raw_rows[0]["__total"]
-        # Serving fast path (the reference's own shape: fetch the
-        # slice, then build createNextPrevMaps in app code,
-        # api/handlers.go:207-297): the hash-chain set is the page
-        # plus the two adjacent pulses' drops — all driver-sized —
-        # so the enrichment joins become dict lookups over collected
-        # rows. One extra Spark job fetches the adjacent drops with
-        # the adjacent-pulse bounds fused in as a broadcast scalar.
-        pns = [r["pulse_number"] for r in raw_rows]
-        lo, hi = min(pns), max(pns)
-        bounds_df = self.pulses.agg(
-            F.max(F.when(F.col("pulse_number") < lo, F.col("pulse_number"))).alias("__prev"),
-            F.min(F.when(F.col("pulse_number") > hi, F.col("pulse_number"))).alias("__next"),
-        )
-        adj_rows = [
-            r.asDict()
-            for r in self.jet_drops.crossJoin(F.broadcast(bounds_df))
-            .filter(
-                (F.col("pulse_number") == F.col("__prev"))
-                | (F.col("pulse_number") == F.col("__next"))
-            )
-            .collect()
-        ]
+        # The reference's own shape: fetch the slice, then build
+        # createNextPrevMaps in app code over the page plus the two
+        # adjacent pulses' drops (api/handlers.go:207-297).
         # union + dropDuplicates([jet_id, pulse_number]), page first
         combined: dict[tuple, dict] = {}
         for r in raw_rows + adj_rows:
@@ -398,24 +418,13 @@ class BlockExplorerApi:
                     parent_id = f"{jets.storage_to_display(parent['jet_id'])}:{parent['pulse_number']}"
                     prev_map.setdefault(child_id, []).append(self._prev_next_entry(parent))
                     next_map.setdefault(parent_id, []).append(self._prev_next_entry(child))
-        page_rows = [api.jet_drop_row_to_api(r) for r in raw_rows]
-        drops = [
-            self._render_drop(
-                r, prev_map.get(r["jet_drop_id"], []), next_map.get(r["jet_drop_id"], [])
+        drops = []
+        for r in raw_rows:
+            drop_id = f"{jets.storage_to_display(r['jet_id'])}:{r['pulse_number']}"
+            drops.append(
+                self._render_drop(r, prev_map.get(drop_id, []), next_map.get(drop_id, []))
             )
-            for r in page_rows
-        ]
         return 200, {"total": total, "result": drops}
-
-    def _adjacent_pulses(self, lo: int, hi: int) -> tuple[int | None, int | None]:
-        """Nearest saved pulses outside [lo, hi] (handlers.go:244-267)."""
-        import pyspark.sql.functions as F
-
-        row = self.pulses.agg(
-            F.max(F.when(F.col("pulse_number") < lo, F.col("pulse_number"))).alias("prev"),
-            F.min(F.when(F.col("pulse_number") > hi, F.col("pulse_number"))).alias("next"),
-        ).collect()[0]
-        return row["prev"], row["next"]
 
     def pulses_list(self, params: dict) -> tuple[int, dict]:
         """reference: api/handlers.go:311-388"""
@@ -439,7 +448,7 @@ class BlockExplorerApi:
         if failures:
             raise _validation_error(failures)
         raw_rows, total = Q.get_pulses_rows(
-            self.pulses,
+            self._tables(),
             from_pulse=from_pulse,
             ts_gte=_int_param(params, "timestamp_gte", []),
             ts_lte=_int_param(params, "timestamp_lte", []),
@@ -459,12 +468,10 @@ class BlockExplorerApi:
         path values are echo binding failures -> 400)"""
         if not _INT_RE.match(pulse_path) or not (-(2**63) <= int(pulse_path) < 2**63):
             raise HttpError(400, {})
-        rows = [r.asDict() for r in api.pulses_to_api(
-            Q.get_pulse(self.pulses, int(pulse_path))
-        ).collect()]
-        if not rows:
+        row = Q.get_pulse_row(self._tables(), int(pulse_path))
+        if row is None:
             raise HttpError(404, {})
-        return 200, _strip_none(rows[0])
+        return 200, _strip_none(api.pulse_row_to_api(row))
 
     def jet_drops_by_pulse(self, pulse_path: str, params: dict) -> tuple[int, dict]:
         """reference: api/handlers.go:404-456 (code rendered '400')"""
@@ -485,14 +492,10 @@ class BlockExplorerApi:
                 failures.append(api.ValidationFailure("jet drop id", "invalid"))
         if failures:
             raise _validation_error(failures, code="400")
-        page, total = Q.get_jet_drops_by_pulse(
-            self.jet_drops, pulse_number, from_jet_id=from_jet_id, limit=limit, offset=offset
+        rows, total = Q.get_jet_drops_by_pulse_rows(
+            self._tables(), pulse_number, from_jet_id=from_jet_id, limit=limit, offset=offset
         )
-        drops = [
-            self._render_drop(r.asDict(), [], [])
-            for r in api.jet_drops_to_api(page).collect()
-        ]
-        return 200, {"total": total, "result": drops}
+        return 200, {"total": total, "result": [self._render_drop(r, [], []) for r in rows]}
 
     def jet_drop_by_id(self, jet_drop_id: str) -> tuple[int, dict]:
         """reference: api/handlers.go:45-81 (code rendered '400',
@@ -503,15 +506,13 @@ class BlockExplorerApi:
             raise _validation_error(
                 [api.ValidationFailure("jet drop id", f"invalid: {e}")], code="400"
             ) from None
-        drop, prev, nxt = Q.get_jet_drop_by_id_rows(
-            self.jet_drops, jet_id, pulse_number
-        )
+        drop, prev, nxt = Q.get_jet_drop_by_id_rows(self._tables(), jet_id, pulse_number)
         if not drop:
             raise HttpError(404, {})
-        prev_list = [self._prev_next_entry(r) for r in prev]
-        next_list = [self._prev_next_entry(r) for r in nxt]
         return 200, self._render_drop(
-            api.jet_drop_row_to_api(drop[0]), prev_list, next_list
+            drop[0],
+            [self._prev_next_entry(r) for r in prev],
+            [self._prev_next_entry(r) for r in nxt],
         )
 
     def search(self, params: dict) -> tuple[int, dict]:
@@ -528,17 +529,13 @@ class BlockExplorerApi:
             return 200, {"type": "jet-drop", "meta": {"jet_drop_id": value}}
         # reference bytes: object refs answer as a lifeline, record refs
         # as the record with its index (searchReferencePulse).
-        import pyspark.sql.functions as F
-
-        as_object = self.records.filter(F.col("object_reference") == parsed).limit(1).collect()
-        if as_object:
+        kind, rec = Q.search_reference(self._tables(), parsed)
+        if kind == "lifeline":
             return 200, {
                 "type": "lifeline",
                 "meta": {"object_reference": base58_encode(bytes(parsed))},
             }
-        as_record = self.records.filter(F.col("reference") == parsed).limit(1).collect()
-        if as_record:
-            rec = as_record[0]
+        if kind == "record":
             return 200, {
                 "type": "record",
                 "meta": {
@@ -746,8 +743,7 @@ class _Handler(BaseHTTPRequestHandler):
         if parsed.path == "/metrics":  # Prometheus exposition text
             return self._reply_text(200, self.api.metrics.prometheus_text())
         if parsed.path == "/metrics.json":
-            spark = self.api.pulses.sparkSession
-            return self._reply(200, self.api.metrics.snapshot_with_spark(spark))
+            return self._reply(200, self.api.metrics.snapshot_with_spark(self.api.spark))
         for name, pattern, fn in _ROUTES:
             m = pattern.match(parsed.path)
             if m:
@@ -756,7 +752,9 @@ class _Handler(BaseHTTPRequestHandler):
                     status, body = fn(self.api, m, params)
                 except HttpError as e:
                     status, body = e.status, e.body
-                except Exception:  # internal error -> opaque {}
+                except Exception:  # noqa: BLE001 - the one counted site:
+                    # any other fault is a 500 with the opaque {} body,
+                    # observed below with error=True
                     import traceback
 
                     traceback.print_exc()
@@ -797,15 +795,15 @@ def serve(
     api_impl: BlockExplorerApi, port: int = 0, warm: bool = True
 ) -> ThreadingHTTPServer:
     """Start the facade on a daemon thread; returns the bound server
-    (server.server_address[1] is the actual port). Spark collects run
-    on the request threads — local-mode scheduling is thread-safe.
+    (server.server_address[1] is the actual port). Requests run on
+    their own threads; a scan placed on Spark is thread-safe there
+    too.
 
-    `warm` (round-6 item 5): run one dry request per endpoint BEFORE
-    accepting traffic, so first real requests skip per-endpoint plan
-    construction + whole-stage-codegen JIT — the dominant term of the
-    p95 tail METRICS_LOADTEST measured in round 5 (358-789 ms firsts
-    vs ~200 ms steady). Warmup calls go straight to the API object,
-    so the /metrics timers only ever see real traffic."""
+    `warm`: run one dry request per endpoint before accepting traffic
+    (BlockExplorerApi.warmup), so the first real requests skip the
+    read path's first-call costs. Warmup calls go straight to the API
+    object, so the /metrics timers only ever see real traffic; an
+    error other than a 4xx propagates from here."""
     if warm:
         api_impl.warmup()
     handler = type("BoundHandler", (_Handler,), {"api": api_impl})

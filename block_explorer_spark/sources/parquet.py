@@ -425,28 +425,56 @@ def maintain_object_index(
                 Mf.discard(base, irels)
 
 
-def _object_buckets(
-    spark: SparkSession, base: str, m: dict, k: int
-) -> list[int] | None:
-    """The buckets an object's records can live in, via the sidecar.
-    None = sidecar absent or not marked complete (fall back to
-    pulse-only pruning); [] = object provably absent."""
+def _object_buckets(base: str, m: dict, k: int) -> list[int] | None:
+    """The buckets an object's records can live in, via the sidecar
+    (read with pyarrow: its obj_key-pruned files are KB-scale). None =
+    sidecar absent or not marked complete (fall back to pulse-only
+    pruning); [] = object provably absent."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+
     if m.get("meta", {}).get("layout", {}).get("objidx") != "full":
         return None
     rels = m["families"].get(OBJIDX, [])
     if not rels:
         return None
-    rels = Mf.prune_by_stats(m, OBJIDX, OBJ_KEY, lo=k, hi=k, rels=rels)
-    if not rels:
-        return []
-    rows = (
-        spark.read.parquet(*[os.path.join(base, r) for r in rels])
-        .filter(F.col(OBJ_KEY) == k)
-        .select("pulse_bucket")
-        .distinct()
-        .collect()
-    )
-    return [r["pulse_bucket"] for r in rows]
+    buckets: set[int] = set()
+    for rel in Mf.prune_by_stats(m, OBJIDX, OBJ_KEY, lo=k, hi=k, rels=rels):
+        with papq.ParquetFile(os.path.join(base, rel)) as f:
+            t = f.read(columns=[OBJ_KEY, "pulse_bucket"])
+        hit = t.filter(pc.equal(t.column(OBJ_KEY), k))
+        buckets.update(hit.column("pulse_bucket").to_pylist())
+    return sorted(buckets)
+
+
+def _object_rels(
+    base: str,
+    m: dict,
+    object_reference: bytes,
+    pulse_gte: int | None = None,
+    pulse_lte: int | None = None,
+) -> list[str]:
+    """The records relpaths of snapshot `m` that can hold the object's
+    rows in [pulse_gte, pulse_lte]: pulse pruning (_pulse_rels), then
+    the object-index sidecar's bucket list, then the files whose
+    obj_key zone can hold md5(object_reference)."""
+    _m, rels = _pulse_rels(base, "records", pulse_gte, pulse_lte, m)
+    k = obj_key_py(object_reference)
+    obj_buckets = _object_buckets(base, m, k)
+    if obj_buckets is not None:
+        # files whose sidecar delta was deferred (skip-or-batch) are
+        # ALWAYS probe candidates — their pairs aren't in the sidecar
+        # yet; the OBJ_KEY zone pruning below still cuts the ones that
+        # can't hold k, so the extra opens stay ≤ the bounded pending
+        # set (OBJIDX_PENDING_MAX)
+        pending = set(_objidx_pending(m))
+        want = set(obj_buckets)
+        rels = [
+            r
+            for r in rels
+            if (_rel_bucket(r) is None or _rel_bucket(r) in want or r in pending)
+        ]
+    return Mf.prune_by_stats(m, "records", OBJ_KEY, lo=k, hi=k, rels=rels)
 
 
 def read_records_for_object(
@@ -471,23 +499,8 @@ def read_records_for_object(
     conservative: files without obj_key stats (migrated ones) are
     kept, and the object_reference equality filter is re-applied
     row-level, so correctness never depends on the layout."""
-    m, rels = _pulse_rels(base, "records", pulse_gte, pulse_lte, snapshot)
-    k = obj_key_py(object_reference)
-    obj_buckets = _object_buckets(spark, base, m, k)
-    if obj_buckets is not None:
-        # files whose sidecar delta was deferred (skip-or-batch) are
-        # ALWAYS probe candidates — their pairs aren't in the sidecar
-        # yet; the OBJ_KEY zone pruning below still cuts the ones that
-        # can't hold k, so the extra opens stay ≤ the bounded pending
-        # set (OBJIDX_PENDING_MAX)
-        pending = set(_objidx_pending(m))
-        want = set(obj_buckets)
-        rels = [
-            r
-            for r in rels
-            if (_rel_bucket(r) is None or _rel_bucket(r) in want or r in pending)
-        ]
-    rels = Mf.prune_by_stats(m, "records", OBJ_KEY, lo=k, hi=k, rels=rels)
+    m = snapshot if snapshot is not None else Mf.read(base)
+    rels = _object_rels(base, m, object_reference, pulse_gte, pulse_lte)
     if not rels:
         return spark.createDataFrame([], TABLE_SCHEMAS["records"])
     df = _read_rels(spark, base, "records", rels)
@@ -647,7 +660,8 @@ def _file_keys(base: str, rels: list[str], keys: list[str]) -> set:
 
     out: set = set()
     for rel in rels:
-        t = papq.read_table(os.path.join(base, rel), columns=keys)
+        with papq.ParquetFile(os.path.join(base, rel)) as f:
+            t = f.read(columns=keys)
         out.update(zip(*[t.column(k).to_pylist() for k in keys]))
     return out
 
@@ -708,7 +722,7 @@ def _read_rels_arrow(base: str, name: str, rels: list[str], cols=None):
     full = _arrow_schema(name)
     cols = cols or full.names
     schema = pa.schema([full.field(c) for c in cols])
-    parts = []
+    parts = [schema.append(pa.field("pulse_bucket", pa.int64())).empty_table()]
     for rel in rels:
         # ParquetFile: a third of read_table's per-file cost (no dataset set-up)
         with papq.ParquetFile(os.path.join(base, rel)) as f:
@@ -750,17 +764,25 @@ def _plan_and_stage_arrow(
         )
     batch_keys = _arrow_keys(tbl, keys) if cand else None
     collide = False
+    existing = None
     if cand:
         if _rels_bytes(base, cand) > placement.MERGE_BYTES:
             return None
-        collide = bool(_file_keys(base, cand, keys) & batch_keys)
+        if cand == touched:
+            # the probe reads whole files, so a collision merges them
+            # without opening any file a second time
+            existing = _read_rels_arrow(base, name, touched)
+            collide = bool(_arrow_keys(existing, keys) & batch_keys)
+        else:
+            collide = bool(_file_keys(base, cand, keys) & batch_keys)
     if not collide:
         new_rels = _stage_arrow(tbl, base, name)
         fams = {name: rels + new_rels}
     else:
-        if _rels_bytes(base, touched) > placement.MERGE_BYTES:
-            return None
-        existing = _read_rels_arrow(base, name, touched)
+        if existing is None:
+            if _rels_bytes(base, touched) > placement.MERGE_BYTES:
+                return None
+            existing = _read_rels_arrow(base, name, touched)
         kcols = [existing.column(k).to_pylist() for k in keys]
         keep = [i for i, kt in enumerate(zip(*kcols)) if kt not in batch_keys]
         kept = existing.take(pa.array(keep, type=pa.int64()))

@@ -259,7 +259,6 @@ def _existing_rows(
     file is read through Spark."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as papq
 
     cols = ["pulse_number"] + cols
     schema = pa.schema([pq._arrow_schema(name).field(c) for c in cols])
@@ -271,10 +270,7 @@ def _existing_rows(
         if not cand:
             return schema.empty_table()
         if placement.admits() and pq._rels_bytes(base, cand) <= placement.MERGE_BYTES:
-            tbl = pa.concat_tables(
-                papq.read_table(os.path.join(base, r), columns=cols).cast(schema)
-                for r in cand
-            )
+            tbl = pq._read_rels_arrow(base, name, cand, cols).select(cols)
             want = pa.array(pulses, pa.int64())
             return tbl.filter(pc.is_in(tbl.column("pulse_number"), want))
     except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError

@@ -21,6 +21,8 @@ commit tail (pipeline._commit). These tests pin:
 
 from __future__ import annotations
 
+import os
+
 import pyarrow.parquet as papq
 import pytest
 
@@ -443,9 +445,59 @@ def test_new_pulse_commit_reads_no_committed_file(spark, tmp_path, monkeypatch):
     def no_read(*_a, **_kw):
         raise AssertionError("a new pulse's commit read a committed file")
 
+    # ParquetFile may open only the commit's own new files (their
+    # footers feed the zone maps), never a committed one
+    committed = {
+        os.path.join(base, rel)
+        for rels in Mf.read(base)["families"].values() for rel in rels
+    }
+    parquet_file = papq.ParquetFile
+
+    def open_new_only(path, *a, **kw):
+        if str(path) in committed:
+            no_read()
+        return parquet_file(path, *a, **kw)
+
     nxt = delivery(1010)
     monkeypatch.setattr(papq, "read_table", no_read)
+    monkeypatch.setattr(papq, "ParquetFile", open_new_only)
     monkeypatch.setattr(pq, "read_table", no_read)
     P.ingest_batch(spark, base, nxt)
     monkeypatch.undo()
     assert [r[0] for r in _table_rows(spark, base, "pulses")] == [1000, 1010]
+
+
+def test_colliding_upsert_opens_each_committed_file_once(spark, tmp_path, monkeypatch):
+    """A driver upsert that collides with its bucket's only file (a
+    control pass flipping one pulse's flags commits exactly this)
+    merges from the collision probe's read: no committed file is
+    opened twice."""
+    import pyarrow as pa
+
+    base = str(tmp_path / "s")
+    rows = [
+        {"pulse_number": pn, "prev_pulse_number": pn - 10, "next_pulse_number": pn + 10,
+         "is_complete": False, "is_sequential": False, "timestamp": pn,
+         "jet_drop_amount": 0, "record_amount": 0}
+        for pn in (1000, 1010, 1020)
+    ]
+    schema = pq._arrow_schema("pulses")
+    pq.upsert_many(spark, base, {"pulses": pa.Table.from_pylist(rows, schema=schema)})
+    committed = {os.path.join(base, r) for r in Mf.read(base)["families"]["pulses"]}
+    opens: dict[str, int] = {}
+    parquet_file, read_table = papq.ParquetFile, papq.read_table
+
+    def counted(real):
+        def open_(path, *a, **kw):
+            opens[str(path)] = opens.get(str(path), 0) + 1
+            return real(path, *a, **kw)
+        return open_
+
+    flipped = dict(rows[1], is_complete=True)
+    monkeypatch.setattr(papq, "ParquetFile", counted(parquet_file))
+    monkeypatch.setattr(papq, "read_table", counted(read_table))
+    pq.upsert_many(spark, base, {"pulses": pa.Table.from_pylist([flipped], schema=schema)})
+    monkeypatch.undo()
+    assert {p: opens.get(p, 0) for p in committed} == {p: 1 for p in committed}
+    got = {r[0]: r[3] for r in _table_rows(spark, base, "pulses")}
+    assert got == {1000: False, 1010: True, 1020: False}

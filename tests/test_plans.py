@@ -441,12 +441,13 @@ def test_get_records_by_jet_drop_ref(spark):
 
 
 def test_serving_fast_paths_match_declarative(spark):
-    """The round-5 serving fast paths (get_pulses_rows, the fused
-    point lookup) must agree with the declarative DataFrame forms on
-    every filter/sort/offset shape — the REST layer switched to them,
-    so this pin is what keeps the two from drifting."""
+    """The Arrow serving form of the pulses list (get_pulses_rows)
+    must agree with the declarative DataFrame form on every
+    filter/sort/offset shape — the REST layer serves from it, so this
+    pin is what keeps the two from drifting."""
     pulses = gen.make_pulses(start=1000, count=8, gaps=(2, 5))
     df = spark.createDataFrame(pulses, schemas.PULSES)
+    tables = Q.ArrowTables(pulses=df.toArrow())
     configs = [
         dict(ascending=False, limit=3),
         dict(ascending=True, limit=3, offset=1),
@@ -462,7 +463,7 @@ def test_serving_fast_paths_match_declarative(spark):
             (r.pulse_number, r.prev_pulse_number, r.next_pulse_number)
             for r in page.collect()
         ]
-        rows, fast_total = Q.get_pulses_rows(df, **cfg)
+        rows, fast_total = Q.get_pulses_rows(tables, **cfg)
         got = [
             (r["pulse_number"], r["prev_pulse_number"], r["next_pulse_number"])
             for r in rows
@@ -476,6 +477,7 @@ def test_jet_drop_point_fast_path_matches_declarative(spark):
         seed=11, n_pulses=6, n_drops=40, n_records=40
     )
     df = spark.createDataFrame(drops, schemas.JET_DROPS)
+    tables = Q.ArrowTables(jet_drops=df.toArrow())
     sample = df.select("jet_id", "pulse_number").limit(3).collect()
     for s in sample:
         d0, p0, n0 = Q.get_jet_drop_by_id(df, s.jet_id, s.pulse_number)
@@ -484,7 +486,7 @@ def test_jet_drop_point_fast_path_matches_declarative(spark):
             {(r.jet_id, r.pulse_number) for r in p0.collect()},
             {(r.jet_id, r.pulse_number) for r in n0.collect()},
         )
-        drop, prev, nxt = Q.get_jet_drop_by_id_rows(df, s.jet_id, s.pulse_number)
+        drop, prev, nxt = Q.get_jet_drop_by_id_rows(tables, s.jet_id, s.pulse_number)
         got = (
             {(r["jet_id"], r["pulse_number"]) for r in drop},
             {(r["jet_id"], r["pulse_number"]) for r in prev},
