@@ -140,10 +140,13 @@ def check_from_index(value: str) -> tuple[int, int]:
 
     reference: etl/storage/storage.go:147-162
     """
-    parts = value.split(":")
-    if len(parts) != 2 or not all(re.fullmatch(r"-?[0-9]+", p) for p in parts):
-        raise ValueError("query parameter 'index' should have the '<pulse_number>:<order>' format")
-    return int(parts[0]), int(parts[1])
+    try:
+        pulse, order = value.split(":")  # ValueError unless two parts
+        return jets.parse_int64(pulse), jets.parse_int64(order)
+    except ValueError:
+        raise ValueError(
+            "query parameter 'index' should have the '<pulse_number>:<order>' format"
+        ) from None
 
 
 def check_jet_id(value: str) -> tuple[str, list[ValidationFailure]]:
@@ -217,16 +220,14 @@ def search_dispatch(value: str) -> tuple[str, object]:
 
     reference: api/handlers.go:458-553
     """
-    # Strict ASCII-digit match before int(): Python's int() accepts
-    # underscore separators ("4_000_000"), unicode digits, and
-    # surrounding whitespace that Go's strconv.Atoi (handlers.go:459)
-    # does not — such inputs must fall through to jet-drop/reference
-    # parsing instead of dispatching as pulse lookups.
-    pn = int(value) if re.fullmatch(r"-?[0-9]+", value) else None
-    if pn is not None and not (-(2**63) <= pn < 2**63):
-        # Go's ParseInt overflows on >int64 digits and falls through to
-        # the jet-drop/reference branches (and ultimately 'is neither
-        # ...'), it does NOT report 'not valid pulse number'
+    # Go's strconv.Atoi (handlers.go:459) rejects what Python's int()
+    # accepts — underscores ("4_000_000"), unicode digits, surrounding
+    # whitespace — and overflows on >int64 digits: such inputs fall
+    # through to the jet-drop/reference branches (and ultimately 'is
+    # neither ...'), they do NOT report 'not valid pulse number'
+    try:
+        pn = jets.parse_int64(value)
+    except ValueError:
         pn = None
     if pn is not None:
         if not is_valid_pulse_number(pn):

@@ -426,17 +426,14 @@ def decoded_size_estimate(payload: bytes) -> int:
     if not payload:
         return 1
     kind = sniff(payload)
-    try:
-        if kind == "png" and len(payload) >= 24:
-            w = int.from_bytes(payload[16:20], "big")
-            h = int.from_bytes(payload[20:24], "big")
-            return max(len(payload), w * h * 16)
-        if kind == "wav":
-            return len(payload) * 8
-        if kind == "y4m":
-            return len(payload) * 2
-    except Exception:
-        pass
+    if kind == "png" and len(payload) >= 24:
+        w = int.from_bytes(payload[16:20], "big")
+        h = int.from_bytes(payload[20:24], "big")
+        return max(len(payload), w * h * 16)
+    if kind == "wav":
+        return len(payload) * 8
+    if kind == "y4m":
+        return len(payload) * 2
     return len(payload) * _UNKNOWN_BLOWUP
 
 

@@ -117,20 +117,33 @@ def jet_drop_id_col(jet_id: Column | str = "jet_id", pulse_number: Column | str 
     return F.concat_ws(":", display, p.cast("string"))
 
 
+def parse_int64(value: str) -> int:
+    """A plain decimal that fits in int64, as Go's strconv.ParseInt
+    (base 10, 64 bits) reads it: ValueError on overflow, underscores,
+    whitespace or non-ASCII digits — all of which Python's int()
+    would accept or read as a bigger number."""
+    if not re.fullmatch(r"-?[0-9]+", value) or not (
+        -(2**63) <= int(value) < 2**63
+    ):
+        raise ValueError(f"not an int64: {value!r}")
+    return int(value)
+
+
 def parse_jet_drop_id(value: str) -> tuple[str, int]:
     """X2 inverse: "<jet>:<pulse>" -> (stored_jet_id, pulse_number).
 
-    Pulse must be a plain decimal that fits in int64 — Go's
-    strconv.ParseInt rejects overflow/underscores/whitespace, so a
-    21-digit pulse is a *format* error, not a huge jet drop id
+    Pulse must be a plain decimal that fits in int64 (`parse_int64`),
+    so a 21-digit pulse is a *format* error, not a huge jet drop id
     (etl/models/models.go:94-113).
     """
     jet, _, pulse = value.rpartition(":")
     if not is_valid_jet_id(jet):
         raise ValueError(f"invalid jet id in jet drop id: {value!r}")
-    if not re.fullmatch(r"-?[0-9]+", pulse) or not (-(2**63) <= int(pulse) < 2**63):
-        raise ValueError(f"invalid pulse in jet drop id: {value!r}")
-    return display_to_storage(jet), int(pulse)
+    try:
+        pn = parse_int64(pulse)
+    except ValueError:
+        raise ValueError(f"invalid pulse in jet drop id: {value!r}") from None
+    return display_to_storage(jet), pn
 
 
 def jet_parents_col(jet_id: str = "jet_id") -> Column:

@@ -219,10 +219,14 @@ class MetricsRegistry:
     def snapshot_with_spark(self, spark) -> dict:
         """snapshot() + cumulative Spark stage totals (tasks, input,
         shuffle, spill) when the monitoring UI is enabled — the
-        per-endpoint latency + task-level profile in one artifact."""
+        per-endpoint latency + task-level profile in one artifact.
+        The totals are None when StageMetrics cannot read them: the UI
+        is disabled (RuntimeError), the REST call fails (OSError,
+        which covers URLError) or its body is not JSON (ValueError).
+        Any other exception is a bug and propagates."""
         out = {"endpoints": self.snapshot()}
         try:
             out["spark_stage_totals"] = StageMetrics(spark).snapshot().totals
-        except Exception:
+        except (RuntimeError, OSError, ValueError):
             out["spark_stage_totals"] = None
         return out

@@ -239,11 +239,12 @@ def proximity_match(
 # ---------------------------------------------------------------------------
 
 
-#: Matched-posting count above which the serving path refuses to
-#: broadcast the pivoted doc set onto the lengths table (legacy
-#: layouts only — the denormalized layout never joins at all). A
-#: common term (a stopword in a decontamination sweep) has df ≈
-#: corpus size; broadcasting that is O(corpus) on every executor.
+#: MaxScore's default bound on the postings behind a broadcast doc
+#: set: its θ seed and its candidate set are broadcast onto the
+#: pruned postings only while their Σdf stays at or under this count,
+#: and shuffled beyond it. A common term (a stopword in a
+#: decontamination sweep) has df ≈ corpus size; broadcasting that is
+#: O(corpus) on every executor.
 BM25_BROADCAST_LIMIT = 1_000_000
 
 #: Manifest family holding per-token posting extremes — (token,
@@ -274,8 +275,25 @@ POSITIONS = "positions"
 TOMBSTONES = "tombstones"
 
 
+def _bm25_meta(m: dict, base: str) -> dict:
+    """The committed bm25 meta of snapshot `m`, checked to be the one
+    index shape every reader and writer serves: dl in every posting
+    row and a termmax family. An index an earlier round wrote without
+    either raises, naming `migrate`; nothing falls back to a
+    doc-length join or a static bound."""
+    meta = m.get("meta", {}).get("bm25")
+    if not meta:
+        raise FileNotFoundError(f"no bm25 index committed under {base}")
+    if not meta.get("dl_in_postings") or TERMMAX not in m.get("families", {}):
+        raise RuntimeError(
+            f"bm25 index at {base} predates dl in the postings or the "
+            f"{TERMMAX} family; run retrieval.migrate(spark, base) once"
+        )
+    return meta
+
+
 def _term_extremes(post_with_dl: DataFrame) -> DataFrame:
-    """(token, max_tf, min_dl) over denormalized postings — one row
+    """(token, max_tf, min_dl) over dl-carrying postings — one row
     per distinct token, token-zone-prunable like the postings files."""
     return post_with_dl.groupBy("token").agg(
         F.max("tf").alias("max_tf"), F.min("dl").alias("min_dl")
@@ -305,7 +323,6 @@ def write_postings_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_files: int = 32,
-    denormalize_dl: bool = True,
     positions: bool = False,
 ) -> int:
     """Persist the full inverted index + doc lengths behind the
@@ -318,13 +335,15 @@ def write_postings_index(
     swap, so a reader can never see them desynced. Returns the
     committed version.
 
-    With `denormalize_dl` (the default) each posting row carries its
-    document's length, so the serving path needs NO doc-length join
-    at all — the join was the residual growth term in the indexed
-    curve (SCALE.md) and, for common terms, an unbounded broadcast.
-    dl is one long repeated ~unique-terms-per-doc times: cheap next
-    to the postings themselves. The doclen family is still committed
-    (other consumers + legacy readers).
+    Each posting row carries its document's length, so the serving
+    path needs NO doc-length join at all — the join was the residual
+    growth term in the indexed curve (SCALE.md) and, for common
+    terms, an unbounded broadcast. dl is one long repeated
+    ~unique-terms-per-doc times: cheap next to the postings
+    themselves. The doclen family is still committed: deletes read
+    the doomed docs' lengths from it, and the CDC consumer checks
+    re-inserted ids against it. The `termmax` family (per-token
+    extremes for MaxScore) commits in the same swap.
 
     The meta commit MERGES the current manifest meta per CAS attempt
     — committing an index into a base that also carries a z-order
@@ -346,11 +365,7 @@ def write_postings_index(
     dl = docs.select(
         F.col(id_col).alias("doc_id"), F.size(tokenize(text_col)).alias("dl")
     )
-    post = (
-        _postings_with_dl(docs, id_col, text_col)
-        if denormalize_dl
-        else inverted_index(docs, id_col, text_col)
-    )
+    post = _postings_with_dl(docs, id_col, text_col)
     clustered = post.repartitionByRange(num_files, "token").sortWithinPartitions(
         "token"
     )
@@ -358,7 +373,7 @@ def write_postings_index(
     bm25 = {
         "n": int(row["n"]),
         "sum_dl": int(row["sum_dl"] or 0),
-        "dl_in_postings": bool(denormalize_dl),
+        "dl_in_postings": True,
         "tail": [],
     }
     if positions:
@@ -379,24 +394,21 @@ def write_postings_index(
                 POSITIONS,
             )
             stats.update(M.file_stats(base, xrels, ["token"]))
-        trels: list[str] = []
-        if denormalize_dl:
-            trels = M.stage_df(
-                _term_extremes(post).repartitionByRange(
-                    max(1, num_files // 8), "token"
-                ).sortWithinPartitions("token"),
-                base,
-                TERMMAX,
-            )
-            stats.update(M.file_stats(base, trels, ["token"]))
+        trels = M.stage_df(
+            _term_extremes(post).repartitionByRange(
+                max(1, num_files // 8), "token"
+            ).sortWithinPartitions("token"),
+            base,
+            TERMMAX,
+        )
+        stats.update(M.file_stats(base, trels, ["token"]))
         for _ in range(2):
             cur = M.read(base)
             fams = dict(cur.get("families", {}))
             fams["postings"], fams["doclen"] = prels, drels
+            fams[TERMMAX] = trels
             if xrels:
                 fams[POSITIONS] = xrels
-            if trels:
-                fams[TERMMAX] = trels
             meta = dict(cur.get("meta", {}))
             meta["bm25"] = bm25
             try:
@@ -432,11 +444,7 @@ def index_append(
     from block_explorer_spark.sources import manifest as M
 
     cur0 = M.read(base)
-    bmeta = cur0.get("meta", {}).get("bm25")
-    if not bmeta:
-        raise FileNotFoundError(
-            f"no bm25 index committed under {base}; run write_postings_index"
-        )
+    bmeta = _bm25_meta(cur0, base)
     trels0 = cur0.get("families", {}).get(TOMBSTONES) or []
     if trels0:
         # a tombstoned doc_id re-appended would be silently hidden by
@@ -460,11 +468,7 @@ def index_append(
     dl = docs.select(
         F.col(id_col).alias("doc_id"), F.size(tokenize(text_col)).alias("dl")
     )
-    post = (
-        _postings_with_dl(docs, id_col, text_col)
-        if bmeta.get("dl_in_postings")
-        else inverted_index(docs, id_col, text_col)
-    )
+    post = _postings_with_dl(docs, id_col, text_col)
     clustered = post.repartitionByRange(num_files, "token").sortWithinPartitions(
         "token"
     )
@@ -485,16 +489,14 @@ def index_append(
                 POSITIONS,
             )
             stats.update(M.file_stats(base, xrels, ["token"]))
-        trels: list[str] = []
-        if bmeta.get("dl_in_postings") and cur0.get("families", {}).get(TERMMAX):
-            # extremes fold by max/min, so the delta's rows just join
-            # the family — the reader aggregates across runs.
-            trels = M.stage_df(
-                _term_extremes(post).coalesce(1).sortWithinPartitions("token"),
-                base,
-                TERMMAX,
-            )
-            stats.update(M.file_stats(base, trels, ["token"]))
+        # extremes fold by max/min, so the delta's rows just join the
+        # family — the reader aggregates across runs.
+        trels = M.stage_df(
+            _term_extremes(post).coalesce(1).sortWithinPartitions("token"),
+            base,
+            TERMMAX,
+        )
+        stats.update(M.file_stats(base, trels, ["token"]))
         for _ in range(2):
             cur = M.read(base)
             bm25 = dict(cur.get("meta", {}).get("bm25") or bmeta)
@@ -511,10 +513,9 @@ def index_append(
             fams = dict(cur.get("families", {}))
             fams["postings"] = list(fams.get("postings", [])) + prels
             fams["doclen"] = list(fams.get("doclen", [])) + drels
+            fams[TERMMAX] = list(fams.get(TERMMAX, [])) + trels
             if xrels:
                 fams[POSITIONS] = list(fams.get(POSITIONS, [])) + xrels
-            if trels:
-                fams[TERMMAX] = list(fams.get(TERMMAX, [])) + trels
             meta = dict(cur.get("meta", {}))
             meta["bm25"] = bm25
             try:
@@ -544,9 +545,7 @@ def index_maintain(
     from block_explorer_spark.sources import manifest as M
 
     cur = M.read(base)
-    bmeta = cur.get("meta", {}).get("bm25")
-    if not bmeta:
-        raise FileNotFoundError(f"no bm25 index committed under {base}")
+    bmeta = _bm25_meta(cur, base)
     tail = list(bmeta.get("tail", []))
     ptail = list(bmeta.get("ptail", []))
     if len(tail) < min_tail_files:
@@ -612,6 +611,37 @@ def _live_postings(spark: SparkSession, base: str, m: dict, post: DataFrame) -> 
     return post.join(dead, "doc_id", "left_anti")
 
 
+#: Schema of a postings row: dl rides in every row (`_bm25_meta`).
+_POSTINGS = "token string, doc_id long, tf long, dl long"
+
+
+def _read_pruned(
+    spark: SparkSession,
+    base: str,
+    m: dict,
+    family: str,
+    terms: list[str],
+    empty: str,
+) -> DataFrame:
+    """The family's live rows for `terms` in snapshot `m`: only files
+    whose token zone covers a term are read (manifest pruning — never
+    a corpus scan) and tombstoned docs are anti-joined away. An empty
+    frame of schema `empty` when no file covers any term."""
+    import os as _os
+
+    from block_explorer_spark.sources import manifest as M
+
+    keep = sorted(
+        {r for t in terms for r in M.prune_by_stats(m, family, "token", lo=t, hi=t)}
+    )
+    if not keep:
+        return spark.createDataFrame([], empty)
+    post = spark.read.parquet(*[_os.path.join(base, r) for r in keep])
+    return _live_postings(
+        spark, base, m, post.filter(F.col("token").isin(list(terms)))
+    )
+
+
 def index_patch_meta(base: str, patch: dict) -> int:
     """Meta-only CAS commit folding `patch` into the bm25 meta —
     the watermark-advance a CDC consumer needs when a feed window
@@ -619,9 +649,7 @@ def index_patch_meta(base: str, patch: dict) -> int:
     maintenance-only commits)."""
     from block_explorer_spark.sources import manifest as M
 
-    cur0 = M.read(base)
-    if not cur0.get("meta", {}).get("bm25"):
-        raise FileNotFoundError(f"no bm25 index committed under {base}")
+    _bm25_meta(M.read(base), base)
     for _ in range(2):
         cur = M.read(base)
         bm25 = dict(cur.get("meta", {}).get("bm25") or {})
@@ -666,9 +694,7 @@ def index_delete(
     from block_explorer_spark.sources import manifest as M
 
     cur0 = M.read(base)
-    bmeta = cur0.get("meta", {}).get("bm25")
-    if not bmeta:
-        raise FileNotFoundError(f"no bm25 index committed under {base}")
+    bmeta = _bm25_meta(cur0, base)
     dl = spark.read.parquet(
         *[_os.path.join(base, r) for r in cur0["families"]["doclen"]]
     )
@@ -729,9 +755,7 @@ def index_purge(
     from block_explorer_spark.sources import manifest as M
 
     cur0 = M.read(base)
-    bmeta = cur0.get("meta", {}).get("bm25")
-    if not bmeta:
-        raise FileNotFoundError(f"no bm25 index committed under {base}")
+    bmeta = _bm25_meta(cur0, base)
     trels = cur0.get("families", {}).get(TOMBSTONES) or []
     if not trels:
         return None
@@ -766,15 +790,13 @@ def index_purge(
                 POSITIONS,
             )
             stats.update(M.file_stats(base, xrels, ["token"]))
-        mrels: list[str] = []
-        if bmeta.get("dl_in_postings") and fams0.get(TERMMAX):
-            ext = _term_extremes(
-                spark.read.parquet(*[_os.path.join(base, r) for r in prels])
-            )
-            mrels = M.stage_df(
-                ext.coalesce(1).sortWithinPartitions("token"), base, TERMMAX
-            )
-            stats.update(M.file_stats(base, mrels, ["token"]))
+        ext = _term_extremes(
+            spark.read.parquet(*[_os.path.join(base, r) for r in prels])
+        )
+        mrels = M.stage_df(
+            ext.coalesce(1).sortWithinPartitions("token"), base, TERMMAX
+        )
+        stats.update(M.file_stats(base, mrels, ["token"]))
         for _ in range(2):
             cur = M.read(base)
             fams = dict(cur.get("families", {}))
@@ -788,10 +810,9 @@ def index_purge(
 
             fams["postings"] = prels + _since("postings")
             fams["doclen"] = drels + _since("doclen")
+            fams[TERMMAX] = mrels + _since(TERMMAX)
             if xrels:
                 fams[POSITIONS] = xrels + _since(POSITIONS)
-            if mrels:
-                fams[TERMMAX] = mrels + _since(TERMMAX)
             new_tombs = _since(TOMBSTONES)
             if new_tombs:
                 fams[TOMBSTONES] = new_tombs
@@ -817,7 +838,7 @@ def index_purge(
         raise M.CommitConflict("index_purge lost the CAS twice")
 
 
-def _score_denorm(
+def _score_postings(
     post: DataFrame,
     terms: list[str],
     idf: dict[str, float],
@@ -825,7 +846,7 @@ def _score_denorm(
     k1: float,
     b: float,
 ) -> tuple[DataFrame, "F.Column"]:
-    """Scoring over denormalized postings (dl rides in every row):
+    """Scoring over the postings (dl rides in every row):
     each posting's score CONTRIBUTION — idf_t · tf·(k1+1)/(tf +
     norm(dl)), the exact per-term expression the batch path evaluates
     — is computed JVM-side BEFORE the shuffle; the pivot then moves
@@ -865,72 +886,30 @@ def bm25_search_indexed(
     k1: float = 1.2,
     b: float = 0.75,
     topk: int = 20,
-    broadcast_limit: int = BM25_BROADCAST_LIMIT,
 ) -> DataFrame:
     """BM25 top-k served FROM the persisted index: each term's
     postings come from the files whose token zone covers it (manifest
     pruning — never a corpus scan) and df per term is a count over
-    those bounded postings. With the denormalized layout (dl rides in
-    every posting row) there is NO doc-length join at all — the plan
-    is scan → pivot-aggregate → TakeOrderedAndProject, for ANY term
-    df. Legacy layouts fall back to the doclen join, broadcasting the
-    matched-doc set only while Σdf ≤ `broadcast_limit` (the dfs are
-    already driver-side); above it the join shuffles — a common term
-    must never force an O(corpus) broadcast. Scores are bit-identical
-    to the batch `bm25_topk` — same Python-computed idf and avgdl,
-    same fixed-order IEEE arithmetic (pinned in test_retrieval)."""
-    import os as _os
-
+    those bounded postings. dl rides in every posting row, so there
+    is NO doc-length join at all — the plan is scan → pivot-aggregate
+    → TakeOrderedAndProject, for ANY term df. Scores are
+    bit-identical to the batch `bm25_topk` — same Python-computed idf
+    and avgdl, same fixed-order IEEE arithmetic (pinned in
+    test_retrieval)."""
     from block_explorer_spark.sources import manifest as M
 
     if not terms:
         raise ValueError("bm25_search_indexed needs at least one term")
     m = M.read(base)
-    meta = m.get("meta", {}).get("bm25")
-    if not meta:
-        raise FileNotFoundError(f"no bm25 index committed under {base}")
+    meta = _bm25_meta(m, base)
     n, avgdl = meta["n"], (meta["sum_dl"] / meta["n"] if meta["n"] else 0.0)
-    denorm = bool(meta.get("dl_in_postings"))
-    keep: list[str] = []
-    for t in terms:
-        keep += M.prune_by_stats(m, "postings", "token", lo=t, hi=t)
-    keep = sorted(set(keep))
-    if keep:
-        post = _live_postings(
-            spark,
-            base,
-            m,
-            spark.read.parquet(
-                *[_os.path.join(base, r) for r in keep]
-            ).filter(F.col("token").isin(list(terms))),
-        )
-    else:
-        schema = "token string, doc_id long, tf long"
-        post = spark.createDataFrame(
-            [], schema + (", dl long" if denorm else "")
-        )
+    post = _read_pruned(spark, base, m, "postings", terms, _POSTINGS)
     dfs = {
         r["token"]: r["df"]
         for r in post.groupBy("token").agg(F.count("*").alias("df")).collect()
     }
     idf = idf_weights(n, {t: int(dfs.get(t, 0)) for t in terms})
-    if denorm:
-        scored, score = _score_denorm(post, terms, idf, avgdl, k1, b)
-    else:
-        pivoted = post.groupBy("doc_id").pivot("token", list(terms)).sum("tf")
-        dl = spark.read.parquet(
-            *[_os.path.join(base, r) for r in m["families"]["doclen"]]
-        )
-        matched = sum(int(v) for v in dfs.values())
-        if matched <= broadcast_limit:
-            scored = dl.join(F.broadcast(pivoted), "doc_id")
-        else:
-            scored = dl.join(pivoted, "doc_id")
-        norm = F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-        score = F.lit(0.0)
-        for t in terms:
-            tf = F.coalesce(F.col(f"`{t}`").cast("double"), F.lit(0.0))
-            score = score + F.lit(idf[t]) * (tf * F.lit(k1 + 1.0) / (tf + norm))
+    scored, score = _score_postings(post, terms, idf, avgdl, k1, b)
     return (
         scored.select("doc_id", score.alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -946,8 +925,6 @@ def _read_positions(
     zone covers it — a phrase over rare words opens a handful of
     files however large the corpus. Raises when the index was built
     without `positions=True`."""
-    import os as _os
-
     from block_explorer_spark.sources import manifest as M
 
     m = M.read(base)
@@ -957,19 +934,8 @@ def _read_positions(
             f"no positional family committed under {base}; "
             "write_postings_index(..., positions=True)"
         )
-    keep: list[str] = []
-    for t in terms:
-        keep += M.prune_by_stats(m, POSITIONS, "token", lo=t, hi=t)
-    keep = sorted(set(keep))
-    if not keep:
-        return spark.createDataFrame([], "token string, doc_id long, pos long")
-    return _live_postings(
-        spark,
-        base,
-        m,
-        spark.read.parquet(
-            *[_os.path.join(base, r) for r in keep]
-        ).filter(F.col("token").isin(list(terms))),
+    return _read_pruned(
+        spark, base, m, POSITIONS, terms, "token string, doc_id long, pos long"
     )
 
 
@@ -1241,46 +1207,71 @@ def kwic_snippets_indexed(
     )
 
 
-def build_term_extremes(spark: SparkSession, base: str) -> int | None:
-    """Backfill the termmax family onto an index committed before the
-    family existed (or after a maintenance shape that dropped it):
-    ONE aggregation over the committed postings (which must carry dl —
-    the denormalized layout), one CAS commit. Idempotent: replaces any
-    existing termmax rows with the freshly-folded extremes. Returns
-    the committed version, or None when the layout has no dl to fold
-    (legacy index — MaxScore falls back to the static bound there)."""
+def migrate(spark: SparkSession, base: str) -> int | None:
+    """Bring an index an earlier round wrote to the one current shape
+    in ONE CAS commit: postings without dl get it from one join with
+    the doclen family (rewritten token-range-partitioned and sorted
+    like a fresh build, same file count; the append tail folds into
+    the rewrite), and a missing `termmax` family is folded from the
+    dl-carrying postings. Scores do not depend on the layout, so
+    every reader then answers bit-identically to a freshly written
+    index. Returns the committed version, or None when the index is
+    already current (a second call commits nothing)."""
     import os as _os
 
     from block_explorer_spark.sources import manifest as M
 
     cur0 = M.read(base)
     bmeta = cur0.get("meta", {}).get("bm25")
-    if not bmeta or not bmeta.get("dl_in_postings"):
+    if not bmeta:
+        raise FileNotFoundError(f"no bm25 index committed under {base}")
+    fams0 = cur0["families"]
+    add_dl = not bmeta.get("dl_in_postings")
+    if not add_dl and TERMMAX in fams0:
         return None
+
+    def _read(rels: list[str]) -> DataFrame:
+        return spark.read.parquet(*[_os.path.join(base, r) for r in rels])
+
     with M.write_intent(base):
-        post = spark.read.parquet(
-            *[_os.path.join(base, r) for r in cur0["families"]["postings"]]
-        )
-        ext = _term_extremes(post).repartitionByRange(
-            max(1, len(cur0["families"]["postings"]) // 8), "token"
-        ).sortWithinPartitions("token")
-        trels = M.stage_df(ext, base, TERMMAX)
-        stats = M.file_stats(base, trels, ["token"])
+        prels = list(fams0.get("postings", []))
+        stats: dict = {}
+        if add_dl and prels:
+            joined = _read(prels).join(_read(fams0["doclen"]), "doc_id")
+            prels = M.stage_df(
+                joined.select("token", "doc_id", "tf", "dl")
+                .repartitionByRange(len(prels), "token")
+                .sortWithinPartitions("token"),
+                base,
+                "postings",
+            )
+            stats.update(M.file_stats(base, prels, ["token"]))
+        trels: list[str] = []
+        if prels:
+            trels = M.stage_df(
+                _term_extremes(_read(prels)).repartitionByRange(
+                    max(1, len(prels) // 8), "token"
+                ).sortWithinPartitions("token"),
+                base,
+                TERMMAX,
+            )
+            stats.update(M.file_stats(base, trels, ["token"]))
         for _ in range(2):
             cur = M.read(base)
             fams = dict(cur.get("families", {}))
-            fams[TERMMAX] = trels
+            fams["postings"], fams[TERMMAX] = prels, trels
+            meta = dict(cur.get("meta", {}))
+            bm25 = dict(meta["bm25"], dl_in_postings=True)
+            if add_dl:
+                bm25["tail"] = []
+            meta["bm25"] = bm25
             try:
                 return M.commit(
-                    base,
-                    fams,
-                    cur.get("version", 0),
-                    meta=dict(cur.get("meta", {})),
-                    stats=stats,
+                    base, fams, cur.get("version", 0), meta=meta, stats=stats
                 )
             except M.CommitConflict:
                 continue
-        raise M.CommitConflict("build_term_extremes lost the CAS twice")
+        raise M.CommitConflict("retrieval.migrate lost the CAS twice")
 
 
 #: Relative guard band on the essential/non-essential split. The
@@ -1314,8 +1305,8 @@ def bm25_search_maxscore(
       2. per-term upper bounds UB_t = idf_t · g(max_tf, min_dl) from
          the termmax family ((token, max_tf, min_dl) extremes —
          avgdl-independent, so appends only ADD rows and the bound is
-         evaluated under the CURRENT avgdl); static fallback
-         UB_t = idf_t · (k1+1) when the family is absent;
+         evaluated under the CURRENT avgdl); the static bound
+         UB_t = idf_t · (k1+1) stands for a term without extremes;
       3. split terms: the maximal UB-ascending prefix whose ΣUB
          stays (1+ε)-strictly below θ is NON-ESSENTIAL — a doc
          containing only those terms scores < θ, and ≥ topk seed docs
@@ -1334,9 +1325,7 @@ def bm25_search_maxscore(
     the Zipf-head term's per-doc aggregation as the serving path's
     output-side lower bound "no layout removes"; MaxScore removes it
     for top-k queries WITHOUT the exactness price block-max WAND
-    pays, at the cost of the rare-term seed pass. Requires the
-    denormalized layout; legacy layouts delegate to
-    `bm25_search_indexed` (correct, unpruned).
+    pays, at the cost of the rare-term seed pass.
 
     `explain`, when a dict, receives driver-side decisions: theta,
     per-term df/ub, seed/essential/nonessential term lists, and
@@ -1349,31 +1338,9 @@ def bm25_search_maxscore(
     if not terms:
         raise ValueError("bm25_search_maxscore needs at least one term")
     m = M.read(base)
-    meta = m.get("meta", {}).get("bm25")
-    if not meta:
-        raise FileNotFoundError(f"no bm25 index committed under {base}")
-    if not meta.get("dl_in_postings"):
-        return bm25_search_indexed(
-            spark, base, terms, k1=k1, b=b, topk=topk,
-            broadcast_limit=broadcast_limit,
-        )
+    meta = _bm25_meta(m, base)
     n, avgdl = meta["n"], (meta["sum_dl"] / meta["n"] if meta["n"] else 0.0)
-    keep: list[str] = []
-    for t in terms:
-        keep += M.prune_by_stats(m, "postings", "token", lo=t, hi=t)
-    keep = sorted(set(keep))
-    if not keep:
-        if explain is not None:
-            explain.update({"pruned": False, "theta": None, "dfs": {}})
-        return spark.createDataFrame([], "doc_id long, score double")
-    post = _live_postings(
-        spark,
-        base,
-        m,
-        spark.read.parquet(
-            *[_os.path.join(base, r) for r in keep]
-        ).filter(F.col("token").isin(list(terms))),
-    )
+    post = _read_pruned(spark, base, m, "postings", terms, _POSTINGS)
     dfs = {
         r["token"]: int(r["df"])
         for r in post.groupBy("token").agg(F.count("*").alias("df")).collect()
@@ -1383,27 +1350,24 @@ def bm25_search_maxscore(
 
     # --- per-term upper bounds -------------------------------------
     ub = {t: idf[t] * (k1 + 1.0) for t in terms}
-    if m.get("families", {}).get(TERMMAX):
-        tkeep: list[str] = []
-        for t in terms:
-            tkeep += M.prune_by_stats(m, TERMMAX, "token", lo=t, hi=t)
-        if tkeep:
-            ext = {
-                r["token"]: (int(r["mt"]), int(r["mdl"]))
-                for r in spark.read.parquet(
-                    *[_os.path.join(base, rel) for rel in sorted(set(tkeep))]
-                )
-                .filter(F.col("token").isin(list(terms)))
-                .groupBy("token")
-                .agg(F.max("max_tf").alias("mt"), F.min("min_dl").alias("mdl"))
-                .collect()
-            }
-            for t, (mt, mdl) in ext.items():
-                if avgdl > 0 and mt > 0:
-                    g = mt * (k1 + 1.0) / (
-                        mt + k1 * (1.0 - b + b * mdl / avgdl)
-                    )
-                    ub[t] = idf[t] * g
+    tkeep: list[str] = []
+    for t in terms:
+        tkeep += M.prune_by_stats(m, TERMMAX, "token", lo=t, hi=t)
+    if tkeep:
+        ext = {
+            r["token"]: (int(r["mt"]), int(r["mdl"]))
+            for r in spark.read.parquet(
+                *[_os.path.join(base, rel) for rel in sorted(set(tkeep))]
+            )
+            .filter(F.col("token").isin(list(terms)))
+            .groupBy("token")
+            .agg(F.max("max_tf").alias("mt"), F.min("min_dl").alias("mdl"))
+            .collect()
+        }
+        for t, (mt, mdl) in ext.items():
+            if avgdl > 0 and mt > 0:
+                g = mt * (k1 + 1.0) / (mt + k1 * (1.0 - b + b * mdl / avgdl))
+                ub[t] = idf[t] * g
     for t in terms:
         if dfs[t] == 0:
             ub[t] = 0.0
@@ -1433,7 +1397,7 @@ def bm25_search_maxscore(
         )
         if seed_df <= broadcast_limit:
             seeds = F.broadcast(seeds)
-        sc, col = _score_denorm(
+        sc, col = _score_postings(
             post.join(seeds, "doc_id"), terms, idf, avgdl, k1, b
         )
         rows = (
@@ -1478,7 +1442,7 @@ def bm25_search_maxscore(
         if sum(dfs[t] for t in essential) <= broadcast_limit:
             cands = F.broadcast(cands)
         scoped = post.join(cands, "doc_id")
-    scored, score = _score_denorm(scoped, terms, idf, avgdl, k1, b)
+    scored, score = _score_postings(scoped, terms, idf, avgdl, k1, b)
     return (
         scored.select("doc_id", score.alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -1611,8 +1575,7 @@ def bm25_search(
             spark, base, terms, k1=k1, b=b, topk=topk, explain=explain
         )
     m = M.read(base)
-    if not m.get("meta", {}).get("bm25"):
-        raise FileNotFoundError(f"no bm25 index committed under {base}")
+    _bm25_meta(m, base)
     keep: list[str] = []
     for t in terms or []:
         keep += M.prune_by_stats(m, "postings", "token", lo=t, hi=t)
@@ -1772,13 +1735,11 @@ def bm25_search_many(
     token zones), df per term from those bounded postings, idf as
     Python literals, then the same broadcast fan-out + token-ascending
     fold + per-query row_number as the batch path — scores
-    bit-identical to it (same arithmetic, same fold order). With the
-    denormalized layout the plan touches no other table: pruned scan →
-    broadcast fan-out → fold → window. The sweep shape at serving
+    bit-identical to it (same arithmetic, same fold order). dl rides
+    in the postings, so the plan touches no other table: pruned scan
+    → broadcast fan-out → fold → window. The sweep shape at serving
     time: 10k benchmark queries against the committed index without
     re-tokenizing the corpus."""
-    import os as _os
-
     from pyspark.sql import Window as W
 
     from block_explorer_spark.sources import manifest as M
@@ -1789,33 +1750,10 @@ def bm25_search_many(
         if not terms:
             raise ValueError(f"query {qid!r} has no terms")
     m = M.read(base)
-    meta = m.get("meta", {}).get("bm25")
-    if not meta:
-        raise FileNotFoundError(f"no bm25 index committed under {base}")
-    if not meta.get("dl_in_postings"):
-        raise ValueError(
-            "bm25_search_many needs the denormalized layout "
-            "(dl_in_postings) — rebuild with write_postings_index"
-        )
+    meta = _bm25_meta(m, base)
     n, avgdl = meta["n"], (meta["sum_dl"] / meta["n"] if meta["n"] else 0.0)
     all_terms = sorted({t for ts in queries.values() for t in ts})
-    keep: list[str] = []
-    for t in all_terms:
-        keep += M.prune_by_stats(m, "postings", "token", lo=t, hi=t)
-    keep = sorted(set(keep))
-    if keep:
-        post = _live_postings(
-            spark,
-            base,
-            m,
-            spark.read.parquet(
-                *[_os.path.join(base, r) for r in keep]
-            ).filter(F.col("token").isin(all_terms)),
-        )
-    else:
-        post = spark.createDataFrame(
-            [], "token string, doc_id long, tf long, dl long"
-        )
+    post = _read_pruned(spark, base, m, "postings", all_terms, _POSTINGS)
     dfs = {
         r["token"]: int(r["df"])
         for r in post.groupBy("token").agg(F.count("*").alias("df")).collect()

@@ -93,17 +93,25 @@ def column_bounds(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, floa
     return out
 
 
-def zorder_meta(cur: dict, family: str) -> dict | None:
-    """The family's zorder layout entry from a manifest snapshot.
-    Meta shape is per-family — `meta["zorder"][family] = {cols, bits,
-    bounds, tail}` — so several clustered families (e.g. a records
-    table and an events table) coexist under one store base without
-    the writers clobbering each other. Reads the pre-round-8 single-
-    family shape transparently."""
+def _layouts(cur: dict) -> dict:
+    """The snapshot's per-family z-order meta, `meta["zorder"][family]
+    = {cols, bits, bounds, tail}` — several clustered families (e.g. a
+    records table and an events table) coexist under one store base
+    without the writers clobbering each other. The single-family
+    shape an earlier round wrote (`{family, cols, ...}` at the top)
+    raises, naming `migrate`."""
     z = cur.get("meta", {}).get("zorder") or {}
-    if "cols" in z:  # legacy single-family shape
-        return z if z.get("family") == family else None
-    return z.get(family)
+    if "cols" in z:
+        raise RuntimeError(
+            "z-order meta is in the single-family shape an earlier round "
+            "wrote; run zorder.migrate(base) once"
+        )
+    return z
+
+
+def zorder_meta(cur: dict, family: str) -> dict | None:
+    """The family's zorder layout entry from a manifest snapshot."""
+    return _layouts(cur).get(family)
 
 
 def _merge_zorder(cur: dict, family: str, entry: dict) -> dict:
@@ -112,12 +120,30 @@ def _merge_zorder(cur: dict, family: str, entry: dict) -> dict:
     (bm25 stats, another family's layout) — writers that passed a
     fresh dict here used to silently destroy them."""
     meta = dict(cur.get("meta", {}))
-    z = dict(meta.get("zorder") or {})
-    if "cols" in z:  # migrate legacy single-family shape in place
-        z = {z["family"]: {k: v for k, v in z.items() if k != "family"}}
-    z[family] = entry
-    meta["zorder"] = z
+    meta["zorder"] = {**_layouts(cur), family: entry}
     return meta
+
+
+def migrate(base: str) -> int | None:
+    """Rewrite the single-family z-order meta an earlier round wrote
+    into the per-family shape in ONE meta-only CAS commit (data files
+    and zones untouched). Returns the committed version, or None when
+    the meta is already per-family (a second call commits nothing)."""
+    for _ in range(2):
+        cur = M.read(base)
+        z = cur.get("meta", {}).get("zorder") or {}
+        if "cols" not in z:
+            return None
+        meta = dict(cur["meta"])
+        entry = {k: v for k, v in z.items() if k != "family"}
+        meta["zorder"] = {z["family"]: entry}
+        try:
+            return M.commit(
+                base, dict(cur["families"]), cur["version"], meta=meta
+            )
+        except M.CommitConflict:
+            continue
+    raise M.CommitConflict("zorder.migrate lost the CAS twice")
 
 
 def cluster_write(
@@ -144,6 +170,7 @@ def cluster_write(
         .drop("__z")
     )
     with M.write_intent(base):
+        _layouts(M.read(base))  # refuse an older meta shape before staging
         rels = M.stage_df(clustered, base, family)
         stats = M.file_stats(base, rels, cols)
         entry = {"cols": cols, "bits": bits,

@@ -56,8 +56,6 @@ from block_explorer_spark.sources import parquet as pq
 
 INVALID_PARAMS_MESSAGE = "Invalid query or path parameters"  # handlers.go:28
 
-_INT_RE = re.compile(r"^-?[0-9]+$")
-
 
 class HttpError(Exception):
     def __init__(self, status: int, body: dict):
@@ -89,11 +87,21 @@ def _int_param(params: dict, name: str, failures: list) -> int | None:
     handler runs (spec types the param int64)."""
     if name not in params:
         return None
-    raw = params[name][0]
-    if not _INT_RE.match(raw):
+    try:
+        return jets.parse_int64(params[name][0])
+    except ValueError:
         failures.append(api.ValidationFailure(name, "invalid value"))
         return None
-    return int(raw)
+
+
+def _limit_offset(params: dict) -> tuple[int, int, list]:
+    """The limit/offset query params: parsed as int64 (`_int_param`),
+    then defaulted and range-checked (`api.check_limit_offset`)."""
+    failures: list = []
+    limit = _int_param(params, "limit", failures)
+    offset = _int_param(params, "offset", failures)
+    limit, offset, range_failures = api.check_limit_offset(limit, offset)
+    return limit, offset, failures + range_failures
 
 
 def _strip_none(d: dict) -> dict:
@@ -279,10 +287,7 @@ class BlockExplorerApi:
 
     def object_lifeline(self, ref_path: str, params: dict) -> tuple[int, dict]:
         """reference: api/handlers.go:555-646"""
-        limit, offset, failures = api.check_limit_offset(
-            int(params["limit"][0]) if "limit" in params and _INT_RE.match(params["limit"][0]) else None,
-            int(params["offset"][0]) if "offset" in params and _INT_RE.match(params["offset"][0]) else None,
-        )
+        limit, offset, failures = _limit_offset(params)
         ref = None
         try:
             ref = api.check_reference(unquote(ref_path))
@@ -300,12 +305,14 @@ class BlockExplorerApi:
                 cursor = api.check_from_index(params["from_index"][0])
             except ValueError:
                 failures.append(api.ValidationFailure("from_index", "invalid"))
-        pulse_gt = _int_param(params, "pulse_number_gt", [])
+        pulse_gt = _int_param(params, "pulse_number_gt", failures)
         if pulse_gt is not None:
             failures += api.check_pulse_number(pulse_gt, "pulse_number_gt")
-        pulse_lt = _int_param(params, "pulse_number_lt", [])
+        pulse_lt = _int_param(params, "pulse_number_lt", failures)
         if pulse_lt is not None:
             failures += api.check_pulse_number(pulse_lt, "pulse_number_lt")
+        ts_gte = _int_param(params, "timestamp_gte", failures)
+        ts_lte = _int_param(params, "timestamp_lte", failures)
         if failures:
             raise _validation_error(failures)
         rows, total = Q.get_lifeline_rows(
@@ -314,8 +321,8 @@ class BlockExplorerApi:
             cursor=cursor,
             pulse_gt=pulse_gt,
             pulse_lt=pulse_lt,
-            ts_gte=_int_param(params, "timestamp_gte", []),
-            ts_lte=_int_param(params, "timestamp_lte", []),
+            ts_gte=ts_gte,
+            ts_lte=ts_lte,
             ascending=ascending,
             limit=limit,
             offset=offset,
@@ -324,10 +331,7 @@ class BlockExplorerApi:
 
     def jet_drop_records(self, jet_drop_id: str, params: dict) -> tuple[int, dict]:
         """reference: api/handlers.go:83-148"""
-        limit, offset, failures = api.check_limit_offset(
-            int(params["limit"][0]) if "limit" in params and _INT_RE.match(params["limit"][0]) else None,
-            int(params["offset"][0]) if "offset" in params and _INT_RE.match(params["offset"][0]) else None,
-        )
+        limit, offset, failures = _limit_offset(params)
         jet_id = pulse_number = None
         try:
             jet_id, pulse_number = jets.parse_jet_drop_id(jet_drop_id)
@@ -360,10 +364,12 @@ class BlockExplorerApi:
         """reference: api/handlers.go:150-242 (default limit 1000 per
         the reference's own FIXME PENV-505, handlers.go:153-156)"""
         failures: list[api.ValidationFailure] = []
-        if "limit" in params and _INT_RE.match(params["limit"][0]):
-            limit, _, failures = api.check_limit_offset(int(params["limit"][0]), None)
-        else:
+        limit = _int_param(params, "limit", failures)
+        if limit is None:
             limit = 1000
+        else:
+            limit, _, range_failures = api.check_limit_offset(limit, None)
+            failures += range_failures
         jet_id, jet_failures = api.check_jet_id(jet_id_path)
         failures += jet_failures
         ascending, sort_failures = api.check_sort_by_pulse(
@@ -372,7 +378,7 @@ class BlockExplorerApi:
         failures += sort_failures
         bounds = {}
         for name in ("pulse_number_gt", "pulse_number_gte", "pulse_number_lt", "pulse_number_lte"):
-            v = _int_param(params, name, [])
+            v = _int_param(params, name, failures)
             if v is not None:
                 failures += api.check_pulse_number(v, name)
             bounds[name] = v
@@ -428,16 +434,13 @@ class BlockExplorerApi:
 
     def pulses_list(self, params: dict) -> tuple[int, dict]:
         """reference: api/handlers.go:311-388"""
-        limit, offset, failures = api.check_limit_offset(
-            int(params["limit"][0]) if "limit" in params and _INT_RE.match(params["limit"][0]) else None,
-            int(params["offset"][0]) if "offset" in params and _INT_RE.match(params["offset"][0]) else None,
-        )
-        from_pulse = _int_param(params, "from_pulse_number", [])
+        limit, offset, failures = _limit_offset(params)
+        from_pulse = _int_param(params, "from_pulse_number", failures)
         if from_pulse is not None and not api.is_valid_pulse_number(from_pulse):
             failures.append(api.ValidationFailure("pulse", "invalid"))
         bounds = {}
         for name in ("pulse_number_gt", "pulse_number_gte", "pulse_number_lt", "pulse_number_lte"):
-            v = _int_param(params, name, [])
+            v = _int_param(params, name, failures)
             if v is not None:
                 failures += api.check_pulse_number(v, name)
             bounds[name] = v
@@ -445,13 +448,15 @@ class BlockExplorerApi:
             params["sort_by"][0] if "sort_by" in params else None
         )
         failures += sort_failures
+        ts_gte = _int_param(params, "timestamp_gte", failures)
+        ts_lte = _int_param(params, "timestamp_lte", failures)
         if failures:
             raise _validation_error(failures)
         raw_rows, total = Q.get_pulses_rows(
             self._tables(),
             from_pulse=from_pulse,
-            ts_gte=_int_param(params, "timestamp_gte", []),
-            ts_lte=_int_param(params, "timestamp_lte", []),
+            ts_gte=ts_gte,
+            ts_lte=ts_lte,
             pulse_gt=bounds["pulse_number_gt"],
             pulse_gte=bounds["pulse_number_gte"],
             pulse_lt=bounds["pulse_number_lt"],
@@ -466,22 +471,22 @@ class BlockExplorerApi:
     def pulse_by_number(self, pulse_path: str) -> tuple[int, dict]:
         """reference: api/handlers.go:389-402 (non-integer / overflowing
         path values are echo binding failures -> 400)"""
-        if not _INT_RE.match(pulse_path) or not (-(2**63) <= int(pulse_path) < 2**63):
-            raise HttpError(400, {})
-        row = Q.get_pulse_row(self._tables(), int(pulse_path))
+        try:
+            pulse_number = jets.parse_int64(pulse_path)
+        except ValueError:
+            raise HttpError(400, {}) from None
+        row = Q.get_pulse_row(self._tables(), pulse_number)
         if row is None:
             raise HttpError(404, {})
         return 200, _strip_none(api.pulse_row_to_api(row))
 
     def jet_drops_by_pulse(self, pulse_path: str, params: dict) -> tuple[int, dict]:
         """reference: api/handlers.go:404-456 (code rendered '400')"""
-        if not _INT_RE.match(pulse_path):
-            raise HttpError(400, {})
-        pulse_number = int(pulse_path)
-        limit, offset, failures = api.check_limit_offset(
-            int(params["limit"][0]) if "limit" in params and _INT_RE.match(params["limit"][0]) else None,
-            int(params["offset"][0]) if "offset" in params and _INT_RE.match(params["offset"][0]) else None,
-        )
+        try:
+            pulse_number = jets.parse_int64(pulse_path)
+        except ValueError:
+            raise HttpError(400, {}) from None
+        limit, offset, failures = _limit_offset(params)
         if not api.is_valid_pulse_number(pulse_number):
             failures.append(api.ValidationFailure("pulse", "invalid"))
         from_jet_id = None

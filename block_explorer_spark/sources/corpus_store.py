@@ -142,11 +142,12 @@ def _stage_write(
     return Mf.stage_df(df, base, data_name, partition_by)
 
 
-def _bucket_files(rels: list[str], buckets: list[int]) -> list[str]:
-    """Python-side partition pruning over manifest relpaths — at 100 TB
-    the manifest IS the file listing, so pruning costs no filesystem
+def _bucket_files(rels: list[str], buckets, tag: str) -> list[str]:
+    """Python-side partition pruning over manifest relpaths: the files
+    under a `tag=<b>` directory for one of `buckets` — at 100 TB the
+    manifest IS the file listing, so pruning costs no filesystem
     round trips at all."""
-    tags = {f"fp_bucket={b}{os.sep}" for b in buckets}
+    tags = {f"{tag}={b}{os.sep}" for b in buckets}
     return [r for r in rels if any(t in r for t in tags)]
 
 
@@ -179,32 +180,15 @@ def read_corpus(
     return df.select(*[f.name for f in CORPUS_SCHEMA.fields])
 
 
-def migrate(base: str) -> int:
-    """One-shot adoption of a store written before the manifest log
-    existed (round <= 4 writers): commits every unlisted parquet file
-    under corpus/, bands/ and whashes/ into the next manifest version
-    so the snapshot readers see it. Idempotent; returns files adopted."""
-    return Mf.adopt(base, _DATA_DIRS)
-
-
-def _bands_path(base: str) -> str:
-    return os.path.join(base, "bands")
-
-
-#: Sidecar partition fan-out (round-6 item 6): the band sidecar
+#: Band-sidecar partition fan-out (round-6 item 6): the band sidecar
 #: buckets by hash of (band, bhash) so batch probes prune to the
-#: buckets the batch's band hashes fall in, and the whash sidecar by
-#: hash of doc_id so a delete rewrites only the buckets holding the
-#: doomed docs' rows — the fp_buckets recipe applied to both indexes.
+#: buckets the batch's band hashes fall in — the fp_buckets recipe
+#: applied to the index (the whash sidecar's layout: W_RANGES).
 N_SIDECAR_BUCKETS = 16
 
 
 def _band_bucket_col():
     return F.pmod(F.xxhash64("band", "bhash"), F.lit(N_SIDECAR_BUCKETS))
-
-
-def _doc_bucket_col():
-    return F.pmod(F.xxhash64("doc_id"), F.lit(N_SIDECAR_BUCKETS))
 
 
 #: Round-7 whash-sidecar layout: partitioned by wr = the whash's first
@@ -224,8 +208,29 @@ def _doc_bucket_col():
 #:   - delete pruning: wr files record doc_id [min,max] zone maps in
 #:     the manifest (crawl batches are id-monotone, so zones are
 #:     tight); an RTBF delete opens only files whose zone can hold a
-#:     doomed id — replacing the old doc_bucket dir pruning.
+#:     doomed id.
 W_RANGES = 16
+
+#: sidecar family -> the partition directory every one of its files
+#: sits under in the current layout.
+_SIDECAR_TAGS = {"bands": "bh_bucket", "whashes": "wr"}
+
+
+def _sidecar_rels(snap: dict, family: str) -> list[str]:
+    """The sidecar family's relpaths in `snap`, checked to be in the
+    current layout. A band file outside a `bh_bucket=` directory (the
+    pre-bucketed layout) or a whash file outside a `wr=` one (the
+    `doc_bucket=` layout) can hold any row, so a pruned probe or
+    delete would silently miss it: raise, naming `migrate`."""
+    rels = snap["families"].get(family, [])
+    old = [r for r in rels if f"{_SIDECAR_TAGS[family]}=" not in r]
+    if old:
+        raise RuntimeError(
+            f"{len(old)} {family} files are in a layout an earlier round "
+            "wrote; run corpus_store.migrate(base) once"
+        )
+    return rels
+
 
 #: Collect-and-prune probes only below this many distinct batch
 #: hashes (beyond ~16·ln16 ≈ 44 every wr range is hit anyway).
@@ -245,12 +250,6 @@ def _wr_col():
     return F.conv(F.substring("whash", 1, 1), 16, 10).cast("int")
 
 
-def _whash_stats(base: str, rels: list[str]) -> dict:
-    """doc_id zone maps for freshly staged whash files — the delete
-    path's pruning index (see W_RANGES note)."""
-    return Mf.file_stats(base, rels, ["doc_id"])
-
-
 def _stage_whashes(df: DataFrame, base: str) -> list[str]:
     """Stage windows in the wr layout: one file per touched range,
     rows sorted by whash (tight row-group stats for free)."""
@@ -267,11 +266,11 @@ def _whash_files_for_ids(
     manifest: dict, rels: list[str], doomed_ids: list[int] | None,
     lo: int, hi: int,
 ) -> list[str]:
-    """Whash files that can hold a doomed doc's rows: wr-layout files
-    prune by their manifest doc_id zone (against the sorted doomed-id
-    list when collected, else the [lo, hi] envelope); files without a
-    recorded zone — legacy layouts — are always kept (and migrate to
-    the wr layout when rewritten)."""
+    """Whash files that can hold a doomed doc's rows: files prune by
+    their manifest doc_id zone (against the sorted doomed-id list when
+    collected, else the [lo, hi] envelope); a file without a recorded
+    zone (an unreadable footer or a row group without min/max, see
+    `manifest.file_stats`) could hold any id and is always kept."""
     import bisect
 
     stats = manifest.get("stats", {})
@@ -290,21 +289,6 @@ def _whash_files_for_ids(
     return out
 
 
-def _sidecar_bucket_files(
-    rels: list[str], buckets, tag: str
-) -> list[str]:
-    """Python-side partition pruning over sidecar relpaths. Files from
-    the pre-bucketed layout (no `tag=` component) can hold any row, so
-    they are always included — old stores keep working and compact()
-    migrates them into the bucketed layout."""
-    tags = {f"{tag}={b}{os.sep}" for b in buckets}
-    return [
-        r
-        for r in rels
-        if f"{tag}=" not in r or any(t in r for t in tags)
-    ]
-
-
 def _doc_bands(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, band, bhash, bh_bucket) LSH rows for a document frame
     — the same fused Arrow MinHash+banding stage the q25 gate
@@ -320,9 +304,8 @@ def _doc_bands(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def _read_band_files(
     spark: SparkSession, base: str, rels: list[str]
 ) -> DataFrame:
-    """Direct file-list read, schema-pinned: partitioned and legacy
-    (unpartitioned) band files read identically because the bucket
-    lives only in the path, never in the rows."""
+    """Direct file-list read, schema-pinned: the bucket lives only in
+    the path, never in the rows."""
     if not rels:
         return spark.createDataFrame([], BANDS_SCHEMA)
     return spark.read.schema(BANDS_SCHEMA).parquet(
@@ -334,7 +317,7 @@ def read_bands(
     spark: SparkSession, base: str, snapshot: dict | None = None
 ) -> DataFrame:
     m = snapshot if snapshot is not None else Mf.read(base)
-    return _read_band_files(spark, base, m["families"].get("bands", []))
+    return _read_band_files(spark, base, _sidecar_rels(m, "bands"))
 
 
 def _read_whash_files(
@@ -351,7 +334,7 @@ def read_whashes(
     spark: SparkSession, base: str, snapshot: dict | None = None
 ) -> DataFrame:
     m = snapshot if snapshot is not None else Mf.read(base)
-    return _read_whash_files(spark, base, m["families"].get("whashes", []))
+    return _read_whash_files(spark, base, _sidecar_rels(m, "whashes"))
 
 
 def _read_cdc_files(
@@ -364,12 +347,13 @@ def _read_cdc_files(
     )
 
 
-def _docs_stats(base: str, rels: list[str]) -> dict:
-    """doc_id zone maps for freshly staged doc files (manifest round 6):
-    recorded at commit time, they make point lookups
+def _id_zones(base: str, rels: list[str]) -> dict:
+    """doc_id zone maps for freshly staged doc and whash files,
+    recorded at commit time. Doc zones let point lookups
     (read_docs_by_ids) open only the files whose [min,max] can hold a
-    requested id — crawl batches are roughly id-monotone, so the zones
-    are tight."""
+    requested id; whash zones are the delete path's pruning index (see
+    W_RANGES). Crawl batches are roughly id-monotone, so the zones are
+    tight."""
     return Mf.file_stats(base, rels, ["doc_id"])
 
 
@@ -467,8 +451,8 @@ def read_docs_by_ids(
 ) -> DataFrame:
     """Point lookups by doc_id, zone-map pruned: only files whose
     recorded [min,max] doc_id zone contains one of the requested ids
-    are opened (files without zones — legacy writers — are read
-    conservatively). The fp_bucket layout serves the every-batch dedup
+    are opened (a file without a zone — an unreadable footer or a row
+    group without min/max — is read conservatively). The fp_bucket layout serves the every-batch dedup
     path; this serves the doc_id-keyed access the near-dup candidate
     fetch and RTBF tooling want, without a second copy of the corpus
     (pinned by test_corpus_store::test_point_lookup_prunes_files)."""
@@ -550,10 +534,10 @@ def _substr_filter(
     wins = _doc_whashes(fresh, window).localCheckpoint()
     bw = wins.select("whash").distinct().localCheckpoint()
     n_bw = bw.count()
-    whash_rels = snapshot["families"].get("whashes", [])
+    whash_rels = _sidecar_rels(snapshot, "whashes")
     if n_bw <= SUBSTR_POINT_PROBE_MAX:
         wrs = [r.wr for r in bw.select(_wr_col().alias("wr")).distinct().collect()]
-        whash_rels = _sidecar_bucket_files(whash_rels, wrs, "wr")
+        whash_rels = _bucket_files(whash_rels, wrs, "wr")
     stored_hashes = _read_whash_files(spark, base, whash_rels).select("whash")
     if n_bw <= SUBSTR_BROADCAST_MAX:
         hits = stored_hashes.join(F.broadcast(bw), "whash", "left_semi").distinct()
@@ -583,7 +567,9 @@ def _substr_filter(
     # post-strip fp re-check: cleaned text may now duplicate a stored
     # doc (the replay case) or another batch doc
     buckets = [r.fp_bucket for r in survivors.select("fp_bucket").distinct().collect()]
-    slice_rels = _bucket_files(snapshot["families"].get("docs", []), buckets)
+    slice_rels = _bucket_files(
+        snapshot["families"].get("docs", []), buckets, "fp_bucket"
+    )
     stored_fps = (
         _read_docs_files(spark, base, slice_rels).select("fp")
         if slice_rels
@@ -667,7 +653,7 @@ def ingest(
         while True:
             snap = Mf.read(base)
             doc_rels = snap["families"].get("docs", [])
-            slice_rels = _bucket_files(doc_rels, buckets)
+            slice_rels = _bucket_files(doc_rels, buckets, "fp_bucket")
             if slice_rels:
                 store_slice = _read_docs_files(spark, base, slice_rels).select(
                     "doc_id", "fp", "text"
@@ -742,10 +728,7 @@ def ingest(
                 Mf.commit(
                     base, families, expect_version=snap["version"],
                     meta={"kind": "ingest"},
-                    stats={
-                        **_docs_stats(base, new_docs),
-                        **_whash_stats(base, new_whashes),
-                    },
+                    stats=_id_zones(base, new_docs + new_whashes),
                 )
                 fresh.unpersist()
                 break
@@ -797,15 +780,14 @@ def _near_dup_filter(
     fresh_docs = fresh.select("doc_id", "text")
     fresh_bands = _doc_bands(fresh_docs).localCheckpoint()
     # bucket-pruned sidecar probe (round-6 item 6): only the band
-    # buckets the batch's band hashes fall in are read; legacy
-    # unpartitioned files are always included
+    # buckets the batch's band hashes fall in are read
     probe_buckets = [
         r.bh_bucket
         for r in fresh_bands.select("bh_bucket").distinct().collect()
     ]
     m = snapshot if snapshot is not None else Mf.read(base)
-    band_rels = _sidecar_bucket_files(
-        m["families"].get("bands", []), probe_buckets, "bh_bucket"
+    band_rels = _bucket_files(
+        _sidecar_rels(m, "bands"), probe_buckets, "bh_bucket"
     )
     stored_bands = _read_band_files(spark, base, band_rels)
     cand_ids = (
@@ -913,10 +895,8 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
     sidecar must forget the deleted docs too, otherwise future
     near-duplicates of removed content keep matching ghost band rows
     and are silently suppressed forever (pinned by
-    test_corpus_store::test_delete_forgets_near_dup_index). The band
-    table is small (LSH_BANDS rows of three longs per doc), so it is
-    rewritten whole; at corpus scale it would be bucketed by doc hash
-    and rewritten bucket-wise like the docs.
+    test_corpus_store::test_delete_forgets_near_dup_index). Both
+    sidecars rewrite only the files that can hold a doomed doc's rows.
     """
     hit = F.coalesce(predicate, F.lit(False))
     while True:
@@ -924,6 +904,8 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
         doc_rels = snap["families"].get("docs", [])
         if not doc_rels:
             return 0
+        band_rels = _sidecar_rels(snap, "bands")
+        whash_rels = _sidecar_rels(snap, "whashes")
         table = _read_docs_files(spark, base, doc_rels)
         # localCheckpoint: the doomed set is re-used after the commit;
         # snapshot files are immutable until vacuum, but cutting the
@@ -935,21 +917,18 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
         buckets = [
             r.fp_bucket for r in doomed.select("fp_bucket").distinct().collect()
         ]
-        touched_rels = _bucket_files(doc_rels, buckets)
+        touched_rels = _bucket_files(doc_rels, buckets, "fp_bucket")
         kept = _read_docs_files(spark, base, touched_rels).filter(~hit)
         new_docs = _stage_write(
             kept.repartition("fp_bucket"), base, "corpus",
             partition_by="fp_bucket",
         )
 
-        # sidecars rewrite ONLY their touched buckets (round-6 item
-        # 6): the doomed docs' band rows name their bh_buckets, the
-        # doomed doc_ids hash to their whash doc_buckets; untouched
-        # bucket files keep their exact manifest entries. Legacy
-        # (unpartitioned) files always count as touched, so a delete
-        # also migrates them into the bucketed layout.
+        # sidecars rewrite ONLY their touched files (round-6 item 6):
+        # the doomed docs' band rows name their bh_buckets, the doomed
+        # doc_ids fall in whash files' doc_id zones; untouched files
+        # keep their exact manifest entries.
         new_bands: list[str] = []
-        band_rels = snap["families"].get("bands", [])
         touched_band_rels: list[str] = []
         if band_rels:
             all_bands = _read_band_files(spark, base, band_rels)
@@ -962,9 +941,9 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
                 .distinct()
                 .collect()
             ]
-            touched_band_rels = _sidecar_bucket_files(
+            touched_band_rels = _bucket_files(
                 band_rels, doomed_buckets, "bh_bucket"
-            ) if doomed_buckets else [r for r in band_rels if "bh_bucket=" not in r]
+            )
             if touched_band_rels:
                 remaining = _read_band_files(
                     spark, base, touched_band_rels
@@ -980,12 +959,8 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
         # removed content would keep getting stripped against ghosts
         # (pinned by test_delete_forgets_substr_index)
         new_whashes: list[str] = []
-        whash_rels = snap["families"].get("whashes", [])
         touched_whash_rels: list[str] = []
         if whash_rels:
-            # wr-layout files prune by their manifest doc_id zone
-            # maps; legacy doc_bucket files prune by the doomed ids'
-            # buckets (and migrate to wr when rewritten)
             doomed_ids = None
             if n_deleted <= DELETE_ID_COLLECT_MAX:
                 doomed_ids = sorted(
@@ -997,17 +972,9 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
                     F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
                 ).collect()[0]
                 lo, hi = row.lo, row.hi
-            legacy = [r for r in whash_rels if "doc_bucket=" in r]
-            zoned = [r for r in whash_rels if "doc_bucket=" not in r]
-            doomed_wbuckets = [
-                r.b
-                for r in doomed.select(_doc_bucket_col().alias("b"))
-                .distinct()
-                .collect()
-            ]
-            touched_whash_rels = _sidecar_bucket_files(
-                legacy, doomed_wbuckets, "doc_bucket"
-            ) + _whash_files_for_ids(snap, zoned, doomed_ids, lo, hi)
+            touched_whash_rels = _whash_files_for_ids(
+                snap, whash_rels, doomed_ids, lo, hi
+            )
             if touched_whash_rels:
                 remaining_w = _read_whash_files(
                     spark, base, touched_whash_rels
@@ -1046,10 +1013,7 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
             Mf.commit(
                 base, families, expect_version=snap["version"],
                 meta={"kind": "delete", "cdc": "log"},
-                stats={
-                    **_docs_stats(base, new_docs),
-                    **_whash_stats(base, new_whashes),
-                },
+                stats=_id_zones(base, new_docs + new_whashes),
             )
             return n_deleted
         except Mf.CommitConflict:
@@ -1100,6 +1064,38 @@ def ingest_history(spark: SparkSession, base: str) -> DataFrame:
         return spark.createDataFrame([], INGEST_LOG_SCHEMA)
 
 
+def _rewrite(
+    spark: SparkSession, base: str, snap: dict, fams: list[str]
+) -> tuple[dict, list[str], dict]:
+    """Stage the named families of `snap` rewritten whole in the
+    current layout — docs one file per fp_bucket, bands one per
+    bh_bucket, whashes one per wr range — and return (the families to
+    commit, the staged relpaths, their doc_id zones). Shared by
+    `compact` and `migrate`."""
+    families = dict(snap["families"])
+    if "docs" in fams:
+        families["docs"] = _stage_write(
+            _read_docs_files(spark, base, snap["families"].get("docs", []))
+            .repartition("fp_bucket"),
+            base, "corpus", partition_by="fp_bucket",
+        )
+    if "bands" in fams:
+        families["bands"] = _stage_write(
+            _read_band_files(spark, base, snap["families"].get("bands", []))
+            .withColumn("bh_bucket", _band_bucket_col())
+            .repartition("bh_bucket"),
+            base, "bands", partition_by="bh_bucket",
+        )
+    if "whashes" in fams:
+        whashes = _read_whash_files(
+            spark, base, snap["families"].get("whashes", [])
+        )
+        families["whashes"] = _stage_whashes(whashes, base)
+    staged = [r for f in fams for r in families[f]]
+    zoned = [r for f in fams if f != "bands" for r in families[f]]
+    return families, staged, _id_zones(base, zoned)
+
+
 @Mf.with_write_intent
 def compact(spark: SparkSession, base: str, files_per_bucket: int = 1) -> int:
     """Maintenance compaction: rewrite the corpus so each fp_bucket
@@ -1111,76 +1107,74 @@ def compact(spark: SparkSession, base: str, files_per_bucket: int = 1) -> int:
     the old snapshot are untouched; old files wait for vacuum.
     Returns the number of files retired. The GBE store's
     parquet.compact_table, restated over the manifest layout."""
+    from collections import Counter
+
+    def _fragmented(rels: list[str], tag: str) -> bool:
+        per = Counter(
+            r.split(f"{tag}=")[1].split(os.sep)[0] for r in rels if f"{tag}=" in r
+        )
+        return any(c > files_per_bucket for c in per.values())
+
     while True:
         snap = Mf.read(base)
-        doc_rels = snap["families"].get("docs", [])
-        band_rels = snap["families"].get("bands", [])
-        whash_rels = snap["families"].get("whashes", [])
-        from collections import Counter
-
-        per_bucket = Counter(
-            r.split("fp_bucket=")[1].split(os.sep)[0]
-            for r in doc_rels
-            if "fp_bucket=" in r
-        )
-        from collections import Counter as _C
-
-        def _sidecar_fragmented(rels, tag):
-            per = _C(
-                r.split(f"{tag}=")[1].split(os.sep)[0]
-                for r in rels
-                if f"{tag}=" in r
-            )
-            legacy = sum(1 for r in rels if f"{tag}=" not in r)
-            return legacy > 0 or any(
-                c > files_per_bucket for c in per.values()
-            )
-
-        fragmented = any(c > files_per_bucket for c in per_bucket.values())
-        if (
-            not fragmented
-            and not _sidecar_fragmented(band_rels, "bh_bucket")
-            and not _sidecar_fragmented(whash_rels, "wr")
+        rels = {
+            "docs": snap["families"].get("docs", []),
+            "bands": _sidecar_rels(snap, "bands"),
+            "whashes": _sidecar_rels(snap, "whashes"),
+        }
+        if not (
+            _fragmented(rels["docs"], "fp_bucket")
+            or _fragmented(rels["bands"], "bh_bucket")
+            or _fragmented(rels["whashes"], "wr")
         ):
             return 0
-        docs = _read_docs_files(spark, base, doc_rels)
-        new_docs = _stage_write(
-            docs.repartition("fp_bucket"), base, "corpus",
-            partition_by="fp_bucket",
-        )
-        new_bands = (
-            _stage_write(
-                read_bands(spark, base, snap)
-                .withColumn("bh_bucket", _band_bucket_col())
-                .repartition("bh_bucket"),
-                base, "bands", partition_by="bh_bucket",
-            )
-            if band_rels
-            else []
-        )
-        new_whashes = (
-            _stage_whashes(read_whashes(spark, base, snap), base)
-            if whash_rels
-            else []
-        )
-        families = dict(snap["families"])
-        families["docs"] = new_docs
-        if band_rels:
-            families["bands"] = new_bands
-        if whash_rels:
-            families["whashes"] = new_whashes
+        fams = ["docs"] + [f for f in ("bands", "whashes") if rels[f]]
+        families, staged, stats = _rewrite(spark, base, snap, fams)
         try:
             Mf.commit(
                 base, families, expect_version=snap["version"],
                 meta={"kind": "compact", "data_change": False},
-                stats={
-                    **_docs_stats(base, new_docs),
-                    **_whash_stats(base, new_whashes),
-                },
+                stats=stats,
             )
-            return len(doc_rels) + len(band_rels) + len(whash_rels)
+            return sum(len(v) for v in rels.values())
         except Mf.CommitConflict:
-            Mf.discard(base, new_docs + new_bands + new_whashes)
+            Mf.discard(base, staged)
+
+
+def migrate(base: str) -> int:
+    """Bring a store an earlier round wrote to the current shape.
+    First adopt every unlisted parquet file under corpus/, bands/ and
+    whashes/ into the next manifest version (a store written before
+    the manifest log, `manifest.adopt`). Then rewrite every sidecar
+    family holding a file outside its current partition directory —
+    pre-bucketed band files, `doc_bucket=` whash files — through
+    `compact`'s rewrite into the `bh_bucket=` and `wr=` layouts, in
+    one data_change=false commit on the active Spark session.
+    Idempotent: a current store commits nothing. Returns the number of
+    files adopted plus the number rewritten."""
+    n = Mf.adopt(base, _DATA_DIRS)
+    with Mf.write_intent(base):
+        while True:
+            snap = Mf.read(base)
+            old = [
+                fam
+                for fam, tag in _SIDECAR_TAGS.items()
+                if any(f"{tag}=" not in r for r in snap["families"].get(fam, []))
+            ]
+            if not old:
+                return n
+            families, staged, stats = _rewrite(
+                SparkSession.active(), base, snap, old
+            )
+            try:
+                Mf.commit(
+                    base, families, expect_version=snap["version"],
+                    meta={"kind": "migrate", "data_change": False},
+                    stats=stats,
+                )
+                return n + sum(len(snap["families"][f]) for f in old)
+            except Mf.CommitConflict:
+                Mf.discard(base, staged)
 
 
 @Mf.with_write_intent
@@ -1257,7 +1251,7 @@ def substr_sweep(
             .distinct()
             .collect()
         ]
-        touched_rels = _bucket_files(doc_rels, moved)
+        touched_rels = _bucket_files(doc_rels, moved, "fp_bucket")
         keep_docs = final.join(
             _read_docs_files(spark, base, touched_rels).select("doc_id"),
             "doc_id",
@@ -1319,10 +1313,7 @@ def substr_sweep(
             Mf.commit(
                 base, families, expect_version=snap["version"],
                 meta={"kind": "sweep", "cdc": "log"},
-                stats={
-                    **_docs_stats(base, new_docs),
-                    **_whash_stats(base, new_whashes),
-                },
+                stats=_id_zones(base, new_docs + new_whashes),
             )
             return {"n_stripped": n_stripped - n_deleted, "n_deleted": n_deleted}
         except Mf.CommitConflict:
@@ -1340,7 +1331,7 @@ def canonicalize(spark: SparkSession, base: str) -> int:
     fingerprints. The sweep remains as defense-in-depth — repair for
     stores whose MANIFESTED data was corrupted out-of-band (a writer
     bypassing ingest) — and as the invariant check tests pin. It reads
-    via the manifest, so it canNOT see pre-manifest data; a legacy
+    via the manifest, so it canNOT see pre-manifest data; such a
     store must run `migrate(base)` first (round-5 ADVICE). Only buckets that actually
     contain duplicate fingerprints are rewritten; the band sidecar
     keeps the surviving doc's rows and drops the losers'.

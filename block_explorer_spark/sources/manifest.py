@@ -414,8 +414,11 @@ def prune_by_stats(
     rels: list[str] | None = None,
 ) -> list[str]:
     """The family's relpaths whose [min, max] zone for `col` intersects
-    [lo, hi] — files with no recorded stats are KEPT (legacy writers,
-    all-null pages: skipping them could drop matching rows). This is
+    [lo, hi] — files with no recorded zone for `col` are KEPT:
+    `file_stats` records none for an unreadable footer, a row group
+    without min/max (all-null pages, stats disabled) or a type JSON
+    cannot carry, and `adopt` commits files without stats, so skipping
+    them could drop matching rows. This is
     the manifest-side half of data skipping; the surviving list feeds
     the same file-list read every store already uses, so Spark never
     opens — or even LISTs — a pruned file."""

@@ -464,10 +464,10 @@ def main() -> None:
                 os.path.join(sf_dir_, "documents.parquet")
             )
             R.write_postings_index(docs, base_, num_files=32)
-        if R.TERMMAX not in Mf_.read(base_).get("families", {}):
-            # stores cached before the termmax family existed:
-            # backfill once (outside every timed window)
-            R.build_term_extremes(spark_, base_)
+        # stores cached before dl rode in the postings or the termmax
+        # family existed: bring them to the current shape once (outside
+        # every timed window; a no-op on a current store)
+        R.migrate(spark_, base_)
         return base_
 
     def bm25_indexed_store(spark_, sf_dir_):

@@ -334,7 +334,9 @@ def test_canonicalize_repairs_out_of_band_duplicates(spark, base):
     # and commits it WITHOUT running dedup
     dup = cs._prepared(spark.createDataFrame([_doc(9, LONG)], COLS))
     new_docs = cs._stage_write(dup, base, "corpus", partition_by="fp_bucket")
-    new_bands = cs._stage_write(cs._doc_bands(dup), base, "bands")
+    new_bands = cs._stage_write(
+        cs._doc_bands(dup), base, "bands", partition_by="bh_bucket"
+    )
     snap = Mf.read(base)
     fams = dict(snap["families"])
     fams["docs"] = fams["docs"] + new_docs
@@ -703,21 +705,145 @@ def test_substr_point_probe_opens_fewer_files(spark, base, monkeypatch):
 
 def test_near_dup_probe_reads_only_pruned_band_buckets(spark, base):
     """The sidecar probe prunes to the batch's bh_buckets python-side
-    (the fp_buckets recipe): pin the pruning rule, including the
-    legacy-file fallback."""
+    (the fp_buckets recipe): pin the pruning rule. A band file outside
+    every bh_bucket= directory is an older layout that the readers
+    refuse until `migrate` (test_migrate_rewrites_pre_bucketed_band_file)."""
     rels = [
         f"bands/bh_bucket=3{os.sep}part-a.parquet",
         f"bands/bh_bucket=7{os.sep}part-b.parquet",
-        "bands/part-legacy.parquet",
     ]
-    got = cs._sidecar_bucket_files(rels, [3], "bh_bucket")
-    assert got == [
-        f"bands/bh_bucket=3{os.sep}part-a.parquet",
-        "bands/part-legacy.parquet",  # pre-bucketed file: always read
-    ]
-    assert cs._sidecar_bucket_files(rels, [], "bh_bucket") == [
-        "bands/part-legacy.parquet"
-    ]
+    got = cs._bucket_files(rels, [3], "bh_bucket")
+    assert got == [f"bands/bh_bucket=3{os.sep}part-a.parquet"]
+    assert cs._bucket_files(rels, [], "bh_bucket") == []
+
+
+# ------------------------------------------- migrate: older sidecar layouts
+
+
+def _store_pair(spark, tmp_path):
+    """Two stores built by the same ingest with both sidecars: the
+    first stays as written, the caller rewrites the second's sidecar
+    into an older round's layout (the writers no longer produce one)."""
+    rows = [_doc(i, _filler(f"doc{i}", 40)) for i in range(1, 9)]
+    bases = [str(tmp_path / "fresh"), str(tmp_path / "old")]
+    for b in bases:
+        cs.ingest(
+            spark, b, spark.createDataFrame(rows, COLS),
+            near_dup_threshold=0.7, substr_window=8,
+        )
+    return bases
+
+
+def _commit_sidecar(base, family, tables):
+    """Replace the sidecar family with raw parquet files, {relpath:
+    pyarrow table}, in one Mf.commit."""
+    import pyarrow.parquet as pq
+
+    from block_explorer_spark.sources import manifest as Mf
+
+    for rel, table in tables.items():
+        os.makedirs(os.path.dirname(os.path.join(base, rel)), exist_ok=True)
+        pq.write_table(table, os.path.join(base, rel))
+    cur = Mf.read(base)
+    families = dict(cur["families"], **{family: sorted(tables)})
+    Mf.commit(base, families, cur["version"], meta={"kind": "test"})
+
+
+def _migrates_once(spark, old, family, uses):
+    """Every sidecar reader refuses the old layout naming migrate;
+    migrate rewrites it in one commit and a second call commits
+    nothing."""
+    from block_explorer_spark.sources import manifest as Mf
+
+    n_old = len(Mf.read(old)["families"][family])
+    for use in uses:
+        with pytest.raises(RuntimeError, match=r"corpus_store\.migrate"):
+            use()
+    v0 = Mf.current_version(old)
+    assert cs.migrate(old) == n_old
+    assert Mf.current_version(old) == v0 + 1
+    assert cs.migrate(old) == 0
+    assert Mf.current_version(old) == v0 + 1
+    tag = {"bands": "bh_bucket", "whashes": "wr"}[family]
+    assert all(f"{tag}=" in r for r in Mf.read(old)["families"][family])
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_migrate_rewrites_pre_bucketed_band_file(spark, tmp_path):
+    """The band sidecar before round 6: one unpartitioned file that
+    can hold any bucket's rows (the probe used to read it on every
+    batch). After migrate the store probes, deletes and compacts
+    exactly like a freshly written one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from block_explorer_spark.sources import manifest as Mf
+
+    fresh, old = _store_pair(spark, tmp_path)
+    rows = pa.concat_tables(
+        pq.ParquetFile(os.path.join(old, r)).read(["doc_id", "band", "bhash"])
+        for r in Mf.read(old)["families"]["bands"]
+    )
+    _commit_sidecar(old, "bands", {"bands/part-legacy.parquet": rows})
+    probe = [_doc(20, _mutate(_filler("doc3", 40), 2, "zz"))]
+    _migrates_once(spark, old, "bands", [
+        lambda: cs.read_bands(spark, old),
+        lambda: cs.ingest(spark, old, spark.createDataFrame(probe, COLS),
+                          near_dup_threshold=0.7),
+        lambda: cs.delete_where(spark, old, F.col("doc_id") == 2),
+        lambda: cs.compact(spark, old),
+    ])
+    assert _rows(cs.read_bands(spark, old)) == _rows(cs.read_bands(spark, fresh))
+    for b in (fresh, old):
+        stats = cs.ingest(spark, b, spark.createDataFrame(probe, COLS),
+                          near_dup_threshold=0.7)
+        assert stats["n_near_dup"] == 1
+        assert cs.delete_where(spark, b, F.col("doc_id") == 2) == 1
+    assert _rows(cs.read_bands(spark, old)) == _rows(cs.read_bands(spark, fresh))
+    assert _rows(cs.read_corpus(spark, old)) == _rows(cs.read_corpus(spark, fresh))
+
+
+def test_migrate_rewrites_doc_bucket_whash_files(spark, tmp_path):
+    """The whash sidecar before round 7: files under doc_bucket=
+    directories (hash of doc_id), without the wr= ranges a point probe
+    prunes to. After migrate the store probes and deletes exactly like
+    a freshly written one."""
+    import pyarrow as pa
+
+    fresh, old = _store_pair(spark, tmp_path)
+    per_bucket: dict = {}
+    for r in cs.read_whashes(spark, old).withColumn(
+        "b", F.pmod(F.xxhash64("doc_id"), F.lit(cs.N_SIDECAR_BUCKETS))
+    ).collect():
+        per_bucket.setdefault(r.b, []).append(r.asDict())
+    schema = pa.schema([("doc_id", pa.int64()), ("pos", pa.int32()),
+                        ("whash", pa.string())])
+    _commit_sidecar(old, "whashes", {
+        f"whashes/doc_bucket={b}{os.sep}part-old.parquet":
+            pa.Table.from_pylist(rs, schema).select(["doc_id", "pos", "whash"])
+        for b, rs in per_bucket.items()
+    })
+    # shares a 10-token run with stored doc 3
+    probe = [_doc(20, " ".join(_filler("doc3", 40).split()[5:15]) + " "
+                  + _filler("fresh", 25))]
+    _migrates_once(spark, old, "whashes", [
+        lambda: cs.read_whashes(spark, old),
+        lambda: cs.ingest(spark, old, spark.createDataFrame(probe, COLS),
+                          substr_window=8),
+        lambda: cs.delete_where(spark, old, F.col("doc_id") == 2),
+        lambda: cs.compact(spark, old),
+    ])
+    assert _rows(cs.read_whashes(spark, old)) == _rows(cs.read_whashes(spark, fresh))
+    for b in (fresh, old):
+        stats = cs.ingest(spark, b, spark.createDataFrame(probe, COLS),
+                          substr_window=8)
+        assert stats["n_substr_stripped"] == 1
+        assert cs.delete_where(spark, b, F.col("doc_id") == 2) == 1
+    assert _rows(cs.read_whashes(spark, old)) == _rows(cs.read_whashes(spark, fresh))
+    assert _rows(cs.read_corpus(spark, old)) == _rows(cs.read_corpus(spark, fresh))
 
 
 def test_streaming_ingest_with_substr_tier(spark, base, tmp_path):

@@ -134,6 +134,43 @@ def test_lifeline_from_index_error(base_url):
     assert body == bad_request([("from_index", "invalid")])
 
 
+BEYOND_INT64 = "99999999999999999999"
+
+
+@pytest.mark.parametrize(
+    "path, failure",
+    [
+        (
+            f"/api/v1/lifeline/{base58_encode(OBJ_REF)}/records"
+            f"?from_index={BEYOND_INT64}:1",
+            ("from_index", "invalid"),
+        ),
+        (
+            f"/api/v1/lifeline/{base58_encode(OBJ_REF)}/records"
+            f"?timestamp_gte={BEYOND_INT64}",
+            ("timestamp_gte", "invalid value"),
+        ),
+        (f"/api/v1/pulses?timestamp_lte={BEYOND_INT64}", ("timestamp_lte", "invalid value")),
+        (f"/api/v1/pulses?offset={BEYOND_INT64}", ("offset", "invalid value")),
+        (
+            f"/api/v1/lifeline/{base58_encode(OBJ_REF)}/records?offset={BEYOND_INT64}",
+            ("offset", "invalid value"),
+        ),
+        (
+            f"/api/v1/jet-drops/000:{P0 + 20}/records?from_index=1:{BEYOND_INT64}",
+            ("from_index", "invalid"),
+        ),
+    ],
+)
+def test_numbers_beyond_int64_are_validation_failures(base_url, path, failure):
+    """The spec types these params int64: a value with more digits
+    than int64 holds fails validation (400, the validation body),
+    as strconv.ParseInt does in the reference — never a 500."""
+    status, body = get(base_url, path)
+    assert status == 400
+    assert body == bad_request([failure])
+
+
 def test_lifeline_no_records(base_url):
     """handlers_test.go:299-313 — unknown ref is 200 with empty page"""
     status, body = get(base_url, f"/api/v1/lifeline/{VALID_REF}/records")

@@ -41,6 +41,43 @@ def _bm25_by_hand(corpus_rows, terms, k1=1.2, b=0.75):
     return out
 
 
+def _layout_without_dl(fresh, base):
+    """Rewrite the index at `fresh` into the layout an earlier round
+    wrote before dl rode in the postings: (token, doc_id, tf) files
+    beside the doclen family, no termmax family. The writers no longer
+    produce it, so it is built from raw files and one manifest commit."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from block_explorer_spark.sources import manifest as M
+
+    os.makedirs(os.path.join(base, "postings"))
+    cur = M.read(fresh)
+    rels = []
+    for i, rel in enumerate(cur["families"]["postings"]):
+        rels.append(f"postings/old-{i}.parquet")
+        pq.write_table(
+            pq.read_table(os.path.join(fresh, rel)).drop(["dl"]),
+            os.path.join(base, rels[-1]),
+        )
+    os.makedirs(os.path.join(base, "doclen"))
+    dl = "doclen/old-0.parquet"
+    pq.write_table(
+        pa.concat_tables(
+            pq.read_table(os.path.join(fresh, r))
+            for r in cur["families"]["doclen"]
+        ),
+        os.path.join(base, dl),
+    )
+    bm25 = dict(cur["meta"]["bm25"], dl_in_postings=False)
+    M.commit(
+        base, {"postings": rels, "doclen": [dl]}, 0,
+        meta={"bm25": bm25}, stats=M.file_stats(base, rels, ["token"]),
+    )
+
+
 def test_scores_match_hand_computation(spark, corpus):
     rows = [(r["doc_id"], r["text"]) for r in corpus.collect()]
     want = _bm25_by_hand(rows, ["spark", "data"])
@@ -280,21 +317,24 @@ class TestIncrementalIndex:
         assert "Join" not in plan, plan
 
     def test_legacy_layout_bounds_the_broadcast(self, spark, tmp_path):
-        """Pre-denormalization layout: the matched-doc broadcast is
-        forced only while Σdf ≤ broadcast_limit; a corpus-wide term
-        above the limit gets a plain shuffled join — same scores."""
+        """Pre-denormalization layout: the doc-length join (and the
+        broadcast it needed bounded) is gone, so the reader raises
+        naming migrate; after migrate a corpus-wide term is served
+        with no join at all and the fresh index's scores."""
+        fresh = str(tmp_path / "fresh")
+        R.write_postings_index(self._docs(spark, 0, 500), fresh, num_files=4)
         base = str(tmp_path / "legacy")
-        R.write_postings_index(
-            self._docs(spark, 0, 500), base, num_files=4, denormalize_dl=False
-        )
-        lo = R.bm25_search_indexed(spark, base, ["common"], topk=5,
-                                   broadcast_limit=10)
-        hi = R.bm25_search_indexed(spark, base, ["common"], topk=5)
-        lo_plan = lo._jdf.queryExecution().optimizedPlan().toString()
-        hi_plan = hi._jdf.queryExecution().optimizedPlan().toString()
-        assert "strategy=broadcast" not in lo_plan, lo_plan
-        assert "strategy=broadcast" in hi_plan, hi_plan
-        assert sorted(map(tuple, lo.collect())) == sorted(map(tuple, hi.collect()))
+        _layout_without_dl(fresh, base)
+        with pytest.raises(RuntimeError, match=r"retrieval\.migrate"):
+            R.bm25_search_indexed(spark, base, ["common"], topk=5)
+        R.migrate(spark, base)
+        got = R.bm25_search_indexed(spark, base, ["common"], topk=5)
+        plan = got._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, plan
+        want = R.bm25_search_indexed(spark, fresh, ["common"], topk=5)
+        assert [tuple(r) for r in got.collect()] == [
+            tuple(r) for r in want.collect()
+        ]
 
     def test_index_commit_preserves_foreign_meta(self, spark, tmp_path):
         """A postings index committed into a base that already holds a
@@ -408,10 +448,15 @@ class TestMaxScore:
         assert ex["pruned"] is True
 
     def test_legacy_layout_delegates_to_indexed(self, spark, tmp_path):
+        """MaxScore no longer delegates to the unpruned scorer on the
+        pre-denormalization layout: it raises naming migrate, and after
+        migrate its pruned answer equals the full indexed one."""
+        fresh = self._base(spark, tmp_path)
         base = str(tmp_path / "legacy")
-        R.write_postings_index(
-            self._corpus(spark), base, num_files=4, denormalize_dl=False
-        )
+        _layout_without_dl(fresh, base)
+        with pytest.raises(RuntimeError, match=r"retrieval\.migrate"):
+            R.bm25_search_maxscore(spark, base, self.TERMS, topk=10)
+        R.migrate(spark, base)
         full = R.bm25_search_indexed(spark, base, self.TERMS, topk=10).collect()
         ms = R.bm25_search_maxscore(spark, base, self.TERMS, topk=10).collect()
         assert [tuple(r) for r in full] == [tuple(r) for r in ms]
@@ -436,31 +481,99 @@ class TestMaxScore:
         plan = ms._jdf.queryExecution().optimizedPlan().toString()
         assert "strategy=broadcast" in plan, plan
 
-    def test_backfill_term_extremes_on_pre_family_index(self, spark, tmp_path):
-        """An index committed before the termmax family existed serves
-        MaxScore with the static bound; build_term_extremes backfills
-        the tight bounds in one commit, results unchanged."""
+
+class TestMigrate:
+    """`migrate` brings each old index shape forward in ONE commit;
+    before it every bm25 reader and writer raises naming it, after it
+    the index answers bit-identically to a freshly written one. The
+    writers no longer produce old shapes, so the tests build them from
+    raw files and `Mf.commit`."""
+
+    TERMS = TestMaxScore.TERMS
+    MANY = {"qa": ["needle", "the"], "qb": ["gem"]}
+
+    def _corpus(self, spark):
+        return TestMaxScore()._corpus(spark)
+
+    def _answers(self, spark, base):
+        return (
+            [tuple(r) for r in R.bm25_search_indexed(spark, base, self.TERMS, topk=10).collect()],
+            [tuple(r) for r in R.bm25_search_maxscore(spark, base, self.TERMS, topk=10).collect()],
+            [tuple(r) for r in R.bm25_search_many(spark, base, self.MANY, topk=5).collect()],
+        )
+
+    def _extremes(self, spark, base):
+        import os
+
         from block_explorer_spark.sources import manifest as M
 
-        base = self._base(spark, tmp_path)
+        rels = M.read(base)["families"][R.TERMMAX]
+        return {
+            tuple(r)
+            for r in spark.read.parquet(*[os.path.join(base, x) for x in rels])
+            .groupBy("token")
+            .agg(F.max("max_tf"), F.min("min_dl"))
+            .collect()
+        }
+
+    def _check(self, spark, base, fresh):
+        """Readers and the appender raise naming migrate; migrate
+        commits one version, a second commits nothing; then every
+        serving path equals the fresh index bit for bit."""
+        from block_explorer_spark.sources import manifest as M
+
+        for read in (
+            lambda: R.bm25_search_indexed(spark, base, self.TERMS),
+            lambda: R.bm25_search_maxscore(spark, base, self.TERMS),
+            lambda: R.bm25_search_many(spark, base, self.MANY),
+            lambda: R.bm25_search(spark, base, self.TERMS),
+            lambda: R.index_append(self._corpus(spark).limit(1), base),
+        ):
+            with pytest.raises(RuntimeError, match=r"retrieval\.migrate"):
+                read()
+        v0 = M.current_version(base)
+        assert R.migrate(spark, base) == v0 + 1
+        assert R.migrate(spark, base) is None
+        assert M.current_version(base) == v0 + 1
+        assert self._answers(spark, base) == self._answers(spark, fresh)
+        assert self._extremes(spark, base) == self._extremes(spark, fresh)
+
+    def _fresh(self, spark, tmp_path):
+        fresh = str(tmp_path / "fresh")
+        R.write_postings_index(self._corpus(spark), fresh, num_files=4)
+        return fresh
+
+    def test_postings_without_dl(self, spark, tmp_path):
+        """The layout before dl rode in the postings: (token, doc_id,
+        tf) files beside the doclen family, no termmax family. The
+        readers used to join doclen (broadcast up to a limit) and
+        MaxScore delegated to the unpruned scorer; now they raise,
+        and migrate adds dl with one doclen join."""
+        from block_explorer_spark.sources import manifest as M
+
+        fresh = self._fresh(spark, tmp_path)
+        base = str(tmp_path / "old")
+        _layout_without_dl(fresh, base)
+        self._check(spark, base, fresh)
+        assert M.read(base)["meta"]["bm25"]["dl_in_postings"] is True
+
+    def test_index_without_termmax(self, spark, tmp_path):
+        """An index committed before the termmax family existed: dl is
+        in the postings, but MaxScore had only the static bound. Now
+        it raises; migrate folds the extremes from the postings."""
+        import os
+        import shutil
+
+        from block_explorer_spark.sources import manifest as M
+
+        fresh = self._fresh(spark, tmp_path)
+        base = str(tmp_path / "old")
+        shutil.copytree(fresh, base)
         cur = M.read(base)
-        fams = dict(cur["families"])
-        fams.pop(R.TERMMAX)
+        fams = {k: v for k, v in cur["families"].items() if k != R.TERMMAX}
         M.commit(base, fams, cur["version"], meta=dict(cur["meta"]))
-        ex: dict = {}
-        R.bm25_search_maxscore(
-            spark, base, self.TERMS, topk=10, explain=ex
-        ).collect()
-        idf = R.idf_weights(600, ex["dfs"])
-        assert ex["ub"]["needle"] == pytest.approx(idf["needle"] * 2.2)
-        assert R.build_term_extremes(spark, base) is not None
-        ex2: dict = {}
-        ms = R.bm25_search_maxscore(
-            spark, base, self.TERMS, topk=10, explain=ex2
-        ).collect()
-        assert ex2["ub"]["needle"] < ex["ub"]["needle"]
-        full = R.bm25_search_indexed(spark, base, self.TERMS, topk=10).collect()
-        assert [tuple(r) for r in full] == [tuple(r) for r in ms]
+        assert os.path.isdir(os.path.join(base, R.TERMMAX))
+        self._check(spark, base, fresh)
 
 
 class TestStreamingIndex:
@@ -671,9 +784,11 @@ class TestManyQueries:
         assert [tuple(r) for r in want] == [tuple(r) for r in got]
 
     def test_indexed_many_requires_denormalized(self, spark, corpus, tmp_path):
+        fresh = str(tmp_path / "fresh2")
+        R.write_postings_index(corpus, fresh, num_files=2)
         base = str(tmp_path / "legacy2")
-        R.write_postings_index(corpus, base, num_files=2, denormalize_dl=False)
-        with pytest.raises(ValueError, match="denormalized"):
+        _layout_without_dl(fresh, base)
+        with pytest.raises(RuntimeError, match="dl in the postings"):
             R.bm25_search_many(spark, base, {"q": ["data"]})
 
 

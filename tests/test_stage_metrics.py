@@ -13,7 +13,15 @@ totals dict (ADVICE r10).
 
 from __future__ import annotations
 
-from block_explorer_spark.metrics import FIELDS, StageMetrics, StageSnapshot
+import pytest
+
+from block_explorer_spark import metrics as Mx
+from block_explorer_spark.metrics import (
+    FIELDS,
+    MetricsRegistry,
+    StageMetrics,
+    StageSnapshot,
+)
 
 
 def _snap(stages: dict[str, dict[str, int]]) -> StageSnapshot:
@@ -64,3 +72,26 @@ def test_delta_retry_same_stage_growth():
     after = _snap({"3.0": {"numTasks": 6}, "3.1": {"numTasks": 2}})
     d = StageMetrics.delta(before, after)
     assert d["numTasks"] == 4
+
+
+def test_snapshot_with_spark_without_ui_reports_no_totals(spark):
+    """The test session runs with the UI disabled: StageMetrics raises
+    RuntimeError, and the snapshot keeps its endpoint timers with
+    `spark_stage_totals: None`."""
+    reg = MetricsRegistry()
+    reg.observe("get_pulse", 0.01)
+    out = reg.snapshot_with_spark(spark)
+    assert out["spark_stage_totals"] is None
+    assert out["endpoints"]["get_pulse"]["count"] == 1
+
+
+def test_snapshot_with_spark_propagates_unexpected_errors(spark, monkeypatch):
+    """Only what StageMetrics raises for a missing or unreadable UI is
+    caught; any other exception is a bug and reaches the caller."""
+
+    def broken(self, spark_):
+        raise TypeError("injected")
+
+    monkeypatch.setattr(Mx.StageMetrics, "__init__", broken)
+    with pytest.raises(TypeError, match="injected"):
+        MetricsRegistry().snapshot_with_spark(spark)

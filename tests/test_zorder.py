@@ -299,3 +299,49 @@ class TestStreamingIngest:
             want = want.union(bdf)
         got = sorted(r["id"] for r in Z.read_clustered(spark, base, "g", {}).collect())
         assert got == sorted(r["id"] for r in want.collect())
+
+
+class TestMigrate:
+    def test_single_family_meta(self, spark, tmp_path):
+        """The meta shape an earlier round committed — one family's
+        layout at the top of meta["zorder"], named by a "family" key —
+        raises in every writer, naming migrate; migrate rewrites it
+        per-family in one meta-only commit, and the store then
+        appends, maintains and serves exactly like a fresh one."""
+        import pytest
+
+        fresh, base = str(tmp_path / "fresh"), str(tmp_path / "old")
+        for b in (fresh, base):
+            Z.cluster_write(_grid(spark), b, "g", ["a", "b"], bits=6, num_files=8)
+        cur = M.read(base)
+        single = {"family": "g", **cur["meta"]["zorder"]["g"]}
+        M.commit(
+            base, dict(cur["families"]), cur["version"], meta={"zorder": single}
+        )
+        extra = _grid(spark, n=512, seed=77).withColumn(
+            "id", F.col("id") + 1_000_000
+        )
+        for write in (
+            lambda: Z.cluster_append(extra, base, "g"),
+            lambda: Z.cluster_maintain(spark, base, "g", min_tail_files=1),
+            lambda: Z.cluster_write(_grid(spark, 64), base, "h", ["a"]),
+        ):
+            with pytest.raises(RuntimeError, match=r"zorder\.migrate"):
+                write()
+        v0 = M.current_version(base)
+        assert Z.migrate(base) == v0 + 1
+        assert Z.migrate(base) is None
+        assert M.current_version(base) == v0 + 1
+        assert M.read(base)["meta"]["zorder"] == M.read(fresh)["meta"]["zorder"]
+
+        box = {"a": (8, 15), "b": (48, 55)}
+        for b in (fresh, base):
+            Z.cluster_append(extra, b, "g", num_files=2)
+            Z.cluster_maintain(spark, b, "g", min_tail_files=1)
+
+        def rows(b):
+            return sorted(
+                tuple(r) for r in Z.read_clustered(spark, b, "g", box).collect()
+            )
+
+        assert rows(base) == rows(fresh) and rows(fresh)
