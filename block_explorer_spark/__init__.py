@@ -10,7 +10,6 @@ analysis, multimodal columns) that a 100 TB pipeline needs.
 Layout:
   session    — tuned SparkSession builders (AQE, shuffle partitions)
   schemas    — explicit StructTypes for every table
-  catalog    — table loaders over a scale-factor directory
   functions/ — scalar/column function library (jets, refs, text, vectors)
   operators/ — composable DataFrame -> DataFrame operators
   plans/     — the reference's 11-endpoint query surface

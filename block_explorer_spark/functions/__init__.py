@@ -1,8 +1,7 @@
 """Scalar/column function library.
 
-  jets    — jet-id algebra (parents, siblings, trie coverage, bit decode)
+  jets    — jet-id algebra (parents, siblings, trie coverage, jet-drop ids)
   refs    — base58 references, empty-bytes normalization
-  encode  — base64 / hex rendering, jet-drop-id + record-index formats
   text    — tokenization, shingles, quality metrics, language ID
   vectors — cosine/dot products over array<float> embedding columns
 """

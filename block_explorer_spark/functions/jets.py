@@ -64,13 +64,6 @@ def sibling_exprs(jet_id: str) -> list[str]:
     return list(seen)
 
 
-def invert_last_bit(jet_id: str) -> str:
-    """X6: the other child of this jet's parent ("010" -> "011")."""
-    if not jet_id:
-        return jet_id
-    return jet_id[:-1] + ("1" if jet_id[-1] == "0" else "0")
-
-
 def trie_covered(jet_ids: list[str]) -> bool:
     """D4 core: does this jet set cover the whole binary record space?
 
@@ -146,36 +139,3 @@ def parse_jet_drop_id(value: str) -> tuple[str, int]:
     return display_to_storage(jet), pn
 
 
-def jet_parents_col(jet_id: str = "jet_id") -> Column:
-    """X4 as a column: array of ancestor prefixes incl. root and self."""
-    return F.concat(
-        F.array(F.lit("")),
-        F.expr(f"transform(sequence(1, length({jet_id})), i -> substring({jet_id}, 1, i))"),
-    )
-
-
-def jet_siblings_col(jet_id: str = "jet_id") -> Column:
-    """X5 as a column: array_distinct(j, j||'0', j||'1', j[:-1])."""
-    j = F.col(jet_id)
-    parent = F.expr(f"substring({jet_id}, 1, length({jet_id}) - 1)")
-    return F.array_distinct(
-        F.array(
-            j,
-            F.concat(j, F.lit("0")),
-            F.concat(j, F.lit("1")),
-            F.when(F.length(j) > 0, parent).otherwise(j),
-        )
-    )
-
-
-def decode_platform_jet_id(raw: bytes, depth: int) -> str:
-    """X7: platform binary JetID -> "0101..." prefix string of `depth` bits.
-
-    Ingest-edge only (the extractor decodes before anything hits a
-    DataFrame). reference: instrumentation/converter/converter.go:15-31
-    """
-    bits = []
-    for i in range(depth):
-        byte = raw[i // 8]
-        bits.append("1" if byte & (1 << (7 - i % 8)) else "0")
-    return "".join(bits)

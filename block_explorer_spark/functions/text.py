@@ -30,13 +30,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """Sub-word-ish token count: splits on whitespace AND punctuation
-    boundaries, the usual ~whitespace*1.3 BPE estimator without a
-    vocab. Deterministic regex, no UDF."""
-    return F.size(F.split(F.trim(_c(col)), r"[\s\p{Punct}]+"))
-
-
 def word_set(col: Column | str) -> Column:
     """Sorted distinct token set — basis of fingerprints and jaccard."""
     return F.array_sort(F.array_distinct(tokens(col)))
@@ -91,15 +84,6 @@ def word_ngram_hashes(col: Column | str, n: int = 3) -> Column:
     )
 
 
-def char_ngrams(col: Column | str, n: int = 5) -> Column:
-    """Distinct character n-gram shingles of the lowercased text."""
-    c = F.lower(F.trim(_c(col)))
-    n_shingles = F.greatest(F.length(c) - (n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n_shingles), lambda i: F.substring(c, i, F.lit(n)))
-    )
-
-
 def digit_ratio(col: Column | str) -> Column:
     c = _c(col)
     return F.when(F.length(c) > 0, F.length(F.regexp_replace(c, r"[^0-9]", "")) / F.length(c)).otherwise(
@@ -113,13 +97,6 @@ def punct_ratio(col: Column | str) -> Column:
         F.length(c) > 0,
         F.length(F.regexp_replace(c, r"[^!-/:-@\[-`{-~]", "")) / F.length(c),
     ).otherwise(F.lit(0.0))
-
-
-def upper_ratio(col: Column | str) -> Column:
-    c = _c(col)
-    return F.when(F.length(c) > 0, F.length(F.regexp_replace(c, r"[^A-Z]", "")) / F.length(c)).otherwise(
-        F.lit(0.0)
-    )
 
 
 def mean_token_len(col: Column | str) -> Column:

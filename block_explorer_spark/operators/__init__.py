@@ -4,8 +4,7 @@ Each module covers one family from SURVEY.md §2:
   filters     — F1-F11 conjunctive predicate builders
   pagination  — W1/W3 sort + limit/offset + A1 totals
   windows     — W2 adjacent-row chain repair
-  joins       — J1-J5 equi/self/hash-chain joins
-  aggregates  — A2-A6 derived counters, min/max seeks
+  joins       — J4 hash-chain join, anti-join
   chain_sort  — J6 per-object linked-list ordering
   dedup       — exact / minhash-LSH / simhash / n-gram / embedding dedup
   similarity  — brute-force + RP-LSH + IVF ANN over embeddings

@@ -1,82 +1,15 @@
-"""Join operators (SURVEY §2.3, J1-J5).
+"""Join operators (SURVEY §2.3): the J4 hash-chain join and the
+anti-join.
 
-All reference joins are equi-joins with a small build side (pulses, a
-page of drops, a sibling set) → every join here is broadcast-eligible;
-we broadcast explicitly where the optimizer can't know the side is
-small (e.g. a filtered page) so no shuffle is planned at any scale.
+Both are equi-joins; the hash-chain build side is a page of drops, so
+it is broadcast explicitly where the optimizer can't know the side is
+small and no shuffle is planned at any scale.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from block_explorer_spark.functions.jets import sibling_exprs
-
-
-def records_for_pulse_with_prototypes(
-    pulses: DataFrame,
-    records: DataFrame,
-    prev_pulse_number: int,
-    prototypes: Sequence[bytes],
-) -> DataFrame:
-    """J1: next complete pulse joined to its prototype-matching records.
-
-    `pulses ⋈ records ON pulse_number WHERE prev_pulse_number=? AND
-    is_complete AND prototype_reference IN (...)`; the caller aggregates
-    the match count (A6). The single-pulse side is broadcast.
-    reference: etl/storage/storage.go:563-585
-    """
-    p = pulses.filter(
-        (F.col("prev_pulse_number") == prev_pulse_number) & F.col("is_complete")
-    ).select("pulse_number", "prev_pulse_number")
-    r = records.filter(F.col("prototype_reference").isin(*list(prototypes)))
-    return F.broadcast(p).join(r, "pulse_number", "inner")
-
-
-def prev_next_by_link(pulses: DataFrame) -> DataFrame:
-    """J2 (vectorized): resolve each pulse's next pulse via the prev link.
-
-    next(p) := the pulse whose prev_pulse_number = p.pulse_number; -1
-    sentinel when absent. A self-join rather than lag/lead because the
-    link relation — not key adjacency — defines the chain (gaps and
-    out-of-order pulses exist). Left side keeps all rows (left_outer);
-    at scale both sides shuffle on pulse_number once, or the right side
-    broadcasts when the probe set is a page.
-    reference: etl/storage/storage.go:326-379
-    """
-    links = pulses.select(
-        F.col("prev_pulse_number").alias("__link_prev"),
-        F.col("pulse_number").alias("__link_pn"),
-    )
-    joined = pulses.join(
-        links, on=F.col("pulse_number") == F.col("__link_prev"), how="left_outer"
-    )
-    return joined.withColumn(
-        "next_pulse_number", F.coalesce(F.col("__link_pn"), F.lit(-1))
-    ).drop("__link_prev", "__link_pn")
-
-
-def sibling_drops(
-    jet_drops: DataFrame, jet_id: str, pulse_number: int, direction: str
-) -> DataFrame:
-    """J3: drops in the prev/next pulse whose jet is a tree-sibling.
-
-    Sibling set of jet j = {j, j+"0", j+"1", j[:-1]} (split/merge one
-    binary-tree level per pulse). direction: 'prev' matches drops whose
-    next pulse is this one; 'next' matches drops in any later pulse
-    adjacent by the prev-hash graph — the reference scopes both by
-    pulse lookup; here callers pre-filter pulse_number and we filter
-    the jet set.
-    reference: etl/storage/storage.go:496-531, etl/models/models.go:57-64
-    """
-    siblings = [s for s in sibling_exprs(jet_id) if s is not None]
-    cmp = F.col("pulse_number") < pulse_number if direction == "prev" else F.col(
-        "pulse_number"
-    ) > pulse_number
-    return jet_drops.filter(F.col("jet_id").isin(*siblings) & cmp)
 
 
 def hash_chain_edges(drops: DataFrame) -> DataFrame:
@@ -113,24 +46,6 @@ def hash_chain_edges(drops: DataFrame) -> DataFrame:
         "child_pulse_number",
     ]
     return first.select(edge_cols).unionByName(second.select(edge_cols)).dropDuplicates(edge_cols)
-
-
-def adjacency_enrich(
-    page: DataFrame, jet_drops: DataFrame, prev_pulse: int | None, next_pulse: int | None
-) -> DataFrame:
-    """J5: union the page with drops of the two adjacent pulses, for J4.
-
-    The reference prefetches only the prev pulse of the page minimum and
-    the next saved pulse of the page maximum (api/handlers.go:244-267) —
-    manual join pruning we keep: two point-filtered scans, not a full
-    table, feed the hash-chain join.
-    """
-    out = page
-    pulse_points = [p for p in (prev_pulse, next_pulse) if p is not None]
-    if pulse_points:
-        adj = jet_drops.filter(F.col("pulse_number").isin(pulse_points)).select(*page.columns)
-        out = out.unionByName(adj).dropDuplicates(["jet_id", "pulse_number"])
-    return out
 
 
 def anti_missing(left: DataFrame, right: DataFrame, on: Column | str) -> DataFrame:

@@ -10,10 +10,10 @@ codec tiers:
   RFC-2083 filter pipeline), PCM WAV, and Y4M video. Corrupt or
   unrecognized payloads yield NULL features — corrupt media is data,
   not an error, at 100 TB.
-- `fake_decode` (& friends): deterministic digest-derived stand-ins,
-  kept as the default for the oracle-checkable gate path (q32 pins
-  sha256/n_bytes, not features) and for tests that need
-  format-independent determinism.
+- `fake_decode`: a deterministic digest-derived stand-in, kept as the
+  default for the oracle-checkable gate path (q32 pins sha256/n_bytes,
+  not features) and for tests that need format-independent
+  determinism.
 """
 
 from __future__ import annotations
@@ -179,25 +179,6 @@ def extract_features(
     return media.select(cols).mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("resized", T.BinaryType(), True),
-    ]
-)
-
-
-def fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for an image resize: truncate/pad the
-    payload to width*height bytes — the format-independent contract
-    check (binary in, binary out, bounded batches)."""
-    target = max(1, width * height)
-    data = (payload or b"")[:target]
-    return data + b"\x00" * (target - len(data))
-
-
 def real_resize(payload: bytes, width: int, height: int) -> bytes | None:
     """REAL image resize: PIL (LANCZOS->PNG) when installed, else the
     pure-stdlib decode -> nearest-neighbor -> re-encode path. Corrupt
@@ -212,55 +193,6 @@ def real_resize(payload: bytes, width: int, height: int) -> bytes | None:
         return codecs.png_resize_nearest(payload, width, height)
     except (codecs.CodecError, OSError, ValueError):
         return None
-
-
-def resize_images(
-    media: DataFrame,
-    width: int = 64,
-    height: int = 64,
-    resize_fn: Callable[[bytes, int, int], bytes] = fake_resize,
-    batch_size: int = 64,
-) -> DataFrame:
-    """mapInPandas image resize: image rows only, re-chunked batches.
-
-    Decoded images amplify memory 10-100x over the stored payload, so
-    the batch size is small by default; output carries the new
-    dimensions so downstream schema stays typed.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for chunk in _payload_chunks(pdf, "payload", batch_size):
-                payloads = [bytes(p) if p is not None else b"" for p in chunk["payload"]]
-                yield pd.DataFrame(
-                    {
-                        "media_id": chunk["media_id"].values,
-                        "width": [width] * len(chunk),
-                        "height": [height] * len(chunk),
-                        "resized": [resize_fn(p, width, height) for p in payloads],
-                    }
-                )
-
-    images = media.filter(F.col("modality") == "image").select("media_id", "payload")
-    return images.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_ms", T.LongType(), True),
-        T.StructField("frame", T.BinaryType(), True),
-    ]
-)
-
-
-def fake_frame_sample(payload: bytes, n_frames: int) -> list[bytes]:
-    """Deterministic stand-in for video frame sampling: n_frames even
-    slices of the payload — the format-independent contract check."""
-    data = payload or b"\x00"
-    step = max(1, len(data) // n_frames)
-    return [data[i * step : (i + 1) * step] or b"\x00" for i in range(n_frames)]
 
 
 def real_frame_sample(payload: bytes, n_frames: int) -> list[bytes]:
@@ -285,54 +217,6 @@ def real_frame_sample(payload: bytes, n_frames: int) -> list[bytes]:
         return codecs.y4m_sample_frames(payload, n_frames)
     except (codecs.CodecError, OSError, ValueError):
         return []
-
-
-def sample_frames(
-    media: DataFrame,
-    n_frames: int = 4,
-    sample_fn: Callable[[bytes, int], list[bytes]] = fake_frame_sample,
-    batch_size: int = 16,
-) -> DataFrame:
-    """mapInPandas video frame sampling: one output row per sampled
-    frame (media_id, frame_idx, frame_ms, frame bytes).
-
-    The 1→N row expansion happens inside the Arrow batch — frames of
-    one video never split across executors mid-flight, and duration_ms
-    spaces frame timestamps evenly when present.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for chunk in _payload_chunks(pdf, "payload", batch_size):
-                out = {"media_id": [], "frame_idx": [], "frame_ms": [], "frame": []}
-                for _, row in chunk.iterrows():
-                    payload = bytes(row["payload"]) if row["payload"] is not None else b""
-                    dur = row["duration_ms"]
-                    frames = sample_fn(payload, n_frames)
-                    for i, fr in enumerate(frames):
-                        out["media_id"].append(row["media_id"])
-                        out["frame_idx"].append(i)
-                        out["frame_ms"].append(
-                            int(dur) * i // max(1, n_frames - 1) if dur is not None else None
-                        )
-                        out["frame"].append(fr)
-                yield pd.DataFrame(out)
-
-    videos = media.filter(F.col("modality") == "video").select(
-        "media_id", "payload", "duration_ms"
-    )
-    return videos.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Pure-JVM per-modality stats (no decode): bytes, counts, dims."""
-    return media.groupBy("modality").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(F.length("payload")).alias("total_bytes"),
-        F.avg(F.length("payload")).alias("avg_bytes"),
-        F.avg("width").alias("avg_width"),
-        F.avg("height").alias("avg_height"),
-    )
 
 
 def perceptual_hashes(

@@ -66,6 +66,3 @@ def paginate_with_total(
     return paginate(df, sort, limit, offset), df.count()
 
 
-def top1(df: DataFrame, sort: Sequence[tuple[str, bool]]) -> DataFrame:
-    """ORDER BY ... LIMIT 1 (A4/A5 shape) → TakeOrderedAndProject."""
-    return df.orderBy(*sort_exprs(sort)).limit(1)

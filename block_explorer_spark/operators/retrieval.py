@@ -506,9 +506,9 @@ def index_append(
             if xrels:
                 bm25["ptail"] = list(bm25.get("ptail", [])) + xrels
             if bm25_meta_patch:
-                # rides in the SAME CAS swap as the postings — the
-                # streaming sink's exactly-once marker can never be
-                # seen without its batch, or the batch without it
+                # rides in the SAME CAS swap as the postings — a CDC
+                # consumer's watermark can never be seen without its
+                # batch, or the batch without it
                 bm25.update(bm25_meta_patch)
             fams = dict(cur.get("families", {}))
             fams["postings"] = list(fams.get("postings", [])) + prels
@@ -1447,96 +1447,6 @@ def bm25_search_maxscore(
         scored.select("doc_id", score.alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(topk)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming index maintenance — the crawl-to-search path
-# ---------------------------------------------------------------------------
-
-
-def _apply_index_batch(
-    spark: SparkSession,
-    base: str,
-    batch: DataFrame,
-    batch_id: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    maintain_min_tail: int = 8,
-) -> bool:
-    """One micro-batch into the index, exactly once: the batch's
-    postings and the `stream_batch` marker commit in the SAME CAS
-    swap (index_append's bm25_meta_patch), so a replayed delivery —
-    Structured Streaming's foreachBatch is at-least-once — sees its
-    own marker and skips. index_append is NOT idempotent (a replay
-    would double every tf), which is why the marker must be
-    transactional with the postings, not beside them. Returns whether
-    the batch was applied."""
-    from block_explorer_spark.sources import manifest as M
-
-    applied = (
-        M.read(base).get("meta", {}).get("bm25", {}).get("stream_batch", -1)
-    )
-    if batch_id <= applied:
-        return False
-    index_append(
-        batch, base, id_col, text_col, num_files=2,
-        bm25_meta_patch={"stream_batch": int(batch_id)},
-    )
-    index_maintain(spark, base, min_tail_files=maintain_min_tail)
-    return True
-
-
-def start_index_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    base: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_files_per_trigger: int = 4,
-    maintain_min_tail: int = 8,
-    positions: bool = False,
-) -> "StreamingQuery":
-    """readStream over a documents parquet directory → foreachBatch →
-    `index_append`: the daily-crawl refresh path as a stream, so
-    search serves mid-crawl with cost ∝ the appended delta. An empty
-    base is bootstrapped with an empty-corpus index first, which puts
-    EVERY batch — including the first — through the transactional
-    marker path of `_apply_index_batch`; `index_maintain` folds the
-    LSM tail on its cadence inside the same handler (scores are
-    layout-independent, so a fold mid-stream changes no answer —
-    pinned in test_retrieval). Contract: the stream's doc_ids are
-    append-only, same as index_append's."""
-    sch = spark.read.parquet(docs_dir).schema
-    from block_explorer_spark.sources import manifest as M
-
-    if not M.read(base).get("meta", {}).get("bm25"):
-        # `positions` here decides the layout for the index's whole
-        # life: every appended batch mirrors the bootstrap's families
-        empty = spark.createDataFrame([], sch)
-        write_postings_index(
-            empty, base, id_col, text_col, num_files=1, positions=positions
-        )
-    stream = (
-        spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        _apply_index_batch(
-            spark, base, batch, batch_id, id_col, text_col,
-            maintain_min_tail=maintain_min_tail,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -56,8 +56,6 @@ No reference analog (extended surface); cited against SURVEY §2.4's
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 
@@ -226,14 +224,6 @@ def cms_counters(
     )
 
 
-def cms_merge(*counter_tables: DataFrame) -> DataFrame:
-    """Merge CMS states: union + sum per (d, bucket)."""
-    out = counter_tables[0]
-    for t in counter_tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(
     counters: DataFrame,
     keys: DataFrame,
@@ -325,30 +315,6 @@ def bloom_bitmap(positions: DataFrame, m_bits: int = 1 << 18) -> bytes:
     )
     np.bitwise_or.at(arr, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
     return arr.tobytes()
-
-
-def bloom_probe_bitmap(
-    probe: DataFrame,
-    id_col: str,
-    fp_col: str,
-    bitmap: bytes,
-    k: int = 3,
-    m_bits: int = 1 << 18,
-) -> DataFrame:
-    """The bitmap scale tier of bloom_probe: IDENTICAL semantics to
-    the certified position-join tier (same portable hash, same k/m —
-    outputs pinned equal by test), different physical strategy. The
-    k probe positions are computed JVM-side (md5 built-ins, codegen);
-    the only Python is a vectorized Arrow batch doing numpy bit
-    lookups against the closure-shipped bitmap — no join, no shuffle
-    until the per-id count. Use when the filter outgrows a
-    broadcastable position set (large m_bits): the bitmap is
-    m_bits/8 bytes regardless of member count.
-    """
-    hit = probe.select(F.col(id_col), F.col(fp_col).alias("__fp")).filter(
-        bitmap_member(F.col("__fp"), bitmap, k, m_bits)
-    )
-    return hit.groupBy(id_col).agg(F.count_distinct("__fp").alias("n_hits"))
 
 
 def bitmap_member(
@@ -542,8 +508,8 @@ def kmv_set_stats(sig_a: DataFrame, sig_b: DataFrame, k: int = 256) -> dict:
 # — pure integer ops both engines replay verbatim, giving geometric
 # buckets with width 2^e/2^B, i.e. relative width ≤ 2^-B. The sketch
 # state is (bucket, cnt) rows: ≤ (64−B)·2^B rows total regardless of
-# input size, mergeable by SUM (and EXACTLY decrementable on delete —
-# same counter-lattice argument as the CMS mirror). A quantile query
+# input size, mergeable by SUM (and EXACTLY decrementable on delete:
+# the state is plain counters). A quantile query
 # walks the ≤ 4k-row CDF and reports the bucket midpoint
 # (2^e·(2^B + sub) + 2^e·(2^B + sub + 1)) // 2 / 2^B — floor-integer,
 # so estimates (not just counts) are bit-reproducible in the DuckDB

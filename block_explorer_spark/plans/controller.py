@@ -1,5 +1,5 @@
 """Control plane decisions: the sequential advancer (D5) and the gap
-scan (D6) as pure functions, plus the missed-data reload pool (D6).
+scan (D6) as pure functions.
 
 The reference keeps an in-memory jet-drop register guarded by a mutex
 plus two polling goroutines (etl/controller/controller.go:100-132).
@@ -12,8 +12,6 @@ replays need no recovery logic at all.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 
 def _sequential_walk(
@@ -54,28 +52,3 @@ def _gaps_walk(keys: list[int], step: int = 10) -> list[tuple[int, int]]:
     return [(a, b) for a, b in zip(ks, ks[1:]) if b != a + step]
 
 
-@dataclass
-class ReloadPool:
-    """TTL-deduped reload requests (D6).
-
-    The reference's missedDataManager pool (etl/controller/
-    misseddata.go:11-95) prevents re-requesting the same range within
-    `ttl_seconds` (default 1200). Driver-side state — it's a rate
-    limiter, not correctness: reloads themselves are idempotent MERGEs.
-    """
-
-    ttl_seconds: float = 1200.0
-    _seen: dict[tuple[int, int], float] | None = None
-
-    def should_reload(self, rng: tuple[int, int], now: float) -> bool:
-        if self._seen is None:
-            self._seen = {}
-        expires = self._seen.get(rng)
-        if expires is not None and now < expires:
-            return False
-        self._seen[rng] = now + self.ttl_seconds
-        return True
-
-    def sweep(self, now: float) -> None:
-        if self._seen:
-            self._seen = {k: v for k, v in self._seen.items() if v > now}

@@ -1,6 +1,6 @@
-"""The 11-operator public query surface (SURVEY §2.12) as DataFrame plans.
+"""The explorer's read surface (SURVEY §2.12) as DataFrame plans.
 
-Each function mirrors one StorageAPIFetcher operation
+Each function mirrors one StorageAPIFetcher read the REST API serves
 (reference: etl/interfaces/interfaces.go:102-123, etl/storage/storage.go)
 as a pure DataFrame composition: validation stays at the API edge,
 semantics (sentinels, ordering, pagination, sibling/hierarchy lookups)
@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from block_explorer_spark.functions import jets
 from block_explorer_spark.operators import filters as Fl
-from block_explorer_spark.operators import joins as J
 from block_explorer_spark.operators import pagination as Pg
 from block_explorer_spark.operators import windows as W
 
@@ -226,46 +225,6 @@ def get_pulses(
     ), total
 
 
-def get_incomplete_pulses(pulses: DataFrame) -> DataFrame:
-    """F10: WHERE NOT is_complete. reference: etl/storage/storage.go:410-417"""
-    return pulses.filter(~F.col("is_complete"))
-
-
-def get_sequential_pulse(pulses: DataFrame) -> DataFrame:
-    """A4: latest sequential pulse. reference: etl/storage/storage.go:430-443"""
-    return Pg.top1(pulses.filter(F.col("is_sequential")), [("pulse_number", False)])
-
-
-def get_next_saved_pulse(
-    pulses: DataFrame, after: int, complete_only: bool = False
-) -> DataFrame:
-    """A5: first pulse after `after`. reference: etl/storage/storage.go:446-463"""
-    df = pulses.filter(F.col("pulse_number") > after)
-    if complete_only:
-        df = df.filter(F.col("is_complete"))
-    return Pg.top1(df, [("pulse_number", True)])
-
-
-def get_pulse_by_prev(pulses: DataFrame, prev_pulse_number: int) -> DataFrame:
-    """F11: pulse whose prev link = given. reference: etl/storage/storage.go:420-428"""
-    return pulses.filter(F.col("prev_pulse_number") == prev_pulse_number)
-
-
-def next_complete_pulse_with_prototypes(
-    pulses: DataFrame, records: DataFrame, prev_pulse_number: int, prototypes: list[bytes]
-) -> DataFrame:
-    """Exporter J1: next complete pulse + its prototype-matched record count.
-
-    Returns (pulse_number, prev_pulse_number, record_amount) where
-    record_amount is the *matched* count (A6 overwrite semantics).
-    reference: etl/storage/storage.go:563-585
-    """
-    joined = J.records_for_pulse_with_prototypes(pulses, records, prev_pulse_number, prototypes)
-    return joined.groupBy("pulse_number", "prev_pulse_number").agg(
-        F.count(F.lit(1)).alias("record_amount")
-    )
-
-
 # ---------------------------------------------------------------------------
 # jet drops
 # ---------------------------------------------------------------------------
@@ -359,20 +318,6 @@ def get_jet_drops_by_jet_id(
         return Pg.paginate(df, sort, limit, 0), None
     page = Pg.paginate(df, sort, limit, 0)
     return page, df.count()
-
-
-def enrich_with_hash_chain(
-    page: DataFrame,
-    jet_drops: DataFrame,
-    prev_pulse: int | None,
-    next_pulse: int | None,
-) -> DataFrame:
-    """J5 + J4: adjacency prefetch then hash-chain prev/next edges.
-
-    reference: api/handlers.go:150-297
-    """
-    enriched = J.adjacency_enrich(page, jet_drops, prev_pulse, next_pulse)
-    return J.hash_chain_edges(enriched)
 
 
 # ---------------------------------------------------------------------------

@@ -38,6 +38,7 @@ import json
 import os
 import shutil
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -366,169 +367,6 @@ def _gc_hll_orphans(state_dir: str, live: str) -> None:
             shutil.rmtree(p, ignore_errors=True)
 
 
-#: CMS geometry for the incremental token-frequency sketch state.
-CMS_DEPTH, CMS_WIDTH = 4, 2048
-
-
-def _cms_ckpt_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "cms_checkpoint.json")
-
-
-def _read_cms_ckpt(state_dir: str) -> dict:
-    try:
-        with open(_cms_ckpt_path(state_dir)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {"since_version": 0, "dir": None}
-
-
-def _swap_ckpt_cms(state_dir: str, ck: dict) -> None:
-    tmp = _cms_ckpt_path(state_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(ck, f)
-    os.replace(tmp, _cms_ckpt_path(state_dir))
-
-
-def _gc_cms_orphans(state_dir: str, live: str) -> None:
-    for name in os.listdir(state_dir):
-        p = os.path.join(state_dir, name)
-        if os.path.isdir(p) and name.startswith("cms_") and name != live:
-            shutil.rmtree(p, ignore_errors=True)
-
-
-def read_cms_counters(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The persisted CMS state: (d, bucket, cnt), ≤ d·w rows."""
-    ck = _read_cms_ckpt(state_dir)
-    if ck["dir"] is None:
-        return spark.createDataFrame([], "d int, bucket long, cnt long")
-    return spark.read.parquet(os.path.join(state_dir, ck["dir"]))
-
-
-def _feed_tokens(df: DataFrame) -> DataFrame:
-    return df.select(
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
-    )
-
-
-def cms_sync(spark: SparkSession, corpus_base: str, state_dir: str) -> dict:
-    """Incremental token-frequency CMS over the change feed — and the
-    counterpart to `hll_sync`'s delete story: CMS counters are PLAIN
-    SUMS, so deletes fold as EXACT decrements, no epoch rebuild. The
-    delete feed rows carry NULL text by design (RTBF: the change log
-    must not outlive the deleted content), so the decrement reads the
-    deleted docs' text from the PRE-delete snapshot via manifest time
-    travel (read_at(v-1) + zone-pruned point lookups) — transiently,
-    persisting nothing; the old files' retention window is the same
-    one the feed itself requires, and a vacuumed window fails loudly
-    into `cms_resync` like every other retention gap. The maintained
-    counters are identical, counter for counter, to a batch
-    `cms_counters` over the live corpus (pinned by
-    test_pipeline_e2e). The per-commit deleted-id collect is bounded
-    by the RTBF batch size.
-
-    The one op that can't fold incrementally is 'update'
-    (substr_sweep rewrites text; the feed carries the NEW text, and
-    subtracting would need the old against the new in one pass) — an
-    update-bearing window triggers a loud epoch rebuild
-    ({"rebuilt": True}), same recovery shape as hll_sync's deletes."""
-    from block_explorer_spark.operators import sketches as SK
-
-    os.makedirs(state_dir, exist_ok=True)
-    ck = _read_cms_ckpt(state_dir)
-    head = Mf.current_version(corpus_base)
-    if head == ck["since_version"]:
-        return {"n_changes": 0, "version": head}
-    try:
-        feed = cs.changes_since(
-            spark, corpus_base, ck["since_version"], until_version=head
-        ).localCheckpoint()
-    except FileNotFoundError as e:
-        raise RuntimeError(
-            f"change feed no longer reaches CMS checkpoint version "
-            f"{ck['since_version']} (retention/vacuum): {e}. Run "
-            "cdc_consumer.cms_resync(spark, corpus_base, state_dir) to "
-            "rebuild from the current snapshot."
-        ) from e
-    if feed.filter(F.col("op") == "update").limit(1).count():
-        out = cms_resync(spark, corpus_base, state_dir)
-        out["rebuilt"] = True
-        return out
-    ins = feed.filter(F.col("op") == "insert")
-    n_changes = feed.count()
-    if not n_changes:
-        _swap_ckpt_cms(state_dir, {"since_version": head, "dir": ck["dir"]})
-        return {"n_changes": 0, "version": head}
-    parts = [read_cms_counters(spark, state_dir)]
-    parts.append(
-        SK.cms_counters(_feed_tokens(ins), "tok", CMS_DEPTH, CMS_WIDTH)
-    )
-    del_rows = feed.filter(F.col("op") == "delete").select("version", "doc_id")
-    del_versions = sorted(
-        r["version"] for r in del_rows.select("version").distinct().collect()
-    )
-    try:
-        for v in del_versions:
-            ids = [
-                r["doc_id"]
-                for r in del_rows.filter(F.col("version") == v).collect()
-            ]
-            prev = cs.read_docs_by_ids(
-                spark, corpus_base, ids,
-                snapshot=Mf.read_at(corpus_base, v - 1),
-            ).localCheckpoint()  # pre-delete files may vacuum later
-            parts.append(
-                SK.cms_counters(
-                    _feed_tokens(prev), "tok", CMS_DEPTH, CMS_WIDTH
-                ).withColumn("cnt", -F.col("cnt"))
-            )
-    except Exception as e:  # vacuumed pre-delete files or manifest
-        raise RuntimeError(
-            f"pre-delete snapshot for the CMS decrement is gone "
-            f"(retention/vacuum): {e}. Run cdc_consumer.cms_resync("
-            "spark, corpus_base, state_dir) to rebuild from the "
-            "current snapshot."
-        ) from e
-    merged = SK.cms_merge(*parts).filter(F.col("cnt") != 0)
-    name = f"cms_v{head}"
-    _write_run(spark, state_dir, name, merged)
-    _swap_ckpt_cms(state_dir, {"since_version": head, "dir": name})
-    _gc_cms_orphans(state_dir, name)
-    return {"n_changes": n_changes, "version": head}
-
-
-def cms_resync(spark: SparkSession, corpus_base: str, state_dir: str) -> dict:
-    """Rebuild the counter state from the current snapshot."""
-    from block_explorer_spark.operators import sketches as SK
-
-    os.makedirs(state_dir, exist_ok=True)
-    head = Mf.current_version(corpus_base)
-    counters = SK.cms_counters(
-        _feed_tokens(cs.read_corpus(spark, corpus_base)), "tok",
-        CMS_DEPTH, CMS_WIDTH,
-    )
-    name = f"cms_v{head}_base"
-    _write_run(spark, state_dir, name, counters)
-    _swap_ckpt_cms(state_dir, {"since_version": head, "dir": name})
-    _gc_cms_orphans(state_dir, name)
-    return {"version": head}
-
-
-def cms_estimate_tokens(
-    spark: SparkSession, state_dir: str, tokens: list[str]
-) -> dict[str, int]:
-    """Point estimates for the given tokens from the persisted
-    counters (min over depth; ≥ true count for insert/delete-only
-    histories by the CMS guarantee)."""
-    from block_explorer_spark.operators import sketches as SK
-
-    counters = read_cms_counters(spark, state_dir)
-    probes = spark.createDataFrame([(t,) for t in tokens], "tok string")
-    rows = SK.cms_estimate(
-        counters, probes, "tok", CMS_DEPTH, CMS_WIDTH
-    ).collect()
-    return {r["tok"]: int(r["cms_estimate"]) for r in rows}
-
-
 def resync(spark: SparkSession, corpus_base: str, state_dir: str) -> dict:
     """Full rebuild from the current snapshot — the recovery move when
     `sync` raises the retention error. One corpus scan, then the
@@ -550,15 +388,15 @@ def resync(spark: SparkSession, corpus_base: str, state_dir: str) -> dict:
 # Quantile-histogram state: persisted doc-length distribution
 # ---------------------------------------------------------------------------
 #
-# The third member of the maintained-sketch family, and the simplest
-# delete story of the three: qhist state is (bucket, cnt) counters on
-# the integer lattice (sketches.py::qhist_*), so — exactly like the
-# CMS — deletes fold as EXACT decrements from the pre-delete snapshot
-# via manifest time travel, and unlike the HLL there is never an
-# epoch rebuild for them. The maintained histogram equals a batch
-# qhist_state over the LIVE corpus, bucket for bucket (pinned by
-# test_pipeline_e2e), which makes the served p50/p99 doc-length — a
-# first-class curation metric — a ≤ 4k-row read at any corpus size.
+# The second member of the maintained-sketch family, and the simpler
+# delete story of the two: qhist state is (bucket, cnt) counters on
+# the integer lattice (sketches.py::qhist_*), so deletes fold as EXACT
+# decrements from the pre-delete snapshot via manifest time travel,
+# and unlike the HLL there is never an epoch rebuild for them. The
+# maintained histogram equals a batch qhist_state over the LIVE
+# corpus, bucket for bucket (pinned by test_pipeline_e2e), which makes
+# the served p50/p99 doc-length — a first-class curation metric — a
+# ≤ 4k-row read at any corpus size.
 
 
 def _qhist_ckpt_path(state_dir: str) -> str:
@@ -605,9 +443,10 @@ def read_qhist_state(spark: SparkSession, state_dir: str) -> DataFrame:
 def qhist_sync(spark: SparkSession, corpus_base: str, state_dir: str) -> dict:
     """Incremental doc-length histogram over the change feed: inserts
     increment, deletes decrement EXACTLY (pre-delete snapshot via
-    read_at(v-1), transiently — same retention contract as the CMS
-    decrement), updates (sweep rewrites change the length) trigger
-    the loud epoch rebuild. Cost ∝ delta docs + ≤ 4k counter rows."""
+    read_at(v-1), transiently — the old files' retention window is
+    the one the feed itself requires), updates (sweep rewrites change
+    the length) trigger the loud epoch rebuild. Cost ∝ delta docs +
+    ≤ 4k counter rows."""
     from block_explorer_spark.operators import sketches as SK
 
     os.makedirs(state_dir, exist_ok=True)
@@ -653,7 +492,11 @@ def qhist_sync(spark: SparkSession, corpus_base: str, state_dir: str) -> dict:
             parts.append(
                 _doc_len_state(prev).withColumn("cnt", -F.col("cnt"))
             )
-    except Exception as e:
+    except (FileNotFoundError, AnalysisException) as e:
+        # read_at's vacuumed manifest version, or a vacuumed data file
+        # of that version (PATH_NOT_FOUND when the read is planned)
+        if isinstance(e, AnalysisException) and e.getCondition() != "PATH_NOT_FOUND":
+            raise
         raise RuntimeError(
             f"pre-delete snapshot for the qhist decrement is gone "
             f"(retention/vacuum): {e}. Run cdc_consumer.qhist_resync("

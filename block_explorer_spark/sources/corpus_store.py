@@ -44,7 +44,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.errors.exceptions.captured import AnalysisException
 
 from block_explorer_spark.functions import text as Tx
 from block_explorer_spark.operators import dedup as D
@@ -1020,48 +1019,6 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
             # a racing writer committed; our rewrite was computed from
             # a stale snapshot — discard and redo against the new one
             Mf.discard(base, new_docs + new_bands + new_whashes + new_cdc)
-
-
-INGEST_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("round_id", T.LongType()),
-        T.StructField("n_in", T.LongType()),
-        T.StructField("n_gated", T.LongType()),
-        T.StructField("n_batch_dup", T.LongType()),
-        T.StructField("n_known", T.LongType()),
-        T.StructField("n_near_dup", T.LongType()),
-        T.StructField("n_added", T.LongType()),
-    ]
-)
-
-
-def log_ingest(spark: SparkSession, base: str, stats: dict) -> int:
-    """Append one row of ingest audit counts to base/ingest_log and
-    return its round_id (monotone per store). The log is the
-    provenance trail a corpus owner queries to explain 'why is the
-    corpus this size' — rounds, rejection mix, dedup hit rates — and
-    the thing an SLA monitor tails. Kept OUT of ingest() itself so
-    retried/replayed ingests don't double-log: the caller decides what
-    constitutes a round."""
-    path = os.path.join(base, "ingest_log")
-    try:
-        prev = spark.read.schema(INGEST_LOG_SCHEMA).parquet(path)
-        round_id = (prev.agg(F.max("round_id")).collect()[0][0] or 0) + 1
-    except AnalysisException:
-        round_id = 1
-    row = [(round_id, stats["n_in"], stats["n_gated"], stats["n_batch_dup"],
-            stats["n_known"], stats["n_near_dup"], stats["n_added"])]
-    spark.createDataFrame(row, INGEST_LOG_SCHEMA).coalesce(1).write.mode(
-        "append").parquet(path)
-    return round_id
-
-
-def ingest_history(spark: SparkSession, base: str) -> DataFrame:
-    try:
-        return spark.read.schema(INGEST_LOG_SCHEMA).parquet(
-            os.path.join(base, "ingest_log"))
-    except AnalysisException:
-        return spark.createDataFrame([], INGEST_LOG_SCHEMA)
 
 
 def _rewrite(

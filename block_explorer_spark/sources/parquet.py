@@ -26,10 +26,10 @@ tables in round 6):
     pipeline commits pulses + jet_drops + records) in ONE manifest
     swap — the multi-table atomicity of the reference's single load
     txn, which round 5's per-store logs could not express;
-  * counters/flags are never mutated in place — they are derived
-    (operators/aggregates.py) or recomputed into the pulses table by
-    the control plane, and every merge is idempotent (same keys →
-    same rows), so replay after any crash converges.
+  * counters/flags are never mutated in place — the control pass
+    recomputes them into the pulses table, and every merge is
+    idempotent (same keys → same rows), so replay after any crash
+    converges.
 
 At cluster scale each bucket rewrite is one task-parallel job over
 the incoming batch's buckets; unrelated partitions are untouched, and
@@ -97,13 +97,6 @@ def obj_key_py(ref: bytes) -> int:
 
     return int(hashlib.md5(ref).hexdigest()[:15], 16)
 
-
-#: Columns lifted into per-file zone maps at commit, per table.
-_STATS_COLS = {
-    "pulses": ["pulse_number"],
-    "jet_drops": ["pulse_number"],
-    "records": ["pulse_number", OBJ_KEY],
-}
 
 #: The records table's OBJECT INDEX sidecar family: distinct
 #: (obj_key, pulse_bucket) pairs, obj_key-sorted with zone maps — the
@@ -1330,34 +1323,6 @@ def save_jet_drop_data(
 def save_pulse(spark: SparkSession, base: str, pulses: DataFrame) -> None:
     """S5: upsert pulses keyed pulse_number."""
     upsert(spark, base, "pulses", pulses)
-
-
-def set_pulse_flags(
-    spark: SparkSession,
-    base: str,
-    pulse_numbers: list[int],
-    complete: bool | None = None,
-    sequential: bool | None = None,
-) -> None:
-    """S6: CompletePulse / SequencePulse — flag flips as a bucket merge.
-
-    reference: etl/storage/storage.go:97-136 (single-row UPDATEs).
-    """
-    if not pulse_numbers:
-        return
-    current = read_table(
-        spark, base, "pulses", pulse_gte=min(pulse_numbers), pulse_lte=max(pulse_numbers)
-    ).filter(F.col("pulse_number").isin(pulse_numbers))
-    if complete is not None:
-        current = current.withColumn("is_complete", F.lit(complete))
-    if sequential is not None:
-        current = current.withColumn("is_sequential", F.lit(sequential))
-    # the touched pulse set is exactly the argument list (the batch is
-    # a filtered read of those pulses): planning facts are free
-    upsert_many(
-        spark, base, {"pulses": current},
-        batch_stats={"pulses": BatchStats(pulse_numbers, len(pulse_numbers))},
-    )
 
 
 def delete_where(spark: SparkSession, base: str, name: str, predicate) -> int:

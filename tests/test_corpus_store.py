@@ -277,18 +277,6 @@ def test_delete_forgets_near_dup_index(spark, base):
     assert {r["doc_id"] for r in cs.read_corpus(spark, base).collect()} == {10}
 
 
-def test_ingest_log_audit_trail(spark, base):
-    s1 = cs.ingest(spark, base, spark.createDataFrame([_doc(1, LONG)], COLS))
-    cs.log_ingest(spark, base, s1)
-    s2 = cs.ingest(spark, base, spark.createDataFrame(
-        [_doc(1, LONG), _doc(2, LONG + " extra")], COLS))
-    rid = cs.log_ingest(spark, base, s2)
-    assert rid == 2
-    hist = {r["round_id"]: r for r in cs.ingest_history(spark, base).collect()}
-    assert hist[1]["n_added"] == 1
-    assert hist[2]["n_known"] == 1 and hist[2]["n_added"] == 1
-
-
 @pytest.mark.slow
 def test_ingest_converges_under_any_batching(spark, tmp_path):
     """Invariant: HOWEVER a document set is partitioned into ingest
@@ -924,8 +912,6 @@ def test_substr_sweep_strips_pre_tier_duplication(spark, base):
     assert "beta0" in texts[2] and texts[4].startswith("gamma0")
     # fp/ntok rewritten consistently for the stripped doc
     row2 = [r for r in cs.read_corpus(spark, base).collect() if r.doc_id == 2][0]
-    from block_explorer_spark.functions import text as Tx
-
     expect = cs._prepared(
         spark.createDataFrame([(2, row2.text, "en", "web")], COLS)
     ).collect()[0]

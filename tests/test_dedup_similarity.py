@@ -315,36 +315,6 @@ def test_real_decode_handles_unknown_payload():
     assert M.real_decode(b"") is None
 
 
-def test_resize_images(media):
-    out = M.resize_images(media, width=4, height=2)
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert set(rows) == {1, 2}  # image rows only
-    assert all(len(r["resized"]) == 8 for r in rows.values())
-    assert rows[1]["width"] == 4 and rows[1]["height"] == 2
-    # deterministic: truncation of the original payload
-    assert rows[1]["resized"] == M.fake_resize(b"\x89PNG-fake-bytes-1", 4, 2)
-
-
-def test_sample_frames(media):
-    out = M.sample_frames(media, n_frames=3)
-    rows = sorted(out.collect(), key=lambda r: r["frame_idx"])
-    assert [r["media_id"] for r in rows] == [4, 4, 4]  # video rows only
-    assert [r["frame_idx"] for r in rows] == [0, 1, 2]
-    # duration 9000ms spaced evenly across 3 frames
-    assert [r["frame_ms"] for r in rows] == [0, 4500, 9000]
-    # NULL payload still yields placeholder frames
-    assert all(r["frame"] is not None for r in rows)
-
-
-def test_media_stats(media):
-    rows = {r["modality"]: r for r in M.media_stats(media).collect()}
-    assert rows["image"]["n_items"] == 2
-    assert rows["image"]["total_bytes"] == len(b"\x89PNG-fake-bytes-1") + len(
-        b"\x89PNG-fake-bytes-22"
-    )
-    assert rows["video"]["n_items"] == 1
-
-
 def test_md5_hash60_matches_hashlib(spark):
     """The portable shingle hash equals int(md5 hexdigest[:15], 16) —
     the contract the DuckDB q26 oracle relies on

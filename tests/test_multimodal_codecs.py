@@ -16,8 +16,6 @@ import zlib
 import numpy as np
 import pytest
 
-from pyspark.sql import functions as F
-
 from block_explorer_spark.functions import codecs
 from block_explorer_spark.operators import multimodal as M
 
@@ -238,28 +236,6 @@ def test_extract_features_real_decode_spark(spark):
     assert feats[3].features is not None
     assert feats[4].features is None  # corrupt -> NULL, task did not fail
     assert feats[4].n_bytes == len(b"corrupt bytes")
-
-
-def test_resize_images_real_spark(spark):
-    media = _media_df(spark)
-    rows = {
-        r.media_id: r
-        for r in M.resize_images(media, 4, 4, resize_fn=M.real_resize).collect()
-    }
-    assert set(rows) == {1, 4}  # image rows only
-    decoded = codecs.png_decode(bytes(rows[1].resized))
-    assert decoded.shape == (4, 4, 1)
-    assert int(decoded[0, 0, 0]) == 64
-    assert rows[4].resized is None  # corrupt image -> NULL
-
-
-def test_sample_frames_real_spark(spark):
-    media = _media_df(spark)
-    rows = M.sample_frames(media, n_frames=2, sample_fn=M.real_frame_sample).collect()
-    assert {r.media_id for r in rows} == {3}
-    assert sorted(r.frame_idx for r in rows) == [0, 1]
-    assert all(bytes(r.frame)[:64] == b"\x40" * 64 for r in rows)
-    assert {r.frame_ms for r in rows} == {0, 120}
 
 
 # ---------------------------------------------------------------------------

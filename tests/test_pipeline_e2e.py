@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import math
 import random
 
 import pytest
@@ -362,90 +361,6 @@ def test_cdc_hll_delete_triggers_epoch_rebuild(spark, tmp_path):
     assert cdc.hll_estimate_tokens(spark, state) == batch_estimate()
 
 
-def test_cdc_cms_state_exact_through_deletes(spark, tmp_path):
-    """The CMS counterpart to the HLL state: counters are plain sums,
-    so deletes (whose cdc rows carry the full document) fold as EXACT
-    decrements — after every insert/delete sync the persisted
-    counters equal a batch cms_counters over the LIVE corpus, counter
-    for counter, with no rebuild. Updates (sweep rewrites) trigger
-    the loud epoch rebuild; retention failure is loud; resync
-    recovers."""
-    from block_explorer_spark.operators import sketches as SK
-    from block_explorer_spark.sources import cdc_consumer as cdc
-    from block_explorer_spark.sources import manifest as Mf
-
-    base = str(tmp_path / "corpus")
-    state = str(tmp_path / "cms")
-    COLS = ["doc_id", "text", "lang", "source"]
-    filler = lambda tag, n=25: " ".join(f"{tag}w{i}" for i in range(n))
-
-    def batch_counters():
-        toks = cdc._feed_tokens(cs.read_corpus(spark, base))
-        return {
-            (r["d"], r["bucket"]): r["cnt"]
-            for r in SK.cms_counters(
-                toks, "tok", cdc.CMS_DEPTH, cdc.CMS_WIDTH
-            ).collect()
-        }
-
-    def got_counters():
-        return {
-            (r["d"], r["bucket"]): r["cnt"]
-            for r in cdc.read_cms_counters(spark, state).collect()
-        }
-
-    run = " ".join(f"sharedrun{i}" for i in range(12))
-    b1 = [(i, filler(f"a{i}"), "en", "web") for i in range(1, 6)]
-    cs.ingest(spark, base, spark.createDataFrame(b1, COLS))
-    s = cdc.cms_sync(spark, base, state)
-    assert "rebuilt" not in s and s["n_changes"] == 5
-    assert got_counters() == batch_counters()
-
-    # insert + delete consumed in one window: exact decrement, no rebuild
-    b2 = [(i, filler(f"b{i}"), "en", "web") for i in range(10, 14)]
-    b2.append((20, filler("tail") + " " + run, "en", "web"))
-    b2.append((21, run + " " + filler("head"), "en", "web"))
-    cs.ingest(spark, base, spark.createDataFrame(b2, COLS))
-    cs.delete_where(spark, base, F.col("doc_id").isin([2, 11]))
-    s = cdc.cms_sync(spark, base, state)
-    assert "rebuilt" not in s
-    assert got_counters() == batch_counters()
-    # and a token estimate from state >= its true live count
-    est = cdc.cms_estimate_tokens(spark, state, ["a1w0", "b10w3"])
-    assert est["a1w0"] >= 1 and est["b10w3"] >= 1
-
-    # a deleted doc's tokens are really gone (exact decrement)
-    est_gone = cdc.cms_estimate_tokens(spark, state, ["a2w0"])
-    # a2w0 appeared only in doc 2; after its delete the counter noise
-    # floor is whatever collisions remain — must equal the batch value
-    batch = SK.cms_estimate(
-        cdc.read_cms_counters(spark, state),
-        spark.createDataFrame([("a2w0",)], "tok string"),
-        "tok", cdc.CMS_DEPTH, cdc.CMS_WIDTH,
-    ).collect()[0]["cms_estimate"]
-    assert est_gone["a2w0"] == int(batch)
-
-    # sweep (update rows) -> loud epoch rebuild, state tracks live
-    sw = cs.substr_sweep(spark, base, window=8)
-    assert sw["n_stripped"] >= 1
-    s = cdc.cms_sync(spark, base, state)
-    assert s.get("rebuilt") is True
-    assert got_counters() == batch_counters()
-
-    # retention: vacuum past checkpoint -> loud -> resync recovers
-    cs.ingest(spark, base, spark.createDataFrame(
-        [(30, filler("c30"), "en", "web")], COLS))
-    cs.ingest(spark, base, spark.createDataFrame(
-        [(31, filler("c31"), "en", "web")], COLS))
-    Mf.vacuum(base, keep_last=1, min_age_s=0.0)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="cms_resync"):
-        cdc.cms_sync(spark, base, state)
-    cdc.cms_resync(spark, base, state)
-    assert got_counters() == batch_counters()
-
-
 def test_cdc_qhist_state_exact_through_deletes(spark, tmp_path):
     """The quantile-histogram member of the maintained-sketch family:
     after every insert/delete sync the persisted (bucket, cnt) state
@@ -521,6 +436,46 @@ def test_cdc_qhist_state_exact_through_deletes(spark, tmp_path):
         cdc.qhist_sync(spark, base, state)
     cdc.qhist_resync(spark, base, state)
     assert got_state() == batch_state()
+
+
+def test_qhist_sync_vanished_pre_delete_file_fails_loud(
+    spark, tmp_path, monkeypatch
+):
+    """A delete's decrement reads the deleted docs from the pre-delete
+    snapshot (version v-1). When a data file of that snapshot is gone,
+    qhist_sync raises the RuntimeError that names qhist_resync; any
+    other error from the read propagates unchanged."""
+    from block_explorer_spark.sources import cdc_consumer as cdc
+    from block_explorer_spark.sources import manifest as Mf
+
+    base = str(tmp_path / "corpus")
+    state = str(tmp_path / "qh")
+    COLS = ["doc_id", "text", "lang", "source"]
+    rows = [
+        (i, " ".join(f"a{i}w{j}" for j in range(25 + i)), "en", "web")
+        for i in range(1, 6)
+    ]
+    cs.ingest(spark, base, spark.createDataFrame(rows, COLS))
+    cdc.qhist_sync(spark, base, state)
+    cs.delete_where(spark, base, F.col("doc_id") == 2)
+    v = Mf.current_version(base)
+    replaced = sorted(
+        set(Mf.read_at(base, v - 1)["families"]["docs"])
+        - set(Mf.read(base)["families"]["docs"])
+    )
+    assert replaced
+    for rel in replaced:
+        os.remove(os.path.join(base, rel))
+    with pytest.raises(RuntimeError, match="qhist_resync"):
+        cdc.qhist_sync(spark, base, state)
+
+    def broken_read(*args, **kwargs):
+        raise TypeError("broken read")
+
+    monkeypatch.setattr(cs, "read_docs_by_ids", broken_read)
+    with pytest.raises(TypeError) as err:
+        cdc.qhist_sync(spark, base, state)
+    assert type(err.value) is TypeError and str(err.value) == "broken read"
 
 
 @pytest.mark.slow

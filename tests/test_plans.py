@@ -3,6 +3,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from block_explorer_spark import schemas
+from block_explorer_spark.operators import joins as J
 from block_explorer_spark.plans import queries as Q
 from block_explorer_spark.sources import generators as gen
 
@@ -120,18 +121,6 @@ def test_get_pulses_4way_filters(spark):
     assert total == 3
 
 
-def test_pulse_seeks(spark):
-    pulses = gen.make_pulses(start=1000, count=5, gaps=(2,))
-    df = spark.createDataFrame(pulses, schemas.PULSES)
-    assert Q.get_sequential_pulse(df).collect()[0].pulse_number == 1040
-    assert Q.get_next_saved_pulse(df, 1010).collect()[0].pulse_number == 1030
-    assert Q.get_pulse_by_prev(df, 1000).collect()[0].pulse_number == 1010
-    incomplete = Q.get_incomplete_pulses(
-        spark.createDataFrame(gen.make_pulses(count=3, complete=False), schemas.PULSES)
-    )
-    assert incomplete.count() == 3
-
-
 def test_jet_drops_by_pulse_and_by_id(spark):
     drops = gen.make_jet_split_tree(seed=5, root_jet="0", start_pulse=2000, depth=2)
     df = spark.createDataFrame(drops, schemas.JET_DROPS)
@@ -160,23 +149,9 @@ def test_jet_drops_by_jet_id_hierarchy(spark):
 def test_hash_chain_enrichment(spark):
     drops = gen.make_jet_split_tree(seed=5, root_jet="", start_pulse=2000, depth=1)
     df = spark.createDataFrame(drops, schemas.JET_DROPS)
-    edges = Q.enrich_with_hash_chain(df, df, None, None).collect()
+    edges = J.hash_chain_edges(df).collect()
     got = sorted((e.parent_jet_id, e.child_jet_id) for e in edges)
     assert got == [("", "0"), ("", "1")]
-
-
-def test_exporter_join(spark):
-    pulses = gen.make_pulses(start=3000, count=3)
-    life = gen.make_lifeline(seed=9, pulses=[3010], records_per_pulse=4)
-    proto = life.records[1]["prototype_reference"]
-    import random
-
-    records_df = spark.createDataFrame(life.records, schemas.RECORDS)
-    pulses_df = spark.createDataFrame(pulses, schemas.PULSES)
-    out = Q.next_complete_pulse_with_prototypes(pulses_df, records_df, 3000, [proto])
-    row = out.collect()[0]
-    assert row.pulse_number == 3010
-    assert row.record_amount == 1
 
 
 def test_search_dispatch(spark, flat_seed):

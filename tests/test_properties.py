@@ -20,11 +20,6 @@ jet_ids = st.text(alphabet="01", min_size=0, max_size=12)
 
 
 @given(jet_ids)
-def test_invert_last_bit_is_involution(j):
-    assert jets.invert_last_bit(jets.invert_last_bit(j)) == j
-
-
-@given(jet_ids)
 def test_parents_are_prefix_chain(j):
     parents = jets.jet_parents(j)
     assert parents[0] == "" and parents[-1] == j

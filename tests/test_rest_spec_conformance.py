@@ -28,11 +28,11 @@ import random
 import urllib.error
 import urllib.request
 
+import pyarrow as pa
 import pytest
 
 from block_explorer_spark import schemas
 from block_explorer_spark.functions.refs import base58_encode
-from block_explorer_spark.operators.aggregates import pulse_counters
 from block_explorer_spark.rest import BlockExplorerApi, serve
 from block_explorer_spark.sources import generators as gen
 
@@ -152,8 +152,8 @@ def test_lifeline_timestamp_range(lifeline_ts_url):
 def amounts_url(spark):
     """Two incomplete pulses; first carries drops of 5 and 1 records,
     second a drop of 3. Counters are NOT hand-set: they are derived
-    from the drops by the A2 aggregate (operators/aggregates.py::
-    pulse_counters), the exact path the write-side materializer uses —
+    from the drops by the A2 group-by (drops per pulse, summed
+    record_amount) that the control pass materializes into pulses —
     so these tests pin derive+serve end-to-end."""
     rng = random.Random(29)
     pulses = [
@@ -165,10 +165,15 @@ def amounts_url(spark):
         gen.make_jet_drop(rng, LP0, "001", record_amount=1),
         gen.make_jet_drop(rng, LP0 + 10, "000", record_amount=3),
     ]
-    spark_drops = spark.createDataFrame(drops, schemas.JET_DROPS)
+    counts = (
+        pa.Table.from_pylist(drops)
+        .group_by("pulse_number")
+        .aggregate([("pulse_number", "count"), ("record_amount", "sum")])
+        .to_pylist()
+    )
     derived = {
-        r["pulse_number"]: (r["jet_drop_amount"], r["record_amount"])
-        for r in pulse_counters(spark_drops).collect()
+        r["pulse_number"]: (r["pulse_number_count"], r["record_amount_sum"])
+        for r in counts
     }
     for p in pulses:
         p["jet_drop_amount"], p["record_amount"] = derived[p["pulse_number"]]

@@ -576,91 +576,6 @@ class TestMigrate:
         self._check(spark, base, fresh)
 
 
-class TestStreamingIndex:
-    """Crawl-to-search as a stream: foreachBatch → index_append with a
-    transactional batch marker; search is bit-exact mid-crawl and
-    replayed deliveries are no-ops."""
-
-    def _docs_rows(self, lo, hi):
-        return [
-            (i, f"alpha w{i % 13} w{i % 7} {'needle' if i % 9 == 0 else 'beta'}")
-            for i in range(lo, hi)
-        ]
-
-    @pytest.mark.slow
-    def test_streamed_index_serves_batch_scores(self, spark, tmp_path):
-        import os
-
-        src = str(tmp_path / "src")
-        base = str(tmp_path / "idx")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(src)
-        for lo in (0, 40, 80):
-            spark.createDataFrame(
-                self._docs_rows(lo, lo + 40), "doc_id long, text string"
-            ).write.mode("append").parquet(src)
-        q = R.start_index_stream(
-            spark, src, base, ckpt, max_files_per_trigger=1,
-            maintain_min_tail=4,
-        )
-        q.awaitTermination(180)
-        all_docs = spark.createDataFrame(
-            self._docs_rows(0, 120), "doc_id long, text string"
-        )
-        terms = ["needle", "alpha"]
-        want = R.bm25_topk(all_docs, terms, topk=10).collect()
-        got = R.bm25_search_indexed(spark, base, terms, topk=10).collect()
-        assert [(r["doc_id"], r["score"]) for r in want] == [
-            (r["doc_id"], r["score"]) for r in got
-        ]
-
-        # two more crawl batches through the SAME checkpoint: only the
-        # new files are consumed, the fold cadence fires, still exact
-        for lo in (120, 160):
-            spark.createDataFrame(
-                self._docs_rows(lo, lo + 40), "doc_id long, text string"
-            ).write.mode("append").parquet(src)
-        q2 = R.start_index_stream(
-            spark, src, base, ckpt, max_files_per_trigger=1,
-            maintain_min_tail=2,
-        )
-        q2.awaitTermination(180)
-        all_docs2 = spark.createDataFrame(
-            self._docs_rows(0, 200), "doc_id long, text string"
-        )
-        want2 = R.bm25_topk(all_docs2, terms, topk=10).collect()
-        got2 = R.bm25_search_indexed(spark, base, terms, topk=10).collect()
-        assert [(r["doc_id"], r["score"]) for r in want2] == [
-            (r["doc_id"], r["score"]) for r in got2
-        ]
-        # maxscore agrees on the streamed store too
-        ms = R.bm25_search_maxscore(spark, base, terms, topk=10).collect()
-        assert [(r["doc_id"], r["score"]) for r in ms] == [
-            (r["doc_id"], r["score"]) for r in got2
-        ]
-
-    def test_replayed_batch_is_a_noop(self, spark, tmp_path):
-        """foreachBatch is at-least-once: a batch re-delivered with an
-        already-committed batch_id must not double the postings — the
-        marker rides in the same CAS swap as the postings."""
-        from block_explorer_spark.sources import manifest as M
-
-        base = str(tmp_path / "idx")
-        boot = spark.createDataFrame([], "doc_id long, text string")
-        R.write_postings_index(boot, base, num_files=1)
-        b1 = spark.createDataFrame(
-            self._docs_rows(0, 30), "doc_id long, text string"
-        )
-        assert R._apply_index_batch(spark, base, b1, 0) is True
-        before = R.bm25_search_indexed(spark, base, ["needle"], topk=5).collect()
-        n_before = M.read(base)["meta"]["bm25"]["n"]
-        # the crash-replay delivery
-        assert R._apply_index_batch(spark, base, b1, 0) is False
-        assert M.read(base)["meta"]["bm25"]["n"] == n_before
-        after = R.bm25_search_indexed(spark, base, ["needle"], topk=5).collect()
-        assert [tuple(r) for r in before] == [tuple(r) for r in after]
-
-
 class TestServingPolicy:
     def test_auto_dispatch_both_sides_exact(self, spark, tmp_path):
         """auto picks full below the postings threshold and maxscore
@@ -948,48 +863,6 @@ class TestVocabPrefix:
         with pytest.raises(ValueError):
             R.vocab_prefix(spark, base, "")
         assert R.vocab_prefix(spark, base, "zzz").count() == 0
-
-
-class TestStreamingPositionalIndex:
-    @pytest.mark.slow
-    def test_streamed_positional_index_serves_batch_phrase(self, spark, tmp_path):
-        """A stream bootstrapped with positions=True mirrors the
-        positional family in every appended batch — phrase search
-        from the streamed index equals the batch scan, including
-        after a mid-stream tail fold."""
-        import os
-
-        src = str(tmp_path / "src")
-        base = str(tmp_path / "idx")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(src)
-        rows = [
-            (i, "needle point " + ("needle point " if i % 4 == 0 else "haystack "))
-            for i in range(90)
-        ]
-        for lo in (0, 30, 60):
-            spark.createDataFrame(
-                rows[lo:lo + 30], "doc_id long, text string"
-            ).write.mode("append").parquet(src)
-        q = R.start_index_stream(
-            spark, src, base, ckpt, max_files_per_trigger=1,
-            maintain_min_tail=2, positions=True,
-        )
-        q.awaitTermination(180)
-        all_docs = spark.createDataFrame(rows, "doc_id long, text string")
-        want = sorted(
-            (r["doc_id"], r["n_occurrences"])
-            for r in R.phrase_match(all_docs, ["needle", "point"]).collect()
-        )
-        got = sorted(
-            (r["doc_id"], r["n_occurrences"])
-            for r in R.phrase_search_indexed(
-                spark, base, ["needle", "point"]
-            ).collect()
-        )
-        assert got == want and len(want) == 90
-        # BM25 on the same streamed store still serves
-        assert R.bm25_search_indexed(spark, base, ["needle"], topk=3).count() == 3
 
 
 class TestKwicSnippets:

@@ -91,22 +91,6 @@ class TestCMS:
         over = est.join(exact, "k").filter(F.col("cms_estimate") > F.col("c")).count()
         assert over > 0
 
-    def test_merge_equals_whole(self, spark, keys):
-        a = keys.filter(F.col("grp") < 2)
-        b = keys.filter(F.col("grp") >= 2)
-        whole = {
-            (r["d"], r["bucket"]): r["cnt"]
-            for r in SK.cms_counters(keys, "k", depth=2, width=256).collect()
-        }
-        merged = {
-            (r["d"], r["bucket"]): r["cnt"]
-            for r in SK.cms_merge(
-                SK.cms_counters(a, "k", depth=2, width=256),
-                SK.cms_counters(b, "k", depth=2, width=256),
-            ).collect()
-        }
-        assert whole == merged
-
     def test_probe_broadcasts_counters(self, spark, keys):
         counters = SK.cms_counters(keys, "k", depth=4, width=512)
         plan = (
@@ -141,31 +125,6 @@ class TestBloom:
         # n=500, m=2^16, k=3 -> theoretical fp ~ (1-e^(-kn/m))^k ~ 1e-5;
         # 10k non-member probes should yield at most a handful.
         assert fp <= 5
-
-    def test_bitmap_tier_equals_position_join_tier(self, spark):
-        """The dense-bitmap scale tier (JVM-hashed positions + numpy
-        bit lookups in one Arrow batch, no join) computes the SAME
-        function as the certified position-join tier — identical
-        hash, identical k/m, identical output."""
-        members = spark.range(0, 500).select(
-            F.concat(F.lit("fp"), F.col("id")).alias("fp")
-        )
-        probe = spark.range(250, 1000).select(
-            (F.col("id") % 50).alias("pid"), F.concat(F.lit("fp"), F.col("id")).alias("fp")
-        )
-        pos = SK.bloom_positions(members, "fp", k=3, m_bits=1 << 16)
-        joined = {
-            (r["pid"], r["n_hits"])
-            for r in SK.bloom_probe(probe, "pid", "fp", pos, k=3, m_bits=1 << 16).collect()
-        }
-        bm = SK.bloom_bitmap(pos, m_bits=1 << 16)
-        bitmap = {
-            (r["pid"], r["n_hits"])
-            for r in SK.bloom_probe_bitmap(
-                probe, "pid", "fp", bm, k=3, m_bits=1 << 16
-            ).collect()
-        }
-        assert joined == bitmap and len(bitmap) > 0
 
     def test_probe_broadcasts_positions(self, spark):
         members = spark.range(0, 100).select(F.col("id").cast("string").alias("fp"))
@@ -325,12 +284,6 @@ class TestBloomEdgeCases:
         pos = SK.bloom_positions(members, "fp", k=3, m_bits=1 << 16)
         got = SK.bloom_probe(probe, "pid", "fp", pos, k=3, m_bits=1 << 16).collect()
         assert [(r["pid"], r["n_hits"]) for r in got] == [(7, 50)]
-        # and the bitmap tier agrees on the duplicated input
-        bm = SK.bloom_bitmap(pos, m_bits=1 << 16)
-        got2 = SK.bloom_probe_bitmap(
-            probe, "pid", "fp", bm, k=3, m_bits=1 << 16
-        ).collect()
-        assert [(r["pid"], r["n_hits"]) for r in got2] == [(7, 50)]
 
     def test_null_keys_match_plain_join_semantics(self, spark):
         """NULL join keys: an inner join drops them, so the prefilter

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from block_explorer_spark.functions import text as Tx
 
 
@@ -40,17 +38,9 @@ def test_word_ngrams_short_text(docs):
     assert _one(docs, Tx.word_ngrams("text", 3), 1) == ["the quick brown", "quick brown fox"]
 
 
-def test_char_ngrams(docs):
-    got = _one(docs, Tx.char_ngrams("text", 3), 6)
-    assert got == ["x"]  # shorter than n -> the text itself
-    got4 = _one(docs, Tx.char_ngrams("text", 2), 1)
-    assert "th" in got4 and "ox" in got4
-
-
 def test_digit_and_ratios(docs):
     assert _one(docs, Tx.digit_ratio("text"), 3) == pytest.approx(10 / 11)
     assert _one(docs, Tx.digit_ratio("text"), 1) == 0.0
-    assert 0.0 <= _one(docs, Tx.upper_ratio("text"), 1) <= 1.0
 
 
 def test_language_id(docs):
@@ -86,13 +76,6 @@ def test_rolling_fingerprint_modes(docs):
     assert all(isinstance(h, int) for h in xxs)
     with pytest.raises(KeyError):
         Tx.rolling_fingerprint("text", hashf="sha1")
-
-
-def test_bpe_ish_vs_whitespace(spark):
-    df = spark.createDataFrame([(1, "don't stop-me now.ok")], ["id", "text"])
-    ws = df.select(Tx.token_count("text").alias("v")).collect()[0]["v"]
-    bpe = df.select(Tx.bpe_ish_token_count("text").alias("v")).collect()[0]["v"]
-    assert bpe > ws  # punctuation boundaries add sub-word splits
 
 
 class TestCooccurrence:

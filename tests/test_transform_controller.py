@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from block_explorer_spark import schemas
 from block_explorer_spark.operators import chain_sort as CS
-from block_explorer_spark.plans import controller as C
 from block_explorer_spark.plans import transformer as Tr
 from block_explorer_spark.sources import generators as gen
 from block_explorer_spark.sources import parquet as pq
@@ -148,10 +147,6 @@ def test_find_gaps_and_reload_pool(spark, tmp_path):
     pulses = gen.make_pulses(start=1000, count=6, gaps=(2, 3))
     gaps = _swept(spark, str(tmp_path / "s"), pulses)["gaps"]
     assert gaps == [(1010, 1040)]
-    pool = C.ReloadPool(ttl_seconds=100)
-    assert pool.should_reload((1010, 1040), now=0.0)
-    assert not pool.should_reload((1010, 1040), now=50.0)
-    assert pool.should_reload((1010, 1040), now=150.0)
 
 
 def test_decode_payload_only_for_memory_and_result():
