@@ -17,8 +17,8 @@ makes the executor-side dependency footprint zero:
   needs no entropy decoder — frame *sampling* semantics (the part
   Spark cares about) are identical to what pyav would produce.
 
-When PIL/pyav ARE installed, `block_explorer_spark.operators.
-multimodal.real_decode` prefers them (import-guarded) and these
+When PIL is installed, `block_explorer_spark.operators.multimodal.
+real_decode` prefers it for images (import-guarded) and these
 decoders remain the fallback. Corrupt/unknown payloads decode to
 None — corrupt media is data, not an error, at 100 TB.
 
@@ -196,18 +196,6 @@ def dhash64(pixels: np.ndarray) -> int:
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-def png_resize_nearest(payload: bytes, width: int, height: int) -> bytes:
-    """Real image resize: decode -> nearest-neighbor resample (numpy
-    index gather) -> re-encode. Nearest-neighbor is the standard
-    deterministic choice for pipeline thumbnails (no filter kernel to
-    disagree about across machines)."""
-    img = png_decode(payload)
-    h, w = img.shape[:2]
-    ys = (np.arange(height) * h // height).clip(0, h - 1)
-    xs = (np.arange(width) * w // width).clip(0, w - 1)
-    return png_encode(img[ys][:, xs])
-
-
 # ---------------------------------------------------------------------------
 # WAV (RIFF PCM)
 # ---------------------------------------------------------------------------
@@ -373,17 +361,6 @@ def y4m_encode(frames: list[np.ndarray], colorspace: str = "C420jpeg") -> bytes:
         b"FRAME\n" + np.asarray(fr, dtype=np.uint8).tobytes() + chroma for fr in frames
     )
     return head + body
-
-
-def y4m_sample_frames(payload: bytes, n_frames: int) -> list[bytes]:
-    """Real video frame sampling: parse the stream and return
-    `n_frames` evenly spaced raw frames (all frames, repeated per the
-    even spacing, when the stream is shorter)."""
-    _, _, _, frames = y4m_parse(payload)
-    if not frames:
-        raise CodecError("empty stream")
-    idx = [i * (len(frames) - 1) // max(1, n_frames - 1) for i in range(n_frames)]
-    return [frames[i] for i in idx]
 
 
 # ---------------------------------------------------------------------------

@@ -4,12 +4,11 @@ The Spark-side shape — schema, partition-friendly layout,
 Arrow-batched mapInPandas UDFs with bounded batch sizes — carries two
 codec tiers:
 
-- `real_decode` / `real_resize` / `real_frame_sample`: REAL codecs.
-  PIL/pyav are used when installed (import-guarded); without them,
-  pure-stdlib decoders in functions/codecs.py handle PNG (full
-  RFC-2083 filter pipeline), PCM WAV, and Y4M video. Corrupt or
-  unrecognized payloads yield NULL features — corrupt media is data,
-  not an error, at 100 TB.
+- `real_decode`: REAL codecs. PIL is used when installed
+  (import-guarded); without it, pure-stdlib decoders in
+  functions/codecs.py handle PNG (full RFC-2083 filter pipeline), PCM
+  WAV, and Y4M video. Corrupt or unrecognized payloads yield NULL
+  features — corrupt media is data, not an error, at 100 TB.
 - `fake_decode`: a deterministic digest-derived stand-in, kept as the
   default for the oracle-checkable gate path (q32 pins sha256/n_bytes,
   not features) and for tests that need format-independent
@@ -35,11 +34,6 @@ try:  # optional: preferred image codec when the lib exists
     from PIL import Image as _PILImage  # type: ignore
 except ImportError:
     _PILImage = None
-
-try:  # optional: preferred video codec when the lib exists
-    import av as _pyav  # type: ignore
-except ImportError:
-    _pyav = None
 
 #: media table: opaque payload + typed metadata. Partition by
 #: (modality, shard) at scale; payloads never leave the executor.
@@ -179,46 +173,6 @@ def extract_features(
     return media.select(cols).mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def real_resize(payload: bytes, width: int, height: int) -> bytes | None:
-    """REAL image resize: PIL (LANCZOS->PNG) when installed, else the
-    pure-stdlib decode -> nearest-neighbor -> re-encode path. Corrupt
-    or non-image payloads resize to None (NULL), never a task error."""
-    payload = payload or b""
-    try:
-        if _PILImage is not None:
-            img = _PILImage.open(io.BytesIO(payload))
-            out = io.BytesIO()
-            img.resize((width, height)).save(out, format="PNG")
-            return out.getvalue()
-        return codecs.png_resize_nearest(payload, width, height)
-    except (codecs.CodecError, OSError, ValueError):
-        return None
-
-
-def real_frame_sample(payload: bytes, n_frames: int) -> list[bytes]:
-    """REAL video frame sampling: pyav when installed (any container
-    it can demux), else the pure-stdlib Y4M parser — n_frames evenly
-    spaced raw frames. Corrupt payloads yield an empty list (rows
-    simply absent for that media_id), never a task error."""
-    payload = payload or b""
-    try:
-        if _pyav is not None and codecs.sniff(payload) != "y4m":
-            with _pyav.open(io.BytesIO(payload)) as container:
-                frames = [
-                    bytes(fr.to_ndarray(format="gray").tobytes())
-                    for fr in container.decode(video=0)
-                ]
-            if not frames:
-                return []
-            idx = [
-                i * (len(frames) - 1) // max(1, n_frames - 1) for i in range(n_frames)
-            ]
-            return [frames[i] for i in idx]
-        return codecs.y4m_sample_frames(payload, n_frames)
-    except (codecs.CodecError, OSError, ValueError):
-        return []
-
-
 def perceptual_hashes(
     media: DataFrame,
     id_col: str = "media_id",
@@ -352,8 +306,8 @@ def video_keyframe_hashes(
     batch_size: int = 64,
 ) -> DataFrame:
     """(id, frame_idx, vhash) per Y4M payload: parse the stream,
-    sample `n_frames` evenly spaced keyframes (codecs.y4m_sample_frames'
-    index rule), dHash each frame's luma plane (codecs.dhash64 — the
+    sample `n_frames` evenly spaced keyframes (frame i·(N−1)//(n−1)),
+    dHash each frame's luma plane (codecs.dhash64 — the
     q98 image recipe applied per keyframe). Corrupt payloads emit
     nothing. Decode is doc-local/Arrow-batched; only (8-byte hash,
     slot) rows leave the executor."""

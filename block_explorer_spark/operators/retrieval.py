@@ -379,45 +379,34 @@ def write_postings_index(
     if positions:
         bm25["positional"] = True
         bm25["ptail"] = []
-    with M.write_intent(base):
-        prels = M.stage_df(clustered, base, "postings")
-        drels = M.stage_df(dl, base, "doclen")
-        stats = M.file_stats(base, prels, ["token"])
-        xrels: list[str] = []
+
+    def attempt(snap, stage):
+        fams = dict(snap["families"])
+        fams["postings"] = stage.df(clustered, "postings")
+        fams["doclen"] = stage.df(dl, "doclen")
         if positions:
             pos = positional_index(docs, id_col, text_col)
-            xrels = M.stage_df(
+            fams[POSITIONS] = stage.df(
                 pos.repartitionByRange(num_files, "token").sortWithinPartitions(
                     "token", "doc_id", "pos"
                 ),
-                base,
                 POSITIONS,
             )
-            stats.update(M.file_stats(base, xrels, ["token"]))
-        trels = M.stage_df(
+        fams[TERMMAX] = stage.df(
             _term_extremes(post).repartitionByRange(
                 max(1, num_files // 8), "token"
             ).sortWithinPartitions("token"),
-            base,
             TERMMAX,
         )
-        stats.update(M.file_stats(base, trels, ["token"]))
-        for _ in range(2):
-            cur = M.read(base)
-            fams = dict(cur.get("families", {}))
-            fams["postings"], fams["doclen"] = prels, drels
-            fams[TERMMAX] = trels
-            if xrels:
-                fams[POSITIONS] = xrels
-            meta = dict(cur.get("meta", {}))
-            meta["bm25"] = bm25
-            try:
-                return M.commit(
-                    base, fams, cur.get("version", 0), meta=meta, stats=stats
-                )
-            except M.CommitConflict:
-                continue
-        raise M.CommitConflict("write_postings_index lost the CAS twice")
+        meta = dict(snap["meta"])
+        meta["bm25"] = bm25
+        return snap["version"] + 1, {
+            "families": fams,
+            "meta": meta,
+            "stats": M.file_stats(base, stage.rels, ["token"]),
+        }
+
+    return M.transact(base, attempt)
 
 
 def index_append(
@@ -441,30 +430,10 @@ def index_append(
     the same contract the corpus store's ingest holds). A re-ingested
     doc_id would duplicate (token, doc_id) rows and double-count tf.
     Returns the committed version."""
+    import os as _os
+
     from block_explorer_spark.sources import manifest as M
 
-    cur0 = M.read(base)
-    bmeta = _bm25_meta(cur0, base)
-    trels0 = cur0.get("families", {}).get(TOMBSTONES) or []
-    if trels0:
-        # a tombstoned doc_id re-appended would be silently hidden by
-        # its own tombstone — reject loudly; run index_purge first
-        import os as _osc
-
-        dead0 = docs.sparkSession.read.parquet(
-            *[_osc.path.join(base, r) for r in trels0]
-        ).select("doc_id")
-        clash = (
-            docs.select(F.col(id_col).alias("doc_id"))
-            .join(dead0, "doc_id")
-            .limit(1)
-            .count()
-        )
-        if clash:
-            raise ValueError(
-                "index_append delta contains tombstoned doc_ids; doc_ids "
-                "are append-only — purge (index_purge) before reusing ids"
-            )
     dl = docs.select(
         F.col(id_col).alias("doc_id"), F.size(tokenize(text_col)).alias("dl")
     )
@@ -474,57 +443,63 @@ def index_append(
     )
     row = dl.agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl")).collect()[0]
     dn, dsum = int(row["n"]), int(row["sum_dl"] or 0)
-    with M.write_intent(base):
-        prels = M.stage_df(clustered, base, "postings")
-        drels = M.stage_df(dl, base, "doclen")
-        stats = M.file_stats(base, prels, ["token"])
-        xrels: list[str] = []
-        if bmeta.get("positional"):
+
+    def attempt(snap, stage):
+        bm25 = dict(_bm25_meta(snap, base))
+        fams = dict(snap["families"])
+        if fams.get(TOMBSTONES):
+            # a tombstoned doc_id re-appended would be silently hidden
+            # by its own tombstone — reject loudly; run index_purge first
+            dead = docs.sparkSession.read.parquet(
+                *[_os.path.join(base, r) for r in fams[TOMBSTONES]]
+            ).select("doc_id")
+            clash = (
+                docs.select(F.col(id_col).alias("doc_id"))
+                .join(dead, "doc_id")
+                .limit(1)
+                .count()
+            )
+            if clash:
+                raise ValueError(
+                    "index_append delta contains tombstoned doc_ids; doc_ids "
+                    "are append-only — purge (index_purge) before reusing ids"
+                )
+        prels = stage.df(clustered, "postings")
+        fams["postings"] = fams.get("postings", []) + prels
+        fams["doclen"] = fams.get("doclen", []) + stage.df(dl, "doclen")
+        bm25["n"] = int(bm25["n"]) + dn
+        bm25["sum_dl"] = int(bm25["sum_dl"]) + dsum
+        bm25["tail"] = list(bm25.get("tail", [])) + prels
+        if bm25.get("positional"):
             pos = positional_index(docs, id_col, text_col)
-            xrels = M.stage_df(
+            xrels = stage.df(
                 pos.repartitionByRange(num_files, "token").sortWithinPartitions(
                     "token", "doc_id", "pos"
                 ),
-                base,
                 POSITIONS,
             )
-            stats.update(M.file_stats(base, xrels, ["token"]))
+            fams[POSITIONS] = fams.get(POSITIONS, []) + xrels
+            bm25["ptail"] = list(bm25.get("ptail", [])) + xrels
         # extremes fold by max/min, so the delta's rows just join the
         # family — the reader aggregates across runs.
-        trels = M.stage_df(
+        fams[TERMMAX] = fams.get(TERMMAX, []) + stage.df(
             _term_extremes(post).coalesce(1).sortWithinPartitions("token"),
-            base,
             TERMMAX,
         )
-        stats.update(M.file_stats(base, trels, ["token"]))
-        for _ in range(2):
-            cur = M.read(base)
-            bm25 = dict(cur.get("meta", {}).get("bm25") or bmeta)
-            bm25["n"] = int(bm25["n"]) + dn
-            bm25["sum_dl"] = int(bm25["sum_dl"]) + dsum
-            bm25["tail"] = list(bm25.get("tail", [])) + prels
-            if xrels:
-                bm25["ptail"] = list(bm25.get("ptail", [])) + xrels
-            if bm25_meta_patch:
-                # rides in the SAME CAS swap as the postings — a CDC
-                # consumer's watermark can never be seen without its
-                # batch, or the batch without it
-                bm25.update(bm25_meta_patch)
-            fams = dict(cur.get("families", {}))
-            fams["postings"] = list(fams.get("postings", [])) + prels
-            fams["doclen"] = list(fams.get("doclen", [])) + drels
-            fams[TERMMAX] = list(fams.get(TERMMAX, [])) + trels
-            if xrels:
-                fams[POSITIONS] = list(fams.get(POSITIONS, [])) + xrels
-            meta = dict(cur.get("meta", {}))
-            meta["bm25"] = bm25
-            try:
-                return M.commit(
-                    base, fams, cur.get("version", 0), meta=meta, stats=stats
-                )
-            except M.CommitConflict:
-                continue
-        raise M.CommitConflict("index_append lost the CAS twice")
+        if bm25_meta_patch:
+            # rides in the SAME CAS swap as the postings — a CDC
+            # consumer's watermark can never be seen without its batch,
+            # or the batch without it
+            bm25.update(bm25_meta_patch)
+        meta = dict(snap["meta"])
+        meta["bm25"] = bm25
+        return snap["version"] + 1, {
+            "families": fams,
+            "meta": meta,
+            "stats": M.file_stats(base, stage.rels, ["token"]),
+        }
+
+    return M.transact(base, attempt)
 
 
 def index_maintain(
@@ -544,19 +519,23 @@ def index_maintain(
 
     from block_explorer_spark.sources import manifest as M
 
-    cur = M.read(base)
-    bmeta = _bm25_meta(cur, base)
-    tail = list(bmeta.get("tail", []))
-    ptail = list(bmeta.get("ptail", []))
-    if len(tail) < min_tail_files:
+    if len(_bm25_meta(M.read(base), base).get("tail", [])) < min_tail_files:
         return None
-    with M.write_intent(base):
+
+    def attempt(snap, stage):
+        bm25 = dict(_bm25_meta(snap, base))
+        tail = list(bm25.get("tail", []))
+        ptail = list(bm25.get("ptail", []))
+        if len(tail) < min_tail_files:
+            return None, None  # another maintain folded it first
+        fams = dict(snap["families"])
         df = spark.read.parquet(*[_os.path.join(base, r) for r in tail])
         nf = num_files or max(1, len(tail) // 4)
         merged = df.repartitionByRange(nf, "token").sortWithinPartitions("token")
-        rels = M.stage_df(merged, base, "postings")
-        stats = M.file_stats(base, rels, ["token"])
-        xrels: list[str] = []
+        fams["postings"] = [
+            r for r in fams["postings"] if r not in set(tail)
+        ] + stage.df(merged, "postings")
+        bm25["tail"] = []
         if ptail:
             # fold the positional tail in the same OPTIMIZE pass —
             # cost ∝ appended positions, the bulk run is untouched
@@ -564,35 +543,19 @@ def index_maintain(
             pm = pdf.repartitionByRange(
                 max(1, len(ptail) // 4), "token"
             ).sortWithinPartitions("token", "doc_id", "pos")
-            xrels = M.stage_df(pm, base, POSITIONS)
-            stats.update(M.file_stats(base, xrels, ["token"]))
-        for _ in range(2):
-            cur = M.read(base)
-            fams = dict(cur.get("families", {}))
-            kept = [r for r in fams.get("postings", []) if r not in set(tail)]
-            fams["postings"] = kept + rels
-            if xrels:
-                pkept = [
-                    r for r in fams.get(POSITIONS, []) if r not in set(ptail)
-                ]
-                fams[POSITIONS] = pkept + xrels
-            bm25 = dict(cur.get("meta", {}).get("bm25") or bmeta)
-            bm25["tail"] = [
-                r for r in bm25.get("tail", []) if r not in set(tail)
-            ]
-            if xrels:
-                bm25["ptail"] = [
-                    r for r in bm25.get("ptail", []) if r not in set(ptail)
-                ]
-            meta = dict(cur.get("meta", {}))
-            meta["bm25"] = bm25
-            try:
-                return M.commit(
-                    base, fams, cur.get("version", 0), meta=meta, stats=stats
-                )
-            except M.CommitConflict:
-                continue
-        raise M.CommitConflict("index_maintain lost the CAS twice")
+            fams[POSITIONS] = [
+                r for r in fams[POSITIONS] if r not in set(ptail)
+            ] + stage.df(pm, POSITIONS)
+            bm25["ptail"] = []
+        meta = dict(snap["meta"])
+        meta["bm25"] = bm25
+        return snap["version"] + 1, {
+            "families": fams,
+            "meta": meta,
+            "stats": M.file_stats(base, stage.rels, ["token"]),
+        }
+
+    return M.transact(base, attempt)
 
 
 def _live_postings(spark: SparkSession, base: str, m: dict, post: DataFrame) -> DataFrame:
@@ -649,21 +612,13 @@ def index_patch_meta(base: str, patch: dict) -> int:
     maintenance-only commits)."""
     from block_explorer_spark.sources import manifest as M
 
-    _bm25_meta(M.read(base), base)
-    for _ in range(2):
-        cur = M.read(base)
-        bm25 = dict(cur.get("meta", {}).get("bm25") or {})
-        bm25.update(patch)
-        meta = dict(cur.get("meta", {}))
-        meta["bm25"] = bm25
-        try:
-            return M.commit(
-                base, dict(cur.get("families", {})), cur.get("version", 0),
-                meta=meta,
-            )
-        except M.CommitConflict:
-            continue
-    raise M.CommitConflict("index_patch_meta lost the CAS twice")
+
+    def attempt(snap, _stage):
+        meta = dict(snap["meta"])
+        meta["bm25"] = {**_bm25_meta(snap, base), **patch}
+        return snap["version"] + 1, {"families": snap["families"], "meta": meta}
+
+    return M.transact(base, attempt)
 
 
 def index_delete(
@@ -693,47 +648,39 @@ def index_delete(
 
     from block_explorer_spark.sources import manifest as M
 
-    cur0 = M.read(base)
-    bmeta = _bm25_meta(cur0, base)
-    dl = spark.read.parquet(
-        *[_os.path.join(base, r) for r in cur0["families"]["doclen"]]
-    )
-    dead = dl.join(
-        doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id")).distinct(),
-        "doc_id",
-    )
-    prev = cur0.get("families", {}).get(TOMBSTONES) or []
-    if prev:
-        already = spark.read.parquet(
-            *[_os.path.join(base, r) for r in prev]
-        ).select("doc_id")
-        dead = dead.join(already, "doc_id", "left_anti")
-    with M.write_intent(base):
+    ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id")).distinct()
+
+    def attempt(snap, stage):
+        bm25 = dict(_bm25_meta(snap, base))
+        fams = dict(snap["families"])
+        dead = spark.read.parquet(
+            *[_os.path.join(base, r) for r in fams["doclen"]]
+        ).join(ids, "doc_id")
+        if fams.get(TOMBSTONES):
+            already = spark.read.parquet(
+                *[_os.path.join(base, r) for r in fams[TOMBSTONES]]
+            ).select("doc_id")
+            dead = dead.join(already, "doc_id", "left_anti")
         row = dead.agg(
             F.count("*").alias("dn"), F.sum("dl").alias("dsum")
         ).collect()[0]
         dn, dsum = int(row["dn"]), int(row["dsum"] or 0)
         if dn == 0:
-            return None
-        rels = M.stage_df(dead.coalesce(1), base, TOMBSTONES)
-        for _ in range(2):
-            cur = M.read(base)
-            fams = dict(cur.get("families", {}))
-            fams[TOMBSTONES] = list(fams.get(TOMBSTONES, [])) + rels
-            bm25 = dict(cur.get("meta", {}).get("bm25") or bmeta)
-            bm25["n"] = int(bm25["n"]) - dn
-            bm25["sum_dl"] = int(bm25["sum_dl"]) - dsum
-            if bm25_meta_patch:
-                # rides the SAME CAS swap — a CDC consumer's
-                # watermark can never be seen without its deletes
-                bm25.update(bm25_meta_patch)
-            meta = dict(cur.get("meta", {}))
-            meta["bm25"] = bm25
-            try:
-                return M.commit(base, fams, cur.get("version", 0), meta=meta)
-            except M.CommitConflict:
-                continue
-        raise M.CommitConflict("index_delete lost the CAS twice")
+            return None, None
+        fams[TOMBSTONES] = fams.get(TOMBSTONES, []) + stage.df(
+            dead.coalesce(1), TOMBSTONES
+        )
+        bm25["n"] = int(bm25["n"]) - dn
+        bm25["sum_dl"] = int(bm25["sum_dl"]) - dsum
+        if bm25_meta_patch:
+            # rides the SAME CAS swap — a CDC consumer's watermark can
+            # never be seen without its deletes
+            bm25.update(bm25_meta_patch)
+        meta = dict(snap["meta"])
+        meta["bm25"] = bm25
+        return snap["version"] + 1, {"families": fams, "meta": meta}
+
+    return M.transact(base, attempt)
 
 
 def index_purge(
@@ -754,88 +701,55 @@ def index_purge(
 
     from block_explorer_spark.sources import manifest as M
 
-    cur0 = M.read(base)
-    bmeta = _bm25_meta(cur0, base)
-    trels = cur0.get("families", {}).get(TOMBSTONES) or []
-    if not trels:
-        return None
-    with M.write_intent(base):
+    def attempt(snap, stage):
+        bm25 = dict(_bm25_meta(snap, base))
+        fams = dict(snap["families"])
+        trels = fams.pop(TOMBSTONES, None)
+        if not trels:
+            return None, None
         dead = spark.read.parquet(
             *[_os.path.join(base, r) for r in trels]
         ).select("doc_id")
-        fams0 = cur0["families"]
-        nf = num_files or max(1, len(fams0["postings"]))
+        nf = num_files or max(1, len(fams["postings"]))
         post = spark.read.parquet(
-            *[_os.path.join(base, r) for r in fams0["postings"]]
+            *[_os.path.join(base, r) for r in fams["postings"]]
         ).join(dead, "doc_id", "left_anti")
-        pclustered = post.repartitionByRange(nf, "token").sortWithinPartitions(
-            "token"
+        prels = stage.df(
+            post.repartitionByRange(nf, "token").sortWithinPartitions("token"),
+            "postings",
         )
-        prels = M.stage_df(pclustered, base, "postings")
-        stats = M.file_stats(base, prels, ["token"])
         dl = spark.read.parquet(
-            *[_os.path.join(base, r) for r in fams0["doclen"]]
+            *[_os.path.join(base, r) for r in fams["doclen"]]
         ).join(dead, "doc_id", "left_anti")
-        drels = M.stage_df(dl, base, "doclen")
-        xrels: list[str] = []
-        if fams0.get(POSITIONS):
+        fams["doclen"] = stage.df(dl, "doclen")
+        if fams.get(POSITIONS):
             pos = spark.read.parquet(
-                *[_os.path.join(base, r) for r in fams0[POSITIONS]]
+                *[_os.path.join(base, r) for r in fams[POSITIONS]]
             ).join(dead, "doc_id", "left_anti")
-            xrels = M.stage_df(
+            fams[POSITIONS] = stage.df(
                 pos.repartitionByRange(nf, "token").sortWithinPartitions(
                     "token", "doc_id", "pos"
                 ),
-                base,
                 POSITIONS,
             )
-            stats.update(M.file_stats(base, xrels, ["token"]))
         ext = _term_extremes(
             spark.read.parquet(*[_os.path.join(base, r) for r in prels])
         )
-        mrels = M.stage_df(
-            ext.coalesce(1).sortWithinPartitions("token"), base, TERMMAX
-        )
-        stats.update(M.file_stats(base, mrels, ["token"]))
-        for _ in range(2):
-            cur = M.read(base)
-            fams = dict(cur.get("families", {}))
-            # write_intent is a vacuum lease, not a writer lock: a
-            # concurrent append may have landed since fams0 was read.
-            # Its rels (and tombstones) survive the swap; only the
-            # files this purge actually rewrote are replaced.
-            def _since(fam: str) -> list[str]:
-                base_set = set(fams0.get(fam, []))
-                return [r for r in fams.get(fam, []) if r not in base_set]
+        fams["postings"] = prels
+        fams[TERMMAX] = stage.df(ext.coalesce(1).sortWithinPartitions("token"), TERMMAX)
+        # the rewrite is one sorted run: no append tail survives it
+        bm25["tail"] = []
+        if "ptail" in bm25:
+            bm25["ptail"] = []
+        meta = dict(snap["meta"])
+        meta["bm25"] = bm25
+        return snap["version"] + 1, {
+            "families": fams,
+            "meta": meta,
+            "stats": M.file_stats(base, stage.rels, ["token"]),
+        }
 
-            fams["postings"] = prels + _since("postings")
-            fams["doclen"] = drels + _since("doclen")
-            fams[TERMMAX] = mrels + _since(TERMMAX)
-            if xrels:
-                fams[POSITIONS] = xrels + _since(POSITIONS)
-            new_tombs = _since(TOMBSTONES)
-            if new_tombs:
-                fams[TOMBSTONES] = new_tombs
-            else:
-                fams.pop(TOMBSTONES, None)
-            bm25 = dict(cur.get("meta", {}).get("bm25") or bmeta)
-            bm25["tail"] = [
-                r for r in bm25.get("tail", []) if r in set(_since("postings"))
-            ]
-            if "ptail" in bm25:
-                bm25["ptail"] = [
-                    r for r in bm25.get("ptail", [])
-                    if r in set(_since(POSITIONS))
-                ]
-            meta = dict(cur.get("meta", {}))
-            meta["bm25"] = bm25
-            try:
-                return M.commit(
-                    base, fams, cur.get("version", 0), meta=meta, stats=stats
-                )
-            except M.CommitConflict:
-                continue
-        raise M.CommitConflict("index_purge lost the CAS twice")
+    return M.transact(base, attempt)
 
 
 def _score_postings(
@@ -1221,57 +1135,47 @@ def migrate(spark: SparkSession, base: str) -> int | None:
 
     from block_explorer_spark.sources import manifest as M
 
-    cur0 = M.read(base)
-    bmeta = cur0.get("meta", {}).get("bm25")
-    if not bmeta:
-        raise FileNotFoundError(f"no bm25 index committed under {base}")
-    fams0 = cur0["families"]
-    add_dl = not bmeta.get("dl_in_postings")
-    if not add_dl and TERMMAX in fams0:
-        return None
-
     def _read(rels: list[str]) -> DataFrame:
         return spark.read.parquet(*[_os.path.join(base, r) for r in rels])
 
-    with M.write_intent(base):
-        prels = list(fams0.get("postings", []))
-        stats: dict = {}
+    def attempt(snap, stage):
+        bm25 = snap["meta"].get("bm25")
+        if not bm25:
+            raise FileNotFoundError(f"no bm25 index committed under {base}")
+        fams = dict(snap["families"])
+        add_dl = not bm25.get("dl_in_postings")
+        if not add_dl and TERMMAX in fams:
+            return None, None
+        bm25 = dict(bm25, dl_in_postings=True)
+        prels = list(fams.get("postings", []))
         if add_dl and prels:
-            joined = _read(prels).join(_read(fams0["doclen"]), "doc_id")
-            prels = M.stage_df(
+            joined = _read(prels).join(_read(fams["doclen"]), "doc_id")
+            prels = stage.df(
                 joined.select("token", "doc_id", "tf", "dl")
                 .repartitionByRange(len(prels), "token")
                 .sortWithinPartitions("token"),
-                base,
                 "postings",
             )
-            stats.update(M.file_stats(base, prels, ["token"]))
+        if add_dl:
+            bm25["tail"] = []
         trels: list[str] = []
         if prels:
-            trels = M.stage_df(
+            trels = stage.df(
                 _term_extremes(_read(prels)).repartitionByRange(
                     max(1, len(prels) // 8), "token"
                 ).sortWithinPartitions("token"),
-                base,
                 TERMMAX,
             )
-            stats.update(M.file_stats(base, trels, ["token"]))
-        for _ in range(2):
-            cur = M.read(base)
-            fams = dict(cur.get("families", {}))
-            fams["postings"], fams[TERMMAX] = prels, trels
-            meta = dict(cur.get("meta", {}))
-            bm25 = dict(meta["bm25"], dl_in_postings=True)
-            if add_dl:
-                bm25["tail"] = []
-            meta["bm25"] = bm25
-            try:
-                return M.commit(
-                    base, fams, cur.get("version", 0), meta=meta, stats=stats
-                )
-            except M.CommitConflict:
-                continue
-        raise M.CommitConflict("retrieval.migrate lost the CAS twice")
+        fams["postings"], fams[TERMMAX] = prels, trels
+        meta = dict(snap["meta"])
+        meta["bm25"] = bm25
+        return snap["version"] + 1, {
+            "families": fams,
+            "meta": meta,
+            "stats": M.file_stats(base, stage.rels, ["token"]),
+        }
+
+    return M.transact(base, attempt)
 
 
 #: Relative guard band on the essential/non-essential split. The

@@ -95,7 +95,7 @@ def column_bounds(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, floa
 
 def _layouts(cur: dict) -> dict:
     """The snapshot's per-family z-order meta, `meta["zorder"][family]
-    = {cols, bits, bounds, tail}` — several clustered families (e.g. a
+    = {cols, bits, bounds}` — several clustered families (e.g. a
     records table and an events table) coexist under one store base
     without the writers clobbering each other. The single-family
     shape an earlier round wrote (`{family, cols, ...}` at the top)
@@ -129,21 +129,17 @@ def migrate(base: str) -> int | None:
     into the per-family shape in ONE meta-only CAS commit (data files
     and zones untouched). Returns the committed version, or None when
     the meta is already per-family (a second call commits nothing)."""
-    for _ in range(2):
-        cur = M.read(base)
-        z = cur.get("meta", {}).get("zorder") or {}
+
+    def attempt(snap, _stage):
+        z = snap["meta"].get("zorder") or {}
         if "cols" not in z:
-            return None
-        meta = dict(cur["meta"])
+            return None, None
+        meta = dict(snap["meta"])
         entry = {k: v for k, v in z.items() if k != "family"}
         meta["zorder"] = {z["family"]: entry}
-        try:
-            return M.commit(
-                base, dict(cur["families"]), cur["version"], meta=meta
-            )
-        except M.CommitConflict:
-            continue
-    raise M.CommitConflict("zorder.migrate lost the CAS twice")
+        return snap["version"] + 1, {"families": snap["families"], "meta": meta}
+
+    return M.transact(base, attempt)
 
 
 def cluster_write(
@@ -160,7 +156,7 @@ def cluster_write(
     space), sort within files for row-group-level stats, lift per-file
     [min, max] for every clustered column from the parquet footers,
     and publish data + zone maps in ONE manifest CAS swap. Returns the
-    committed version. Retries once on a racing writer."""
+    committed version."""
     bounds = column_bounds(df, cols)
     z = zvalue(cols, bounds, bits)
     clustered = (
@@ -169,24 +165,20 @@ def cluster_write(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    with M.write_intent(base):
-        _layouts(M.read(base))  # refuse an older meta shape before staging
-        rels = M.stage_df(clustered, base, family)
-        stats = M.file_stats(base, rels, cols)
-        entry = {"cols": cols, "bits": bits,
-                 "bounds": {c: list(bounds[c]) for c in cols}, "tail": []}
-        for _ in range(2):
-            cur = M.read(base)
-            fams = dict(cur.get("families", {}))
-            fams[family] = rels
-            meta = _merge_zorder(cur, family, entry)
-            try:
-                return M.commit(
-                    base, fams, cur.get("version", 0), meta=meta, stats=stats
-                )
-            except M.CommitConflict:
-                continue
-        raise M.CommitConflict(f"cluster_write({family}) lost the CAS twice")
+    entry = {"cols": cols, "bits": bits,
+             "bounds": {c: list(bounds[c]) for c in cols}}
+
+    def attempt(snap, stage):
+        meta = _merge_zorder(snap, family, entry)  # refuses an older meta shape
+        fams = dict(snap["families"])
+        fams[family] = stage.df(clustered, family)
+        return snap["version"] + 1, {
+            "families": fams,
+            "meta": meta,
+            "stats": M.file_stats(base, fams[family], cols),
+        }
+
+    return M.transact(base, attempt)
 
 
 def pruned_files(
@@ -232,97 +224,3 @@ def read_clustered(
         if hi is not None:
             df = df.filter(F.col(col) <= F.lit(hi))
     return df
-
-
-def cluster_append(
-    df: DataFrame, base: str, family: str, num_files: int | None = None
-) -> int:
-    """Append a micro-batch WITHOUT re-laying-out the family (the
-    ingest path: full re-clustering per batch would be quadratic over
-    a table's life). Appended files still get per-file zone maps for
-    the family's clustered columns, so pruning stays CORRECT — just
-    looser on the unclustered tail, whose zones span whatever the
-    batch happened to contain. `cluster_maintain` periodically folds
-    the tail back into z-order. Returns the committed version."""
-    with M.write_intent(base):
-        cur = M.read(base)
-        zmeta = zorder_meta(cur, family)
-        if not zmeta:
-            raise ValueError(
-                f"family {family!r} has no zorder layout to append to; "
-                "run cluster_write first"
-            )
-        cols = zmeta["cols"]
-        towrite = df.repartition(num_files) if num_files else df
-        rels = M.stage_df(towrite, base, family)
-        stats = M.file_stats(base, rels, cols)
-        for _ in range(2):
-            cur = M.read(base)
-            fams = dict(cur.get("families", {}))
-            fams[family] = list(fams.get(family, [])) + rels
-            snap = zorder_meta(cur, family) or zmeta
-            entry = {**snap, "tail": list(snap.get("tail", [])) + rels}
-            meta = _merge_zorder(cur, family, entry)
-            try:
-                return M.commit(
-                    base, fams, cur.get("version", 0), meta=meta, stats=stats
-                )
-            except M.CommitConflict:
-                continue
-        raise M.CommitConflict(f"cluster_append({family}) lost the CAS twice")
-
-
-def cluster_maintain(
-    spark: SparkSession,
-    base: str,
-    family: str,
-    min_tail_files: int = 8,
-    num_files: int | None = None,
-) -> int | None:
-    """Fold the unclustered append tail back into z-order — the
-    OPTIMIZE cadence: reads ONLY the tail files (cost ∝ appended data,
-    never the already-clustered bulk), z-orders them with the layout's
-    recorded bounds (values outside clamp to edge buckets — correct,
-    just wider zones), and swaps tail → clustered files in one commit.
-    No-op (returns None) while the tail is below `min_tail_files`.
-    Readers are snapshot-isolated throughout; a racing append simply
-    lands in the next tail."""
-    import os as _os
-
-    cur = M.read(base)
-    zmeta = zorder_meta(cur, family)
-    if not zmeta:
-        raise ValueError(f"family {family!r} has no zorder layout")
-    tail = list(zmeta.get("tail", []))
-    if len(tail) < min_tail_files:
-        return None
-    cols, bits = zmeta["cols"], zmeta["bits"]
-    bounds = {c: tuple(v) for c, v in zmeta["bounds"].items()}
-    with M.write_intent(base):
-        df = spark.read.parquet(*[_os.path.join(base, r) for r in tail])
-        z = zvalue(cols, bounds, bits)
-        nf = num_files or max(1, len(tail) // 2)
-        clustered = (
-            df.withColumn("__z", z)
-            .repartitionByRange(nf, "__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-        rels = M.stage_df(clustered, base, family)
-        stats = M.file_stats(base, rels, cols)
-        for _ in range(2):
-            cur = M.read(base)
-            fams = dict(cur.get("families", {}))
-            kept = [r for r in fams.get(family, []) if r not in set(tail)]
-            fams[family] = kept + rels
-            snap = zorder_meta(cur, family) or zmeta
-            new_tail = [r for r in snap.get("tail", []) if r not in set(tail)]
-            entry = {**snap, "tail": new_tail}
-            meta = _merge_zorder(cur, family, entry)
-            try:
-                return M.commit(
-                    base, fams, cur.get("version", 0), meta=meta, stats=stats
-                )
-            except M.CommitConflict:
-                continue
-        raise M.CommitConflict(f"cluster_maintain({family}) lost the CAS twice")

@@ -133,14 +133,6 @@ _FULL_SCHEMA = T.StructType(
 )
 
 
-def _stage_write(
-    df: DataFrame, base: str, data_name: str, partition_by: str | None = None
-) -> list[str]:
-    """Stage a write as immutable uniquely-named files; invisible
-    until a manifest commit lists them (manifest.stage_df)."""
-    return Mf.stage_df(df, base, data_name, partition_by)
-
-
 def _bucket_files(rels: list[str], buckets, tag: str) -> list[str]:
     """Python-side partition pruning over manifest relpaths: the files
     under a `tag=<b>` directory for one of `buckets` — at 100 TB the
@@ -249,15 +241,15 @@ def _wr_col():
     return F.conv(F.substring("whash", 1, 1), 16, 10).cast("int")
 
 
-def _stage_whashes(df: DataFrame, base: str) -> list[str]:
+def _stage_whashes(df: DataFrame, stage) -> list[str]:
     """Stage windows in the wr layout: one file per touched range,
     rows sorted by whash (tight row-group stats for free)."""
-    return _stage_write(
+    return stage.df(
         df.select("doc_id", "pos", "whash")
         .withColumn("wr", _wr_col())
         .repartition("wr")
         .sortWithinPartitions("whash"),
-        base, "whashes", partition_by="wr",
+        "whashes", partition_by="wr",
     )
 
 
@@ -424,22 +416,18 @@ def truncate_change_log(spark: SparkSession, base: str) -> int:
     checkpoints have passed the current version: the inserts half of
     the feed costs nothing to keep (it IS the data), but delete/update
     rows accumulate with mutation history. Returns files retired."""
-    with Mf.write_intent(base):
-        while True:
-            snap = Mf.read(base)
-            rels = snap["families"].get("cdc", [])
-            if not rels:
-                return 0
-            families = dict(snap["families"])
-            families.pop("cdc")
-            try:
-                Mf.commit(
-                    base, families, expect_version=snap["version"],
-                    meta={"kind": "truncate_change_log", "data_change": False},
-                )
-                return len(rels)
-            except Mf.CommitConflict:
-                continue
+
+    def attempt(snap, _stage):
+        families = dict(snap["families"])
+        rels = families.pop("cdc", [])
+        if not rels:
+            return 0, None
+        return len(rels), {
+            "families": families,
+            "meta": {"kind": "truncate_change_log", "data_change": False},
+        }
+
+    return Mf.transact(base, attempt)
 
 
 def read_docs_by_ids(
@@ -621,11 +609,10 @@ def ingest(
          atomically, so the round-4 crash window (docs landed, bands
          missing) and its replay-heal are gone by construction.
 
-    Concurrency: dedup runs against a pinned manifest snapshot; if
-    another writer commits first, the CAS fails, this writer discards
-    its staged files and re-runs the dedup against the new snapshot —
-    two racing ingests of overlapping content can never both land the
-    same fingerprint (pinned by
+    Concurrency: dedup runs against a pinned manifest snapshot in one
+    `manifest.transact`, which re-runs it against the winner's
+    snapshot after a lost CAS — two racing ingests of overlapping
+    content can never both land the same fingerprint (pinned by
     test_corpus_store::test_concurrent_ingests_never_duplicate)."""
     prepared = _prepared(batch).cache()
     n_in = prepared.count()
@@ -648,110 +635,95 @@ def ingest(
     n_batch_dup = (n_in - n_gated_out) - n_canon
     buckets = [r.fp_bucket for r in canon.select("fp_bucket").distinct().collect()]
 
-    with Mf.write_intent(base):
-        while True:
-            snap = Mf.read(base)
-            doc_rels = snap["families"].get("docs", [])
-            slice_rels = _bucket_files(doc_rels, buckets, "fp_bucket")
-            if slice_rels:
-                store_slice = _read_docs_files(spark, base, slice_rels).select(
-                    "doc_id", "fp", "text"
-                )
-                fresh = canon.join(store_slice.select("fp"), "fp", "left_anti")
-            else:
-                fresh = canon
-            fresh = fresh.cache()
-            n_fresh = fresh.count()
-            n_known = n_canon - n_fresh
 
-            n_near_dup = 0
-            if near_dup_threshold is not None and n_fresh:
-                fresh, n_near_dup = _near_dup_filter(
-                    spark, base, fresh, near_dup_threshold, snap
-                )
+    def attempt(snap, stage):
+        doc_rels = snap["families"].get("docs", [])
+        slice_rels = _bucket_files(doc_rels, buckets, "fp_bucket")
+        if slice_rels:
+            store_slice = _read_docs_files(spark, base, slice_rels).select(
+                "doc_id", "fp", "text"
+            )
+            fresh = canon.join(store_slice.select("fp"), "fp", "left_anti")
+        else:
+            fresh = canon
+        fresh = fresh.cache()
+        n_fresh = fresh.count()
 
-            n_substr_stripped = n_substr_dropped = 0
-            accepted_wins = None
-            if substr_window is not None and n_fresh - n_near_dup:
-                (
-                    fresh,
-                    accepted_wins,
-                    n_substr_stripped,
-                    n_substr_dropped,
-                ) = _substr_filter(
-                    spark, base, fresh, substr_window, min_tokens, snap
-                )
-            n_added = n_fresh - n_near_dup - n_substr_dropped
+        n_near_dup = 0
+        if near_dup_threshold is not None and n_fresh:
+            fresh, n_near_dup = _near_dup_filter(
+                spark, base, fresh, near_dup_threshold, snap
+            )
 
-            if not n_added:
-                fresh.unpersist()
-                break
-            # checkpoint so the band write below reuses the dedup result
-            # instead of re-running the whole plan
-            fresh = fresh.localCheckpoint()
-            # repartition ON the partition column first: without it every
-            # shuffle partition writes its own file into every bucket it
-            # holds rows for (up to tasks x buckets files PER INGEST — the
-            # small-files explosion scripts/store_bench.py measured as
-            # linearly-growing round time); with it, one file per touched
-            # bucket per ingest
-            new_docs = _stage_write(
-                fresh.repartition("fp_bucket"), base, "corpus",
-                partition_by="fp_bucket",
+        n_substr_stripped = n_substr_dropped = 0
+        accepted_wins = None
+        if substr_window is not None and n_fresh - n_near_dup:
+            (
+                fresh,
+                accepted_wins,
+                n_substr_stripped,
+                n_substr_dropped,
+            ) = _substr_filter(
+                spark, base, fresh, substr_window, min_tokens, snap
             )
-            new_bands = (
-                _stage_write(
-                    _doc_bands(fresh).repartition("bh_bucket"),
-                    base, "bands", partition_by="bh_bucket",
-                )
-                if near_dup_threshold is not None
-                else []
+        n_added = n_fresh - n_near_dup - n_substr_dropped
+        counts = {
+            "n_known": n_canon - n_fresh,
+            "n_near_dup": n_near_dup,
+            "n_added": n_added,
+        }
+        if substr_window is not None:
+            counts["n_substr_stripped"] = n_substr_stripped
+            counts["n_substr_dropped"] = n_substr_dropped
+
+        if not n_added:
+            fresh.unpersist()
+            return counts, None
+        # checkpoint so the band write below reuses the dedup result
+        # instead of re-running the whole plan
+        fresh = fresh.localCheckpoint()
+        # repartition ON the partition column first: without it every
+        # shuffle partition writes its own file into every bucket it
+        # holds rows for (up to tasks x buckets files PER INGEST — the
+        # small-files explosion scripts/store_bench.py measured as
+        # linearly-growing round time); with it, one file per touched
+        # bucket per ingest
+        new_docs = stage.df(
+            fresh.repartition("fp_bucket"), "corpus", partition_by="fp_bucket"
+        )
+        families = dict(snap["families"])
+        families["docs"] = doc_rels + new_docs
+        if near_dup_threshold is not None:
+            new_bands = stage.df(
+                _doc_bands(fresh).repartition("bh_bucket"),
+                "bands", partition_by="bh_bucket",
             )
-            # whash sidecar publishes in the SAME swap as the docs it
-            # mirrors — accepted text and its substring index can
-            # never desync (the band-sidecar guarantee, extended)
-            new_whashes = (
-                _stage_whashes(accepted_wins, base)
-                if accepted_wins is not None
-                else []
-            )
-            families = dict(snap["families"])
-            families["docs"] = doc_rels + new_docs
             if new_bands:
                 families["bands"] = snap["families"].get("bands", []) + new_bands
-            if new_whashes:
-                families["whashes"] = (
-                    snap["families"].get("whashes", []) + new_whashes
-                )
-            try:
-                Mf.commit(
-                    base, families, expect_version=snap["version"],
-                    meta={"kind": "ingest"},
-                    stats=_id_zones(base, new_docs + new_whashes),
-                )
-                fresh.unpersist()
-                break
-            except Mf.CommitConflict:
-                # loser path: another writer landed first — our staged
-                # files are unreferenced; discard and re-validate the
-                # dedup against the new snapshot
-                Mf.discard(base, new_docs + new_bands + new_whashes)
-                fresh.unpersist()
+        # whash sidecar publishes in the SAME swap as the docs it
+        # mirrors — accepted text and its substring index can never
+        # desync (the band-sidecar guarantee, extended)
+        new_whashes = (
+            _stage_whashes(accepted_wins, stage) if accepted_wins is not None else []
+        )
+        if new_whashes:
+            families["whashes"] = snap["families"].get("whashes", []) + new_whashes
+        fresh.unpersist()
+        return counts, {
+            "families": families,
+            "meta": {"kind": "ingest"},
+            "stats": _id_zones(base, new_docs + new_whashes),
+        }
 
+    counts = Mf.transact(base, attempt)
     prepared.unpersist()
     canon.unpersist()
-    stats = {
+    return {
         "n_in": n_in,
         "n_gated": n_gated_out,
         "n_batch_dup": n_batch_dup,
-        "n_known": n_known,
-        "n_near_dup": n_near_dup,
-        "n_added": n_added,
+        **counts,
     }
-    if substr_window is not None:
-        stats["n_substr_stripped"] = n_substr_stripped
-        stats["n_substr_dropped"] = n_substr_dropped
-    return stats
 
 
 def _near_dup_filter(
@@ -874,7 +846,6 @@ def start_ingest_stream(
     )
 
 
-@Mf.with_write_intent
 def delete_where(spark: SparkSession, base: str, predicate) -> int:
     """Targeted deletion (retention / right-to-be-forgotten sweep):
     remove every stored document matching `predicate` (a Column over
@@ -898,11 +869,11 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
     sidecars rewrite only the files that can hold a doomed doc's rows.
     """
     hit = F.coalesce(predicate, F.lit(False))
-    while True:
-        snap = Mf.read(base)
+
+    def attempt(snap, stage):
         doc_rels = snap["families"].get("docs", [])
         if not doc_rels:
-            return 0
+            return 0, None
         band_rels = _sidecar_rels(snap, "bands")
         whash_rels = _sidecar_rels(snap, "whashes")
         table = _read_docs_files(spark, base, doc_rels)
@@ -912,15 +883,14 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
         doomed = table.filter(hit).select("doc_id", "fp", "fp_bucket").localCheckpoint()
         n_deleted = doomed.count()
         if not n_deleted:
-            return 0
+            return 0, None
         buckets = [
             r.fp_bucket for r in doomed.select("fp_bucket").distinct().collect()
         ]
         touched_rels = _bucket_files(doc_rels, buckets, "fp_bucket")
         kept = _read_docs_files(spark, base, touched_rels).filter(~hit)
-        new_docs = _stage_write(
-            kept.repartition("fp_bucket"), base, "corpus",
-            partition_by="fp_bucket",
+        new_docs = stage.df(
+            kept.repartition("fp_bucket"), "corpus", partition_by="fp_bucket"
         )
 
         # sidecars rewrite ONLY their touched files (round-6 item 6):
@@ -947,10 +917,10 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
                 remaining = _read_band_files(
                     spark, base, touched_band_rels
                 ).join(doomed.select("doc_id"), "doc_id", "left_anti")
-                new_bands = _stage_write(
+                new_bands = stage.df(
                     remaining.withColumn("bh_bucket", _band_bucket_col())
                     .repartition("bh_bucket"),
-                    base, "bands", partition_by="bh_bucket",
+                    "bands", partition_by="bh_bucket",
                 )
 
         # the ExactSubstr sidecar forgets deleted docs in the SAME
@@ -978,13 +948,13 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
                 remaining_w = _read_whash_files(
                     spark, base, touched_whash_rels
                 ).join(doomed.select("doc_id"), "doc_id", "left_anti")
-                new_whashes = _stage_whashes(remaining_w, base)
+                new_whashes = _stage_whashes(remaining_w, stage)
 
         # change-feed rows for the removed docs, staged into the SAME
         # swap (round 6): a downstream consumer (index mirror, RTBF
         # audit) learns exactly which doc_ids vanished without diffing
         # snapshots — and exactly atomically with the vanishing
-        new_cdc = _stage_write(
+        new_cdc = stage.df(
             doomed.select(
                 F.lit("delete").alias("op"),
                 "doc_id",
@@ -994,7 +964,7 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
                 "fp",
                 F.lit(None).cast("long").alias("ntok"),
             ).coalesce(1),
-            base, "cdc",
+            "cdc",
         )
 
         families = dict(snap["families"])
@@ -1008,52 +978,45 @@ def delete_where(spark: SparkSession, base: str, predicate) -> int:
                 r for r in whash_rels if r not in set(touched_whash_rels)
             ] + new_whashes
         families["cdc"] = snap["families"].get("cdc", []) + new_cdc
-        try:
-            Mf.commit(
-                base, families, expect_version=snap["version"],
-                meta={"kind": "delete", "cdc": "log"},
-                stats=_id_zones(base, new_docs + new_whashes),
-            )
-            return n_deleted
-        except Mf.CommitConflict:
-            # a racing writer committed; our rewrite was computed from
-            # a stale snapshot — discard and redo against the new one
-            Mf.discard(base, new_docs + new_bands + new_whashes + new_cdc)
+        return n_deleted, {
+            "families": families,
+            "meta": {"kind": "delete", "cdc": "log"},
+            "stats": _id_zones(base, new_docs + new_whashes),
+        }
+
+    return Mf.transact(base, attempt)
 
 
-def _rewrite(
-    spark: SparkSession, base: str, snap: dict, fams: list[str]
-) -> tuple[dict, list[str], dict]:
+def _rewrite(spark: SparkSession, stage, snap: dict, fams: list[str]) -> dict:
     """Stage the named families of `snap` rewritten whole in the
     current layout — docs one file per fp_bucket, bands one per
-    bh_bucket, whashes one per wr range — and return (the families to
-    commit, the staged relpaths, their doc_id zones). Shared by
+    bh_bucket, whashes one per wr range — and return the commit that
+    publishes them (families + their doc_id zones). Shared by
     `compact` and `migrate`."""
+    base = stage.base
     families = dict(snap["families"])
     if "docs" in fams:
-        families["docs"] = _stage_write(
+        families["docs"] = stage.df(
             _read_docs_files(spark, base, snap["families"].get("docs", []))
             .repartition("fp_bucket"),
-            base, "corpus", partition_by="fp_bucket",
+            "corpus", partition_by="fp_bucket",
         )
     if "bands" in fams:
-        families["bands"] = _stage_write(
+        families["bands"] = stage.df(
             _read_band_files(spark, base, snap["families"].get("bands", []))
             .withColumn("bh_bucket", _band_bucket_col())
             .repartition("bh_bucket"),
-            base, "bands", partition_by="bh_bucket",
+            "bands", partition_by="bh_bucket",
         )
     if "whashes" in fams:
         whashes = _read_whash_files(
             spark, base, snap["families"].get("whashes", [])
         )
-        families["whashes"] = _stage_whashes(whashes, base)
-    staged = [r for f in fams for r in families[f]]
+        families["whashes"] = _stage_whashes(whashes, stage)
     zoned = [r for f in fams if f != "bands" for r in families[f]]
-    return families, staged, _id_zones(base, zoned)
+    return {"families": families, "stats": _id_zones(base, zoned)}
 
 
-@Mf.with_write_intent
 def compact(spark: SparkSession, base: str, files_per_bucket: int = 1) -> int:
     """Maintenance compaction: rewrite the corpus so each fp_bucket
     holds `files_per_bucket` files, and the band sidecar a handful —
@@ -1072,8 +1035,7 @@ def compact(spark: SparkSession, base: str, files_per_bucket: int = 1) -> int:
         )
         return any(c > files_per_bucket for c in per.values())
 
-    while True:
-        snap = Mf.read(base)
+    def attempt(snap, stage):
         rels = {
             "docs": snap["families"].get("docs", []),
             "bands": _sidecar_rels(snap, "bands"),
@@ -1084,18 +1046,13 @@ def compact(spark: SparkSession, base: str, files_per_bucket: int = 1) -> int:
             or _fragmented(rels["bands"], "bh_bucket")
             or _fragmented(rels["whashes"], "wr")
         ):
-            return 0
+            return 0, None
         fams = ["docs"] + [f for f in ("bands", "whashes") if rels[f]]
-        families, staged, stats = _rewrite(spark, base, snap, fams)
-        try:
-            Mf.commit(
-                base, families, expect_version=snap["version"],
-                meta={"kind": "compact", "data_change": False},
-                stats=stats,
-            )
-            return sum(len(v) for v in rels.values())
-        except Mf.CommitConflict:
-            Mf.discard(base, staged)
+        change = _rewrite(spark, stage, snap, fams)
+        change["meta"] = {"kind": "compact", "data_change": False}
+        return sum(len(v) for v in rels.values()), change
+
+    return Mf.transact(base, attempt)
 
 
 def migrate(base: str) -> int:
@@ -1110,31 +1067,22 @@ def migrate(base: str) -> int:
     Idempotent: a current store commits nothing. Returns the number of
     files adopted plus the number rewritten."""
     n = Mf.adopt(base, _DATA_DIRS)
-    with Mf.write_intent(base):
-        while True:
-            snap = Mf.read(base)
-            old = [
-                fam
-                for fam, tag in _SIDECAR_TAGS.items()
-                if any(f"{tag}=" not in r for r in snap["families"].get(fam, []))
-            ]
-            if not old:
-                return n
-            families, staged, stats = _rewrite(
-                SparkSession.active(), base, snap, old
-            )
-            try:
-                Mf.commit(
-                    base, families, expect_version=snap["version"],
-                    meta={"kind": "migrate", "data_change": False},
-                    stats=stats,
-                )
-                return n + sum(len(snap["families"][f]) for f in old)
-            except Mf.CommitConflict:
-                Mf.discard(base, staged)
+
+    def attempt(snap, stage):
+        old = [
+            fam
+            for fam, tag in _SIDECAR_TAGS.items()
+            if any(f"{tag}=" not in r for r in snap["families"].get(fam, []))
+        ]
+        if not old:
+            return n, None
+        change = _rewrite(SparkSession.active(), stage, snap, old)
+        change["meta"] = {"kind": "migrate", "data_change": False}
+        return n + sum(len(snap["families"][f]) for f in old), change
+
+    return Mf.transact(base, attempt)
 
 
-@Mf.with_write_intent
 def substr_sweep(
     spark: SparkSession, base: str, window: int = 50, min_tokens: int = 20
 ) -> dict:
@@ -1156,18 +1104,17 @@ def substr_sweep(
     Returns {n_stripped, n_deleted}."""
     from block_explorer_spark.operators import substrings as Sub
 
-    while True:
-        snap = Mf.read(base)
+    def attempt(snap, stage):
         doc_rels = snap["families"].get("docs", [])
         if not doc_rels:
-            return {"n_stripped": 0, "n_deleted": 0}
+            return {"n_stripped": 0, "n_deleted": 0}, None
         table = _read_docs_files(spark, base, doc_rels)
         stripped = Sub.exact_substring_dedup(
             table, "doc_id", "text", window
         ).localCheckpoint()
         n_stripped = stripped.count()
         if not n_stripped:
-            return {"n_stripped": 0, "n_deleted": 0}
+            return {"n_stripped": 0, "n_deleted": 0}, None
 
         rebuilt = _prepared(
             table.select("doc_id", "lang", "source")
@@ -1214,31 +1161,25 @@ def substr_sweep(
             "doc_id",
             "left_semi",
         ).filter(F.col("fp_bucket").isin(moved))
-        new_docs = _stage_write(
-            keep_docs.repartition("fp_bucket"), base, "corpus",
-            partition_by="fp_bucket",
+        new_docs = stage.df(
+            keep_docs.repartition("fp_bucket"), "corpus", partition_by="fp_bucket"
         )
         families = dict(snap["families"])
         families["docs"] = [
             r for r in doc_rels if r not in set(touched_rels)
         ] + new_docs
 
-        staged_extra: list[str] = []
         new_whashes: list[str] = []
         if snap["families"].get("whashes") is not None and (
             snap["families"].get("whashes") or n_stripped
         ):
-            new_whashes = _stage_whashes(_doc_whashes(final, window), base)
+            new_whashes = _stage_whashes(_doc_whashes(final, window), stage)
             families["whashes"] = new_whashes
-            # copy, not alias: += below must never mutate the family list
-            staged_extra = list(new_whashes)
         if snap["families"].get("bands"):
-            new_bands = _stage_write(
+            families["bands"] = stage.df(
                 _doc_bands(final).repartition("bh_bucket"),
-                base, "bands", partition_by="bh_bucket",
+                "bands", partition_by="bh_bucket",
             )
-            families["bands"] = new_bands
-            staged_extra += new_bands
 
         # change feed (round 6): survivors whose text was rewritten are
         # 'update' rows (full new document), stripped docs that fell
@@ -1261,23 +1202,17 @@ def substr_sweep(
                 F.lit(None).cast("long").alias("ntok"),
             )
         )
-        new_cdc = _stage_write(
-            updates.unionByName(deleted_rows).coalesce(1), base, "cdc"
-        )
+        new_cdc = stage.df(updates.unionByName(deleted_rows).coalesce(1), "cdc")
         families["cdc"] = snap["families"].get("cdc", []) + new_cdc
-        staged_extra += new_cdc
-        try:
-            Mf.commit(
-                base, families, expect_version=snap["version"],
-                meta={"kind": "sweep", "cdc": "log"},
-                stats=_id_zones(base, new_docs + new_whashes),
-            )
-            return {"n_stripped": n_stripped - n_deleted, "n_deleted": n_deleted}
-        except Mf.CommitConflict:
-            Mf.discard(base, new_docs + staged_extra)
+        return {"n_stripped": n_stripped - n_deleted, "n_deleted": n_deleted}, {
+            "families": families,
+            "meta": {"kind": "sweep", "cdc": "log"},
+            "stats": _id_zones(base, new_docs + new_whashes),
+        }
+
+    return Mf.transact(base, attempt)
 
 
-@Mf.with_write_intent
 def canonicalize(spark: SparkSession, base: str) -> int:
     """Re-canonicalization sweep: enforce one-doc-per-fingerprint
     (min doc_id wins) across the whole store, returning the number of
@@ -1313,5 +1248,4 @@ def canonicalize(spark: SparkSession, base: str) -> int:
     if not n:
         return 0
     ids = [r.doc_id for r in doomed.select("doc_id").distinct().collect()]
-    return_n = delete_where(spark, base, F.col("doc_id").isin(ids))
-    return return_n
+    return delete_where(spark, base, F.col("doc_id").isin(ids))

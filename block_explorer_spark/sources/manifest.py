@@ -1,13 +1,11 @@
 """Mini transaction log for parquet-backed stores (parquet's
-relational tables, corpus_store, vector_store): optimistic-concurrency
-manifest commits.
+relational tables, corpus_store, vector_store, the postings index and
+z-order families): optimistic-concurrency manifest commits.
 
 The reference gets transactional writes from Postgres
 (`etl/storage/storage.go:28-82`); plain parquet directories have no
-such log, so the round-4 stores were single-writer by contract with a
-periodic canonicalize sweep as the repair. This module closes both
-gaps with the standard lakehouse recipe (the Delta/Iceberg core,
-reduced to its minimum):
+such log. This module supplies one with the standard lakehouse recipe
+(the Delta/Iceberg core, reduced to its minimum):
 
   - data files are IMMUTABLE and uniquely named; writers stage them
     into the data directory but nothing reads a file that is not
@@ -18,14 +16,31 @@ reduced to its minimum):
   - commit is compare-and-swap: the writer names the version it read
     (`expect_version`); the manifest is written to a temp file and
     `os.link`ed to its final name — link(2) fails atomically if the
-    version already exists, so exactly one of two racing writers wins
-    and the loser re-reads, re-validates, and retries;
+    version already exists, so exactly one of two racing writers wins;
   - deletes never remove files inline: a new manifest simply stops
     listing them, so a reader holding the old manifest keeps a
     consistent snapshot; `vacuum` physically removes unreferenced
     files later.
 
-Round 6 adds the two read-side services the commit log makes cheap:
+Every writer in the package commits through ONE protocol, `transact`
+(only `adopt`'s one-shot migration commit is its own):
+
+  - the write holds a write intent (the vacuum lease) throughout;
+  - each attempt reads the latest snapshot, plans ONLY from it, and
+    stages every file through the `Staging` recorder it is handed, so
+    the helper knows each staged relpath by name;
+  - the commit names that snapshot's version. On CommitConflict the
+    attempt's files are discarded and it replans against the winner's
+    snapshot — no retry bound, because each loss means another writer
+    made progress. Grafting staged files onto a newer manifest instead
+    would be wrong for any plan read from the snapshot (two racing
+    tail merges would both publish the same rows);
+  - an exception before the CAS discards the attempt's files and
+    propagates; an exception raised inside `commit` (other than the
+    conflict) leaves them in place — the link may already have
+    published them, and vacuum reclaims them if it did not.
+
+Two read-side services ride on the log:
 
   - FILE STATISTICS (zone maps): `commit` accepts per-file column
     min/max (`file_stats` lifts them straight out of the parquet
@@ -46,7 +61,6 @@ On a shared filesystem (HDFS/NFS/local) link/rename are atomic; on
 object stores the same protocol runs against a conditional-PUT
 (if-none-match) — the commit primitive is the only thing to swap.
 """
-
 from __future__ import annotations
 
 import json
@@ -58,7 +72,7 @@ from block_explorer_spark import placement
 
 class CommitConflict(Exception):
     """Another writer committed the version this writer expected to
-    create. Re-read the manifest, re-validate, retry."""
+    create (`transact` replans on it)."""
 
 
 _MANIFEST_DIR = "_manifest"
@@ -484,8 +498,8 @@ def unmanifested_files(base: str, data_dir_names: list[str]) -> dict[str, list[s
     found by test_multiwriter's contention loop). Detection: scan the
     data dirs FIRST, read the active write intents AFTER, and drop
     any candidate modified at/after the oldest active intent's start.
-    A writer always registers its intent before staging (upsert's
-    write_intent), so any staged file an earlier scan could see comes
+    A writer always registers its intent before staging (`transact`
+    holds it), so any staged file an earlier scan could see comes
     from an intent the later listing must show; genuinely-legacy and
     out-of-band files predate every live intent and still adopt."""
     listed: set[str] = set()
@@ -593,9 +607,10 @@ def require_migrated(
 
 
 def discard(base: str, relpaths: list[str]) -> None:
-    """Remove staged-but-uncommitted files (the loser's cleanup after
-    a CommitConflict). Only ever called on files the caller itself
-    staged, so no reader can hold them."""
+    """Remove staged-but-uncommitted files (`transact`'s cleanup of an
+    attempt that lost its CAS, raised before it, or had nothing to
+    commit). Only ever called on files that attempt staged, so no
+    reader can hold them."""
     for rel in relpaths:
         try:
             os.unlink(os.path.join(base, rel))
@@ -650,19 +665,63 @@ class write_intent:
         return False
 
 
-def with_write_intent(fn):
-    """Decorator for writer entry points shaped `fn(spark, base, ...)`:
-    registers a write intent (vacuum lease) for the duration of the
-    call, so a concurrent vacuum never deletes this writer's staged
-    files mid-commit-window."""
-    import functools
 
-    @functools.wraps(fn)
-    def wrapper(spark, base, *args, **kwargs):
-        with write_intent(base):
-            return fn(spark, base, *args, **kwargs)
+class Staging:
+    """The recorder one `transact` attempt stages its files through:
+    every relpath it hands out or stages is recorded in `rels`, so the
+    helper can discard exactly the attempt's files. Safe to share
+    between staging threads (list appends are atomic)."""
 
-    return wrapper
+    def __init__(self, base: str):
+        self.base = base
+        self.rels: list[str] = []
+
+    def df(
+        self, df, data_name: str, partition_by: str | None = None,
+        n_rows: int | None = None,
+    ) -> list[str]:
+        """`stage_df` into this attempt."""
+        rels = stage_df(df, self.base, data_name, partition_by, n_rows)
+        self.rels.extend(rels)
+        return rels
+
+    def file(self, *dirs: str) -> str:
+        """A fresh parquet relpath under base/dirs for a file the
+        caller writes itself (driver-side staging). Recorded BEFORE the
+        write, so a write that fails half-way is discarded too."""
+        os.makedirs(os.path.join(self.base, *dirs), exist_ok=True)
+        rel = os.path.join(*dirs, f"part-{uuid.uuid4().hex}.parquet")
+        self.rels.append(rel)
+        return rel
+
+
+def transact(base: str, attempt):
+    """Run one write transaction on the store at `base` (the protocol
+    of the module docstring) and return the attempt's result.
+
+    `attempt(snap, stage)` plans from the snapshot `snap` only, stages
+    through `stage` (a `Staging`), and returns `(result, change)`:
+    `change` is the keywords of the `commit` to publish — `families`,
+    and optionally `meta` and `stats` — or None when there is nothing
+    to commit (any files it staged are then discarded)."""
+    with write_intent(base):
+        while True:
+            snap = read(base)
+            stage = Staging(base)
+            try:
+                result, change = attempt(snap, stage)
+            except BaseException:
+                discard(base, stage.rels)
+                raise
+            if change is None:
+                discard(base, stage.rels)
+                return result
+            try:
+                commit(base, expect_version=snap["version"], **change)
+            except CommitConflict:
+                discard(base, stage.rels)
+                continue
+            return result
 
 
 def _oldest_inflight_start(base: str) -> float | None:

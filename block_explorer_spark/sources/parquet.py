@@ -324,37 +324,35 @@ def build_object_index(spark: SparkSession, base: str) -> int:
     sidecar + the meta flag in one CAS swap. Returns the number of
     index pairs."""
     _require_migrated(base)
-    with Mf.write_intent(base):
-        while True:
-            snap = Mf.read(base)
-            rels = snap["families"].get("records", [])
-            if not rels:
-                return 0
-            pairs = (
-                _read_rels(spark, base, "records", rels)
-                .select(obj_key_expr().alias(OBJ_KEY), "pulse_bucket")
-                .distinct()
-                .repartitionByRange(4, OBJ_KEY)
-                .sortWithinPartitions(OBJ_KEY)
-            )
-            irels = Mf.stage_df(pairs, base, OBJIDX)
-            families = dict(snap["families"])
-            families[OBJIDX] = irels
-            layout = dict(snap.get("meta", {}).get("layout", {}))
-            layout["objidx"] = "full"
-            layout.pop("objidx_pending", None)  # full scan covers all
-            try:
-                Mf.commit(
-                    base, families, expect_version=snap["version"],
-                    meta={"kind": "build_objidx", "data_change": False,
-                          "layout": layout},
-                    stats=Mf.file_stats(base, irels, [OBJ_KEY]),
-                )
-                return spark.read.parquet(
-                    *[os.path.join(base, r) for r in irels]
-                ).count()
-            except Mf.CommitConflict:
-                Mf.discard(base, irels)
+
+    def attempt(snap, stage):
+        rels = snap["families"].get("records", [])
+        if not rels:
+            return None, None
+        pairs = (
+            _read_rels(spark, base, "records", rels)
+            .select(obj_key_expr().alias(OBJ_KEY), "pulse_bucket")
+            .distinct()
+            .repartitionByRange(4, OBJ_KEY)
+            .sortWithinPartitions(OBJ_KEY)
+        )
+        irels = stage.df(pairs, OBJIDX)
+        families = dict(snap["families"])
+        families[OBJIDX] = irels
+        layout = dict(snap.get("meta", {}).get("layout", {}))
+        layout["objidx"] = "full"
+        layout.pop("objidx_pending", None)  # full scan covers all
+        return irels, {
+            "families": families,
+            "meta": {"kind": "build_objidx", "data_change": False,
+                     "layout": layout},
+            "stats": Mf.file_stats(base, irels, [OBJ_KEY]),
+        }
+
+    irels = Mf.transact(base, attempt)
+    if irels is None:
+        return 0
+    return spark.read.parquet(*[os.path.join(base, r) for r in irels]).count()
 
 
 def maintain_object_index(
@@ -371,51 +369,44 @@ def maintain_object_index(
     cur = Mf.read(base)
     if len(cur["families"].get(OBJIDX, [])) < min_files and not _objidx_pending(cur):
         return None
-    with Mf.write_intent(base):
-        while True:
-            snap = Mf.read(base)
-            rels = snap["families"].get(OBJIDX, [])
-            live = set(snap["families"].get("records", []))
-            pending = [r for r in _objidx_pending(snap) if r in live]
-            if len(rels) < min_files and not pending:
-                return None
-            live_buckets = sorted(
-                {b for r in live if (b := _rel_bucket(r)) is not None}
+
+    def attempt(snap, stage):
+        rels = snap["families"].get(OBJIDX, [])
+        live = set(snap["families"].get("records", []))
+        pending = [r for r in _objidx_pending(snap) if r in live]
+        if len(rels) < min_files and not pending:
+            return None, None
+        live_buckets = sorted(
+            {b for r in live if (b := _rel_bucket(r)) is not None}
+        )
+        pairs = spark.read.parquet(*[os.path.join(base, r) for r in rels])
+        if pending:
+            # fold the deferred commits' pairs (skip-or-batch): cost ∝
+            # the bounded pending set, not the table
+            deferred = (
+                _read_rels(spark, base, "records", pending)
+                .select(obj_key_expr().alias(OBJ_KEY), "pulse_bucket")
             )
-            pairs = spark.read.parquet(
-                *[os.path.join(base, r) for r in rels]
-            )
-            if pending:
-                # fold the deferred commits' pairs (skip-or-batch):
-                # cost ∝ the bounded pending set, not the table
-                deferred = (
-                    _read_rels(spark, base, "records", pending)
-                    .select(obj_key_expr().alias(OBJ_KEY), "pulse_bucket")
-                )
-                pairs = pairs.unionByName(deferred)
-            pairs = pairs.distinct()
-            if live_buckets:
-                pairs = pairs.filter(F.col("pulse_bucket").isin(live_buckets))
-            else:
-                pairs = pairs.limit(0)
-            merged = pairs.repartitionByRange(4, OBJ_KEY).sortWithinPartitions(
-                OBJ_KEY
-            )
-            irels = Mf.stage_df(merged, base, OBJIDX)
-            families = dict(snap["families"])
-            families[OBJIDX] = irels
-            layout = dict(snap.get("meta", {}).get("layout", {}))
-            layout.pop("objidx_pending", None)
-            try:
-                Mf.commit(
-                    base, families, expect_version=snap["version"],
-                    meta={"kind": "maintain_objidx", "data_change": False,
-                          "layout": layout},
-                    stats=Mf.file_stats(base, irels, [OBJ_KEY]),
-                )
-                return len(irels)
-            except Mf.CommitConflict:
-                Mf.discard(base, irels)
+            pairs = pairs.unionByName(deferred)
+        pairs = pairs.distinct()
+        if live_buckets:
+            pairs = pairs.filter(F.col("pulse_bucket").isin(live_buckets))
+        else:
+            pairs = pairs.limit(0)
+        merged = pairs.repartitionByRange(4, OBJ_KEY).sortWithinPartitions(OBJ_KEY)
+        irels = stage.df(merged, OBJIDX)
+        families = dict(snap["families"])
+        families[OBJIDX] = irels
+        layout = dict(snap.get("meta", {}).get("layout", {}))
+        layout.pop("objidx_pending", None)
+        return len(irels), {
+            "families": families,
+            "meta": {"kind": "maintain_objidx", "data_change": False,
+                     "layout": layout},
+            "stats": Mf.file_stats(base, irels, [OBJ_KEY]),
+        }
+
+    return Mf.transact(base, attempt)
 
 
 def _object_buckets(base: str, m: dict, k: int) -> list[int] | None:
@@ -659,14 +650,12 @@ def _file_keys(base: str, rels: list[str], keys: list[str]) -> set:
     return out
 
 
-def _stage_arrow(tbl, base: str, name: str) -> list[str]:
-    """Driver-side twin of Mf.stage_df(_layout(...)): one parquet file
+def _stage_arrow(tbl, stage, name: str) -> list[str]:
+    """Driver-side twin of stage.df(_layout(...)): one parquet file
     per touched bucket under base/name/pulse_bucket=N/, records rows
     obj_key-clustered and in-file sorted exactly like _layout. Files
     are invisible until a manifest commit lists them (same contract as
-    stage_df; the caller holds a write intent, so vacuum keeps off)."""
-    import uuid
-
+    stage_df; `stage` is the transact attempt's recorder)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as papq
@@ -695,12 +684,12 @@ def _stage_arrow(tbl, base: str, name: str) -> list[str]:
                     null_placement="at_start",
                 )
             )
-        sub = sub.drop_columns(["pulse_bucket"])
-        d = os.path.join(base, name, f"pulse_bucket={b}")
-        os.makedirs(d, exist_ok=True)
-        fn = f"part-{uuid.uuid4().hex}.parquet"
-        papq.write_table(sub, os.path.join(d, fn), compression="snappy")
-        out.append(os.path.join(name, f"pulse_bucket={b}", fn))
+        rel = stage.file(name, f"pulse_bucket={b}")
+        papq.write_table(
+            sub.drop_columns(["pulse_bucket"]),
+            os.path.join(stage.base, rel), compression="snappy",
+        )
+        out.append(rel)
     return out
 
 
@@ -736,7 +725,8 @@ def _plan_and_stage_arrow(
     tbl,
     buckets: list[int],
     pulse_bounds: tuple[int, int],
-) -> tuple[list[str], dict[str, list[str]], list[str]] | None:
+    stage,
+) -> tuple[dict[str, list[str]], list[str]] | None:
     """Driver-side twin of _plan_and_stage for an Arrow-collected
     batch under key→bucket affinity. Returns None when the touched
     file bytes exceed placement.MERGE_BYTES — the caller then reruns the
@@ -769,8 +759,7 @@ def _plan_and_stage_arrow(
         else:
             collide = bool(_file_keys(base, cand, keys) & batch_keys)
     if not collide:
-        new_rels = _stage_arrow(tbl, base, name)
-        fams = {name: rels + new_rels}
+        fams = {name: rels + _stage_arrow(tbl, stage, name)}
     else:
         if existing is None:
             if _rels_bytes(base, touched) > placement.MERGE_BYTES:
@@ -780,16 +769,15 @@ def _plan_and_stage_arrow(
         keep = [i for i, kt in enumerate(zip(*kcols)) if kt not in batch_keys]
         kept = existing.take(pa.array(keep, type=pa.int64()))
         merged = pa.concat_tables([kept, tbl])
-        new_rels = _stage_arrow(merged, base, name)
         fams = {
-            name: [r for r in rels if r not in set(touched)] + new_rels
+            name: [r for r in rels if r not in set(touched)]
+            + _stage_arrow(merged, stage, name)
         }
 
     if name != "records":
-        return new_rels, fams, []
+        return fams, []
 
     # sidecar bookkeeping — mirrors _with_objidx exactly
-    staged = list(new_rels)
     live = set(fams[name])
     new_data = [r for r in fams[name] if r not in set(rels)]
     old_pending = _objidx_pending(snap)
@@ -802,7 +790,7 @@ def _plan_and_stage_arrow(
         and n_rows < OBJIDX_INLINE_ROWS
         and len(carried) + len(new_data) <= OBJIDX_PENDING_MAX
     ):
-        return staged, fams, carried + new_data
+        return fams, carried + new_data
     refs = tbl.column("object_reference").to_pylist()
     bks = tbl.column("pulse_bucket").to_pylist()
     pairs = sorted(
@@ -812,8 +800,6 @@ def _plan_and_stage_arrow(
         },
         key=lambda p: (p[0] is not None, p[0] or 0, p[1]),
     )
-    import uuid
-
     import pyarrow.parquet as papq
 
     sidecar = pa.table(
@@ -822,17 +808,13 @@ def _plan_and_stage_arrow(
             "pulse_bucket": pa.array([p[1] for p in pairs], type=pa.int64()),
         }
     )
-    d = os.path.join(base, OBJIDX)
-    os.makedirs(d, exist_ok=True)
-    fn = f"part-{uuid.uuid4().hex}.parquet"
-    papq.write_table(sidecar, os.path.join(d, fn), compression="snappy")
-    irels = [os.path.join(OBJIDX, fn)]
-    fams[OBJIDX] = snap["families"].get(OBJIDX, []) + irels
+    irel = stage.file(OBJIDX)
+    papq.write_table(sidecar, os.path.join(base, irel), compression="snappy")
+    fams[OBJIDX] = snap["families"].get(OBJIDX, []) + [irel]
     # inline delta covers the BATCH pairs only (kept rows' pairs are
     # already indexed — a rewrite never changes a row's bucket);
     # relocated old-pending rows still need their new files probed
-    pending = carried + (new_data if relocated else [])
-    return staged + irels, fams, pending
+    return fams, carried + (new_data if relocated else [])
 
 
 class BatchStats:
@@ -875,13 +857,12 @@ def _validate_batch_stats(
     declared bucket, and — on the append fast path, where staged files
     hold batch rows only — its pulse range must lie within the
     declared bounds. Raises ValueError on violation BEFORE the commit,
-    so a bad hint can never publish, and discards the staged files
-    first, so a refused batch leaves no orphans in the table directory.
-    Pinned by test_driver_stage::test_understated_batch_stats_refused."""
+    so a bad hint can never publish (and `manifest.transact` discards
+    the refused attempt's files). Pinned by
+    test_driver_stage::test_understated_batch_stats_refused."""
     allowed = set(buckets)
 
     def refuse(why: str):
-        Mf.discard(base, new_rels)
         raise ValueError(
             f"{name}: {why} — the declared pulse set must be exact "
             "(see BatchStats)"
@@ -915,11 +896,12 @@ def _plan_and_stage(
     batch_keys: DataFrame,
     buckets: list[int],
     key_bucket_affinity: bool,
+    stage,
     n_rows: int = 0,
     pulse_bounds: tuple[int, int] | None = None,
-) -> tuple[list[str], dict[str, list[str]], list[str]]:
+) -> tuple[dict[str, list[str]], list[str]]:
     """One table's share of a transactional upsert against a pinned
-    snapshot: stage the files, return (staged_rels, {family:
+    snapshot: stage the files through `stage`, return ({family:
     new_file_list}, objidx_pending_rels) — records also stages its
     object-index sidecar delta (or defers it: pending_rels are staged
     data files whose pairs are NOT yet in the sidecar), so everything
@@ -928,8 +910,8 @@ def _plan_and_stage(
     keys = TABLE_KEYS[name]
     rels = snap["families"].get(name, [])
 
-    def _with_objidx(staged, fams):
-        """Returns (staged, fams, new_complete_pending). Pending
+    def _with_objidx(fams):
+        """Returns (fams, new_complete_pending). Pending
         bookkeeping must survive the merge-rewrite path: a pending
         file whose bucket gets rewritten RELOCATES its not-yet-indexed
         rows into this commit's output files, so those outputs join
@@ -937,7 +919,7 @@ def _plan_and_stage(
         alone would silently lose the relocated pairs from lifeline
         probes."""
         if name != "records":
-            return staged, fams, []
+            return fams, []
         live = set(fams[name])
         new_data = [r for r in fams[name] if r not in set(rels)]
         old_pending = _objidx_pending(snap)
@@ -951,7 +933,7 @@ def _plan_and_stage(
         ):
             # skip path: this commit's data files carry their own
             # (and any relocated) unindexed pairs
-            return staged, fams, carried + new_data
+            return fams, carried + new_data
         # coalesce(1), not repartitionByRange(1, ...): range
         # partitioning into ONE partition still pays a range-bounds
         # sampling job + an extra exchange; coalescing the distinct's
@@ -963,12 +945,10 @@ def _plan_and_stage(
             .coalesce(1)
             .sortWithinPartitions(OBJ_KEY)
         )
-        irels = Mf.stage_df(delta, base, OBJIDX)
-        fams[OBJIDX] = snap["families"].get(OBJIDX, []) + irels
+        fams[OBJIDX] = snap["families"].get(OBJIDX, []) + stage.df(delta, OBJIDX)
         # inline path: the sidecar delta covers the BATCH pairs only;
         # relocated old-pending rows still need their new files probed
-        pending = carried + (new_data if relocated else [])
-        return staged + irels, fams, pending
+        return fams, carried + (new_data if relocated else [])
 
     if not key_bucket_affinity and rels:
         # Column-pruned key scan over the full table: any bucket that
@@ -1027,13 +1007,13 @@ def _plan_and_stage(
     # driver probe
     stage_rows = n_rows or None
     if collisions == 0:
-        new_rels = Mf.stage_df(
-            _layout(name, prep, len(buckets)), base, name,
+        new_rels = stage.df(
+            _layout(name, prep, len(buckets)), name,
             partition_by="pulse_bucket", n_rows=stage_rows,
         )
         if pulse_bounds is not None:
             _validate_batch_stats(base, name, new_rels, buckets, pulse_bounds)
-        return _with_objidx(new_rels, {name: rels + new_rels})
+        return _with_objidx({name: rels + new_rels})
 
     kept = existing.join(F.broadcast(batch_keys), on=keys, how="left_anti")
     merged = kept.select(*prep.columns).unionByName(prep)
@@ -1041,8 +1021,8 @@ def _plan_and_stage(
         # keep the bucket scan + anti-join parallel under _layout's
         # one-file coalesce: one plain exchange, no range sampling
         merged = merged.repartition(1)
-    new_rels = Mf.stage_df(
-        _layout(name, merged, len(buckets)), base, name,
+    new_rels = stage.df(
+        _layout(name, merged, len(buckets)), name,
         partition_by="pulse_bucket", n_rows=stage_rows,
     )
     if pulse_bounds is not None:
@@ -1050,7 +1030,7 @@ def _plan_and_stage(
         # the whole bucket, so only the bucket membership is checkable
         _validate_batch_stats(base, name, new_rels, buckets, None)
     survivors = [r for r in rels if r not in set(touched)]
-    return _with_objidx(new_rels, {name: survivors + new_rels})
+    return _with_objidx({name: survivors + new_rels})
 
 
 def upsert_many(
@@ -1076,11 +1056,11 @@ def upsert_many(
     guarantee it (widens the collision check to a column-pruned key
     scan of the whole table).
 
-    Concurrency: staging runs against a pinned snapshot; if another
-    writer commits first the CAS fails, this writer discards its
-    staged files and re-merges against the new snapshot — racing
-    same-bucket upserts never lose rows. Per-table staging jobs run in
-    parallel threads (they are independent Spark jobs).
+    Concurrency: one `manifest.transact` — staging runs against a
+    pinned snapshot, and a writer that loses the CAS re-merges against
+    the winner's, so racing same-bucket upserts never lose rows.
+    Per-table staging jobs run in parallel threads (they are
+    independent Spark jobs).
 
     batch_stats (r11): optional per-table BatchStats from a caller
     that already knows each batch's pulse set + row count (the ingest
@@ -1096,195 +1076,150 @@ def upsert_many(
     _require_migrated(base)
     prepped: dict[str, tuple] = {}
 
+    def spark_prep(name, batch, st):
+        keys = TABLE_KEYS[name]
+        prep = with_bucket(batch.dropDuplicates(keys)).cache()
+        if st is not None:
+            # caller-supplied planning facts: no job
+            if not st.pulses:
+                prep.unpersist()
+                return None
+            return (
+                "spark",
+                prep,
+                prep.select(*keys).distinct(),
+                st.buckets,
+                st.n_rows,
+                (min(st.pulses), max(st.pulses)),
+            )
+        # one job yields both the bucket list and the row count
+        # (sidecar skip-or-batch)
+        bucket_rows = prep.groupBy("pulse_bucket").count().collect()
+        buckets = [r.pulse_bucket for r in bucket_rows]
+        if not buckets:  # empty batch: no merge
+            prep.unpersist()
+            return None
+        return (
+            "spark",
+            prep,
+            prep.select(*keys).distinct(),
+            buckets,
+            sum(r["count"] for r in bucket_rows),
+            None,
+        )
+
+    def one(item, snap, stage):
+        # prep (dedup + cache + bucket collect) is fused into the same
+        # worker thread as the staging job, so a 3-table micro-batch
+        # pipelines per table instead of paying a prep barrier; an
+        # attempt replanned after a CAS conflict reuses the cached prep.
+        name, batch = item
+        if not isinstance(batch, DataFrame) and not (
+            key_bucket_affinity and placement.admits()
+        ):
+            # pyarrow input without bucket affinity needs the widened
+            # collision check only the Spark path implements, and with
+            # the driver gate off it stages through Spark — convert
+            # once (lossless)
+            batch = spark.createDataFrame(batch, TABLE_SCHEMAS[name])
+        if name not in prepped:
+            st = (batch_stats or {}).get(name)
+            # Driver-path eligibility. A pyarrow.Table batch (the
+            # driver-side ingest fast path) is already collected —
+            # prep it with zero jobs. With caller stats the row count
+            # is declared; without them the batch is PROBED with a
+            # bounded collect (LIMIT cap+1) — Catalyst's estimate is
+            # Long.Max for local relations and join outputs, i.e.
+            # exactly the micro-batches that benefit most, so an
+            # estimate gate alone routes them to the cluster path for
+            # nothing. The probe job costs what the cluster path's
+            # planning job cost.
+            tbl = _TOO_BIG
+            if not isinstance(batch, DataFrame):
+                cols = [f.name for f in TABLE_SCHEMAS[name].fields]
+                tbl = _prep_arrow_table(
+                    batch.select(cols).cast(_arrow_schema(name)), name
+                )
+            elif (
+                key_bucket_affinity
+                and (st is None or st.pulses)
+                and placement.admits(None if st is None else st.n_rows)
+            ):
+                tbl = _collect_arrow(batch, name, bounded=st is None)
+            if st is not None and not st.pulses:
+                prepped[name] = None
+            elif tbl is None:
+                prepped[name] = None
+            elif tbl is _TOO_BIG:
+                prepped[name] = spark_prep(name, batch, st)
+            else:
+                pns = set(tbl.column("pulse_number").to_pylist())
+                prepped[name] = (
+                    "arrow",
+                    tbl,
+                    sorted({_bucket_of(p) for p in pns}),
+                    (min(pns), max(pns)),
+                )
+        if prepped[name] is None:
+            return name, None
+        if prepped[name][0] == "arrow":
+            _tag, tbl, buckets, bounds = prepped[name]
+            r = _plan_and_stage_arrow(base, snap, name, tbl, buckets, bounds, stage)
+            if r is not None:
+                return name, r
+            # touched files exceed the driver merge gate: switch this
+            # table to the Spark path for good (the collected pulse set
+            # is exact, so the planning facts ride along for free)
+            pns = sorted(set(tbl.column("pulse_number").to_pylist()))
+            prepped[name] = spark_prep(
+                name,
+                spark.createDataFrame(
+                    tbl.drop_columns(["pulse_bucket"]), TABLE_SCHEMAS[name]
+                ),
+                BatchStats(pns, tbl.num_rows),
+            )
+        _tag, prep, bkeys, buckets, n_rows, bounds = prepped[name]
+        return name, _plan_and_stage(
+            spark, base, snap, name, prep, bkeys, buckets,
+            key_bucket_affinity, stage, n_rows=n_rows, pulse_bounds=bounds,
+        )
+
+    def attempt(snap, stage):
+        items = list(batches.items())
+        if len(items) > 1:
+            with ThreadPoolExecutor(max_workers=len(items)) as ex:
+                futures = [ex.submit(one, item, snap, stage) for item in items]
+            # a refused table fails the whole attempt; the files its
+            # siblings staged are in `stage`, so transact discards them
+            results = [f.result() for f in futures]
+        else:
+            results = [one(items[0], snap, stage)]
+        results = [(name, r) for name, r in results if r is not None]
+        if not results:
+            return None, None
+        families = dict(snap["families"])
+        meta: dict = {"kind": "upsert"}
+        layout = dict(snap.get("meta", {}).get("layout", {}))
+        for name, (fam_updates, pending) in results:
+            families.update(fam_updates)
+            if name == "records":
+                # complete replacement of the pending set (already
+                # carries survivors + this commit's deferrals)
+                layout["objidx_pending"] = sorted(pending)
+                if not pending:
+                    layout.pop("objidx_pending", None)
+                meta["layout"] = layout
+        if "records" in batches and not snap["families"].get("records"):
+            # A fresh store's first records commit: the delta IS full
+            # coverage, so the object index is trustworthy from birth.
+            # Migrated warehouses must run build_object_index once.
+            layout["objidx"] = "full"
+            meta["layout"] = layout
+        stats = Mf.file_stats(base, stage.rels, ["pulse_number", OBJ_KEY])
+        return None, {"families": families, "meta": meta, "stats": stats}
+
     try:
-        with Mf.write_intent(base):
-            while True:
-                snap = Mf.read(base)
-                families = dict(snap["families"])
-
-                def spark_prep(name, batch, st):
-                    keys = TABLE_KEYS[name]
-                    prep = with_bucket(batch.dropDuplicates(keys)).cache()
-                    if st is not None:
-                        # caller-supplied planning facts: no job
-                        if not st.pulses:
-                            prep.unpersist()
-                            return None
-                        return (
-                            "spark",
-                            prep,
-                            prep.select(*keys).distinct(),
-                            st.buckets,
-                            st.n_rows,
-                            (min(st.pulses), max(st.pulses)),
-                        )
-                    # one job yields both the bucket list and the row
-                    # count (sidecar skip-or-batch)
-                    bucket_rows = prep.groupBy("pulse_bucket").count().collect()
-                    buckets = [r.pulse_bucket for r in bucket_rows]
-                    if not buckets:  # empty batch: no merge
-                        prep.unpersist()
-                        return None
-                    return (
-                        "spark",
-                        prep,
-                        prep.select(*keys).distinct(),
-                        buckets,
-                        sum(r["count"] for r in bucket_rows),
-                        None,
-                    )
-
-                def one(item):
-                    # prep (dedup + cache + bucket collect) is fused
-                    # into the same worker thread as the staging job,
-                    # so a 3-table micro-batch pipelines per table
-                    # instead of paying a prep barrier; retries after
-                    # a CAS conflict reuse the cached prep.
-                    name, batch = item
-                    if not isinstance(batch, DataFrame) and not (
-                        key_bucket_affinity and placement.admits()
-                    ):
-                        # pyarrow input without bucket affinity needs
-                        # the widened collision check only the Spark
-                        # path implements, and with the driver gate off
-                        # it stages through Spark — convert once
-                        # (lossless)
-                        batch = spark.createDataFrame(
-                            batch, TABLE_SCHEMAS[name]
-                        )
-                    if name not in prepped:
-                        st = (batch_stats or {}).get(name)
-                        # Driver-path eligibility. A pyarrow.Table
-                        # batch (the driver-side ingest fast path) is
-                        # already collected — prep it with zero jobs.
-                        # With caller stats the row count is declared;
-                        # without them the batch is PROBED with a
-                        # bounded collect (LIMIT cap+1) — Catalyst's
-                        # estimate is Long.Max for local relations and
-                        # join outputs, i.e. exactly the micro-batches
-                        # that benefit most, so an estimate gate alone
-                        # routes them to the cluster path for nothing.
-                        # The probe job costs what the cluster path's
-                        # planning job cost.
-                        tbl = _TOO_BIG
-                        if not isinstance(batch, DataFrame):
-                            cols = [
-                                f.name for f in TABLE_SCHEMAS[name].fields
-                            ]
-                            tbl = _prep_arrow_table(
-                                batch.select(cols).cast(_arrow_schema(name)),
-                                name,
-                            )
-                        elif (
-                            key_bucket_affinity
-                            and (st is None or st.pulses)
-                            and placement.admits(None if st is None else st.n_rows)
-                        ):
-                            tbl = _collect_arrow(batch, name, bounded=st is None)
-                        if st is not None and not st.pulses:
-                            prepped[name] = None
-                        elif tbl is None:
-                            prepped[name] = None
-                        elif tbl is _TOO_BIG:
-                            prepped[name] = spark_prep(name, batch, st)
-                        else:
-                            pns = set(tbl.column("pulse_number").to_pylist())
-                            prepped[name] = (
-                                "arrow",
-                                tbl,
-                                sorted({_bucket_of(p) for p in pns}),
-                                (min(pns), max(pns)),
-                            )
-                    if prepped[name] is None:
-                        return name, None
-                    if prepped[name][0] == "arrow":
-                        _tag, tbl, buckets, bounds = prepped[name]
-                        r = _plan_and_stage_arrow(
-                            base, snap, name, tbl, buckets, bounds
-                        )
-                        if r is not None:
-                            return name, r
-                        # touched files exceed the driver merge gate:
-                        # switch this table to the Spark path for good
-                        # (the collected pulse set is exact, so the
-                        # planning facts ride along for free)
-                        pns = sorted(set(tbl.column("pulse_number").to_pylist()))
-                        prepped[name] = spark_prep(
-                            name,
-                            spark.createDataFrame(
-                                tbl.drop_columns(["pulse_bucket"]),
-                                TABLE_SCHEMAS[name],
-                            ),
-                            BatchStats(pns, tbl.num_rows),
-                        )
-                    _tag, prep, bkeys, buckets, n_rows, bounds = prepped[name]
-                    return name, _plan_and_stage(
-                        spark, base, snap, name, prep, bkeys, buckets,
-                        key_bucket_affinity, n_rows=n_rows,
-                        pulse_bounds=bounds,
-                    )
-
-                items = list(batches.items())
-                if len(items) > 1:
-                    with ThreadPoolExecutor(max_workers=len(items)) as ex:
-                        futures = [ex.submit(one, item) for item in items]
-                    errors = [f.exception() for f in futures if f.exception()]
-                    if errors:
-                        # one table refused: discard what the others
-                        # staged for this commit, then re-raise
-                        for f in futures:
-                            if f.exception() is None:
-                                _name, r = f.result()
-                                if r is not None:
-                                    Mf.discard(base, r[0])
-                        raise errors[0]
-                    results = [f.result() for f in futures]
-                else:
-                    results = [one(items[0])]
-                results = [(name, r) for name, r in results if r is not None]
-                if not results:
-                    return
-                staged = [rel for _name, r in results for rel in r[0]]
-                try:
-                    meta: dict = {"kind": "upsert"}
-                    layout = dict(snap.get("meta", {}).get("layout", {}))
-                    for name, (_new_rels, fam_updates, pending) in results:
-                        families.update(fam_updates)
-                        if name == "records" and pending is not None:
-                            # complete replacement of the pending set
-                            # (already carries survivors + this
-                            # commit's deferrals)
-                            layout["objidx_pending"] = sorted(pending)
-                            if not pending:
-                                layout.pop("objidx_pending", None)
-                            meta["layout"] = layout
-                    if (
-                        "records" in batches
-                        and not snap["families"].get("records")
-                    ):
-                        # A fresh store's first records commit: the
-                        # delta IS full coverage, so the object index
-                        # is trustworthy from birth. Migrated
-                        # warehouses must run build_object_index once.
-                        layout["objidx"] = "full"
-                        meta["layout"] = layout
-                    stats = Mf.file_stats(base, staged, ["pulse_number", OBJ_KEY])
-                except BaseException:
-                    # an error before the CAS: no manifest can list
-                    # this attempt's files, so they go now (an error
-                    # inside Mf.commit leaves them to vacuum: the link
-                    # may already have published them)
-                    Mf.discard(base, staged)
-                    raise
-                try:
-                    Mf.commit(
-                        base, families, expect_version=snap["version"],
-                        meta=meta, stats=stats,
-                    )
-                    return
-                except Mf.CommitConflict:
-                    # loser path: re-merge against the winner's commit
-                    Mf.discard(base, staged)
+        Mf.transact(base, attempt)
     finally:
         for v in prepped.values():
             if v is not None and v[0] == "spark":
@@ -1336,50 +1271,37 @@ def delete_where(spark: SparkSession, base: str, name: str, predicate) -> int:
     predicate evaluates to NULL are KEPT (three-valued logic: delete
     removes exactly the rows `filter(predicate)` matches)."""
     _require_migrated(base)
-    with Mf.write_intent(base):
-        while True:
-            snap = Mf.read(base)
-            rels = snap["families"].get(name, [])
-            if not rels:
-                return 0
-            df = _read_rels(spark, base, name, rels)
-            hit_buckets = [
-                r.pulse_bucket
-                for r in df.filter(predicate)
-                .select("pulse_bucket")
-                .distinct()
-                .collect()
-            ]
-            if not hit_buckets:
-                return 0
-            touched = _bucket_rels(rels, hit_buckets)
-            tdf = _read_rels(spark, base, name, touched)
-            kept = tdf.filter(~F.coalesce(predicate, F.lit(False)))
-            n_deleted = tdf.count() - kept.count()
-            new_rels = Mf.stage_df(
-                _layout(name, kept, len(hit_buckets)), base, name,
-                partition_by="pulse_bucket",
-            )
-            families = dict(snap["families"])
-            families[name] = [
-                r for r in rels if r not in set(touched)
-            ] + new_rels
-            meta: dict = {"kind": "delete"}
-            if name == "records":
-                meta.update(
-                    _remap_pending(snap, set(touched), new_rels)
-                )
-            try:
-                Mf.commit(
-                    base, families, expect_version=snap["version"],
-                    meta=meta,
-                    stats=Mf.file_stats(
-                        base, new_rels, ["pulse_number", OBJ_KEY]
-                    ),
-                )
-                return n_deleted
-            except Mf.CommitConflict:
-                Mf.discard(base, new_rels)
+
+    def attempt(snap, stage):
+        rels = snap["families"].get(name, [])
+        if not rels:
+            return 0, None
+        df = _read_rels(spark, base, name, rels)
+        hit_buckets = [
+            r.pulse_bucket
+            for r in df.filter(predicate).select("pulse_bucket").distinct().collect()
+        ]
+        if not hit_buckets:
+            return 0, None
+        touched = _bucket_rels(rels, hit_buckets)
+        tdf = _read_rels(spark, base, name, touched)
+        kept = tdf.filter(~F.coalesce(predicate, F.lit(False)))
+        n_deleted = tdf.count() - kept.count()
+        new_rels = stage.df(
+            _layout(name, kept, len(hit_buckets)), name, partition_by="pulse_bucket"
+        )
+        families = dict(snap["families"])
+        families[name] = [r for r in rels if r not in set(touched)] + new_rels
+        meta: dict = {"kind": "delete"}
+        if name == "records":
+            meta.update(_remap_pending(snap, set(touched), new_rels))
+        return n_deleted, {
+            "families": families,
+            "meta": meta,
+            "stats": Mf.file_stats(base, new_rels, ["pulse_number", OBJ_KEY]),
+        }
+
+    return Mf.transact(base, attempt)
 
 
 def _remap_pending(
@@ -1427,70 +1349,48 @@ def compact_table(
     {buckets_compacted, files_before, files_after}.
     """
     _require_migrated(base)
-    with Mf.write_intent(base):
-        while True:
-            snap = Mf.read(base)
-            rels = snap["families"].get(name, [])
-            per_bucket = _files_per_bucket(rels)
-            needy = {
-                b: fs
-                for b, fs in per_bucket.items()
-                if len(fs) > max_files_per_bucket
-            }
-            if not needy:
-                return {
-                    "buckets_compacted": 0,
-                    "files_before": 0,
-                    "files_after": 0,
-                }
-            files_before = sum(len(fs) for fs in needy.values())
-            touched = [r for fs in needy.values() for r in fs]
-            df = _read_rels(spark, base, name, touched)
-            if name == "records":
-                # The OPTIMIZE pass for the lifeline read path: each
-                # compacted bucket lands as `max_files_per_bucket`
-                # files covering DISJOINT obj_key slices (range-
-                # partition on (bucket, obj_key) + in-file sort), so
-                # steady state an object-point read opens 1 file per
-                # bucket, not the bucket's whole accumulation.
-                compacted = _layout(
-                    name, df, len(needy) * max_files_per_bucket
-                )
-            else:
-                compacted = df.repartition("pulse_bucket")
-            new_rels = Mf.stage_df(
-                compacted,
-                base,
-                name,
-                partition_by="pulse_bucket",
-            )
-            families = dict(snap["families"])
-            families[name] = [
-                r for r in rels if r not in set(touched)
-            ] + new_rels
-            meta = {"kind": "compact", "data_change": False}
-            if name == "records":
-                meta.update(
-                    _remap_pending(snap, set(touched), new_rels)
-                )
-            try:
-                Mf.commit(
-                    base, families, expect_version=snap["version"],
-                    meta=meta,
-                    stats=Mf.file_stats(
-                        base, new_rels, ["pulse_number", OBJ_KEY]
-                    ),
-                )
-                if name == "records":
-                    # same OPTIMIZE cadence: fold the object-index
-                    # sidecar's per-commit delta files too
-                    maintain_object_index(
-                        spark, base, min_files=max_files_per_bucket + 1
-                    )
-                return {
-                    "buckets_compacted": len(needy),
-                    "files_before": files_before,
-                    "files_after": len(new_rels),
-                }
-            except Mf.CommitConflict:
-                Mf.discard(base, new_rels)
+
+    def attempt(snap, stage):
+        rels = snap["families"].get(name, [])
+        needy = {
+            b: fs
+            for b, fs in _files_per_bucket(rels).items()
+            if len(fs) > max_files_per_bucket
+        }
+        if not needy:
+            return {"buckets_compacted": 0, "files_before": 0, "files_after": 0}, None
+        touched = [r for fs in needy.values() for r in fs]
+        df = _read_rels(spark, base, name, touched)
+        if name == "records":
+            # The OPTIMIZE pass for the lifeline read path: each
+            # compacted bucket lands as `max_files_per_bucket` files
+            # covering DISJOINT obj_key slices (range-partition on
+            # (bucket, obj_key) + in-file sort), so steady state an
+            # object-point read opens 1 file per bucket, not the
+            # bucket's whole accumulation.
+            compacted = _layout(name, df, len(needy) * max_files_per_bucket)
+        else:
+            compacted = df.repartition("pulse_bucket")
+        new_rels = stage.df(compacted, name, partition_by="pulse_bucket")
+        families = dict(snap["families"])
+        families[name] = [r for r in rels if r not in set(touched)] + new_rels
+        meta = {"kind": "compact", "data_change": False}
+        if name == "records":
+            meta.update(_remap_pending(snap, set(touched), new_rels))
+        out = {
+            "buckets_compacted": len(needy),
+            "files_before": len(touched),
+            "files_after": len(new_rels),
+        }
+        return out, {
+            "families": families,
+            "meta": meta,
+            "stats": Mf.file_stats(base, new_rels, ["pulse_number", OBJ_KEY]),
+        }
+
+    out = Mf.transact(base, attempt)
+    if name == "records" and out["buckets_compacted"]:
+        # same OPTIMIZE cadence: fold the object-index sidecar's
+        # per-commit delta files too
+        maintain_object_index(spark, base, min_files=max_files_per_bucket + 1)
+    return out

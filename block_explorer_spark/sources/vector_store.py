@@ -149,12 +149,9 @@ def add_batch(
     """One incremental add. Returns {n_in, n_known, n_near_dup,
     n_added}.
 
-    Transactional (round 5): dedup validates against a pinned
-    manifest snapshot; the surviving rows stage as immutable files
-    and publish with one CAS commit. A racing add that wins the
-    version forces this writer to discard its staged files and
-    re-validate against the winner's snapshot — two concurrent adds
-    can never both land the same vec_id."""
+    Transactional: dedup validates against a pinned manifest snapshot
+    and the surviving rows publish in one `manifest.transact`, so two
+    concurrent adds can never both land the same vec_id."""
     _require_migrated(base)
     cents = load_centroids(base)
     assigned = _assign(batch.select(*[f.name for f in VECTORS_SCHEMA.fields]), cents)
@@ -162,8 +159,7 @@ def add_batch(
     n_in = assigned.count()
     cells = [r.centroid_id for r in assigned.select("centroid_id").distinct().collect()]
 
-    while True:
-        snap = Mf.read(base)
+    def attempt(snap, stage):
         vec_rels = snap["families"].get("vectors", [])
         cell_rels = _cell_files(vec_rels, cells)
         stored_cells = _read_files(spark, base, cell_rels) if cell_rels else None
@@ -216,33 +212,25 @@ def add_batch(
             fresh.unpersist()
             fresh = kept
         n_added = n_fresh - n_near_dup
-
+        counts = {"n_known": n_known, "n_near_dup": n_near_dup, "n_added": n_added}
         if not n_added:
             fresh.unpersist()
-            break
-        new_rels = Mf.stage_df(
-            fresh.repartition("centroid_id"), base, "vectors",
-            partition_by="centroid_id",
+            return counts, None
+        new_rels = stage.df(
+            fresh.repartition("centroid_id"), "vectors", partition_by="centroid_id"
         )
-        try:
-            Mf.commit(
-                base, {"vectors": vec_rels + new_rels}, expect_version=snap["version"],
-                meta={"kind": "add"},
-                stats=Mf.file_stats(base, new_rels, ["vec_id"]),
-            )
-            fresh.unpersist()
-            break
-        except Mf.CommitConflict:
-            Mf.discard(base, new_rels)
-            fresh.unpersist()
+        fresh.unpersist()
+        families = dict(snap["families"])  # pq_codes / vec_cdc stay listed
+        families["vectors"] = vec_rels + new_rels
+        return counts, {
+            "families": families,
+            "meta": {"kind": "add"},
+            "stats": Mf.file_stats(base, new_rels, ["vec_id"]),
+        }
 
+    counts = Mf.transact(base, attempt)
     assigned.unpersist()
-    return {
-        "n_in": n_in,
-        "n_known": n_known,
-        "n_near_dup": n_near_dup,
-        "n_added": n_added,
-    }
+    return {"n_in": n_in, **counts}
 
 
 #: Family holding the delete log — one (vec_id) row per physically
@@ -253,7 +241,6 @@ def add_batch(
 VEC_CDC = "vec_cdc"
 
 
-@Mf.with_write_intent
 def delete_ids(spark: SparkSession, base: str, vec_ids) -> int:
     """RTBF deletion: physically remove vectors by id and return the
     count removed. The rewrite touches ONLY the files whose vec_id
@@ -273,30 +260,28 @@ def delete_ids(spark: SparkSession, base: str, vec_ids) -> int:
     if not ids:
         return 0
     ids_df = spark.createDataFrame([(i,) for i in ids], "vec_id long")
-    while True:
-        snap = Mf.read(base)
+
+    def attempt(snap, stage):
         rels = snap["families"].get("vectors", [])
         touched = sorted({
             r for i in ids
             for r in Mf.prune_by_stats(snap, "vectors", "vec_id", lo=i, hi=i)
         })
         if not touched:
-            return 0
+            return 0, None
         cur = _read_files(spark, base, touched).cache()
         hits = cur.join(ids_df, "vec_id").cache()
         n_hit = hits.count()
         if not n_hit:
             cur.unpersist()
             hits.unpersist()
-            return 0
+            return 0, None
         cells = [r[0] for r in hits.select("centroid_id").distinct().collect()]
         survivors = cur.join(ids_df, "vec_id", "left_anti")
-        new_rels = Mf.stage_df(
-            survivors.repartition("centroid_id"), base, "vectors",
-            partition_by="centroid_id",
+        new_rels = stage.df(
+            survivors.repartition("centroid_id"), "vectors", partition_by="centroid_id"
         )
-        log_rels = Mf.stage_df(hits.select("vec_id"), base, VEC_CDC)
-        staged = new_rels + log_rels
+        log_rels = stage.df(hits.select("vec_id"), VEC_CDC)
         families = dict(snap["families"])
         families["vectors"] = [r for r in rels if r not in set(touched)] + new_rels
         families[VEC_CDC] = families.get(VEC_CDC, []) + log_rels
@@ -306,25 +291,22 @@ def delete_ids(spark: SparkSession, base: str, vec_ids) -> int:
             if ctouched:
                 ccur = _read_codes(spark, base, ctouched)
                 csurv = ccur.join(ids_df, "vec_id", "left_anti")
-                cnew = Mf.stage_df(
-                    csurv.repartition("centroid_id"), base, "pq_codes",
+                cnew = stage.df(
+                    csurv.repartition("centroid_id"), "pq_codes",
                     partition_by="centroid_id",
                 )
-                staged += cnew
                 families["pq_codes"] = [
                     r for r in crels if r not in set(ctouched)
                 ] + cnew
         cur.unpersist()
         hits.unpersist()
-        try:
-            Mf.commit(
-                base, families, expect_version=snap["version"],
-                meta={"kind": "delete"},
-                stats=Mf.file_stats(base, new_rels, ["vec_id"]),
-            )
-            return n_hit
-        except Mf.CommitConflict:
-            Mf.discard(base, staged)
+        return n_hit, {
+            "families": families,
+            "meta": {"kind": "delete"},
+            "stats": Mf.file_stats(base, new_rels, ["vec_id"]),
+        }
+
+    return Mf.transact(base, attempt)
 
 
 def deletes_since(
@@ -443,7 +425,6 @@ def _read_codes(spark: SparkSession, base: str, rels: list[str]) -> DataFrame:
     )
 
 
-@Mf.with_write_intent
 def build_pq(
     spark: SparkSession,
     base: str,
@@ -470,8 +451,7 @@ def build_pq(
     lattice mode."""
     from block_explorer_spark.operators import pq as PQ
 
-    while True:
-        snap = Mf.read(base)
+    def attempt(snap, stage):
         vecs = read_vectors(spark, base, snap)
         ids = [
             r[0]
@@ -486,27 +466,22 @@ def build_pq(
         codes = PQ.pq_encode(vecs, "embedding", model).select(
             "vec_id", "pq_codes", "centroid_id"
         )
-        new_rels = Mf.stage_df(
-            codes.repartition("centroid_id"), base, "pq_codes",
-            partition_by="centroid_id",
-        )
         families = dict(snap["families"])
-        families["pq_codes"] = new_rels
-        try:
-            v_new = Mf.commit(
-                base, families, expect_version=snap["version"],
-                meta={"kind": "build_pq", "data_change": False},
-            )
-            break
-        except Mf.CommitConflict:
-            Mf.discard(base, new_rels)
-    rec = {"model": model, "encoded_version": v_new}
+        families["pq_codes"] = stage.df(
+            codes.repartition("centroid_id"), "pq_codes", partition_by="centroid_id"
+        )
+        rec = {"model": model, "encoded_version": snap["version"] + 1}
+        return rec, {
+            "families": families,
+            "meta": {"kind": "build_pq", "data_change": False},
+        }
+
+    rec = Mf.transact(base, attempt)
     with open(_pq_model_path(base), "w") as f:
         json.dump(rec, f)
     return rec
 
 
-@Mf.with_write_intent
 def refresh_pq(spark: SparkSession, base: str) -> int:
     """Encode only the vectors added since the codes family was last
     built/refreshed (the CDC feed bounds the work to the delta, never
@@ -517,10 +492,10 @@ def refresh_pq(spark: SparkSession, base: str) -> int:
     from block_explorer_spark.operators import pq as PQ
 
     rec = load_pq(base)
-    while True:
-        snap = Mf.read(base)
+
+    def attempt(snap, stage):
         if snap["version"] == rec["encoded_version"]:
-            return 0
+            return (0, snap["version"]), None
         delta = changes_since(
             spark, base, since_version=rec["encoded_version"],
             until_version=snap["version"],
@@ -536,32 +511,27 @@ def refresh_pq(spark: SparkSession, base: str) -> int:
         codes = PQ.pq_encode(delta, "embedding", rec["model"]).select(
             "vec_id", "pq_codes", "centroid_id"
         )
-        new_rels = Mf.stage_df(
-            codes.repartition("centroid_id"), base, "pq_codes",
-            partition_by="centroid_id",
+        new_rels = stage.df(
+            codes.repartition("centroid_id"), "pq_codes", partition_by="centroid_id"
         )
         n_delta = _read_codes(spark, base, new_rels).count()
         if not n_delta:
             # version moved but no vector rows changed (build/repair
             # commits): advance the local watermark, commit nothing.
-            Mf.discard(base, new_rels)
-            rec["encoded_version"] = snap["version"]
-            with open(_pq_model_path(base), "w") as f:
-                json.dump(rec, f)
-            return 0
+            return (0, snap["version"]), None
         families = dict(snap["families"])
         families["pq_codes"] = families.get("pq_codes", []) + new_rels
-        try:
-            v_new = Mf.commit(
-                base, families, expect_version=snap["version"],
-                meta={"kind": "refresh_pq", "data_change": False},
-            )
-            rec["encoded_version"] = v_new
-            with open(_pq_model_path(base), "w") as f:
-                json.dump(rec, f)
-            return n_delta
-        except Mf.CommitConflict:
-            Mf.discard(base, new_rels)
+        return (n_delta, snap["version"] + 1), {
+            "families": families,
+            "meta": {"kind": "refresh_pq", "data_change": False},
+        }
+
+    n_delta, version = Mf.transact(base, attempt)
+    if version != rec["encoded_version"]:
+        rec["encoded_version"] = version
+        with open(_pq_model_path(base), "w") as f:
+            json.dump(rec, f)
+    return n_delta
 
 
 def _probe_pq(
@@ -911,7 +881,6 @@ def start_ingest_stream(
     )
 
 
-@Mf.with_write_intent
 def canonicalize(spark: SparkSession, base: str) -> int:
     """Enforce one-row-per-vec_id across the store. Racing adds now
     serialize through the manifest CAS (add_batch), so the sweep is
@@ -928,11 +897,10 @@ def canonicalize(spark: SparkSession, base: str) -> int:
     remain until manifest.vacuum."""
     from pyspark.sql.window import Window
 
-    while True:
-        snap = Mf.read(base)
+    def attempt(snap, stage):
         vec_rels = snap["families"].get("vectors", [])
         if not vec_rels:
-            return 0
+            return 0, None
         table = _read_files(spark, base, vec_rels)
         dup_ids = (
             table.groupBy("vec_id")
@@ -946,7 +914,7 @@ def canonicalize(spark: SparkSession, base: str) -> int:
             .select("centroid_id").distinct().collect()
         ]
         if not hit_cells:
-            return 0
+            return 0, None
         touched_rels = _cell_files(vec_rels, hit_cells)
         touched = _read_files(spark, base, touched_rels)
         n_before = touched.count()
@@ -956,24 +924,20 @@ def canonicalize(spark: SparkSession, base: str) -> int:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        new_rels = Mf.stage_df(
-            kept.repartition("centroid_id"), base, "vectors",
-            partition_by="centroid_id",
+        new_rels = stage.df(
+            kept.repartition("centroid_id"), "vectors", partition_by="centroid_id"
         )
         n_removed = n_before - _read_files(spark, base, new_rels).count()
         if not n_removed:
-            Mf.discard(base, new_rels)
-            return 0
+            return 0, None
         families = dict(snap["families"])
         families["vectors"] = [
             r for r in vec_rels if r not in set(touched_rels)
         ] + new_rels
-        try:
-            Mf.commit(
-                base, families, expect_version=snap["version"],
-                meta={"kind": "canonicalize", "data_change": False},
-                stats=Mf.file_stats(base, new_rels, ["vec_id"]),
-            )
-            return n_removed
-        except Mf.CommitConflict:
-            Mf.discard(base, new_rels)
+        return n_removed, {
+            "families": families,
+            "meta": {"kind": "canonicalize", "data_change": False},
+            "stats": Mf.file_stats(base, new_rels, ["vec_id"]),
+        }
+
+    return Mf.transact(base, attempt)

@@ -74,7 +74,7 @@ def test_ingest_crash_before_commit_is_invisible_and_replay_converges(spark, bas
     # "crash": stage the write but never commit (what a process death
     # between stage_move and commit leaves behind)
     prepared = cs._prepared(spark.createDataFrame(b, COLS))
-    orphans = cs._stage_write(prepared, base, "corpus", partition_by="fp_bucket")
+    orphans = Mf.stage_df(prepared, base, "corpus", partition_by="fp_bucket")
     # ...plus one committed version so the store exists at all
     cs.ingest(spark, base, spark.createDataFrame(b[:2], COLS))
     assert len(orphans) >= 1
@@ -210,8 +210,8 @@ def test_band_sidecar_commits_atomically_with_docs(spark, base):
     # round-6 unmigrated-store guard this is a crash, not legacy data.
     Mf.begin_write(base)  # crashed writer never reaches end_write
     prepared = cs._prepared(spark.createDataFrame(b1, COLS))
-    cs._stage_write(prepared, base, "corpus", partition_by="fp_bucket")
-    cs._stage_write(cs._doc_bands(prepared), base, "bands")
+    Mf.stage_df(prepared, base, "corpus", partition_by="fp_bucket")
+    Mf.stage_df(cs._doc_bands(prepared), base, "bands")
     assert cs.read_corpus(spark, base).count() == 0
     assert cs.read_bands(spark, base).count() == 0
 
@@ -321,8 +321,8 @@ def test_canonicalize_repairs_out_of_band_duplicates(spark, base):
     # out-of-band writer: stages the same content under a new doc_id
     # and commits it WITHOUT running dedup
     dup = cs._prepared(spark.createDataFrame([_doc(9, LONG)], COLS))
-    new_docs = cs._stage_write(dup, base, "corpus", partition_by="fp_bucket")
-    new_bands = cs._stage_write(
+    new_docs = Mf.stage_df(dup, base, "corpus", partition_by="fp_bucket")
+    new_bands = Mf.stage_df(
         cs._doc_bands(dup), base, "bands", partition_by="bh_bucket"
     )
     snap = Mf.read(base)

@@ -1,6 +1,5 @@
 """Real-codec tests: pure-stdlib PNG/WAV/Y4M decode, the Spark-side
-real_decode/real_resize/real_frame_sample paths, and the PIL upgrade
-path when the lib exists.
+real_decode path, and the PIL upgrade path when the lib exists.
 
 reference parity note: the reference engine stores media-ish payloads
 opaquely (no codecs); this surface is part of the training-data
@@ -96,15 +95,6 @@ def test_png_decode_rejects_corrupt():
         codecs.png_decode(bytes(bad))
 
 
-def test_png_resize_nearest_dims_and_content():
-    # 2x2 quadrant image scaled up: each quadrant becomes a block
-    img = np.array([[[0], [100]], [[200], [255]]], dtype=np.uint8)
-    resized = codecs.png_decode(codecs.png_resize_nearest(codecs.png_encode(img), 4, 4))
-    assert resized.shape == (4, 4, 1)
-    assert resized[0, 0, 0] == 0 and resized[0, 3, 0] == 100
-    assert resized[3, 0, 0] == 200 and resized[3, 3, 0] == 255
-
-
 # ---------------------------------------------------------------------------
 # WAV / Y4M
 # ---------------------------------------------------------------------------
@@ -124,17 +114,13 @@ def test_wav_roundtrip_and_features():
         codecs.wav_decode(b"RIFFxxxxWAVEjunk")
 
 
-def test_y4m_roundtrip_and_sampling():
+def test_y4m_roundtrip():
     frames = [np.full((6, 8), 10 * i, dtype=np.uint8) for i in range(10)]
     payload = codecs.y4m_encode(frames)
     w, h, cs, parsed = codecs.y4m_parse(payload)
     assert (w, h) == (8, 6) and cs.startswith("C420") and len(parsed) == 10
     # luma plane survives byte-exact
     assert parsed[3][: 8 * 6] == frames[3].tobytes()
-    sampled = codecs.y4m_sample_frames(payload, 4)
-    assert len(sampled) == 4
-    assert sampled[0] == parsed[0] and sampled[-1] == parsed[-1]
-    assert sampled[1] == parsed[3] and sampled[2] == parsed[6]
     with pytest.raises(codecs.CodecError):
         codecs.y4m_parse(payload[: len(payload) - 5])  # truncated frame
 
@@ -148,7 +134,7 @@ def test_sniff():
 
 
 # ---------------------------------------------------------------------------
-# real_decode / real_resize / real_frame_sample units
+# real_decode units
 # ---------------------------------------------------------------------------
 
 
@@ -169,25 +155,11 @@ def test_real_decode_all_modalities_and_corrupt():
     assert M.real_decode(b"", 4) is None
 
 
-def test_real_resize_and_frame_sample_units():
-    img = _rng(1).integers(0, 256, size=(16, 12, 3), dtype=np.uint8)
-    out = M.real_resize(codecs.png_encode(img), 5, 7)
-    assert out is not None
-    assert codecs.png_decode(out).shape == (7, 5, 3)
-    assert M.real_resize(b"not an image", 5, 7) is None
-
-    frames = [np.full((4, 4), i, dtype=np.uint8) for i in range(8)]
-    got = M.real_frame_sample(codecs.y4m_encode(frames), 3)
-    assert len(got) == 3 and got[0][:16] == frames[0].tobytes()
-    assert M.real_frame_sample(b"junk", 3) == []
-
-
 @pytest.mark.skipif(M._PILImage is None, reason="PIL not installed")
 def test_pil_paths_when_available():
     img = _rng(2).integers(0, 256, size=(10, 10, 3), dtype=np.uint8)
     payload = codecs.png_encode(img)
     assert M.real_decode(payload, 8) is not None
-    assert M.real_resize(payload, 4, 4) is not None
 
 
 # ---------------------------------------------------------------------------

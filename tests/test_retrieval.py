@@ -306,6 +306,53 @@ class TestIncrementalIndex:
                  R.bm25_search_indexed(spark, base, ["w5", "w40"]).collect()}
         assert after == before and after
 
+    def test_racing_maintains_fold_the_tail_once(self, spark, tmp_path, monkeypatch):
+        """Two index_maintain calls over the same two-file tail: the
+        second commits while the first sits between its staging and
+        its CAS. The first loses the CAS, replans from the winner's
+        snapshot (no tail left) and commits nothing, so every posting
+        is listed once and scores equal a single maintain's."""
+        import os
+
+        from block_explorer_spark.sources import manifest as M
+
+        def build(base):
+            R.write_postings_index(self._docs(spark, 0, 20), base, num_files=2)
+            R.index_append(self._docs(spark, 20, 30), base, num_files=1)
+            R.index_append(self._docs(spark, 30, 40), base, num_files=1)
+
+        def postings_rows(base):
+            rels = M.read(base)["families"]["postings"]
+            return spark.read.parquet(*[os.path.join(base, r) for r in rels]).count()
+
+        def scores(base):
+            hits = R.bm25_search_indexed(spark, base, ["w5", "w3", "common"], topk=40)
+            return [(r["doc_id"], r["score"]) for r in hits.collect()]
+
+        once = str(tmp_path / "once")
+        build(once)
+        assert R.index_maintain(spark, once, min_tail_files=2) is not None
+
+        raced = str(tmp_path / "raced")
+        build(raced)
+        real_file_stats = M.file_stats
+        calls, rival = [], []
+
+        def file_stats_after_rival(*a, **kw):
+            calls.append(1)
+            if len(calls) == 1:  # the first maintain has staged: race it
+                rival.append(R.index_maintain(spark, raced, min_tail_files=2))
+            return real_file_stats(*a, **kw)
+
+        monkeypatch.setattr(M, "file_stats", file_stats_after_rival)
+        loser = R.index_maintain(spark, raced, min_tail_files=2)
+        monkeypatch.setattr(M, "file_stats", real_file_stats)
+        assert rival[0] is not None
+        assert postings_rows(raced) == postings_rows(once)
+        assert scores(raced) == scores(once)
+        assert loser is None
+        assert M.unmanifested_files(raced, ["postings", "doclen", R.TERMMAX]) == {}
+
     def test_denormalized_serving_plan_has_no_join(self, spark, tmp_path):
         """dl rides in the posting rows, so the serving plan is scan →
         pivot-aggregate → top-k: zero joins for ANY term df — the
@@ -352,12 +399,10 @@ class TestIncrementalIndex:
         m = M.read(base)
         assert "events_z" in m["meta"]["zorder"]
         assert m["meta"]["bm25"]["n"] == 100
-        Z.cluster_append(
-            ev.withColumn("id", F.col("id") + 1000), base, "events_z", num_files=1
-        )
+        Z.cluster_write(ev, base, "events_y", ["a"], bits=6, num_files=1)
         m2 = M.read(base)
         assert m2["meta"]["bm25"]["n"] == 100  # zorder writer kept bm25 meta
-        assert len(m2["meta"]["zorder"]["events_z"]["tail"]) == 1
+        assert set(m2["meta"]["zorder"]) == {"events_z", "events_y"}
 
 
 class TestMaxScore:

@@ -12,6 +12,10 @@ use from the package must exist.
     module-level `W = operators.windows`) is read with its own binding.
 (b) Every `` `path.py::name` `` in PARITY.md names a top-level
     definition or a method of that file.
+(c) The manifest's commit protocol (`commit`, `discard`, the write
+    intents, `CommitConflict`) is referenced by no package module but
+    `sources/manifest.py`: every other writer goes through
+    `manifest.transact`.
 """
 
 from __future__ import annotations
@@ -291,6 +295,39 @@ def _check(path: Path) -> list[str]:
 
 def test_package_references_resolve():
     assert [e for path in _surface_files() for e in _check(path)] == []
+
+
+MANIFEST = f"{PKG}.sources.manifest"
+_PROTOCOL = {"commit", "discard", "write_intent", "begin_write", "end_write", "CommitConflict"}
+
+
+class _ProtocolRefs(_Checker):
+    """Reports each `alias.name` (or `from ... import name`) of a
+    commit-protocol name on the manifest module, with the same scoping
+    as _Checker; unresolved names are (a)'s business, not reported."""
+
+    def _bind_import(self, node: ast.Import | ast.ImportFrom, report: bool) -> None:
+        super()._bind_import(node, report=False)
+        if isinstance(node, ast.ImportFrom) and _resolve_from(node, self.this_mod) == MANIFEST:
+            for a in node.names:
+                if a.name in _PROTOCOL:
+                    self._err(node, f"imports manifest.{a.name}")
+
+    def visit_Attribute(self, node: ast.Attribute) -> None:
+        if node.attr in _PROTOCOL and self._module_value(node.value) == MANIFEST:
+            self._err(node, f"uses manifest.{node.attr}")
+        self.generic_visit(node)
+
+
+def test_commit_protocol_stays_in_manifest():
+    errors = []
+    for mod, path in MODULES.items():
+        if mod != MANIFEST:
+            tree = ast.parse(path.read_text())
+            checker = _ProtocolRefs(path, tree)
+            checker.visit(tree)
+            errors += checker.errors
+    assert errors == []
 
 
 def _defs(path: Path) -> set[str]:

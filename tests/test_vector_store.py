@@ -485,6 +485,27 @@ class TestDeleteIds:
         assert 501 in pq and 500 not in pq
 
 
+def test_add_keeps_the_other_families_listed(spark, base):
+    """An add publishes the complete family set: the PQ codes and the
+    delete log committed before it stay listed beside the new
+    vectors."""
+    from block_explorer_spark.sources import manifest as M
+
+    rng = random.Random(4)
+    _founding(spark, base, rng)
+    vs.build_pq(spark, base, m=4, k=8)
+    assert vs.delete_ids(spark, base, [1]) == 1
+    before = M.read(base)["families"]
+    more = spark.createDataFrame(
+        _vecs(rng, 5, CENTERS[2], start_id=700, label=2), vs.VECTORS_SCHEMA
+    )
+    assert vs.add_batch(spark, base, more)["n_added"] == 5
+    after = M.read(base)["families"]
+    assert after["pq_codes"] == before["pq_codes"]
+    assert after[vs.VEC_CDC] == before[vs.VEC_CDC]
+    assert set(before["vectors"]) < set(after["vectors"])
+
+
 class TestProbeMany:
     def test_sweep_equals_per_query_probe_bit_for_bit(self, spark, base):
         rng = random.Random(5)

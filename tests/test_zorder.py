@@ -172,142 +172,13 @@ class TestSkippingPower:
         assert zr == lr and zr
 
 
-class TestIncrementalMaintenance:
-    def _store(self, spark, tmp_path):
-        base = str(tmp_path / "zinc")
-        Z.cluster_write(_grid(spark), base, "g", ["a", "b"], bits=6,
-                        num_files=16)
-        return base
-
-    def test_append_keeps_answers_correct_and_tracks_tail(
-        self, spark, tmp_path
-    ):
-        base = self._store(spark, tmp_path)
-        extra = _grid(spark, n=512, seed=77).withColumn(
-            "id", F.col("id") + 1_000_000
-        )
-        Z.cluster_append(extra, base, "g", num_files=2)
-        m = M.read(base)
-        assert len(m["meta"]["zorder"]["g"]["tail"]) == 2
-        box = {"a": (8, 15), "b": (48, 55)}
-        got = sorted(
-            r["id"] for r in Z.read_clustered(spark, base, "g", box).collect()
-        )
-        want = sorted(
-            r["id"]
-            for r in _grid(spark).union(extra)
-            .filter((F.col("a") >= 8) & (F.col("a") <= 15)
-                    & (F.col("b") >= 48) & (F.col("b") <= 55))
-            .collect()
-        )
-        assert got == want and want
-
-    def test_append_requires_layout(self, spark, tmp_path):
-        base = str(tmp_path / "zempty2")
-        try:
-            Z.cluster_append(_grid(spark, 64), base, "g")
-            raise AssertionError("expected ValueError")
-        except ValueError:
-            pass
-
-    def test_maintain_noop_below_threshold_then_folds_tail(
-        self, spark, tmp_path
-    ):
-        base = self._store(spark, tmp_path)
-        for s in range(4):
-            Z.cluster_append(
-                _grid(spark, n=256, seed=100 + s).withColumn(
-                    "id", F.col("id") + (s + 1) * 1_000_000
-                ),
-                base, "g", num_files=2,
-            )
-        assert Z.cluster_maintain(spark, base, "g", min_tail_files=9) is None
-        m0 = M.read(base)
-        assert len(m0["meta"]["zorder"]["g"]["tail"]) == 8
-
-        box = {"a": (8, 15), "b": (48, 55)}
-        keep_before, total_before = Z.pruned_files(base, "g", box)
-        want = sorted(
-            r["id"] for r in Z.read_clustered(spark, base, "g", box).collect()
-        )
-
-        v = Z.cluster_maintain(spark, base, "g", min_tail_files=8)
-        assert v is not None
-        m1 = M.read(base)
-        assert m1["meta"]["zorder"]["g"]["tail"] == []
-        # tail folded: fewer live files, all with zone stats
-        assert len(m1["families"]["g"]) < len(m0["families"]["g"])
-        for rel in m1["families"]["g"]:
-            assert "a" in m1["stats"][rel], rel
-        # answers unchanged, pruning at least as tight
-        got = sorted(
-            r["id"] for r in Z.read_clustered(spark, base, "g", box).collect()
-        )
-        assert got == want
-        keep_after, total_after = Z.pruned_files(base, "g", box)
-        assert len(keep_after) <= len(keep_before)
-        # old tail files are no longer listed (snapshot isolation:
-        # still on disk until vacuum)
-        assert not set(m0["meta"]["zorder"]["g"]["tail"]) & set(m1["families"]["g"])
-
-
-class TestStreamingIngest:
-    def test_readstream_foreachbatch_append_then_maintain(
-        self, spark, tmp_path
-    ):
-        """The ingest story end-to-end: micro-batches arrive through
-        Structured Streaming, foreachBatch lands each with
-        cluster_append (zones recorded, no re-layout), and one
-        OPTIMIZE pass folds the tail — the final clustered read
-        equals the union of everything streamed."""
-        src = str(tmp_path / "src")
-        base = str(tmp_path / "zstream")
-        Z.cluster_write(_grid(spark, n=512), base, "g", ["a", "b"],
-                        bits=6, num_files=4)
-
-        batches = [
-            _grid(spark, n=128, seed=200 + i).withColumn(
-                "id", F.col("id") + (i + 1) * 10_000
-            )
-            for i in range(3)
-        ]
-        for i, bdf in enumerate(batches):
-            bdf.coalesce(1).write.parquet(f"{src}/b{i}")
-
-        stream = (
-            spark.readStream.schema(batches[0].schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/b*")
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, _id: Z.cluster_append(bdf, base, "g", num_files=1)
-            )
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        m = M.read(base)
-        assert len(m["meta"]["zorder"]["g"]["tail"]) == 3
-        assert Z.cluster_maintain(spark, base, "g", min_tail_files=3) is not None
-        assert M.read(base)["meta"]["zorder"]["g"]["tail"] == []
-
-        want = _grid(spark, n=512)
-        for bdf in batches:
-            want = want.union(bdf)
-        got = sorted(r["id"] for r in Z.read_clustered(spark, base, "g", {}).collect())
-        assert got == sorted(r["id"] for r in want.collect())
-
-
 class TestMigrate:
     def test_single_family_meta(self, spark, tmp_path):
         """The meta shape an earlier round committed — one family's
         layout at the top of meta["zorder"], named by a "family" key —
-        raises in every writer, naming migrate; migrate rewrites it
-        per-family in one meta-only commit, and the store then
-        appends, maintains and serves exactly like a fresh one."""
+        raises in the writer, naming migrate; migrate rewrites it
+        per-family in one meta-only commit, and the store then serves
+        and takes a second clustered family exactly like a fresh one."""
         import pytest
 
         fresh, base = str(tmp_path / "fresh"), str(tmp_path / "old")
@@ -318,16 +189,8 @@ class TestMigrate:
         M.commit(
             base, dict(cur["families"]), cur["version"], meta={"zorder": single}
         )
-        extra = _grid(spark, n=512, seed=77).withColumn(
-            "id", F.col("id") + 1_000_000
-        )
-        for write in (
-            lambda: Z.cluster_append(extra, base, "g"),
-            lambda: Z.cluster_maintain(spark, base, "g", min_tail_files=1),
-            lambda: Z.cluster_write(_grid(spark, 64), base, "h", ["a"]),
-        ):
-            with pytest.raises(RuntimeError, match=r"zorder\.migrate"):
-                write()
+        with pytest.raises(RuntimeError, match=r"zorder\.migrate"):
+            Z.cluster_write(_grid(spark, 64), base, "h", ["a"])
         v0 = M.current_version(base)
         assert Z.migrate(base) == v0 + 1
         assert Z.migrate(base) is None
@@ -336,12 +199,13 @@ class TestMigrate:
 
         box = {"a": (8, 15), "b": (48, 55)}
         for b in (fresh, base):
-            Z.cluster_append(extra, b, "g", num_files=2)
-            Z.cluster_maintain(spark, b, "g", min_tail_files=1)
+            Z.cluster_write(_grid(spark, 64), b, "h", ["a"], bits=6, num_files=2)
 
-        def rows(b):
+        def rows(b, family):
             return sorted(
-                tuple(r) for r in Z.read_clustered(spark, b, "g", box).collect()
+                tuple(r) for r in Z.read_clustered(spark, b, family, box).collect()
             )
 
-        assert rows(base) == rows(fresh) and rows(fresh)
+        assert rows(base, "g") == rows(fresh, "g") and rows(fresh, "g")
+        assert rows(base, "h") == rows(fresh, "h")
+        assert M.read(base)["meta"]["zorder"] == M.read(fresh)["meta"]["zorder"]
